@@ -2,10 +2,10 @@
   * `DriveBig` materializes (reuses `/tmp/big_wh` + `/tmp/big_mh_idx` via
   * resume, so this can run standalone):
   *
-  *  A. the dense ONE-SHUFFLE boolean/mixed evaluator vs the old
-  *     per-operator join-cascade algebra, warm, bit-identity asserted —
-  *     the round-3/4 carried target (adversarial vocabulary: every stem
-  *     df ≈ 3–5.5M, boolean was 51–62 s warm on the old path);
+  *  A. the dense ONE-SHUFFLE boolean/mixed evaluator vs the driver
+  *     algebra (on an engine whose `driverAlgebraMaxDocs` admits every
+  *     operand), warm, bit-identity asserted (adversarial vocabulary:
+  *     every stem df ≈ 3–5.5M);
   *  B. the candidate-pruned signature estimate: the q38 batch probe
   *     (~1M-doc batch vs the 9.1M-doc persisted index) after the
   *     estimatePairs prune (round-4 datapoint to beat: 82 s);
@@ -51,9 +51,12 @@ object DriveBigR5 {
     if (!io.exists(Tables.Blocks))
       timed("build")(new IndexBuilder(spark, io, rawShards = 4).build(turns, resume = true))
 
-    // ---- A. dense one-shuffle evaluator vs the join-cascade algebra ----
+    // ---- A. dense one-shuffle evaluator vs the driver algebra ----------
     if (!args.contains("nodense")) {
-      val e = new graft.api.SparkSearchEngine(spark, io)
+      // every operand here is far above the default driver cap; raise it so
+      // topKDriver evaluates instead of bailing out
+      val e = new graft.api.SparkSearchEngine(spark, io,
+        graft.GraftParams(driverAlgebraMaxDocs = 20000000))
       val qs = Seq(
         "(\"blue whale\" OR \"query engine\") NOT \"red fish\"",
         "\"blue whale\" whale engine",
@@ -63,10 +66,10 @@ object DriveBigR5 {
         val dense = e.topKDense(q, 0.0, 100)
         val tDense = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        val old = e.topK(e.scores(q), 0.0, 100)
-        val tOld = (System.nanoTime() - t1) / 1e9
-        require(dense == old, s"dense path diverged for '$q'")
-        println(f"DENSE [$q] rep$rep dense=$tDense%.1f s cascade=$tOld%.1f s (bit-identical)")
+        val driver = e.topKDriver(q, 0.0, 100)
+        val tDriver = (System.nanoTime() - t1) / 1e9
+        require(driver.contains(dense), s"dense path diverged from the driver for '$q'")
+        println(f"DENSE [$q] rep$rep dense=$tDense%.1f s driver=$tDriver%.1f s (bit-identical)")
       }
     }
 

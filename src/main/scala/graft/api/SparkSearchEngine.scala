@@ -13,20 +13,24 @@ import graft.text.TextPipeline
   *
   * The reference loads the whole index into driver memory and scores dense
   * per-corpus vectors (/root/reference/source/BM25Ranker.cpp:26-30,311-319).
-  * Here a score vector is a sparse (docId, score) DataFrame plus the score
-  * every absent doc implicitly holds (`default`) — an exact, lazy encoding
-  * of the dense algebra: NOT flips the default to 1−d instead of
-  * materializing 10^12 rows; only the final top-k pass densifies, and only
+  * Here a score vector is sparse — the docs its atoms match plus the score
+  * every absent doc implicitly holds (its default) — an exact encoding of
+  * the dense algebra: NOT flips the default to 1−d instead of
+  * materializing 10^12 rows; only the final top-k densifies, and only
   * when the default can still reach the result set.
   *
-  * Everything stays one lazy Catalyst plan until top-k: per-term df and the
-  * max-normalization constants are broadcast 1-row aggregates
-  * (crossJoin(broadcast(agg))) instead of driver actions, so a term query
-  * is a single job over a term-pruned scan of the (term, docId)-sorted
-  * postings table — parquet min/max on `term` makes that a near-point read.
-  * No UDF in the scoring path. The only eager case is re-normalizing a
-  * vector whose absent-doc default is nonzero (i.e. under NOT), where the
-  * new default is data-dependent.
+  * `topKAuto` routes each query along one of three exact paths:
+  *  - a single bare term → block-max WAND over the compressed block index
+  *    (`termTopKWand`);
+  *  - driver-sized operands → one term-pruned distributed fetch per atom,
+  *    then the boolean algebra as driver arithmetic (`topKDriver`);
+  *  - anything bigger → the dense evaluator: one docId shuffle aligns
+  *    every atom, then per-doc scalar scoring (`topKDense`).
+  * All three score with `Bm25` in the same IEEE operation order and are
+  * bit-identical to `RefOracle` (EngineSpec). The bulk entry points
+  * (`searchManyTerms`, `searchMany`, `searchManyAuto`) share operand
+  * fetches across a batch. A call that caches a frame unpersists it
+  * before it returns.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -93,71 +97,6 @@ final class SparkSearchEngine(
       .groupBy($"term").agg(sum($"delta").as("d"))
       .as[(String, Long)].collect().toMap
 
-  /** sparse frame (docId: Long, score: Double) + implicit default score */
-  final case class Scores(df: DataFrame, default: Double)
-
-  private def emptyFrame: DataFrame =
-    spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-
-  /** The df-only BM25 factor (Catalyst log = StrictMath.log, matching the
-    * oracle and the WAND path). Strictly positive for every df ≤ N. */
-  private def idfCol(dfCount: Column): Column = {
-    val n = stats.total_docs.toDouble
-    log(((lit(n) - dfCount) + lit(0.5)) / (dfCount + lit(0.5)) + lit(1.0))
-  }
-
-  /** The per-posting BM25 factor (everything but idf) — monotone in tf and
-    * doc_len, independent of df. */
-  private def tfPartCol(tf: Column, dl: Column): Column = {
-    val docNorm = lit(1 - params.b) + lit(params.b) * (dl.cast("double") / lit(stats.avg_doc_len))
-    val tfD = tf.cast("double")
-    (tfD * lit(params.k1 + 1)) / (tfD + lit(params.k1) * docNorm)
-  }
-
-  /** BM25 with df as a column — identical operation order to the oracle
-    * (BM25Ranker.cpp:431-437) so scores are bit-identical, not just close. */
-  private def bm25Col(tf: Column, dl: Column, dfCount: Column): Column =
-    idfCol(dfCount) * tfPartCol(tf, dl)
-
-  /** Lazy max-normalize: max over the conceptually-dense vector as a
-    * broadcast scalar aggregate. The default only competes when some doc
-    * is absent from the sparse frame. Falls back to one eager aggregate
-    * when the (rare, NOT-produced) nonzero default must itself rescale. */
-  private def maxNormalize(s: Scores): Scores = {
-    if (s.default == 0.0) {
-      val m = s.df.agg(max($"score").as("mx"), count(lit(1)).as("cnt"))
-      val trueMax = when($"cnt" >= lit(stats.total_docs), coalesce($"mx", lit(0.0)))
-        .otherwise(greatest(coalesce($"mx", lit(0.0)), lit(0.0)))
-      val norm = s.df.crossJoin(broadcast(m))
-        .select($"docId",
-          when(trueMax > 0, $"score" / trueMax).otherwise($"score").as("score"))
-      Scores(norm, 0.0)
-    } else {
-      val (mx, cnt) = s.df.agg(max($"score"), count(lit(1))).as[(Option[Double], Long)].head()
-      val sparseMax = mx.getOrElse(0.0)
-      val trueMax = if (cnt >= stats.total_docs) sparseMax else math.max(sparseMax, s.default)
-      if (trueMax > 0)
-        Scores(s.df.select($"docId", ($"score" / lit(trueMax)).as("score")), s.default / trueMax)
-      else s
-    }
-  }
-
-  /** Frames cached by algebra evaluation, released once a top-k
-    * materializes — without this a long-lived session leaks cached frames
-    * until LRU eviction. The engine is single-query-at-a-time (like the
-    * reference's server); concurrent evaluations would release each
-    * other's caches early (correct, just slower). */
-  private val liveCaches = new scala.collection.mutable.ArrayBuffer[DataFrame]
-  private def track(df: DataFrame): DataFrame =
-    liveCaches.synchronized { liveCaches += df; df }
-
-  /** Unpersist every frame cached by evaluation since the last release.
-    * Called by topK/search after collecting; safe to call any time (held
-    * Scores recompute lazily if re-used). */
-  def releaseCaches(): Unit = liveCaches.synchronized {
-    liveCaches.foreach(_.unpersist(false)); liveCaches.clear()
-  }
-
   /** Map-side candidate prefilter for the phrase fold. Phrase tf can be
     * nonzero ONLY for docs containing the FIRST stem: `PhraseMatch.phraseTf`
     * returns 0 when `stems.head` is absent, while every LATER missing stem
@@ -196,85 +135,13 @@ final class SparkSearchEngine(
     }
   }
 
-  object Algebra extends ScoreAlgebra[Scores] {
-    /** Every op output is cached: the evaluator reuses operands in several
-      * branches (stackCombine feeds each stack element into both the Σ and
-      * the min chain; normalize reads its input twice — aggregate + body),
-      * and without materialization the nested plans re-evaluate
-      * exponentially. This is the sparse analogue of the reference
-      * materializing every op as a dense map (BM25Ranker.cpp:241-300);
-      * frames are query-sized and released after top-k (see liveCaches). */
-    private def cached(s: Scores): Scores = Scores(track(s.df.cache()), s.default)
-
-    override def empty: Scores = Scores(emptyFrame, 0.0)
-
-    override def termScore(rawTerm: String): Scores = {
-      val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-      val rows = postings.filter($"term" === key)
-      val dfAgg = rows.agg(count(lit(1)).cast("double").as("df_count"))
-      val scored = rows.crossJoin(broadcast(dfAgg))
-        .select($"docId", bm25Col($"tf", $"doc_len", $"df_count").as("score"))
-      cached(maxNormalize(Scores(scored, 0.0)))
-    }
-
-    override def phraseScore(phraseText: String): Scores = {
-      val stems = TextPipeline.tokenizeQuery(phraseText)
-      if (stems.isEmpty) return empty
-      val base = postings.filter($"term".isin(stems.distinct: _*))
-      val rows = headDocFilter(Seq(stems.head), stems).fold(base)(base.filter)
-        .select($"docId", $"doc_len", $"term", $"positions_vb")
-      // one shuffle on docId (alone — so downstream docId joins can reuse
-      // the partitioning); the positional fold is doc-local. Cached because
-      // both the df-count aggregate and the scores read it.
-      val perDoc = rows
-        .groupBy($"docId")
-        .agg(first($"doc_len").as("doc_len"), // constant per doc
-          collect_list(struct($"term", $"positions_vb")).as("tp"))
-        .as[(Long, Int, Seq[(String, Array[Byte])])]
-      val tfs = perDoc.map { case (docId, dl, tp) =>
-        val termPos = tp.iterator.map { case (t, vb) =>
-          t -> graft.codec.VarByte.decodePositions(vb).toSeq
-        }.toMap
-        (docId, dl, PhraseMatch.phraseTf(stems, termPos))
-      }.filter(_._3 > 0).toDF("docId", "doc_len", "tf")
-      val tfsC = track(tfs.cache())
-      val dfAgg = tfsC.agg(count(lit(1)).cast("double").as("df_count"))
-      val scored = tfsC.crossJoin(broadcast(dfAgg))
-        .select($"docId", bm25Col($"tf", $"doc_len", $"df_count").as("score"))
-      cached(maxNormalize(Scores(scored, 0.0)))
-    }
-
-    override def not(a: Scores): Scores =
-      cached(Scores(a.df.select($"docId", (lit(1.0) - $"score").as("score")), 1.0 - a.default))
-
-    private def combine(a: Scores, b: Scores, f: (Column, Column) => Column, d: Double): Scores = {
-      val l = a.df.select($"docId", $"score".as("s1"))
-      val r = b.df.select($"docId", $"score".as("s2"))
-      val j = l.join(r, Seq("docId"), "full_outer").select($"docId",
-        f(coalesce($"s1", lit(a.default)), coalesce($"s2", lit(b.default))).as("score"))
-      cached(Scores(j, d))
-    }
-
-    override def and(a: Scores, b: Scores): Scores =
-      combine(a, b, least(_, _), math.min(a.default, b.default))
-    override def or(a: Scores, b: Scores): Scores =
-      combine(a, b, greatest(_, _), math.max(a.default, b.default))
-    override def add(a: Scores, b: Scores, wa: Double, wb: Double): Scores =
-      combine(a, b, (x, y) => lit(wa) * x + lit(wb) * y, wa * a.default + wb * b.default)
-    override def normalize(a: Scores): Scores = cached(maxNormalize(a))
-  }
-
-  /** Evaluate a query to its (still lazy/sparse) score vector. */
-  def scores(query: String): Scores =
-    QueryEvaluator.evaluate(query, Algebra, params)
-
   /** Driver-side algebra over sparse (map, default) vectors — operand
     * FETCH is a distributed term-pruned scan + fold (that's where 10^12
     * docs matter), but once an operand fits on the driver the boolean
     * algebra is pure arithmetic; paying a Spark stage per min/max would be
     * all scheduling overhead. Bails out (TooBig) when any operand exceeds
-    * `params.driverAlgebraMaxDocs`, falling back to the distributed
-    * algebra. Identical operation order → bit-identical scores (tested).
+    * `params.driverAlgebraMaxDocs`, falling back to the dense evaluator.
+    * Identical operation order → bit-identical scores (tested).
     */
   final class TooBigForDriver extends RuntimeException
   type DScores = (scala.collection.Map[Long, Double], Double)
@@ -293,19 +160,12 @@ final class SparkSearchEngine(
 
     private val limit = params.driverAlgebraMaxDocs
 
-    private def bm25(tf: Double, dl: Double, dfCount: Double): Double = {
-      val n = stats.total_docs.toDouble
-      val idf = StrictMath.log(((n - dfCount) + 0.5) / (dfCount + 0.5) + 1.0)
-      val docNorm = (1 - params.b) + params.b * (dl / stats.avg_doc_len)
-      idf * ((tf * (params.k1 + 1)) / (tf + params.k1 * docNorm))
-    }
-
     private def scoreRows(rows: Array[(Long, Int, Int)]): DScores = {
-      val dfCount = rows.length.toDouble
+      val idf = Bm25.idf(stats.total_docs.toDouble, rows.length.toDouble)
       var mx = 0.0
       val m = new scala.collection.mutable.HashMap[Long, Double]()
       rows.foreach { case (d, tf, dl) =>
-        val s = bm25(tf.toDouble, dl.toDouble, dfCount)
+        val s = idf * Bm25.tfPart(tf.toDouble, dl.toDouble, params.k1, params.b, stats.avg_doc_len)
         if (s > mx) mx = s
         m(d) = s
       }
@@ -360,32 +220,43 @@ final class SparkSearchEngine(
     rows
   }
 
-  /** The per-phrase positional-fold frame (docId, doc_len, tf) — shared by
-    * the distributed per-query fetch below and Algebra.phraseScore's shape. */
-  private def phraseTfRows(stems: Vector[String]): Array[(Long, Int, Int)] = {
-    val base = postings.filter($"term".isin(stems.distinct: _*))
-    val rows = headDocFilter(Seq(stems.head), stems).fold(base)(base.filter)
+  /** The phrase positional fold, for many phrases at once: ONE shuffle on
+    * docId over the union of all phrases' stems (head-stem prefiltered),
+    * then every phrase's fold (stale-postings quirk included) runs
+    * doc-locally in one pass. Returns the UNCACHED frame
+    * (pidx, docId, tf, doc_len) of every doc with tf > 0, `pidx` indexing
+    * `phrases`; a caller that reads it twice caches it and unpersists it
+    * before returning. Phrases must be non-empty. */
+  private def phraseFold(phrases: Seq[Vector[String]]): DataFrame = {
+    val allStems = phrases.flatten.distinct
+    // a doc is a candidate iff it contains SOME phrase's head stem (each
+    // phrase's fold returns 0 without its own head — see headDocFilter)
+    val heads = phrases.map(_.head).distinct
+    val indexed = phrases.zipWithIndex.toArray
+    val base = postings.filter($"term".isin(allStems: _*))
+    headDocFilter(heads, allStems).fold(base)(base.filter)
       .select($"docId", $"doc_len", $"term", $"positions_vb")
-    val tfs = rows
       .groupBy($"docId")
-      .agg(first($"doc_len").as("doc_len"),
+      .agg(first($"doc_len").as("doc_len"), // constant per doc
         collect_list(struct($"term", $"positions_vb")).as("tp"))
       .as[(Long, Int, Seq[(String, Array[Byte])])]
-      .map { case (docId, dl, tp) =>
+      .flatMap { case (docId, dl, tp) =>
         val termPos = tp.iterator.map { case (t, vb) =>
           t -> graft.codec.VarByte.decodePositions(vb).toSeq
         }.toMap
-        (docId, dl, PhraseMatch.phraseTf(stems, termPos))
-      }.filter(_._3 > 0)
-      .toDF("docId", "doc_len", "tf")
-    fetchLimited(tfs.select($"docId", $"tf", $"doc_len"))
+        indexed.iterator.flatMap { case (stems, i) =>
+          val tf = PhraseMatch.phraseTf(stems, termPos)
+          if (tf > 0) Iterator.single((i, docId, tf, dl)) else Iterator.empty
+        }
+      }
+      .toDF("pidx", "docId", "tf", "doc_len")
   }
 
   /** Per-query driver algebra: one distributed scan per atom. */
   private lazy val DriverAlgebra: ScoreAlgebra[DScores] = new DriverScalarAlgebra(
     key => fetchLimited(postings.filter($"term" === key)
       .select($"docId", $"tf", $"doc_len")),
-    stems => phraseTfRows(stems))
+    stems => fetchLimited(phraseFold(Seq(stems)).select($"docId", $"tf", $"doc_len")))
 
   /** The top-k tail over a driver-side sparse vector: accuracy filter,
     * (score desc, docId asc) order, dense fill with absent docs when the
@@ -423,22 +294,25 @@ final class SparkSearchEngine(
     } catch { case _: TooBigForDriver => None }
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
-    * beyond-driver-sized path (round-3/4 carried item). The `Scores`
-    * algebra pays a full_outer shuffle join per operator plus a cache and
-    * a max-aggregate per op; at 10^7+ docs with head-stem operands the
-    * join cascade dominates. Here the whole query costs:
+    * beyond-driver-sized path. Evaluating the algebra operator by operator
+    * over distributed frames would pay a full_outer shuffle join per
+    * operator plus a cache and a max-aggregate per op; at 10^7+ docs with
+    * head-stem operands that join cascade dominates. Here the whole query
+    * costs:
     *   1. ONE pruned postings scan per atom shape (bare terms; phrase
     *      stems with the head-stem Bloom prefilter) feeding ONE docId
     *      shuffle that aligns every atom's (tf, doc_len) per doc — every
-    *      phrase's positional fold runs inside that same grouping;
+    *      phrase's positional fold runs inside that same grouping (its own
+    *      grouping, not `phraseFold`: term and phrase rows share it);
     *   2. one no-shuffle aggregate pass over the cached aligned frame per
     *      normalization node (the data-dependent max constants, resolved
     *      bottom-up — stackCombine contributes one per stack + one final);
     *   3. one no-shuffle map computing the final per-doc score with the
     *      SAME scalar arithmetic as `DriverScalarAlgebra` (DenseEval
     *      replicates its IEEE operation order exactly), then the top-k.
-    * Results are bit-identical to the driver and distributed algebras
-    * (EngineSpec asserts all paths equal). */
+    * The aligned frame is cached for those passes and unpersisted before
+    * returning. Results are bit-identical to the driver algebra, WAND and
+    * `RefOracle` (EngineSpec). */
   def topKDense(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] = {
     import graft.query.DenseEval
     import graft.query.DenseEval._
@@ -512,7 +386,7 @@ final class SparkSearchEngine(
         it.foreach { case (_, entries) =>
           entries.foreach { case (a, tf, dl) =>
             cnt(a) += 1
-            val tp = DenseEval.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
+            val tp = Bm25.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
             if (tp > mx(a)) mx(a) = tp
           }
         }
@@ -526,12 +400,11 @@ final class SparkSearchEngine(
           dfA(i) += c(i); if (m(i) > mxTf(i)) mxTf(i) = m(i); i += 1
         }
       }
-      // idf exactly as DriverScalarAlgebra.bm25; the atom's max score is
-      // idf · maxTfPart — bitwise the driver's max-of-per-row-scores loop
-      // (x → fl(idf·x) is monotone for idf > 0, attained at the argmax)
-      val idf = Array.tabulate(nAtoms) { i =>
-        StrictMath.log(((nDocs.toDouble - dfA(i).toDouble) + 0.5) / (dfA(i).toDouble + 0.5) + 1.0)
-      }
+      // idf exactly as DriverScalarAlgebra.scoreRows; the atom's max
+      // score is idf · maxTfPart — bitwise the driver's max-of-per-row-
+      // scores loop (x → fl(idf·x) is monotone for idf > 0, attained at
+      // the argmax)
+      val idf = Array.tabulate(nAtoms)(i => Bm25.idf(nDocs.toDouble, dfA(i).toDouble))
       val atomMax = Array.tabulate(nAtoms) { i =>
         val mxS = if (dfA(i) == 0) 0.0 else idf(i) * mxTf(i)
         if (dfA(i) >= nDocs) mxS else math.max(mxS, 0.0)
@@ -542,7 +415,7 @@ final class SparkSearchEngine(
           val vals = new Array[Double](nAtoms)
           val pres = new Array[Boolean](nAtoms)
           entries.foreach { case (a, tf, dl) =>
-            val s = idf(a) * DenseEval.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
+            val s = idf(a) * Bm25.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
             vals(a) = if (atomMax(a) > 0) s / atomMax(a) else s
             pres(a) = true
           }
@@ -599,28 +472,6 @@ final class SparkSearchEngine(
     } finally { aligned.unpersist(false); () }
   }
 
-  /** Top-k (score desc, docId asc) after the accuracy filter
-    * (BM25Ranker.cpp:40-42 + our defined tiebreak, SURVEY.md §7). Densifies
-    * against the doc dictionary only when absent docs can still qualify. */
-  def topK(s: Scores, accuracy: Double, k: Int): Vector[(Long, Double)] = try {
-    val sparseTop = s.df
-      .filter($"score" >= accuracy)
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-      .as[(Long, Double)].collect().toVector
-    val defaultQualifies = s.default >= accuracy
-    val needFill = defaultQualifies &&
-      (sparseTop.length < k || sparseTop.last._2 <= s.default)
-    if (!needFill) sparseTop
-    else {
-      val absent = dict.select($"docId")
-        .join(s.df.select($"docId"), Seq("docId"), "left_anti")
-        .orderBy($"docId".asc).limit(k)
-        .as[Long].collect().toVector.map(d => (d, s.default))
-      (sparseTop ++ absent).sortBy { case (d, sc) => (-sc, d) }.take(k)
-    }
-  } finally releaseCaches()
-
   /** Block-max WAND top-k for a single bare term — rank- and
     * score-identical to the exhaustive path (same IEEE operation order;
     * the normalization max IS the top-1 score), but reads the compressed
@@ -641,11 +492,7 @@ final class SparkSearchEngine(
     val raw: Vector[(Long, Double)] =
       if (dfLive.isEmpty) Vector.empty
       else {
-        val dfCount = dfLive.get.toDouble
-        val n = stats.total_docs.toDouble
-        // StrictMath: Catalyst's log expression uses StrictMath.log, and
-        // Math.log may differ in the last ulp on some JITs
-        val idf = StrictMath.log(((n - dfCount) + 0.5) / (dfCount + 0.5) + 1.0)
+        val idf = Bm25.idf(stats.total_docs.toDouble, dfLive.get.toDouble)
         val p = params; val st = stats
         val delFn = deletedFn(deletedBroadcast)
         val cands = io.read(Tables.Blocks).filter($"term" === key)
@@ -684,9 +531,8 @@ final class SparkSearchEngine(
 
   /** Route a query along the cheapest exact path: single bare term → WAND
     * over the block index; driver-sized operands → distributed fetch +
-    * driver algebra; otherwise the dense one-shuffle evaluator (which
-    * replaced the per-operator join cascade as the beyond-driver-sized
-    * fallback). All paths are bit-identical (tested). */
+    * driver algebra; otherwise the dense one-shuffle evaluator. All
+    * paths are bit-identical to `RefOracle` (tested). */
   def topKAuto(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] =
     asSingleTerm(query) match {
       case Some(t) => termTopKWand(t, accuracy, k)
@@ -724,7 +570,7 @@ final class SparkSearchEngine(
     * stop-word term with 10^9 postings still never concentrates on a
     * single partition.
     *
-    * Scores are bit-identical to the single-query paths (same WAND
+    * Results are bit-identical to the single-query paths (same WAND
     * kernel, same IEEE order everywhere after it): asserted against WAND
     * in EngineSpec. Semantics: per query, the top-k MATCHING docs (score
     * desc, docId asc) after the accuracy filter. The single-query paths'
@@ -742,18 +588,18 @@ final class SparkSearchEngine(
     require(queries.nonEmpty, "searchManyTerms needs at least one query")
     val keyed = queries.distinct
       .map(q => (q, if (params.stemBareTerms) TextPipeline.term(q) else q))
-    bulkTopK(termAtomFrame(keyed, k), k, accuracy)
+    withDict(bulkTopK(termAtomFrame(keyed, k), k, accuracy))
   }
 
   /** Bulk scoring for single-ATOM queries of either shape — a bare term
-    * OR a quoted phrase — in the same one-plan pipeline as
-    * `searchManyTerms`. Terms ride the pruned postings scan; all phrases
-    * share ONE docId shuffle (the union of their stems' postings grouped
-    * per doc) with the positional fold evaluated doc-locally for every
-    * phrase at once. Per-query results are bit-identical to the
-    * single-query evaluator (q20's single-phrase fold is
-    * tfw·normalize(x) + emw·x with x already max-normalized — the same
-    * combine as a bare term, no PHRASE_BOOST outside mixed queries). */
+    * OR a quoted phrase — through the same bulk tail as `searchManyTerms`.
+    * Terms ride the WAND block scan; all phrases share ONE `phraseFold`
+    * (one docId shuffle over the union of their stems). Per-query results
+    * are bit-identical to the single-query evaluator (q20's single-phrase
+    * fold is tfw·normalize(x) + emw·x with x already max-normalized — the
+    * same combine as a bare term, no PHRASE_BOOST outside mixed queries).
+    * The scoring runs eagerly, so the fold's cache is released before
+    * this returns; the returned frame only attaches the dictionary. */
   def searchMany(
       queries: Seq[String],
       k: Int = params.topK,
@@ -772,11 +618,19 @@ final class SparkSearchEngine(
     }
     val termAtoms = atoms.collect { case (q, Left(t)) => (q, t) }
     val phraseAtoms = atoms.collect { case (q, Right(st)) if st.nonEmpty => (q, st) }
-    val frames =
-      (if (termAtoms.nonEmpty) Seq(termAtomFrame(termAtoms, k)) else Nil) ++
-        (if (phraseAtoms.nonEmpty) Seq(phraseAtomFrame(phraseAtoms)) else Nil)
-    require(frames.nonEmpty, "no evaluable atoms (all phrases tokenized to nothing)")
-    bulkTopK(frames.reduce(_ union _), k, accuracy)
+    require(termAtoms.nonEmpty || phraseAtoms.nonEmpty,
+      "no evaluable atoms (all phrases tokenized to nothing)")
+    val phrases = phraseAtoms.map(_._2).distinct
+    // read by the df aggregate and twice by the bulk tail: fold once
+    val folded = if (phrases.isEmpty) None else Some(phraseFold(phrases).cache())
+    try {
+      val frames =
+        (if (termAtoms.nonEmpty) Seq(termAtomFrame(termAtoms, k)) else Nil) ++
+          folded.map(phraseAtomFrame(_, phrases, phraseAtoms))
+      val top = bulkTopK(frames.reduce(_ union _), k, accuracy)
+        .as[(String, Long, Double)].collect()
+      withDict(spark.createDataset(top.toSeq).toDF("query", "docId", "score"))
+    } finally folded.foreach(_.unpersist(false))
   }
 
   /** Bulk evaluation of ARBITRARY queries — boolean, NOT, brackets and
@@ -832,36 +686,21 @@ final class SparkSearchEngine(
     val phraseRows: Map[Vector[String], Array[(Long, Int, Int)]] =
       if (allPhrases.isEmpty) Map.empty
       else {
-        val allStems = allPhrases.flatten.distinct
-        val heads = allPhrases.map(_.head).distinct
-        val base = postings.filter($"term".isin(allStems: _*))
-        val perDoc = headDocFilter(heads, allStems).fold(base)(base.filter)
-          .select($"docId", $"doc_len", $"term", $"positions_vb")
-          .groupBy($"docId")
-          .agg(first($"doc_len").as("doc_len"),
-            collect_list(struct($"term", $"positions_vb")).as("tp"))
-          .as[(Long, Int, Seq[(String, Array[Byte])])]
-        val bPhrases = spark.sparkContext.broadcast(allPhrases.zipWithIndex.toArray)
-        val folded = track(perDoc.flatMap { case (docId, dl, tp) =>
-          val termPos = tp.iterator.map { case (t, vb) =>
-            t -> graft.codec.VarByte.decodePositions(vb).toSeq
-          }.toMap
-          bPhrases.value.iterator.flatMap { case (stems, i) =>
-            val tf = PhraseMatch.phraseTf(stems, termPos)
-            if (tf > 0) Iterator.single((i, docId, tf, dl)) else Iterator.empty
-          }
-        }.toDF("pidx", "docId", "tf", "doc_len").cache())
-        val counts = folded.groupBy($"pidx").agg(count(lit(1)).as("c"))
-          .as[(Int, Long)].collect().toMap
-        oversizedPhrases = counts.collect {
-          case (i, c) if c > limit => allPhrases(i)
-        }.toSet
-        val okIdx = counts.collect { case (i, c) if c <= limit => i }.toSeq
-        if (okIdx.isEmpty) Map.empty
-        else folded.filter($"pidx".isin(okIdx: _*))
-          .as[(Int, Long, Int, Int)].collect()
-          .groupBy(_._1)
-          .map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) }
+        // read by the size gate and by the row fetch: fold once
+        val folded = phraseFold(allPhrases).cache()
+        try {
+          val counts = folded.groupBy($"pidx").agg(count(lit(1)).as("c"))
+            .as[(Int, Long)].collect().toMap
+          oversizedPhrases = counts.collect {
+            case (i, c) if c > limit => allPhrases(i)
+          }.toSet
+          val okIdx = counts.collect { case (i, c) if c <= limit => i }.toSeq
+          if (okIdx.isEmpty) Map.empty
+          else folded.filter($"pidx".isin(okIdx: _*))
+            .as[(Int, Long, Int, Int)].collect()
+            .groupBy(_._1)
+            .map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) }
+        } finally folded.unpersist(false)
       }
 
     // ---- per-query combine: pure arithmetic over the prefetched atoms --
@@ -880,13 +719,10 @@ final class SparkSearchEngine(
         } catch { case _: TooBigForDriver => topKAuto(q, accuracy, k) }
       q -> top
     }
-    releaseCaches()
     val rows = perQuery.flatMap { case (q, top) =>
       top.map { case (d, s) => (q, d, s) }
     }
-    spark.createDataset(rows).toDF("query", "docId", "score")
-      .join(dict, Seq("docId"))
-      .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
+    withDict(spark.createDataset(rows).toDF("query", "docId", "score"))
   }
 
   /** (query, docId, s = raw BM25) candidates for bare-term atoms — the
@@ -905,10 +741,8 @@ final class SparkSearchEngine(
     val deltas = termDeltas(keys)
     val idfByTerm = blocks.groupBy($"term").agg(sum($"n_docs").as("df"))
       .as[(String, Long)].collect()
-      .map { case (t, dfRaw) =>
-        val df = dfRaw - deltas.getOrElse(t, 0L)
-        t -> StrictMath.log(((n - df) + 0.5) / (df + 0.5) + 1.0)
-      }.toMap
+      .map { case (t, dfRaw) => t -> Bm25.idf(n, (dfRaw - deltas.getOrElse(t, 0L)).toDouble) }
+      .toMap
     val p = params; val st = stats
     val bIdf = spark.sparkContext.broadcast(idfByTerm)
     val delFn = deletedFn(deletedBroadcast)
@@ -921,50 +755,37 @@ final class SparkSearchEngine(
       .select($"query", $"docId", $"s")
   }
 
-  /** (query, docId, s = raw BM25) for phrase atoms: ONE shuffle on docId
-    * over the union of all phrases' stems, then every phrase's positional
-    * fold (stale-postings quirk included) runs doc-locally in one pass;
-    * per-query df is a map-side-combined aggregate. No block-max bound
-    * exists for phrase tf, so phrases score exhaustively (as the
-    * single-query path does). */
-  private def phraseAtomFrame(phraseAtoms: Seq[(String, Vector[String])]): DataFrame = {
-    val allStems = phraseAtoms.flatMap(_._2).distinct
-    // a doc is a candidate iff it contains SOME phrase's head stem (each
-    // phrase's fold returns 0 without its own head — see headDocFilter)
-    val heads = phraseAtoms.map(_._2.head).distinct
-    val base = postings.filter($"term".isin(allStems: _*))
-    val perDoc = headDocFilter(heads, allStems).fold(base)(base.filter)
-      .select($"docId", $"doc_len", $"term", $"positions_vb")
-      .groupBy($"docId")
-      .agg(first($"doc_len").as("doc_len"),
-        collect_list(struct($"term", $"positions_vb")).as("tp"))
-      .as[(Long, Int, Seq[(String, Array[Byte])])]
-    val bAtoms = spark.sparkContext.broadcast(phraseAtoms)
-    val fF = perDoc.flatMap { case (docId, dl, tp) =>
-      val termPos = tp.iterator.map { case (t, vb) =>
-        t -> graft.codec.VarByte.decodePositions(vb).toSeq
-      }.toMap
-      bAtoms.value.iterator.flatMap { case (q, stems) =>
-        val tf = PhraseMatch.phraseTf(stems, termPos)
-        if (tf > 0) Iterator.single((q, docId, tf, dl)) else Iterator.empty
+  /** (query, docId, s = raw BM25) for phrase atoms over `folded`, the
+    * caller-cached `phraseFold(phrases)`: per-phrase df is one small
+    * aggregate collected to the driver, and each folded row is scored with
+    * the scalar `Bm25` of the single-query paths, once per query that
+    * lexes to its phrase. No block-max bound exists for phrase tf, so
+    * phrases score exhaustively (as the single-query path does). */
+  private def phraseAtomFrame(
+      folded: DataFrame,
+      phrases: Seq[Vector[String]],
+      phraseAtoms: Seq[(String, Vector[String])]): DataFrame = {
+    val n = stats.total_docs.toDouble
+    val idf = folded.groupBy($"pidx").agg(count(lit(1)))
+      .as[(Int, Long)].collect()
+      .map { case (i, df) => i -> Bm25.idf(n, df.toDouble) }.toMap
+    val pidx = phrases.zipWithIndex.toMap
+    val queriesOf = phraseAtoms.groupBy(a => pidx(a._2))
+      .map { case (i, qs) => i -> qs.map(_._1) }
+    val k1 = params.k1; val b = params.b; val avgdl = stats.avg_doc_len
+    folded.as[(Int, Long, Int, Int)]
+      .flatMap { case (i, docId, tf, dl) =>
+        val s = idf(i) * Bm25.tfPart(tf.toDouble, dl.toDouble, k1, b, avgdl)
+        queriesOf(i).iterator.map(q => (q, docId, s))
       }
-    }.toDF("query", "docId", "tf", "doc_len")
-      .select($"query", $"docId", tfPartCol($"tf", $"doc_len").as("f"))
-    // cached so the postings decode + positional fold runs ONE job: the
-    // broadcast df aggregate populates the cache, the join then reads it
-    // (uncached, fF would evaluate twice — round-3 ADVICE)
-    val fFc = track(fF.cache())
-    val perQuery = fFc.groupBy($"query")
-      .agg(count(lit(1)).cast("double").as("df_count"))
-    fFc.join(broadcast(perQuery), Seq("query"))
-      .select($"query", $"docId", (idfCol($"df_count") * $"f").as("s"))
+      .toDF("query", "docId", "s")
   }
 
   /** Shared bulk tail over raw (query, docId, s): per-query max in one
     * map-side-combined agg (for term atoms the true max is always among
     * the WAND candidates — it IS the top-1 score), max-normalize,
-    * single-operand stack combine, SALTED two-phase per-query top-k,
-    * dict attach. */
+    * single-operand stack combine, SALTED two-phase per-query top-k.
+    * @return (query, docId, score) */
   private def bulkTopK(atomF: DataFrame, k: Int, accuracy: Double): DataFrame = {
     val perQuery = atomF.groupBy($"query").agg(max($"s").as("mx"))
     val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
@@ -979,17 +800,20 @@ final class SparkSearchEngine(
       .partitionBy($"query", $"salt").orderBy($"score".desc, $"docId".asc)
     val w2 = org.apache.spark.sql.expressions.Window
       .partitionBy($"query").orderBy($"score".desc, $"docId".asc)
-    val top = scored
+    scored
       .withColumn("salt", pmod(hash($"docId"), lit(salts)))
       .withColumn("rn", row_number().over(w1)).filter($"rn" <= k)
       .withColumn("rn2", row_number().over(w2)).filter($"rn2" <= k)
       .select($"query", $"docId", $"score")
-    // inner join: the dict is complete by the row-level build invariant,
-    // and inner lets Spark broadcast the (N·k-row) result side instead of
-    // shuffling the corpus-sized dictionary
+  }
+
+  /** (query, docId, score) → (query, docId, conv_id, turn_idx, score).
+    * Inner join: the dict is complete by the row-level build invariant,
+    * and inner lets Spark broadcast the (N·k-row) result side instead of
+    * shuffling the corpus-sized dictionary. */
+  private def withDict(top: DataFrame): DataFrame =
     top.join(dict, Seq("docId"))
       .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
-  }
 
   /** Bulk search with snippets over the source turns table: the bulk
     * top-k joined to turns, each query's snippet keys/weights broadcast,

@@ -50,7 +50,7 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
   val avgDocLen: Double =
     if (docs.isEmpty) 0.0 else docLens.values.map(_.toLong).sum.toDouble / totalDocs
 
-  type Scores = Map[Long, Double]
+  type Dense = Map[Long, Double]
 
   def calculateBM25(tf: Double, docLen: Double, df: Double): Double = {
     // StrictMath to stay bit-identical with Catalyst's log expression
@@ -60,10 +60,10 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
     idf * tfPart
   }
 
-  object Algebra extends ScoreAlgebra[Scores] {
-    override def empty: Scores = docLens.map { case (d, _) => d -> 0.0 }
+  object DenseAlgebra extends ScoreAlgebra[Dense] {
+    override def empty: Dense = docLens.map { case (d, _) => d -> 0.0 }
 
-    override def termScore(rawTerm: String): Scores = {
+    override def termScore(rawTerm: String): Dense = {
       val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
       val postings = index.getOrElse(key, Map.empty)
       var maximum = 0.0
@@ -78,7 +78,7 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
       out.toMap
     }
 
-    override def phraseScore(phraseText: String): Scores = {
+    override def phraseScore(phraseText: String): Dense = {
       val stems = TextPipeline.tokenizeQuery(phraseText)
       val documentsMap: Map[Long, Int] =
         if (stems.isEmpty) Map.empty
@@ -105,14 +105,14 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
       out.toMap
     }
 
-    override def not(a: Scores): Scores = a.map { case (d, s) => d -> (1 - s) }
-    override def and(a: Scores, b: Scores): Scores =
+    override def not(a: Dense): Dense = a.map { case (d, s) => d -> (1 - s) }
+    override def and(a: Dense, b: Dense): Dense =
       a.map { case (d, s) => d -> math.min(s, b(d)) }
-    override def or(a: Scores, b: Scores): Scores =
+    override def or(a: Dense, b: Dense): Dense =
       a.map { case (d, s) => d -> math.max(s, b(d)) }
-    override def add(a: Scores, b: Scores, wa: Double, wb: Double): Scores =
+    override def add(a: Dense, b: Dense, wa: Double, wb: Double): Dense =
       a.map { case (d, s) => d -> (wa * s + wb * b(d)) }
-    override def normalize(a: Scores): Scores = {
+    override def normalize(a: Dense): Dense = {
       var max = 0.0
       a.valuesIterator.foreach(v => max = math.max(max, v))
       if (max > 0) a.map { case (d, s) => d -> s / max } else a
@@ -121,7 +121,7 @@ final class RefOracle(turns: Seq[Turn], params: GraftParams = GraftParams()) {
 
   /** Full query: evaluate → accuracy filter → (score desc, docId asc) → k. */
   def search(query: String, accuracy: Double = 0.0, k: Int = 100): Vector[(Long, Double)] = {
-    val scores = QueryEvaluator.evaluate(query, Algebra, params)
+    val scores = QueryEvaluator.evaluate(query, DenseAlgebra, params)
     scores.toVector
       .filter(_._2 >= accuracy)
       .sortBy { case (d, s) => (-s, d) }

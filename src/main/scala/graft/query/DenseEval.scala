@@ -6,13 +6,14 @@ import scala.collection.mutable
 /** The dense one-shuffle boolean evaluator's query-side machinery: an AST
   * capture of the reference algebra plus the per-document scalar kernel.
   *
-  * Motivation (round-3/4 carried item): the distributed `Scores` algebra
-  * pays one full_outer JOIN (a shuffle of operand-sized frames) per
-  * boolean operator plus a cached frame and a max aggregate per op — a
-  * query like `"a" AND "b" OR "c"` over head stems at 10^7+ docs is
-  * join-cascade-bound. But the whole computation is a per-document scalar
-  * expression once (a) every atom's rows are aligned per doc and (b) the
-  * data-dependent normalization constants are known. So: evaluate the
+  * Motivation: evaluating the algebra operator by operator over
+  * distributed sparse frames costs one full_outer JOIN (a shuffle of
+  * operand-sized frames) per boolean operator plus a cached frame and a
+  * max aggregate per op — a query like `"a" AND "b" OR "c"` over head
+  * stems at 10^7+ docs is join-cascade-bound. But the whole computation
+  * is a per-document scalar expression once (a) every atom's rows are
+  * aligned per doc and (b) the data-dependent normalization constants
+  * are known. So: evaluate the
   * query ONCE with `AstAlgebra` to get the expression tree, fetch all
   * atoms in ONE pruned scan + ONE docId shuffle, resolve each
   * normalization constant bottom-up with a no-shuffle aggregate pass over
@@ -101,12 +102,6 @@ object DenseEval {
     }
     walk(n)
     s.toArray
-  }
-
-  /** The BM25 tf-part, exactly as `DriverScalarAlgebra.bm25` computes it. */
-  def tfPart(tf: Double, dl: Double, k1: Double, b: Double, avgdl: Double): Double = {
-    val docNorm = (1 - b) + b * (dl / avgdl)
-    (tf * (k1 + 1)) / (tf + k1 * docNorm)
   }
 
   /** Per-document value of `n` given the doc's normalized atom scores

@@ -37,10 +37,7 @@ object Wand {
       stats: IndexStats,
       deleted: Long => Boolean = _ => false): Iterator[(Long, Double)] = {
     val k1 = params.k1; val b = params.b; val avgdl = stats.avg_doc_len
-    def tfPart(tf: Double, dl: Double): Double = {
-      val docNorm = (1 - b) + b * (dl / avgdl)
-      (tf * (k1 + 1)) / (tf + k1 * docNorm)
-    }
+    def tfPart(tf: Double, dl: Double): Double = Bm25.tfPart(tf, dl, k1, b, avgdl)
     // PriorityQueue dequeues its max; rank so the WORST candidate (lowest
     // score, then highest docId) is the max and sits at `head`.
     val worstAtHead: Ordering[(Long, Double)] =

@@ -73,9 +73,9 @@ class DeleteSpec extends AnyFunSuite {
       assert(keyed(eDel, ioDel, q) == keyed(eRef, ioRef, q), s"query $q")
     }
     // the WAND kernel path (block df minus delta + exact skip set) stays
-    // bit-identical to the exhaustive path ON the tombstoned engine
-    assert(eDel.termTopKWand("whale", 0.0, 50) ==
-      eDel.topK(eDel.scores("whale"), 0.0, 50))
+    // bit-identical to the exhaustive driver path (df counted over the
+    // filtered postings) ON the tombstoned engine
+    assert(eDel.termTopKWand("whale", 0.0, 50) == eDel.topKDriver("whale", 0.0, 50).get)
     // the dense one-shuffle evaluator applies the tombstones too
     assert(eDel.topKDense(queries(2), 0.0, 1000) == eDel.topKAuto(queries(2), 0.0, 1000))
     // bulk path: per-query ≡ single-query on the tombstoned engine
@@ -115,7 +115,7 @@ class DeleteSpec extends AnyFunSuite {
     queries.foreach { q =>
       assert(keyed(eC, io, q) == before(q), s"query $q after compact")
     }
-    assert(eC.termTopKWand("whale", 0.0, 50) == eC.topK(eC.scores("whale"), 0.0, 50))
+    assert(eC.termTopKWand("whale", 0.0, 50) == eC.topKDriver("whale", 0.0, 50).get)
   }
 
   test("purged docIds are never reused by a later incremental append") {
@@ -143,8 +143,9 @@ class DeleteSpec extends AnyFunSuite {
     val capped = new SparkSearchEngine(spark, io,
       GraftParams(maxDeletedIdsInMemory = 2))
     intercept[IllegalStateException] { capped.termTopKWand("whale", 0.0, 10) }
-    // the exhaustive path does not need the driver-side skip set
-    assert(capped.topK(capped.scores("whale"), 0.0, 10).nonEmpty)
+    // the exhaustive paths do not need the driver-side skip set
+    assert(capped.topKDriver("whale", 0.0, 10).exists(_.nonEmpty))
+    assert(capped.topKDense("whale", 0.0, 10).nonEmpty)
   }
 
   test("fresh full build clears stale tombstones and watermark") {

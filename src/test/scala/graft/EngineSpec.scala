@@ -1,16 +1,22 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
 import graft.corpus.TranscriptGen
 import graft.oracle.RefOracle
 import graft.store.ParquetTableIO
 
-/** End-to-end rank/score identity: the distributed engine vs the
-  * reference-faithful in-memory oracle on the q01–q20 reference query set
-  * (FIXTURES.md §3) over the deterministic synthetic transcript corpus. */
+/** End-to-end rank/score identity: the engine's query paths (WAND,
+  * driver algebra, dense evaluator) vs the reference-faithful in-memory
+  * oracle on the q01–q20 reference query set (FIXTURES.md §3) over the
+  * deterministic synthetic transcript corpus. */
 object EngineSpecFixture {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -35,6 +41,21 @@ object EngineSpecFixture {
   }
 
   val queries: Seq[(String, (String, Double))] = EngineQueries.all
+
+  /** Bare terms for the WAND path: every q term plus edge cases (a stop
+    * word, an unknown term, an apostrophe form). */
+  val terms: Seq[String] = Seq("whale", "blue", "the", "run", "engin", "a", "zzzunknown", "dont")
+
+  /** Shapes beyond q01–q20: nonzero defaults (NOT), an empty atom,
+    * duplicate atoms — the dense fill and the normalization constants
+    * must track the oracle exactly everywhere. */
+  val extraShapes: Seq[String] = Seq(
+    "NOT \"blue whale\"",
+    "\"blue whale\" AND \"red fish\"",
+    "(\"blue whale\" OR \"query engine\") NOT \"red fish\"",
+    "\"blue whale\" whale whale engine",
+    "\"zzz nothing\"",
+    "\"blue whale\" \"blue whale\"")
 }
 
 class EngineSpec extends AnyFunSuite {
@@ -94,36 +115,50 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("algebra caches are released after top-k: no growth across queries") {
+  test("query calls release their caches: no persisted RDD outlives a call") {
     val (io, _) = built
     val engine = new SparkSearchEngine(spark, io)
+    // operands above the cap: topKAuto routes boolean queries to topKDense
+    val tiny = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = 2))
+    val turns = TranscriptGen.generate(spark, Convs).toDF()
+    val atoms = Seq("\"blue whale\"", "whale")
+    val boolean = Seq("(\"blue whale\" OR \"query engine\") NOT \"red fish\"",
+      "\"blue whale\" whale engine")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "searchMany" -> (() => engine.searchMany(atoms).collect()),
+      "searchManyWithSnippets" -> (() => engine.searchManyWithSnippets(atoms, turns).collect()),
+      "searchManyAuto" -> (() => engine.searchManyAuto(boolean ++ atoms).collect()),
+      "topKAuto (driver)" -> (() => boolean.map(engine.topKAuto(_, 0.0, 10))),
+      "topKAuto (dense)" -> (() => boolean.map(tiny.topKAuto(_, 0.0, 10))),
+      "topKDense" -> (() => engine.topKDense(boolean(1), 0.0, 10)))
     def persisted = spark.sparkContext.getPersistentRDDs.size
-    // warm once (lazy stats/postings), snapshot, then run repeatedly
-    engine.topK(engine.scores("(\"blue whale\" OR \"query engine\") NOT \"red fish\""), 0.0, 10)
-    val base = persisted
-    (1 to 15).foreach { _ =>
-      engine.topK(engine.scores("(\"blue whale\" OR \"query engine\") NOT \"red fish\""), 0.0, 10)
-      engine.topK(engine.scores("\"blue whale\" whale engine"), 0.0, 10)
+    for ((name, call) <- calls; i <- 1 to 10) {
+      val before = persisted
+      call()
+      assert(persisted == before, s"$name call $i left cached RDDs: $before -> $persisted")
     }
-    assert(persisted <= base, s"cached RDDs grew across queries: $base -> $persisted")
   }
 
   test("q01-q20: rank- and score-identical to the oracle") {
     val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    queries.sortBy(_._1).foreach { case (name, (q, accuracy)) =>
-      val want = oracle.search(q, accuracy, 100)
-      val got = engine.topK(engine.scores(q), accuracy, 100)
-      if (got.map(_._1) != want.map(_._1)) {
-        failures += s"$name '$q': docIds ${got.take(5)} vs ${want.take(5)}"
-      } else {
-        got.zip(want).foreach { case ((gd, gs), (wd, ws)) =>
-          val rel = if (ws == 0.0) math.abs(gs) else math.abs(gs - ws) / math.abs(ws)
-          if (rel > 1e-9) failures += s"$name '$q': score doc $gd $gs vs $ws"
-        }
+    def check(label: String, got: Vector[(Long, Double)], want: Vector[(Long, Double)]): Unit =
+      if (got != want) failures += s"$label: ${got.take(5)} vs ${want.take(5)}"
+    val cases =
+      queries.sortBy(_._1).map { case (name, (q, acc)) => (s"$name '$q'", q, acc, 100) } ++
+        (for (q <- extraShapes; acc <- Seq(0.0, Double.MinPositiveValue, 0.4); k <- Seq(100, 50, 3))
+          yield (s"'$q' acc=$acc k=$k", q, acc, k))
+    cases.foreach { case (label, q, acc, k) =>
+      val want = oracle.search(q, acc, k)
+      check(s"$label topKAuto", engine.topKAuto(q, acc, k), want)
+      engine.topKDriver(q, acc, k) match {
+        case Some(driver) => check(s"$label topKDriver", driver, want)
+        case None => failures += s"$label: topKDriver bailed out"
       }
+      check(s"$label topKDense", engine.topKDense(q, acc, k), want)
     }
+    terms.foreach(t => check(s"term '$t' WAND", engine.termTopKWand(t, 0.0, 100), oracle.search(t, 0.0, 100)))
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
@@ -133,7 +168,8 @@ class EngineSpec extends AnyFunSuite {
     val tiny = new SparkSearchEngine(spark, io,
       GraftParams(driverAlgebraMaxDocs = 2)) // forces TooBig fallback
     queries.foreach { case (name, (q, accuracy)) =>
-      val distributed = engine.topK(engine.scores(q), accuracy, 100)
+      // the distributed path: the dense one-shuffle evaluator
+      val distributed = engine.topKDense(q, accuracy, 100)
       val driver = engine.topKDriver(q, accuracy, 100)
       assert(driver.isDefined, s"$name should fit the driver path")
       assert(driver.get == distributed, s"$name '$q'")
@@ -142,51 +178,22 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("dense one-shuffle path bit-identical to driver + distributed algebras on q01-q20") {
-    val (io, _) = built
-    val engine = new SparkSearchEngine(spark, io)
-    queries.foreach { case (name, (q, accuracy)) =>
-      val distributed = engine.topK(engine.scores(q), accuracy, 100)
-      assert(engine.topKDense(q, accuracy, 100) == distributed, s"$name '$q'")
-    }
-    // extra shapes: nonzero defaults (NOT), empty atoms, duplicate atoms,
-    // several accuracies — the dense fill and normalization constants must
-    // track the driver exactly everywhere
-    val extra = Seq(
-      "NOT \"blue whale\"",
-      "\"blue whale\" AND \"red fish\"",
-      "(\"blue whale\" OR \"query engine\") NOT \"red fish\"",
-      "\"blue whale\" whale whale engine",
-      "\"zzz nothing\"",
-      "\"blue whale\" \"blue whale\"")
-    for (q <- extra; acc <- Seq(0.0, Double.MinPositiveValue, 0.4)) {
-      assert(engine.topKDense(q, acc, 50) == engine.topK(engine.scores(q), acc, 50),
-        s"'$q' at accuracy $acc")
-    }
-    // dense path leaves no cached frames behind
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    val base = persisted
-    engine.topKDense("\"blue whale\" whale engine", 0.0, 10)
-    assert(persisted <= base, "dense evaluator must release its aligned cache")
-  }
-
   test("WAND term top-k identical to the exhaustive path (all q terms + edge cases)") {
     val (io, oracle) = built
     val engine = new SparkSearchEngine(spark, io)
-    val terms = Seq("whale", "blue", "the", "run", "engin", "a", "zzzunknown", "dont")
+    // the exhaustive path: the driver algebra scores every posting
+    def exhaustive(t: String, acc: Double, k: Int) = engine.topKDriver(t, acc, k).get
     terms.foreach { t =>
-      val exhaustive = engine.topK(engine.scores(t), 0.0, 100)
+      val full = exhaustive(t, 0.0, 100)
       val wand = engine.termTopKWand(t, 0.0, 100)
-      assert(wand == exhaustive, s"term '$t': wand ${wand.take(3)} vs ${exhaustive.take(3)}")
+      assert(wand == full, s"term '$t': wand ${wand.take(3)} vs ${full.take(3)}")
       val oracleTop = oracle.search(t, 0.0, 100)
       assert(wand.map(_._1) == oracleTop.map(_._1), s"term '$t' vs oracle")
     }
     // accuracy threshold path
-    assert(engine.termTopKWand("whale", 0.5, 100) ==
-      engine.topK(engine.scores("whale"), 0.5, 100))
+    assert(engine.termTopKWand("whale", 0.5, 100) == exhaustive("whale", 0.5, 100))
     // small k triggers real pruning (blockSize=8 in this fixture)
-    assert(engine.termTopKWand("the", 0.0, 3) ==
-      engine.topK(engine.scores("the"), 0.0, 3))
+    assert(engine.termTopKWand("the", 0.0, 3) == exhaustive("the", 0.0, 3))
   }
 
   test("bulk multi-term search is bit-identical to the per-term WAND path") {
@@ -240,7 +247,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("phrase head-stem Bloom prefilter: forced path bit-identical on all phrase queries") {
-    val (io, _) = built
+    val (io, oracle) = built
     import spark.implicits._
     val engine = new SparkSearchEngine(spark, io)
     // the default gates (min corpus size, head-selectivity ratio) never
@@ -252,8 +259,8 @@ class EngineSpec extends AnyFunSuite {
     val phraseQueries = queries.filter(_._2._1.contains("\""))
     assert(phraseQueries.nonEmpty)
     phraseQueries.foreach { case (name, (q, acc)) =>
-      assert(forced.topK(forced.scores(q), acc, 100) ==
-        engine.topK(engine.scores(q), acc, 100), s"$name distributed")
+      assert(forced.topKDriver(q, acc, 100).contains(oracle.search(q, acc, 100)),
+        s"$name forced vs oracle")
       assert(forced.topKDriver(q, acc, 100) == engine.topKDriver(q, acc, 100),
         s"$name driver")
       assert(forced.topKDense(q, acc, 100) == engine.topKDense(q, acc, 100),
@@ -370,7 +377,8 @@ class EngineSpec extends AnyFunSuite {
     val e1 = new SparkSearchEngine(spark, io)
     val e2 = new SparkSearchEngine(spark, io2)
     queries.take(6).foreach { case (name, (q, acc)) =>
-      assert(e1.topK(e1.scores(q), acc, 50) == e2.topK(e2.scores(q), acc, 50), name)
+      assert(e1.topKAuto(q, acc, 50) == e2.topKAuto(q, acc, 50), s"$name auto")
+      assert(e1.topKDense(q, acc, 50) == e2.topKDense(q, acc, 50), s"$name dense")
     }
   }
 
@@ -416,15 +424,43 @@ class EngineSpec extends AnyFunSuite {
   test("plans: term lookup pushes down; top-k is TakeOrdered; scoring is codegen'd") {
     val (io, _) = built
     val engine = new SparkSearchEngine(spark, io)
-    val df = engine.scores("whale").df
-      .orderBy(org.apache.spark.sql.functions.col("score").desc).limit(10)
-    df.collect() // finalize the adaptive plan so codegen ids are visible
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(term), EqualTo(term,whale)]"),
-      s"term filter must reach the parquet scan:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"), "top-k must not global-sort")
-    assert(plan.contains("*("), "BM25 scoring must stay in whole-stage codegen")
-    assert(!plan.contains("positions_vb"), "term scoring must not read the positions column")
+    engine.stats // keep the one-off stats read out of the captures
+    // executed plans of everything `call` runs; listener events arrive
+    // asynchronously, so wait until `expected` holds (or time out)
+    def assertPlans(call: => Any, clue: String)(expected: Seq[String] => Boolean): Seq[String] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan.toString)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        call
+        eventually(timeout(Span(30, Seconds))) {
+          assert(expected(plans.asScala.toSeq), s"$clue:\n${plans.asScala.mkString("\n\n")}")
+        }
+        plans.asScala.toSeq
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val lookup = assertPlans(engine.topKDriver("whale", 0.0, 10),
+      "term filter must reach the parquet scan")(
+      _.exists(_.contains("PushedFilters: [IsNotNull(term), EqualTo(term,whale)]")))
+      .filter(_.contains("EqualTo(term,whale)"))
+    assert(!lookup.exists(_.contains("positions_vb")),
+      "term scoring must not read the positions column")
+    assertPlans(engine.topKDense("\"blue whale\" whale", 0.0, 10),
+      "top-k must not global-sort")(_.exists(_.contains("TakeOrderedAndProject")))
+    // BM25 itself is scalar code on every path; the Catalyst score
+    // arithmetic left is the bulk tail's normalize + stack combine
+    val bulk = engine.searchManyTerms(Seq("whale", "blue"), k = 5)
+    bulk.collect() // finalize the adaptive plan so codegen ids are visible
+    val plan = bulk.queryExecution.executedPlan.toString
+    Seq("""\*\(\d+\) Project \[.*\(s#\d+ / mx#\d+\).* AS norm""",
+      """\*\(\d+\) Project \[.*norm#\d+\).* AS score""").foreach { codegend =>
+      assert(codegend.r.findFirstIn(plan).isDefined,
+        s"bulk score arithmetic must stay in whole-stage codegen:\n$plan")
+    }
   }
 
   test("search returns snippets over top-k") {

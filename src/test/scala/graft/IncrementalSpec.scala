@@ -23,7 +23,7 @@ class IncrementalSpec extends AnyFunSuite {
     val dict = io.read(Tables.DocDict)
       .as[(Long, String, Int, Int)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    engine.topK(engine.scores(q), 0.0, 200).map { case (d, s) =>
+    engine.topKAuto(q, 0.0, 200).map { case (d, s) =>
       (dict(d), math.rint(s * 1e12) / 1e12)
     }.toSet
   }
@@ -57,7 +57,7 @@ class IncrementalSpec extends AnyFunSuite {
       assert(keyed(eInc, ioInc, q) == keyed(eFull, ioFull, q), s"query $q")
     }
     // WAND over multi-segment blocks
-    assert(eInc.termTopKWand("whale", 0.0, 50) == eInc.topK(eInc.scores("whale"), 0.0, 50))
+    assert(eInc.termTopKWand("whale", 0.0, 50) == eInc.topKDriver("whale", 0.0, 50).get)
   }
 
   test("crash repair: partial un-ledgered batch is cleaned and replayed exactly") {
@@ -156,7 +156,7 @@ class IncrementalSpec extends AnyFunSuite {
       query.processAllAvailable()
       assert(io.read(Tables.DocDict).count() == allTurns.size)
       val engine = new SparkSearchEngine(spark, io)
-      assert(engine.topK(engine.scores("whale"), 0.0, 10).nonEmpty)
+      assert(engine.topKAuto("whale", 0.0, 10).nonEmpty)
     } finally query.stop()
   }
 }

@@ -161,8 +161,7 @@ class CompactionSpec extends AnyFunSuite {
     b.buildIncremental(spark.createDataset(extra), batchId = 100L)
     assert(io.read(Tables.DocDict).count() == allTurns.size + extra.size)
     val e2 = new SparkSearchEngine(spark, io)
-    assert(e2.termTopKWand("whale", 0.0, 50) ==
-      e2.topK(e2.scores("whale"), 0.0, 50))
+    assert(e2.termTopKWand("whale", 0.0, 50) == e2.topKDriver("whale", 0.0, 50).get)
   }
 
   private def parquetFilesOf(io: ParquetTableIO, table: String): Int = {

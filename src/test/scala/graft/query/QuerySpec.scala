@@ -90,7 +90,7 @@ class SnippeterSpec extends AnyFunSuite {
 /** Score-algebra properties on the oracle (FIXTURES.md §5.2 item 3). */
 class AlgebraPropertySpec extends AnyFunSuite {
   private val oracle = new RefOracle(TranscriptGen.generateLocal(15))
-  private val alg = oracle.Algebra
+  private val alg = oracle.DenseAlgebra
   private val rnd = new scala.util.Random(11)
   private val vocab = oracle.index.keys.toVector
 
