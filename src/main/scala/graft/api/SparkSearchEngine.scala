@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftParams
 import graft.build.Tables
@@ -22,8 +22,9 @@ import graft.text.TextPipeline
   * `topKAuto` routes each query along one of three exact paths:
   *  - a single bare term → block-max WAND over the compressed block index
   *    (`termTopKWand`);
-  *  - driver-sized operands → one term-pruned distributed fetch per atom,
-  *    then the boolean algebra as driver arithmetic (`topKDriver`);
+  *  - driver-sized operands → one pruned postings scan for the bare-term
+  *    atoms and one phrase fold for the phrase atoms, then the boolean
+  *    algebra as driver arithmetic (`topKDriver`);
   *  - anything bigger → the dense evaluator: one docId shuffle aligns
   *    every atom, then per-doc scalar scoring (`topKDense`).
   * All three score with `Bm25` in the same IEEE operation order and are
@@ -31,6 +32,12 @@ import graft.text.TextPipeline
   * (`searchManyTerms`, `searchMany`, `searchManyAuto`) share operand
   * fetches across a batch. A call that caches a frame unpersists it
   * before it returns.
+  *
+  * An engine is a snapshot of the warehouse as opened: stats, tombstones
+  * and the never-cached `postings`, `dict`, `blocks` and `deleted_term_df`
+  * handles resolve once, on first use, so a warm query runs no schema
+  * inference. Re-open after any write; the HTTP server does, and resolves
+  * its `--input` turns frame with each re-open.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -59,46 +66,48 @@ final class SparkSearchEngine(
     deletes.fold(df)(d => df.join(broadcast(d), Seq("docId"), "left_anti"))
   private lazy val postings = minusDeleted(io.read(Tables.Postings))
   private lazy val dict = minusDeleted(io.read(Tables.DocDict))
+  private lazy val blocks = io.read(Tables.Blocks)
+  private lazy val deletedTermDf: Option[DataFrame] =
+    if (deletes.isDefined && io.exists(Tables.DeletedTermDf)) Some(io.read(Tables.DeletedTermDf))
+    else None
 
-  /** Exact deleted-id skip set for the WAND kernels (a Bloom filter's
-    * false positive would drop a LIVE doc — unacceptable, unlike the
-    * phrase prefilter where FPs fold to tf=0). Collected once per engine;
-    * bounded by `params.maxDeletedIdsInMemory`, past which the warehouse
-    * needs a compact() before block-index queries. */
-  private lazy val deletedIdsSorted: Option[Array[Long]] = deletes.map { d =>
-    val arr = d.limit(params.maxDeletedIdsInMemory + 1).as[Long].collect()
-    if (arr.length > params.maxDeletedIdsInMemory) throw new IllegalStateException(
-      s"more than ${params.maxDeletedIdsInMemory} tombstoned docs — run " +
-        "IndexBuilder.compact() to purge them (or raise maxDeletedIdsInMemory)")
-    java.util.Arrays.sort(arr)
-    arr
+  /** Exact deleted-id test for the WAND kernels (a Bloom filter's false
+    * positive would drop a LIVE doc — unacceptable, unlike the phrase
+    * prefilter where FPs fold to tf=0). The sorted ids are collected and
+    * broadcast once per engine, bounded by `params.maxDeletedIdsInMemory`,
+    * past which the warehouse needs a compact() before block-index
+    * queries. The lambda captures only the broadcast handle: bind it to a
+    * local `val` BEFORE a mapPartitions closure (reading the field inside
+    * one captures the non-serializable engine). */
+  private lazy val deletedFn: Long => Boolean = deletes match {
+    case None => _ => false
+    case Some(d) =>
+      val arr = d.limit(params.maxDeletedIdsInMemory + 1).as[Long].collect()
+      if (arr.length > params.maxDeletedIdsInMemory) throw new IllegalStateException(
+        s"more than ${params.maxDeletedIdsInMemory} tombstoned docs — run " +
+          "IndexBuilder.compact() to purge them (or raise maxDeletedIdsInMemory)")
+      java.util.Arrays.sort(arr)
+      val bc = spark.sparkContext.broadcast(arr)
+      id => java.util.Arrays.binarySearch(bc.value, id) >= 0
   }
-  /** (broadcast handle, executor-side membership test) for the kernels. */
-  private lazy val deletedBroadcast
-      : Option[org.apache.spark.broadcast.Broadcast[Array[Long]]] =
-    deletedIdsSorted.map(spark.sparkContext.broadcast(_))
-  /** NOTE: must be resolved to a local `val` BEFORE entering a
-    * mapPartitions closure — invoking this instance method inside one
-    * captures the (non-serializable) engine itself. The returned lambdas
-    * capture only the broadcast handle. */
-  private def deletedFn(
-      b: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): Long => Boolean =
-    b match {
-      case Some(bc) =>
-        id => java.util.Arrays.binarySearch(bc.value, id) >= 0
-      case None => _ => false
+
+  /** Live df of every key that has blocks: block `n_docs` minus the
+    * tombstone deltas — the exact row count of the key's filtered
+    * postings, and correct across incrementally appended segments (unlike
+    * the batch-only term_stats table). One shuffle-free job (a row per
+    * block and per delta, summed on the driver); none for no keys. */
+  private def liveDf(keys: Seq[String]): Map[String, Long] =
+    if (keys.isEmpty) Map.empty
+    else {
+      val counts = blocks.filter($"term".isin(keys: _*)).select($"term", $"n_docs".cast("long"))
+      deletedTermDf.fold(counts)(d =>
+        counts.union(d.filter($"term".isin(keys: _*)).select($"term", -$"delta")))
+        .as[(String, Long)].collect().groupMapReduce(_._1)(_._2)(_ + _)
     }
 
-  /** Per-term tombstone df deltas (sum across delete batches) for the
-    * paths that derive df from block metadata instead of filtered rows. */
-  private def termDeltas(keys: Seq[String]): Map[String, Long] =
-    if (deletes.isEmpty || !io.exists(Tables.DeletedTermDf)) Map.empty
-    else io.read(Tables.DeletedTermDf).filter($"term".isin(keys: _*))
-      .groupBy($"term").agg(sum($"delta").as("d"))
-      .as[(String, Long)].collect().toMap
-
-  /** Map-side candidate prefilter for the phrase fold. Phrase tf can be
-    * nonzero ONLY for docs containing the FIRST stem: `PhraseMatch.phraseTf`
+  /** A phrase fold's input — (docId, doc_len, term, positions_vb) of every
+    * stem of `phrases` — with a map-side candidate prefilter. Phrase tf
+    * can be nonzero ONLY for docs with the FIRST stem: `PhraseMatch.phraseTf`
     * returns 0 when `stems.head` is absent, while every LATER missing stem
     * is skip-folded (the reference's stale-postings quirk,
     * BM25Ranker.cpp:439-491) — so the head stem is the one necessary
@@ -112,26 +121,29 @@ final class SparkSearchEngine(
     * bit-identical at any fpp; the filter is pure plan surgery, the fold
     * is untouched. On corpora smaller than the minDf threshold the df
     * lookup itself is skipped — zero extra jobs on the common path. */
-  private def headDocFilter(heads: Seq[String], allStems: Seq[String]): Option[Column] = {
-    if (stats.total_docs < params.phrasePrefilterMinDf) return None // no job
-    val dfByTerm = io.read(Tables.Blocks)
-      .filter($"term".isin(allStems.distinct: _*))
-      .groupBy($"term").agg(sum($"n_docs").as("df"))
-      .as[(String, Long)].collect().toMap
-    val dfHead = heads.distinct.map(dfByTerm.getOrElse(_, 0L)).sum
-    val dfAll = allStems.distinct.map(dfByTerm.getOrElse(_, 0L)).sum
+  private def stemPostings(phrases: Seq[Vector[String]]): DataFrame = {
+    val allStems = phrases.flatten.distinct
+    // a doc is a candidate iff it contains SOME phrase's head stem (each
+    // phrase's fold returns 0 without its own head)
+    val heads = phrases.map(_.head).distinct
+    val base = postings.filter($"term".isin(allStems: _*))
+      .select($"docId", $"doc_len", $"term", $"positions_vb")
+    if (stats.total_docs < params.phrasePrefilterMinDf) return base // no job
+    val dfByTerm = liveDf(allStems)
+    val dfHead = heads.map(dfByTerm.getOrElse(_, 0L)).sum
+    val dfAll = allStems.map(dfByTerm.getOrElse(_, 0L)).sum
     // gate on what the filter SAVES (the Σdf shuffle) and on selectivity
     // (df(head)/Σdf) — NOT on df(head) being large: the canonical win is
     // a rare head against a stop-word-class tail stem, where df(head) is
     // tiny and the saved shuffle is nearly all of Σdf
     if (dfAll < params.phrasePrefilterMinDf ||
-      dfHead > dfAll * params.phrasePrefilterMaxRatio) None
+      dfHead > dfAll * params.phrasePrefilterMaxRatio) base
     else {
       val bf = postings.filter($"term".isin(heads: _*)).select($"docId")
         .stat.bloomFilter("docId", math.max(dfHead, 1L), 0.01)
       val bBf = spark.sparkContext.broadcast(bf)
       val mightContain = udf((id: Long) => bBf.value.mightContain(id))
-      Some(mightContain($"docId"))
+      base.filter(mightContain($"docId"))
     }
   }
 
@@ -145,22 +157,23 @@ final class SparkSearchEngine(
     */
   final class TooBigForDriver extends RuntimeException
   type DScores = (scala.collection.Map[Long, Double], Double)
+  private type Rows = Array[(Long, Int, Int)] // (docId, tf, doc_len)
 
-  /** Scalar sparse-vector algebra with a PLUGGABLE operand fetch: the
-    * per-query path fetches each atom's rows with its own distributed
-    * scan; the bulk path (`searchManyAuto`) prefetches every atom of the
-    * whole batch in shared scans and hands the rows over from a map.
-    * Everything after fetch is the same code, so the two paths are
-    * bit-identical by construction. Fetchers throw TooBigForDriver when
-    * an operand exceeds `driverAlgebraMaxDocs`. */
+  /** Scalar sparse-vector algebra over PREFETCHED operand rows: the
+    * single-query path (`topKDriver`) fetches its query's atoms, the bulk
+    * path (`searchManyAuto`) every atom of the whole batch, both in shared
+    * scans, and hands the rows over from maps. Everything after fetch is
+    * the same code, so the two paths are bit-identical by construction.
+    * Fetchers throw TooBigForDriver when an operand exceeds
+    * `driverAlgebraMaxDocs`. */
   private final class DriverScalarAlgebra(
-      fetchTermRows: String => Array[(Long, Int, Int)], // post-stem key → (docId, tf, doc_len)
-      fetchPhraseRows: Vector[String] => Array[(Long, Int, Int)])
+      fetchTermRows: String => Rows, // post-stem key → rows
+      fetchPhraseRows: Vector[String] => Rows)
     extends ScoreAlgebra[DScores] {
 
     private val limit = params.driverAlgebraMaxDocs
 
-    private def scoreRows(rows: Array[(Long, Int, Int)]): DScores = {
+    private def scoreRows(rows: Rows): DScores = {
       val idf = Bm25.idf(stats.total_docs.toDouble, rows.length.toDouble)
       var mx = 0.0
       val m = new scala.collection.mutable.HashMap[Long, Double]()
@@ -214,28 +227,48 @@ final class SparkSearchEngine(
     }
   }
 
-  private def fetchLimited(df: DataFrame): Array[(Long, Int, Int)] = {
-    val rows = df.limit(params.driverAlgebraMaxDocs + 1).as[(Long, Int, Int)].collect()
-    if (rows.length > params.driverAlgebraMaxDocs) throw new TooBigForDriver
-    rows
+  /** Rows of every bare-term key in ONE pruned postings scan, gated up
+    * front on `liveDf` (the exact row count): keys above
+    * `driverAlgebraMaxDocs` are returned in the set, not fetched. */
+  private def fetchTerms(keys: Seq[String]): (Map[String, Rows], Set[String]) = {
+    val df = liveDf(keys)
+    val tooBig = df.collect { case (t, n) if n > params.driverAlgebraMaxDocs => t }.toSet
+    val fetch = df.collect { case (t, n) if n > 0 && !tooBig(t) => t }.toSeq
+    val rows =
+      if (fetch.isEmpty) Map.empty[String, Rows]
+      else postings.filter($"term".isin(fetch: _*))
+        .select($"term", $"docId", $"tf", $"doc_len")
+        .as[(String, Long, Int, Int)].collect()
+        .groupBy(_._1).map { case (t, rs) => t -> rs.map(r => (r._2, r._3, r._4)) }
+    (rows, tooBig)
   }
 
+  /** Rows of every phrase from ONE `phraseFold`; TooBigForDriver when a
+    * phrase matches more than `driverAlgebraMaxDocs` docs. The collect
+    * stops at phrases·max + 1 rows: reaching that quota means some phrase
+    * is over (pigeonhole); below it the per-phrase counts decide exactly. */
+  private def fetchPhrases(phrases: Seq[Vector[String]]): Map[Vector[String], Rows] =
+    if (phrases.isEmpty) Map.empty
+    else {
+      val ps = phrases.distinct
+      val max = params.driverAlgebraMaxDocs
+      val quota = math.min(ps.length.toLong * max + 1, Int.MaxValue.toLong).toInt
+      val rows = phraseFold(ps).limit(quota).as[(Int, Long, Int, Int)].collect()
+      val byPhrase = rows.groupBy(_._1)
+      if (rows.length >= quota || byPhrase.exists(_._2.length > max)) throw new TooBigForDriver
+      byPhrase.map { case (i, rs) => ps(i) -> rs.map(r => (r._2, r._3, r._4)) }
+    }
+
   /** The phrase positional fold, for many phrases at once: ONE shuffle on
-    * docId over the union of all phrases' stems (head-stem prefiltered),
+    * docId over `stemPostings(phrases)`,
     * then every phrase's fold (stale-postings quirk included) runs
     * doc-locally in one pass. Returns the UNCACHED frame
     * (pidx, docId, tf, doc_len) of every doc with tf > 0, `pidx` indexing
     * `phrases`; a caller that reads it twice caches it and unpersists it
     * before returning. Phrases must be non-empty. */
   private def phraseFold(phrases: Seq[Vector[String]]): DataFrame = {
-    val allStems = phrases.flatten.distinct
-    // a doc is a candidate iff it contains SOME phrase's head stem (each
-    // phrase's fold returns 0 without its own head — see headDocFilter)
-    val heads = phrases.map(_.head).distinct
     val indexed = phrases.zipWithIndex.toArray
-    val base = postings.filter($"term".isin(allStems: _*))
-    headDocFilter(heads, allStems).fold(base)(base.filter)
-      .select($"docId", $"doc_len", $"term", $"positions_vb")
+    stemPostings(phrases)
       .groupBy($"docId")
       .agg(first($"doc_len").as("doc_len"), // constant per doc
         collect_list(struct($"term", $"positions_vb")).as("tp"))
@@ -251,12 +284,6 @@ final class SparkSearchEngine(
       }
       .toDF("pidx", "docId", "tf", "doc_len")
   }
-
-  /** Per-query driver algebra: one distributed scan per atom. */
-  private lazy val DriverAlgebra: ScoreAlgebra[DScores] = new DriverScalarAlgebra(
-    key => fetchLimited(postings.filter($"term" === key)
-      .select($"docId", $"tf", $"doc_len")),
-    stems => fetchLimited(phraseFold(Seq(stems)).select($"docId", $"tf", $"doc_len")))
 
   /** The top-k tail over a driver-side sparse vector: accuracy filter,
     * (score desc, docId asc) order, dense fill with absent docs when the
@@ -286,12 +313,23 @@ final class SparkSearchEngine(
     }
   }
 
-  /** Driver-algebra top-k; None when an operand is too big for the driver. */
-  def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] =
+  /** Driver-algebra top-k; None when an operand is too big for the driver.
+    * The query's operands are fetched together: every bare-term atom in
+    * one postings scan gated on its live df, every phrase atom in one
+    * `phraseFold` (one docId shuffle). */
+  def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] = {
+    val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
+    QueryEvaluator.evaluate(query, ast, params)
     try {
-      val (m, default) = QueryEvaluator.evaluate(query, DriverAlgebra, params)
+      val (termRows, bigTerms) = fetchTerms(ast.atomList.collect { case Left(t) => t })
+      if (bigTerms.nonEmpty) throw new TooBigForDriver
+      val phraseRows = fetchPhrases(ast.atomList.collect { case Right(st) => st })
+      val alg = new DriverScalarAlgebra(
+        termRows.getOrElse(_, Array.empty), phraseRows.getOrElse(_, Array.empty))
+      val (m, default) = QueryEvaluator.evaluate(query, alg, params)
       Some(driverTopK(m, default, accuracy, k))
     } catch { case _: TooBigForDriver => None }
+  }
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
     * beyond-driver-sized path. Evaluating the algebra operator by operator
@@ -338,15 +376,9 @@ final class SparkSearchEngine(
       }
     val stemRows: Option[Dataset[Row]] =
       if (phraseAtoms.isEmpty) None
-      else {
-        val allStems = phraseAtoms.flatMap(_._1).distinct
-        val heads = phraseAtoms.map(_._1.head).distinct
-        val base = postings.filter($"term".isin(allStems: _*))
-        Some(headDocFilter(heads, allStems).fold(base)(base.filter)
-          .select($"docId", $"doc_len", $"term", $"positions_vb")
-          .as[(Long, Int, String, Array[Byte])]
-          .map { case (d, dl, t, vb) => (d, dl, true, -1, 0, t, vb) })
-      }
+      else Some(stemPostings(phraseAtoms.map(_._1))
+        .as[(Long, Int, String, Array[Byte])]
+        .map { case (d, dl, t, vb) => (d, dl, true, -1, 0, t, vb) })
     val rows: Dataset[Row] = (termRows.toSeq ++ stemRows.toSeq)
       .reduceOption(_ union _)
       .getOrElse(spark.emptyDataset[(Long, Int, Boolean, Int, Int, String, Array[Byte])])
@@ -480,46 +512,27 @@ final class SparkSearchEngine(
     * query shape. */
   def termTopKWand(rawTerm: String, accuracy: Double = 0.0, k: Int = params.topK): Vector[(Long, Double)] = {
     val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-    // df derived from the block metadata itself (term-pruned read): exact,
-    // and — unlike the batch-only term_stats table — correct across
-    // incrementally appended segments
-    val dfArr = io.read(Tables.Blocks).filter($"term" === key)
-      .agg(sum($"n_docs")).as[Option[Long]].collect()
-    // block metadata counts tombstoned docs too — subtract the recorded
-    // per-term delta so idf matches a filtered-postings recount exactly
-    val dfLive = dfArr.headOption.flatten
-      .map(_ - termDeltas(Seq(key)).getOrElse(key, 0L)).filter(_ > 0L)
-    val raw: Vector[(Long, Double)] =
-      if (dfLive.isEmpty) Vector.empty
-      else {
-        val idf = Bm25.idf(stats.total_docs.toDouble, dfLive.get.toDouble)
+    val raw: Vector[(Long, Double)] = liveDf(Seq(key)).get(key).filter(_ > 0L) match {
+      case None => Vector.empty
+      case Some(df) =>
+        val idf = Bm25.idf(stats.total_docs.toDouble, df.toDouble)
         val p = params; val st = stats
-        val delFn = deletedFn(deletedBroadcast)
-        val cands = io.read(Tables.Blocks).filter($"term" === key)
-          .as[graft.model.IndexBlock]
-          .mapPartitions(it =>
-            Wand.topKForPartition(it, idf, k, p, st, delFn))
+        val delFn = deletedFn
+        val cands = blocks.filter($"term" === key).as[graft.model.IndexBlock]
+          .mapPartitions(it => Wand.topKForPartition(it, idf, k, p, st, delFn))
           .collect()
         Wand.mergeTopK(cands.toIndexedSeq, k)
-      }
+    }
     val mx = raw.headOption.map(_._2).getOrElse(0.0)
-    val normed = if (mx > 0) raw.map { case (d, s) => (d, s / mx) } else raw
     // single-operand stackCombine (ProcessQuery :152-154,183-203): the
     // final score is TFW·normalize(x) + EMW·x — not an IEEE no-op, so it
-    // must be applied here too for bit-identity with the algebra path
+    // must be applied here too for bit-identity with the algebra path;
+    // absent docs hold 0 (the driver tail's dense zero-fill)
     val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
-    val combined = normed.map { case (d, s) => (d, tfw * s + emw * s) }
-    val filtered = combined.filter(_._2 >= accuracy)
-    if (filtered.length >= k || accuracy > 0.0) filtered.take(k)
-    else {
-      // dense zero-fill (reference vectors are dense; absent docs hold 0)
-      val present = raw.map(_._1).toSet
-      val absent = dict.select($"docId")
-        .filter(!$"docId".isin(present.toSeq: _*))
-        .orderBy($"docId".asc).limit(k)
-        .as[Long].collect().toVector.map(d => (d, 0.0))
-      (filtered ++ absent).sortBy { case (d, sc) => (-sc, d) }.take(k)
-    }
+    driverTopK(raw.map { case (d, s) =>
+      val n = if (mx > 0) s / mx else s
+      d -> (tfw * n + emw * n)
+    }.toMap, 0.0, accuracy, k)
   }
 
   /** Single bare term (no quotes, no operators) → WAND-routable. */
@@ -548,7 +561,8 @@ final class SparkSearchEngine(
     val byId = top.toMap
     val keys = Snippeter.queryKeys(query, params.stemBareTerms)
     val weights = QueryEvaluator.wordsAndPhrasesWeights(query)
-    val hits = dict.filter($"docId".isin(ids: _*))
+    // ≤ k dict rows: always the broadcast side, so no shuffle of turns
+    val hits = broadcast(dict.filter($"docId".isin(ids: _*)))
       .join(turns, Seq("conv_id", "turn_idx"))
       .select($"docId", $"conv_id", $"turn_idx", $"text")
       .as[(Long, String, Int, String)].collect()
@@ -656,7 +670,6 @@ final class SparkSearchEngine(
       accuracy: Double = 0.0): DataFrame = {
     require(queries.nonEmpty, "searchManyAuto needs at least one query")
     val qs = queries.distinct
-    val limit = params.driverAlgebraMaxDocs
     def stemKey(t: String) = if (params.stemBareTerms) TextPipeline.term(t) else t
     val lexed = qs.map(q => q -> QueryLexer.lex(q))
     val allTermKeys = lexed.flatMap(_._2.collect {
@@ -666,40 +679,21 @@ final class SparkSearchEngine(
       case QueryLexer.QPhrase(p) => TextPipeline.tokenizeQuery(p)
     }).distinct.filter(_.nonEmpty)
 
-    // ---- shared term fetch: size gate, then ONE pruned scan ------------
-    val termCounts: Map[String, Long] =
-      if (allTermKeys.isEmpty) Map.empty
-      else postings.filter($"term".isin(allTermKeys: _*))
-        .groupBy($"term").agg(count(lit(1)).as("c"))
-        .as[(String, Long)].collect().toMap
-    val oversizedTerms = termCounts.collect { case (t, c) if c > limit => t }.toSet
-    val okTerms = allTermKeys.filterNot(oversizedTerms)
-    val termRows: Map[String, Array[(Long, Int, Int)]] =
-      if (okTerms.isEmpty) Map.empty
-      else postings.filter($"term".isin(okTerms: _*))
-        .select($"term", $"docId", $"tf", $"doc_len")
-        .as[(String, Long, Int, Int)].collect()
-        .groupBy(_._1).map { case (t, rs) => t -> rs.map(r => (r._2, r._3, r._4)) }
+    // ---- shared term fetch: live-df gate, then ONE pruned scan ---------
+    val (termRows, oversizedTerms) = fetchTerms(allTermKeys)
 
     // ---- shared phrase fetch: one shuffle, per-phrase doc-local fold ---
-    var oversizedPhrases = Set.empty[Vector[String]]
-    val phraseRows: Map[Vector[String], Array[(Long, Int, Int)]] =
-      if (allPhrases.isEmpty) Map.empty
+    val (phraseRows, oversizedPhrases) =
+      if (allPhrases.isEmpty) (Map.empty[Vector[String], Rows], Set.empty[Vector[String]])
       else {
         // read by the size gate and by the row fetch: fold once
         val folded = phraseFold(allPhrases).cache()
         try {
-          val counts = folded.groupBy($"pidx").agg(count(lit(1)).as("c"))
-            .as[(Int, Long)].collect().toMap
-          oversizedPhrases = counts.collect {
-            case (i, c) if c > limit => allPhrases(i)
-          }.toSet
-          val okIdx = counts.collect { case (i, c) if c <= limit => i }.toSeq
-          if (okIdx.isEmpty) Map.empty
-          else folded.filter($"pidx".isin(okIdx: _*))
-            .as[(Int, Long, Int, Int)].collect()
-            .groupBy(_._1)
-            .map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) }
+          val big = folded.groupBy($"pidx").count().filter($"count" > params.driverAlgebraMaxDocs)
+            .select($"pidx").as[Int].collect()
+          val rows = folded.filter(!$"pidx".isin(big.toSeq: _*)).as[(Int, Long, Int, Int)].collect()
+          (rows.groupBy(_._1).map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) },
+            big.map(allPhrases).toSet)
         } finally folded.unpersist(false)
       }
 
@@ -732,22 +726,17 @@ final class SparkSearchEngine(
     * At head terms this skips exactly the block decodes the single-query
     * WAND path skips (full-scoring 64 head terms at 10M docs measured
     * SLOWER than 64 WAND round-trips — pruning, not just batching, is
-    * what scales). Per-term df comes from the block metadata in one
-    * batched aggregate, like termTopKWand's per-term lookup. */
+    * what scales). Per-term df comes from one `liveDf` job for all
+    * terms, as termTopKWand's does for its one. */
   private def termAtomFrame(keyed: Seq[(String, String)], k: Int): DataFrame = {
     val keys = keyed.map(_._2).distinct
-    val blocks = io.read(Tables.Blocks).filter($"term".isin(keys: _*))
     val n = stats.total_docs.toDouble
-    val deltas = termDeltas(keys)
-    val idfByTerm = blocks.groupBy($"term").agg(sum($"n_docs").as("df"))
-      .as[(String, Long)].collect()
-      .map { case (t, dfRaw) => t -> Bm25.idf(n, (dfRaw - deltas.getOrElse(t, 0L)).toDouble) }
-      .toMap
+    val idfByTerm = liveDf(keys).map { case (t, df) => t -> Bm25.idf(n, df.toDouble) }
     val p = params; val st = stats
     val bIdf = spark.sparkContext.broadcast(idfByTerm)
-    val delFn = deletedFn(deletedBroadcast)
+    val delFn = deletedFn
     val qdf = spark.createDataset(keyed).toDF("query", "term")
-    blocks.as[graft.model.IndexBlock]
+    blocks.filter($"term".isin(keys: _*)).as[graft.model.IndexBlock]
       .mapPartitions(it =>
         Wand.topKForPartitionMulti(it, bIdf.value, k, p, st, delFn))
       .toDF("term", "docId", "s")

@@ -1,7 +1,7 @@
 package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftParams
 import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
@@ -46,7 +46,14 @@ final class SearchEngineServer(
 
   @volatile private var params = GraftParams()
   private def io = new ParquetTableIO(spark, warehouse)
-  @volatile private var engine = new SparkSearchEngine(spark, io, params)
+  /** The engine (a snapshot: every write re-opens it) and the `--input`
+    * turns frame its hits are snippeted from, resolved together and
+    * swapped as one value; a request reads it once. A failed turns read
+    * is retried by each request, never pinned. */
+  @volatile private var serving = open()
+  private def open(): (SparkSearchEngine, Option[scala.util.Try[DataFrame]]) =
+    (new SparkSearchEngine(spark, io, params), inputPath.map(p => scala.util.Try(spark.read.parquet(p))))
+  private def reopen(): Unit = serving = open()
 
   // ---- minimal flat-JSON helpers (fields are numbers/bools/strings/
   // string arrays — the reference's bodies are exactly this shape) -------
@@ -138,8 +145,9 @@ final class SearchEngineServer(
   }
 
   private def searchJson(query: String, accuracy: Double): String = {
-    val hits = inputPath match {
-      case Some(p) => engine.search(query, spark.read.parquet(p), accuracy)
+    val (engine, turns) = serving
+    val hits = turns match {
+      case Some(t) => engine.search(query, t.getOrElse(spark.read.parquet(inputPath.get)), accuracy)
       case None =>
         engine.topKAuto(query, accuracy, params.topK).map { case (d, s) =>
           graft.model.SearchHit(d, s"doc-$d", -1, s, "", "")
@@ -156,9 +164,11 @@ final class SearchEngineServer(
   /** Bulk hits as {"<query>":[{title,content,url,score},...],...} — the
     * per-hit shape of /search, grouped by query. */
   private def searchManyJson(queries: Seq[String], accuracy: Double): String = {
-    val rows: Seq[(String, Long, String, Int, Double, String)] = inputPath match {
-      case Some(p) =>
-        engine.searchManyWithSnippets(queries, spark.read.parquet(p), params.topK, accuracy)
+    val (engine, turns) = serving
+    val rows: Seq[(String, Long, String, Int, Double, String)] = turns match {
+      case Some(t) =>
+        engine.searchManyWithSnippets(queries, t.getOrElse(spark.read.parquet(inputPath.get)),
+          params.topK, accuracy)
           .select($"query", $"docId", $"conv_id", $"turn_idx", $"score", $"snippet")
           .as[(String, Long, String, Int, Double, String)].collect().toSeq
       case None =>
@@ -174,7 +184,7 @@ final class SearchEngineServer(
     * across the batch, per-query results ≡ the /search evaluation. */
   private def searchManyAutoJson(queries: Seq[String], accuracy: Double): String =
     groupedHitsJson(queries,
-      engine.searchManyAuto(queries, params.topK, accuracy)
+      serving._1.searchManyAuto(queries, params.topK, accuracy)
         .as[(String, Long, String, Int, Double)].collect().toSeq
         .map { case (q, d, c, t, s) => (q, d, c, t, s, "") })
 
@@ -279,6 +289,7 @@ final class SearchEngineServer(
       (jsonField(body, "seedUrls"), jsonField(body, "numberOfPages")) match {
         case (Some(urls), Some(n)) =>
           ingest(jsonStringArray(urls), Some(unquote(n).toInt))
+          reopen()
           (200, "Successfully crawled the pages")
         case _ => (400, "Invalid JSON data")
       }
@@ -300,7 +311,7 @@ final class SearchEngineServer(
       jsonField(body, "clear") match {
         case Some(v) =>
           buildIndex(unquote(v).toInt != 0)
-          engine = new SparkSearchEngine(spark, io, params)
+          reopen()
           (200, "Successfully created Inverted Index")
         case None => (400, "Invalid JSON data")
       }
@@ -313,7 +324,7 @@ final class SearchEngineServer(
           // table-input engine: "crawl and index" = incremental-ingest the
           // sources (which indexes them); `clear` folds into batch resume
           ingest(jsonStringArray(urls), Some(unquote(n).toInt))
-          engine = new SparkSearchEngine(spark, io, params)
+          reopen()
           (200, "Successfully crawled the pages and created Inverted Index")
         case _ => (400, "Invalid JSON data")
       }
@@ -337,7 +348,7 @@ final class SearchEngineServer(
             b.deleteDocs(ids, batchId)
             val compacted = jsonField(body, "compact").exists(v => unquote(v).toInt != 0)
             if (compacted) b.compact()
-            engine = new SparkSearchEngine(spark, io, params)
+            reopen()
             (200, s"Successfully deleted documents (batch $batchId" +
               (if (compacted) ", compacted)" else ")"))
           }
@@ -352,7 +363,7 @@ final class SearchEngineServer(
         case (Some(k1), Some(b), Some(pb), Some(emw)) =>
           params = params.copy(k1 = unquote(k1).toDouble, b = unquote(b).toDouble,
             phraseBoost = unquote(pb).toDouble, exactMatchWeight = unquote(emw).toDouble)
-          engine = new SparkSearchEngine(spark, io, params)
+          reopen()
           (200, "Successfully set new Ranker parameters")
         case _ => (404, "Invalid JSON data")
       }

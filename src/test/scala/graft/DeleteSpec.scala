@@ -88,6 +88,37 @@ class DeleteSpec extends AnyFunSuite {
     }
   }
 
+  test("driver gate at its boundary: max operand live df → driver, one less → dense") {
+    import spark.implicits._
+    val (io, _, survivors, _) = tombstoned()
+    val oracle = new graft.oracle.RefOracle(survivors)
+    // docIds relabel between the tombstoned warehouse and the survivors'
+    // oracle, but both rank by (conv_id, turn_idx): compare ranked keys
+    val engineKey = io.read(Tables.DocDict).as[(Long, String, Int, Int)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    val oracleKey = oracle.docs.map { case (d, t) => d -> ((t.conv_id, t.turn_idx)) }.toMap
+    def ranked(top: Vector[(Long, Double)], key: Map[Long, (String, Int)]) =
+      top.map { case (d, s) => (key(d), s) }
+    def liveDf(atom: String): Int =
+      if (atom.startsWith("\""))
+        oracle.DenseAlgebra.phraseScore(atom.stripPrefix("\"").stripSuffix("\"")).count(_._2 > 0)
+      else oracle.index.getOrElse(atom, Map.empty).size
+    // a term, a phrase, and a mixed query whose merges never outgrow its
+    // largest operand (the phrase's docs all contain its head stem, blue)
+    Seq(Seq("whale"), Seq("\"blue whale\""), Seq("\"blue whale\"", "blue")).foreach { atoms =>
+      val q = atoms.mkString(" ")
+      val max = atoms.map(liveDf).max
+      val want = ranked(oracle.search(q, 0.0, 1000), oracleKey)
+      val atGate = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = max))
+      val over = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = max - 1))
+      assert(atGate.topKDriver(q, 0.0, 1000).map(ranked(_, engineKey)).contains(want),
+        s"'$q' at driverAlgebraMaxDocs = $max must route to the driver, == oracle")
+      assert(over.topKDriver(q, 0.0, 1000).isEmpty, s"'$q' at ${max - 1} must decline")
+      assert(ranked(over.topKDense(q, 0.0, 1000), engineKey) == want, s"'$q' dense")
+      assert(ranked(over.topKAuto(q, 0.0, 1000), engineKey) == want, s"'$q' auto")
+    }
+  }
+
   test("deleteDocs is batch-idempotent; unknown/already-deleted ids are ignored") {
     import spark.implicits._
     val (io, b, survivors, delIds) = tombstoned()

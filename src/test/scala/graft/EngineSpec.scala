@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -136,6 +137,55 @@ class EngineSpec extends AnyFunSuite {
       val before = persisted
       call()
       assert(persisted == before, s"$name call $i left cached RDDs: $before -> $persisted")
+    }
+  }
+
+  test("warm queries run only the Spark jobs their data needs") {
+    val (io, _) = built
+    val engine = new SparkSearchEngine(spark, io)
+    val turns = TranscriptGen.generate(spark, Convs).toDF()
+    val sc = spark.sparkContext
+    val group = "engine-spec-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    // jobs `call` runs on this thread, first and repeat call
+    def count(call: => Any): (Int, Int) = {
+      def once() = {
+        org.apache.spark.TestBus.drain(sc)
+        jobs.set(0)
+        call
+        org.apache.spark.TestBus.drain(sc)
+        jobs.get
+      }
+      (once(), once())
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      engine.search("\"blue whale\" whale", turns) // warm: resolves every handle
+      // ≥ k matches: one live-df job + one WAND job, no zero-fill
+      val wand = count(engine.termTopKWand("the", 0.0, 10))
+      assert(wand == ((2, 2)), "termTopKWand")
+      // accuracy > 0 keeps the zero-fill out: the jobs are the fold alone
+      val acc = Double.MinPositiveValue
+      val onePhrase = count(engine.topKDriver("\"blue whale\"", acc, 10))
+      val threePhrases =
+        count(engine.topKDriver("(\"blue whale\" OR \"query engine\") AND \"red fish\"", acc, 10))
+      assert(onePhrase._1 == onePhrase._2 && onePhrase._1 <= 3, s"one phrase: $onePhrase")
+      assert(threePhrases == onePhrase, "three phrases must share one phrase fold")
+      Seq("whale", "\"blue whale\" whale engine", "\"blue whale\" AND \"red fish\"").foreach { q =>
+        val topK = count(engine.topKAuto(q, 0.0, engine.params.topK))
+        val search = count(engine.search(q, turns))
+        assert(topK._1 == topK._2 && search._1 == search._2, s"'$q' repeat: $topK $search")
+        assert(search._1 - topK._1 <= 2, s"'$q': search $search vs top-k $topK")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 

@@ -19,19 +19,19 @@ class ServerSpec extends AnyFunSuite {
     (s, p, turnsPath)
   }
   private val client = HttpClient.newHttpClient()
-  private def url(path: String) = s"http://127.0.0.1:$port$path"
+  private def url(path: String, p: Int) = s"http://127.0.0.1:$p$path"
   private def send(req: HttpRequest): HttpResponse[String] =
     client.send(req, HttpResponse.BodyHandlers.ofString())
   private def put(path: String, body: String) =
-    send(HttpRequest.newBuilder(URI.create(url(path)))
+    send(HttpRequest.newBuilder(URI.create(url(path, port)))
       .PUT(HttpRequest.BodyPublishers.ofString(body)).build())
-  private def post(path: String, body: String) =
-    send(HttpRequest.newBuilder(URI.create(url(path)))
+  private def post(path: String, body: String, p: => Int = port) =
+    send(HttpRequest.newBuilder(URI.create(url(path, p)))
       .POST(HttpRequest.BodyPublishers.ofString(body)).build())
-  private def get(path: String) =
-    send(HttpRequest.newBuilder(URI.create(url(path))).GET().build())
+  private def get(path: String, p: => Int = port) =
+    send(HttpRequest.newBuilder(URI.create(url(path, p))).GET().build())
   private def delete(path: String) =
-    send(HttpRequest.newBuilder(URI.create(url(path))).DELETE().build())
+    send(HttpRequest.newBuilder(URI.create(url(path, port))).DELETE().build())
 
   test("root serves the API documentation") {
     val r = get("/")
@@ -80,6 +80,37 @@ class ServerSpec extends AnyFunSuite {
     assert(get("/searchManyAuto?accuracy=0.0").statusCode() == 404)
   }
 
+  test("concurrent /search: every reply is byte-equal to its serial reply") {
+    post("/indexDocuments", """{"clear": 1}""")
+    val queries = Seq(
+      "whale", "blue", // term
+      "%22blue%20whale%22", "%22red%20fish%22", // phrase
+      "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22", // boolean
+      "%22blue%20whale%22%20whale%20engine") // mixed
+    val serial = queries.map { q =>
+      val r = get(s"/search?query=$q&accuracy=0.0")
+      assert(r.statusCode() == 200, s"$q: ${r.body()}")
+      q -> r.body()
+    }.toMap
+    val clients = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
+    try {
+      val replies = (0 until clients).map { c =>
+        // each client its own rotation, so different shapes overlap
+        val client: java.util.concurrent.Callable[Seq[(String, Int, String)]] = () =>
+          (0 until 3 * queries.size).map { i =>
+            val q = queries((c + i) % queries.size)
+            val r = get(s"/search?query=$q&accuracy=0.0")
+            (q, r.statusCode(), r.body())
+          }
+        pool.submit(client)
+      }.flatMap(_.get())
+      replies.foreach { case (q, code, body) =>
+        assert(code == 200 && body == serial(q), s"$q under concurrency: $code ${body.take(200)}")
+      }
+    } finally { pool.shutdown(); () }
+  }
+
   test("setRankerParameters swaps the ranker; bad body rejected") {
     val ok = put("/setRankerParameters",
       """{"BM25_K1": 1.2, "BM25_B": 0.8, "PHRASE_BOOST": 1.5, "EXACT_MATCH_WEIGHT": 0.5}""")
@@ -103,6 +134,41 @@ class ServerSpec extends AnyFunSuite {
     assert(r.statusCode() == 200 && r.body().contains("Successfully crawled"))
     assert(put("/crawl_terminate", """{"clearDocumentsHistory": 0}""").statusCode() == 200)
     assert(post("/crawl", """{"bad": 1}""").statusCode() == 400)
+  }
+
+  test("crawl re-opens the engine: crawled conversations are searchable at once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("srv_crawl_").toString
+    val input = s"$dir/turns"
+    val batch = s"$dir/batch"
+    val baseConvs = graft.corpus.TranscriptGen.generateLocal(10).map(_.conv_id).toSet
+    val fresh = graft.corpus.TranscriptGen.generateLocal(20).filterNot(t => baseConvs(t.conv_id))
+    graft.corpus.TranscriptGen.generate(spark, 10).write.parquet(input)
+    val s1 = new SearchEngineServer(spark, s"$dir/wh", Some(input), port = 0)
+    val p1 = s1.start()
+    try {
+      assert(post("/indexDocuments", """{"clear": 1}""", p1).statusCode() == 200)
+      val query = "/search?query=whale&accuracy=0.000001"
+      val before = get(query, p1)
+      assert(before.statusCode() == 200, before.body())
+      // the new conversations: a crawl source, and rows of the served
+      // --input (hits are snippeted from it)
+      spark.createDataset(fresh).write.parquet(batch)
+      spark.createDataset(fresh).write.mode("append").parquet(input)
+      val crawl = post("/crawl", s"""{"seedUrls": ["$batch"], "numberOfPages": ${fresh.size}}""", p1)
+      assert(crawl.statusCode() == 200, crawl.body())
+      val after = get(query, p1)
+      assert(after.statusCode() == 200, after.body())
+      val freshConvs = fresh.map(_.conv_id).toSet
+      assert(freshConvs.exists(c => after.body().contains(s"graft://$c/")),
+        s"crawled turns must be searchable: ${after.body().take(300)}")
+      assert(!freshConvs.exists(c => before.body().contains(s"graft://$c/")))
+      // a freshly opened server over the same warehouse answers identically
+      val s2 = new SearchEngineServer(spark, s"$dir/wh", Some(input), port = 0)
+      val p2 = s2.start()
+      try assert(get(query, p2).body() == after.body())
+      finally s2.stop()
+    } finally s1.stop()
   }
 
   test("deleteDocuments tombstones per-doc; compact purges without changing results") {
