@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.api.SparkSearchEngine
 import graft.build.IndexBuilder
 import graft.corpus.TranscriptGen
-import graft.ops.{Dedup, DetHash, Multimodal, Pipeline, Similarity, TextOps}
+import graft.ops.{Dedup, DetHash, Multimodal, Pipeline, Similarity, StampedCache, TextOps}
 import graft.store.ParquetTableIO
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -58,18 +58,19 @@ object SparkEntry {
     new java.io.File(s"$p/version/_SUCCESS").exists()
 
   /** The ANN queries' input vectors (ids 0 and 1) — memoized per (dir, id)
-    * and prefetched by `warm`, so the seven probe queries measure probe
-    * latency instead of re-reading the same two parameter rows from
-    * parquet each time (the same one-off-artifact rationale as the warmed
-    * engines and indexes; results are unaffected — this is the query
-    * INPUT, not a computed output). */
-  private val queryEmbCache = scala.collection.mutable.Map.empty[(String, Long), Seq[Float]]
+    * against the embeddings table's file listing and prefetched by `warm`,
+    * so the seven probe queries measure probe latency instead of
+    * re-reading the same two parameter rows from parquet each time (the
+    * same one-off-artifact rationale as the warmed engines and indexes;
+    * results are unaffected — this is the query INPUT, not a computed
+    * output, and a regenerated table re-reads it). */
+  private val queryEmbCache = new StampedCache[(String, Long), Seq[Float]]
   private def queryEmbedding(s: SparkSession, dir: String, id: Long): Seq[Float] =
-    queryEmbCache.getOrElseUpdate((dir, id), {
+    queryEmbCache((dir, id), StampedCache.dirStamp(s, t(dir, "embeddings"))) {
       import s.implicits._
       s.read.parquet(t(dir, "embeddings")).filter(col("vec_id") === id)
         .select("embedding").as[Seq[Float]].head()
-    })
+    }
 
   private def lshIndex(s: SparkSession, dir: String): String = {
     val p = s"/tmp/graft_ann_v${Similarity.IndexVersion}/lsh_${dirKey(dir)}"

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -188,7 +191,7 @@ object Dedup {
     sig
   }
 
-  private def minHashSigs(
+  private[ops] def minHashSigs(
       spark: SparkSession, docs: DataFrame, shingleN: Int, k: Int): DataFrame = {
     import spark.implicits._
     docs.select("doc_id", "text").as[(Long, String)]
@@ -215,7 +218,7 @@ object Dedup {
 
   /** (band, bucket, doc_id) banding rows of a signature frame — 24 bytes
     * per (doc, band); the shuffle unit of every LSH variant. */
-  private def bandRows(
+  private[ops] def bandRows(
       spark: SparkSession, sigs: DataFrame, k: Int, bands: Int): DataFrame = {
     import spark.implicits._
     require(k % bands == 0, s"k ($k) must be a multiple of bands ($bands)")
@@ -254,76 +257,124 @@ object Dedup {
     df.join(sizes, keys, "left_semi")
   }
 
-  /** Above this many banding/keying rows the in-bucket pair search runs
-    * the distributed group chain; at or below it the rows (≤ ~24 bytes
-    * each, ≤ ~5 MB) are collected once and the grouping + cap + pair
-    * emission + dedup run on the driver — one job instead of the
+  /** Above this many keyed rows the in-bucket pair search runs on the
+    * executors; at or below it the rows (≤ ~32 bytes each, ≤ ~6 MB) are
+    * collected once and grouped on the driver — one job instead of the
     * 4-shuffle groupBy/semi-join/collect_list/dropDuplicates cascade.
-    * Same gate philosophy (and the same bucket-cap semantics, replicated
-    * exactly) as MaxIsinIds / MaxDriverEdgeRows; a 10M-doc corpus blows
-    * the gate and keeps the skew-capped distributed path. */
+    * Same gate philosophy as MaxIsinIds / MaxDriverEdgeRows; a 10M-doc
+    * corpus blows the gate and keeps the skew-capped distributed path. */
   private val MaxDriverBandRows = 200000
 
-  /** In-bucket candidate pairs of a grouped row set, driver-side: the
-    * EXACT semantics of keepMidSizedGroups → collect_list → sorted pair
-    * loop → dropDuplicates (groups of 2..maxBucket members only, ids
-    * sorted, i<j pairs, first-seen dedup). */
-  private def driverPairs[K](
-      rows: Iterable[(K, Long)], maxBucket: Int): Array[(Long, Long)] = {
-    val groups = new java.util.HashMap[K, scala.collection.mutable.ArrayBuffer[Long]]()
-    rows.foreach { case (k, id) =>
-      var b = groups.get(k)
-      if (b == null) { b = new scala.collection.mutable.ArrayBuffer[Long](4); groups.put(k, b) }
-      b += id
+  /** What one LSH variant pairs inside a key group of `(id, payload)`
+    * members. A group pairs only with 2..`maxBucket` members (the skew
+    * cap: a degenerate key is SKIPPED, trading recall on pathological
+    * keys for bounded work) of which at least one passes `member`; each
+    * i<j pair of its id-sorted members then emits `pair`'s value, if any.
+    * `dedup`: a pair can co-occur under several keys, so repeats are
+    * dropped — safe because `pair` depends on the pair alone, never on
+    * the key it met under. */
+  private[ops] final case class PairRule[P](
+      maxBucket: Int,
+      member: P => Boolean,
+      pair: (P, P) => Option[Int],
+      dedup: Boolean)
+
+  private val Paired = Some(0)
+
+  /** Every pair of every capped group; the payload is unused. */
+  private[ops] def everyPair(maxBucket: Int, dedup: Boolean): PairRule[Boolean] =
+    PairRule[Boolean](maxBucket, _ => true, (_, _) => Paired, dedup)
+
+  /** Pairs touching a new doc (payload `is_new`). The `member` prune
+    * skips an old-only bucket (a Bloom false positive) in O(k), not
+    * O(k²) no-op pair checks. */
+  private[ops] def newTouchingPairs(maxBucket: Int): PairRule[Boolean] =
+    PairRule[Boolean](maxBucket, isNew => isNew,
+      (a, b) => if (a || b) Paired else None, dedup = true)
+
+  /** Pairs within hamming `maxBits` of their fingerprints (payload), with
+    * the hamming as the value. Filtering inside the emission keeps the
+    * dedup shuffle at true-near-dup size — under-sized keys at large n
+    * otherwise push billions of non-dup candidates through it (measured:
+    * the whole stage's cost at 10M docs with 16-bit keys). */
+  private[ops] def hammingPairs(maxBits: Int, maxBucket: Int): PairRule[Long] =
+    PairRule[Long](maxBucket, _ => true, { (a, b) =>
+      val h = java.lang.Long.bitCount(a ^ b)
+      if (h <= maxBits) Some(h) else None
+    }, dedup = true)
+
+  /** THE in-bucket kernel, run by both sides of the pair chain on one
+    * key group's members. */
+  private[ops] def bucketPairs[P](
+      rule: PairRule[P], members: Seq[(Long, P)]): Iterator[(Long, Long, Int)] =
+    if (members.length < 2 || members.length > rule.maxBucket ||
+        !members.exists(m => rule.member(m._2))) Iterator.empty
+    else {
+      // a decoded Seq is a LIST: materialize to Array or the indexed
+      // accesses below cost O(k) each (O(k^3) per bucket — measured as an
+      // 85-minute stall on full 1000-member buckets at 10M docs)
+      val s = members.sortBy(_._1).toArray
+      s.indices.iterator.flatMap(i => (i + 1 until s.length).iterator.flatMap(j =>
+        rule.pair(s(i)._2, s(j)._2).map(v => (s(i)._1, s(j)._1, v))))
+    }
+
+  /** Driver side of the pair chain over collected `(keys…, id, payload)`
+    * rows: groups in a HashMap, runs `bucketPairs` per group, drops
+    * repeats first-seen when `rule.dedup`. */
+  private[ops] def pairsOnDriver[P](
+      rows: Array[Row], nKeys: Int, rule: PairRule[P]): Seq[(Long, Long, Int)] = {
+    val groups = new java.util.HashMap[Seq[Any], ArrayBuffer[(Long, P)]]()
+    rows.foreach { r =>
+      groups.computeIfAbsent(r.toSeq.take(nKeys), _ => new ArrayBuffer[(Long, P)](4))
+        .addOne((r.getLong(nKeys), r.getAs[P](nKeys + 1)))
     }
     val seen = new java.util.HashSet[(Long, Long)]()
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    groups.values.forEach { ids =>
-      if (ids.length >= 2 && ids.length <= maxBucket) {
-        val s = ids.toArray
-        java.util.Arrays.sort(s)
-        var i = 0
-        while (i < s.length) {
-          var j = i + 1
-          while (j < s.length) {
-            val p = (s(i), s(j))
-            if (seen.add(p)) out += p
-            j += 1
-          }
-          i += 1
-        }
+    val out = new ArrayBuffer[(Long, Long, Int)]()
+    groups.values.forEach { ms =>
+      bucketPairs(rule, ms.toSeq).foreach { p =>
+        if (!rule.dedup || seen.add((p._1, p._2))) out += p
       }
     }
-    out.toArray
+    out.toSeq
   }
 
-  /** Candidate pairs from banding rows: size-gated buckets, in-bucket
-    * pairs, skew-capped before materialization; driver fast path below
-    * the row gate. */
-  private def pairsFromBandRows(
-      spark: SparkSession, banded: DataFrame, maxBucket: Int): DataFrame = {
+  /** Executor side of the pair chain over a keyed frame `(keys…, id,
+    * payload)`: the size filter runs before any group is materialized
+    * (`keepMidSizedGroups`), then `bucketPairs` per collected group, then
+    * `dropDuplicates` when `rule.dedup`. Columns `(a, b, v)`. */
+  private[ops] def pairsOnExecutors[P: TypeTag](
+      spark: SparkSession, keyed: DataFrame, keys: Seq[String], rule: PairRule[P]): DataFrame = {
     import spark.implicits._
-    val head = banded.select($"band", $"bucket", $"doc_id")
-      .limit(MaxDriverBandRows + 1).as[(Int, Long, Long)].collect()
-    if (head.length <= MaxDriverBandRows) {
-      val pairs = driverPairs(head.iterator.map(r => ((r._1, r._2), r._3)).toIterable, maxBucket)
-      return spark.createDataset(pairs.toIndexedSeq).toDF("doc_a", "doc_b")
-    }
-    keepMidSizedGroups(banded, Seq("band", "bucket"), maxBucket)
-      .groupBy($"band", $"bucket")
-      .agg(collect_list($"doc_id").as("ids"))
-      .select($"ids").as[Seq[Long]]
-      .flatMap { ids =>
-        // decoded Seq is a LIST: materialize to Array or the indexed
-        // accesses below cost O(k) each (O(k^3) per bucket — measured as
-        // an 85-minute stall on full 1000-member buckets at 10M docs)
-        val s = ids.sorted.toArray
-        s.indices.iterator.flatMap(i =>
-          (i + 1 until s.length).iterator.map(j => (s(i), s(j))))
-      }
-      .toDF("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
+    val Array(id, payload) = keyed.columns.drop(keys.length)
+    val pairs = keepMidSizedGroups(keyed, keys, rule.maxBucket)
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col(id), col(payload))).as("ms"))
+      .select($"ms").as[Seq[(Long, P)]]
+      .flatMap(bucketPairs(rule, _))
+      .toDF("a", "b", "v")
+    if (rule.dedup) pairs.dropDuplicates("a", "b") else pairs
   }
+
+  /** The in-bucket pair search of every LSH variant: one
+    * `limit(MaxDriverBandRows + 1)` probe of the keyed frame, then the
+    * driver side at or below the gate, the executor side above it.
+    * Columns `(a, b, v)`, a before b in id order. */
+  private def keyedPairs[P: TypeTag](
+      spark: SparkSession, keyed: DataFrame, keys: Seq[String], rule: PairRule[P]): DataFrame = {
+    import spark.implicits._
+    val head = keyed.limit(MaxDriverBandRows + 1).collect()
+    if (head.length <= MaxDriverBandRows)
+      pairsOnDriver(head, keys.length, rule).toDF("a", "b", "v")
+    else pairsOnExecutors(spark, keyed, keys, rule)
+  }
+
+  /** Candidate pairs from banding rows: every pair sharing a (band,
+    * bucket), skew-capped. */
+  private def pairsFromBandRows(
+      spark: SparkSession, banded: DataFrame, maxBucket: Int): DataFrame =
+    keyedPairs(spark, banded.select(col("band"), col("bucket"), col("doc_id"), lit(true)),
+        Seq("band", "bucket"), everyPair(maxBucket, dedup = true))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
 
   private def candidatesFromSigs(
       spark: SparkSession,
@@ -556,10 +607,11 @@ object Dedup {
     * banding rows, prefiltered MAP-SIDE by a broadcast Bloom filter of
     * the batch's bucket keys before the shuffle. Correctness is exact:
     * Bloom false positives form buckets with no new member, dropped by
-    * the `has_new` gate; false negatives don't exist. Output = the pairs
-    * `minHashLsh` over the union corpus would report that touch ≥ 1 new
-    * doc (same banding, same cap semantics, same estimates). New doc_ids
-    * must be disjoint from the corpus (as with the ANN appends). */
+    * the `newTouchingPairs` member prune; false negatives don't exist.
+    * Output = the pairs `minHashLsh` over the union corpus would report
+    * that touch ≥ 1 new doc (same banding, same cap semantics, same
+    * estimates). New doc_ids must be disjoint from the corpus (as with
+    * the ANN appends). */
   def minHashDedupBatch(
       spark: SparkSession,
       indexPath: String,
@@ -603,7 +655,7 @@ object Dedup {
     // the Bloom filter remains (a 10M-doc batch must not collect 40M
     // keys). Results are identical either way: neither filter has false
     // negatives, and false positives only admit corpus rows whose
-    // buckets the `has_new` gate drops.
+    // buckets the `newTouchingPairs` member prune drops.
     val keyCol = xxhash64(col("band"), col("bucket"))
     val keyArr = newBands.select($"band", $"bucket").distinct()
       .limit(MaxExactPrefilterKeys + 1).as[(Int, Long)].collect()
@@ -635,55 +687,8 @@ object Dedup {
     val members = newBands
       .select($"band", $"bucket", $"doc_id", lit(true).as("is_new"))
       .union(corpusBands.select($"band", $"bucket", $"doc_id", lit(false).as("is_new")))
-    // driver fast path below the row gate — the exact cap + has-new-member
-    // gate + new-touching-pair + dedup semantics of the chain below
-    val headMembers = members.limit(MaxDriverBandRows + 1)
-      .as[(Int, Long, Long, Boolean)].collect()
-    val cands =
-      if (headMembers.length <= MaxDriverBandRows) {
-        val groups = new java.util.HashMap[(Int, Long),
-          scala.collection.mutable.ArrayBuffer[(Long, Boolean)]]()
-        headMembers.foreach { case (b, bk, id, isNew) =>
-          val k = (b, bk)
-          var buf = groups.get(k)
-          if (buf == null) {
-            buf = new scala.collection.mutable.ArrayBuffer[(Long, Boolean)](4)
-            groups.put(k, buf)
-          }
-          buf += ((id, isNew))
-        }
-        val seen = new java.util.HashSet[(Long, Long)]()
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        groups.values.forEach { ms =>
-          if (ms.length >= 2 && ms.length <= maxBucket && ms.exists(_._2)) {
-            val s = ms.sortBy(_._1).toArray
-            var i = 0
-            while (i < s.length) {
-              var j = i + 1
-              while (j < s.length) {
-                if ((s(i)._2 || s(j)._2) && seen.add((s(i)._1, s(j)._1)))
-                  out += ((s(i)._1, s(j)._1))
-                j += 1
-              }
-              i += 1
-            }
-          }
-        }
-        spark.createDataset(out.toIndexedSeq).toDF("doc_a", "doc_b")
-      } else keepMidSizedGroups(members, Seq("band", "bucket"), maxBucket)
-        .groupBy($"band", $"bucket")
-        .agg(collect_list(struct($"doc_id", $"is_new")).as("ms"))
-        .filter(exists($"ms", m => m.getField("is_new")))
-        .select($"ms").as[Seq[(Long, Boolean)]]
-        .flatMap { ms =>
-          val s = ms.sortBy(_._1).toArray // List indexing is O(k) — see above
-          s.indices.iterator.flatMap(i =>
-            (i + 1 until s.length).iterator
-              .filter(j => s(i)._2 || s(j)._2) // pairs touching a new doc only
-              .map(j => (s(i)._1, s(j)._1)))
-        }
-        .toDF("doc_a", "doc_b")
-        .dropDuplicates("doc_a", "doc_b")
+    val cands = keyedPairs(spark, members, Seq("band", "bucket"), newTouchingPairs(maxBucket))
+      .select($"a".as("doc_a"), $"b".as("doc_b"))
     // same replay rule for the estimate: the index copy of a replayed
     // batch doc would duplicate its signature row and multiply pair rows
     val allSigs = Similarity.readLive(spark, indexPath, "sigs", "doc_id")
@@ -762,6 +767,17 @@ object Dedup {
       blocks: Int = 4,
       maxBucket: Int = 100000): DataFrame = {
     import spark.implicits._
+    keyedPairs(spark, simHashKeyed(spark, hashes, maxBits, blocks), Seq("combo", "key"),
+        hammingPairs(maxBits, maxBucket))
+      .toDF("doc_a", "doc_b", "hamming")
+      .orderBy($"doc_a", $"doc_b")
+  }
+
+  /** `(combo, key, doc_id, simhash)`: one row per doc and block
+    * combination, keyed on the combination's blocks. */
+  private[ops] def simHashKeyed(
+      spark: SparkSession, hashes: DataFrame, maxBits: Int, blocks: Int): DataFrame = {
+    import spark.implicits._
     require(64 % blocks == 0, s"blocks ($blocks) must divide 64")
     require(maxBits < blocks,
       s"maxBits ($maxBits) must be < blocks ($blocks) for the pigeonhole guarantee")
@@ -769,7 +785,7 @@ object Dedup {
     val mask = if (width == 64) -1L else (1L << width) - 1
     val combos: Array[Array[Int]] =
       (0 until blocks).combinations(blocks - maxBits).map(_.toArray).toArray
-    val keyed = hashes.select("doc_id", "simhash").as[(Long, Long)]
+    hashes.select("doc_id", "simhash").as[(Long, Long)]
       .flatMap { case (id, h) =>
         combos.iterator.zipWithIndex.map { case (c, ci) =>
           var key = 0L
@@ -778,68 +794,6 @@ object Dedup {
           (ci, key, id, h)
         }
       }.toDF("combo", "key", "doc_id", "simhash")
-    // driver fast path below the row gate (same exact cap/pair/hamming/
-    // dedup semantics as the distributed chain below — hamming is a pair
-    // function, identical in every bucket copy, so first-seen dedup
-    // matches dropDuplicates)
-    val head = keyed.limit(MaxDriverBandRows + 1)
-      .as[(Int, Long, Long, Long)].collect()
-    if (head.length <= MaxDriverBandRows) {
-      val groups = new java.util.HashMap[(Int, Long),
-        scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-      head.foreach { case (ci, key, id, h) =>
-        val k = (ci, key)
-        var b = groups.get(k)
-        if (b == null) {
-          b = new scala.collection.mutable.ArrayBuffer[(Long, Long)](4)
-          groups.put(k, b)
-        }
-        b += ((id, h))
-      }
-      val seen = new java.util.HashSet[(Long, Long)]()
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-      groups.values.forEach { ms =>
-        if (ms.length >= 2 && ms.length <= maxBucket) {
-          val s = ms.sortBy(_._1).toArray
-          var i = 0
-          while (i < s.length) {
-            var j = i + 1
-            while (j < s.length) {
-              val h = java.lang.Long.bitCount(s(i)._2 ^ s(j)._2)
-              if (h <= maxBits && seen.add((s(i)._1, s(j)._1)))
-                out += ((s(i)._1, s(j)._1, h))
-              j += 1
-            }
-            i += 1
-          }
-        }
-      }
-      return spark.createDataset(out.toIndexedSeq)
-        .toDF("doc_a", "doc_b", "hamming")
-        .orderBy($"doc_a", $"doc_b")
-    }
-    keepMidSizedGroups(keyed, Seq("combo", "key"), maxBucket)
-      .groupBy($"combo", $"key")
-      .agg(collect_list(struct($"doc_id", $"simhash")).as("members"))
-      .select($"members").as[Seq[(Long, Long)]]
-      .flatMap { ms =>
-        val s = ms.sortBy(_._1).toArray // List indexing is O(k) — see above
-        val mb = maxBits
-        // hamming filter INSIDE the pair emission: hamming is a function
-        // of the pair (identical for every bucket the pair co-occurs in),
-        // so filtering before dropDuplicates is semantics-preserving and
-        // keeps the dedup shuffle at true-near-dup size — under-sized
-        // band keys at large n otherwise push billions of non-dup
-        // candidate rows through the distinct (measured: the whole
-        // stage's cost at 10M docs with 16-bit keys)
-        s.indices.iterator.flatMap(i => (i + 1 until s.length).iterator.flatMap { j =>
-          val h = java.lang.Long.bitCount(s(i)._2 ^ s(j)._2)
-          if (h <= mb) Iterator.single((s(i)._1, s(j)._1, h)) else Iterator.empty
-        })
-      }
-      .toDF("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy($"doc_a", $"doc_b")
   }
 
   /** Exact word-n-gram Jaccard for candidate pairs (the verify step after
@@ -1250,27 +1204,10 @@ object Dedup {
       threshold: Double,
       maxBucket: Int): DataFrame = {
     import spark.implicits._
-    // driver fast path below the row gate — identical cap/pair/dedup
-    // semantics (single-probe buckets are disjoint, but first-seen dedup
-    // is harmless and matches the distributed shape's contract)
-    val headRows = bucketed.select($"bucket", $"vec_id")
-      .limit(MaxDriverBandRows + 1).as[(Long, Long)].collect()
-    val cands =
-      if (headRows.length <= MaxDriverBandRows)
-        spark.createDataset(
-            driverPairs(headRows.iterator.map(r => (r._1, r._2)).toIterable, maxBucket)
-              .toIndexedSeq)
-          .toDF("vec_a", "vec_b")
-      else keepMidSizedGroups(bucketed.select($"vec_id", $"bucket"),
-          Seq("bucket"), maxBucket)
-        .groupBy($"bucket").agg(collect_list($"vec_id").as("ids"))
-        .select($"ids").as[Seq[Long]]
-        .flatMap { ids =>
-          val s = ids.sorted.toArray // List indexing is O(k) — see above
-          s.indices.iterator.flatMap(i =>
-            (i + 1 until s.length).iterator.map(j => (s(i), s(j))))
-        }
-        .toDF("vec_a", "vec_b")
+    // one bucket key per vector: a pair cannot repeat, so no dedup shuffle
+    val cands = keyedPairs(spark, bucketed.select($"bucket", $"vec_id", lit(true)),
+        Seq("bucket"), everyPair(maxBucket, dedup = false))
+      .select($"a".as("vec_a"), $"b".as("vec_b"))
     // round 6: the cast/norm pass and the per-pair cosine ran as
     // interpreted transform/aggregate expressions over EVERY embedding row
     // (twice — once per join side); now one typed pass each with the

@@ -150,42 +150,32 @@ object Similarity {
   // immutable for a given on-disk directory state, yet round 5 re-ran a
   // driver Spark job (read + head/collect) for them on EVERY probe — a
   // fixed per-query tax across the whole ANN/minhash family. Loads are
-  // now cached keyed by the directory's file LISTING (names + sizes +
-  // mtimes, one filesystem call): any rewrite/tamper/rebuild changes the
-  // listing and forces a re-read (the version-guard spec exercises this),
-  // while repeated probes of an unchanged index skip the job entirely.
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def dirStamp(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString(",")
-    catch { case _: java.io.FileNotFoundException => "missing" }
-  }
+  // now cached per directory against its file listing: any rewrite/
+  // tamper/rebuild changes the listing and forces a re-read (the
+  // version-guard spec exercises this), while repeated probes of an
+  // unchanged index skip the job entirely.
+  private val metaCache = new StampedCache[String, AnyRef]
 
   private[ops] def cachedLoad[T <: AnyRef](
       spark: SparkSession, dir: String)(load: => T): T =
-    metaCache.computeIfAbsent(s"$dir@${dirStamp(spark, dir)}", _ => load)
-      .asInstanceOf[T]
+    metaCache(dir, StampedCache.dirStamp(spark, dir))(load).asInstanceOf[T]
 
   /** Refuse to probe an index this code cannot decode. */
   private[ops] def checkVersion(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
     // only a missing/unreadable version table means "unversioned" — fatal
-    // errors (OOM, interrupts) must propagate, not masquerade as staleness
-    val v = cachedLoad[Integer](spark, s"$path/version") {
-      Integer.valueOf(
-        try spark.read.parquet(s"$path/version").as[Int].head()
-        catch {
-          case _: org.apache.spark.sql.AnalysisException => -1
-          case e: org.apache.spark.SparkException
-            if e.getCause != null && e.getCause.isInstanceOf[java.io.IOException] => -1
-          case _: java.io.IOException => -1
-        })
-    }.intValue()
+    // errors (OOM, interrupts) must propagate, not masquerade as staleness;
+    // an unreadable read throws out of the load, so it is never cached
+    val v =
+      try cachedLoad[Integer](spark, s"$path/version") {
+        Integer.valueOf(spark.read.parquet(s"$path/version").as[Int].head())
+      }.intValue()
+      catch {
+        case _: org.apache.spark.sql.AnalysisException => -1
+        case e: org.apache.spark.SparkException
+          if e.getCause != null && e.getCause.isInstanceOf[java.io.IOException] => -1
+        case _: java.io.IOException => -1
+      }
     if (v != IndexVersion) throw new IllegalStateException(
       s"ANN index at $path has version $v (unversioned = -1) but this build " +
         s"decodes version $IndexVersion — rebuild the index (buildLshIndex/" +

@@ -194,12 +194,13 @@ object TextOps {
     // payloads" — here: shuffle nothing), and replaces the interpreted
     // gram `transform` with a char-scan kernel. Counts are identical:
     // per-doc DISTINCT grams probed against the distinct benchmark grams.
+    // Grams repeated across a partition's docs are dropped before the
+    // collect, so the driver receives ≤ one copy per partition.
     val grams = benchmark.select(col("text")).as[String]
       .mapPartitions { it =>
-        it.flatMap { t =>
-          import scala.jdk.CollectionConverters._
-          TextKernel.distinctGrams(t, n).asScala
-        }
+        import scala.jdk.CollectionConverters._
+        val seen = new java.util.HashSet[String]()
+        it.flatMap(t => TextKernel.distinctGrams(t, n).asScala.filter(seen.add))
       }.collect()
     val set = new java.util.HashSet[String](math.max(grams.length * 2, 16))
     grams.foreach(set.add)

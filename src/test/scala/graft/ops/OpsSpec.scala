@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -689,6 +689,101 @@ class OpsSpec extends AnyFunSuite {
     val oldSet = old.map(r => (r._1, r._2)).toSet
     assert((plantedPairs intersect oldSet).isEmpty,
       "narrow 16-bit buckets were expected to collapse (skip) under maxBucket here")
+  }
+
+  test("pair chain: driver and executor sides emit the same pairs for every LSH variant") {
+    import spark.implicits._
+    val maxBucket = 70
+    // the executor side is called directly, so the fixture crosses the
+    // MaxDriverBandRows gate without a knob; both sides must agree row for
+    // row (sorted), including the dedup of pairs met under several keys
+    def bothSides[P: scala.reflect.runtime.universe.TypeTag](
+        keyed: DataFrame, keys: Seq[String], rule: Dedup.PairRule[P]): Seq[(Long, Long, Int)] = {
+      val onDriver = Dedup.pairsOnDriver(keyed.collect(), keys.length, rule).sorted
+      val onExecutors = Dedup.pairsOnExecutors(spark, keyed, keys, rule)
+        .as[(Long, Long, Int)].collect().toSeq.sorted
+      assert(onDriver == onExecutors)
+      assert(onDriver.nonEmpty)
+      onDriver
+    }
+    def ab(ps: Seq[(Long, Long, Int)]) = ps.map(p => (p._1, p._2))
+    val big = (0 to maxBucket).map(i => 2000L + i) // one bucket above maxBucket
+    def touchesBig(ps: Seq[(Long, Long, Int)]) = ps.exists(p => big.contains(p._1))
+
+    // band rows: docs 0/1000 and 1/1001 are exact dups (same key in all
+    // 16 bands); 3000/3001 share two planted keys
+    val docs = docsWithDups
+    val planted = (big.map(id => (99, 1L, id)) ++
+      Seq((99, 2L, 3000L), (99, 2L, 3001L), (99, 3L, 3000L), (99, 3L, 3001L)))
+      .toDF("band", "bucket", "doc_id")
+    val banded = Dedup.bandRows(spark, Dedup.minHashSigs(spark, docs, 3, 64), 64, 16)
+      .union(planted)
+    val bandPairs = bothSides(banded.withColumn("p", lit(true)), Seq("band", "bucket"),
+      Dedup.everyPair(maxBucket, dedup = true))
+    assert(ab(bandPairs).distinct == ab(bandPairs))
+    assert(Seq((0L, 1000L), (1L, 1001L), (3000L, 3001L)).forall(ab(bandPairs).contains))
+    assert(!touchesBig(bandPairs))
+
+    // has-new: corpus ids < 1000 old, the rest new; planted old-only
+    // bucket (4000, 4001) and a mixed one whose old-old pair must not pair
+    val members = banded.withColumn("is_new", $"doc_id" >= 1000)
+      .union(Seq((98, 1L, 4000L, false), (98, 1L, 4001L, false),
+        (98, 2L, 4002L, false), (98, 2L, 4003L, false), (98, 2L, 4004L, true))
+        .toDF("band", "bucket", "doc_id", "is_new"))
+    val newPairs = ab(bothSides(members, Seq("band", "bucket"),
+      Dedup.newTouchingPairs(maxBucket)))
+    assert(newPairs.distinct == newPairs)
+    assert(newPairs.forall { case (a, b) => a >= 1000 || b >= 1000 })
+    assert(Seq((0L, 1000L), (1L, 1001L), (3000L, 3001L), (4002L, 4004L), (4003L, 4004L))
+      .forall(newPairs.contains))
+    assert(!newPairs.contains((4000L, 4001L)) && !newPairs.contains((4002L, 4003L)))
+    assert(!newPairs.exists { case (a, _) => big.contains(a) })
+
+    // simhash, maxBits 3 / blocks 4: 5001 sits at hamming 4 = maxBits + 1
+    // from 5000, 5002 at hamming 3 (sharing 3 keys with it); the big
+    // bucket is maxBucket + 1 identical fingerprints
+    val h0 = 0x0123456789ABCDEFL
+    val hashes =
+      docs.as[(Long, String)].collect().toSeq.map { case (id, t) => (id, Dedup.simHash64(t)) } ++
+      Seq((5000L, h0), (5001L, h0 ^ 0xFL), (5002L, h0 ^ 0x7L)) ++ big.map(id => (id, ~h0))
+    val simPairs = bothSides(
+      Dedup.simHashKeyed(spark, hashes.toDF("doc_id", "simhash"), maxBits = 3, blocks = 4),
+      Seq("combo", "key"), Dedup.hammingPairs(3, maxBucket))
+    val hashOf = hashes.toMap
+    assert(ab(simPairs).distinct == ab(simPairs))
+    assert(simPairs.forall { case (a, b, h) =>
+      h <= 3 && h == java.lang.Long.bitCount(hashOf(a) ^ hashOf(b)) })
+    assert(simPairs.contains((5000L, 5002L, 3)) && simPairs.contains((5001L, 5002L, 1)))
+    assert(!ab(simPairs).contains((5000L, 5001L)))
+    assert(simPairs.contains((0L, 1000L, 0)) && !touchesBig(simPairs))
+
+    // embedding: one hyperplane bucket per vector (no dedup); the 500
+    // fixture vectors fill 8 buckets of ~62 each
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+    val hyper = DetHash.signPlanes(
+      Similarity.adaptivePlanes(emb.length.toLong), emb.head._2.length, 7L)
+    val bucketed = (emb.toSeq.map { case (id, v) => (Similarity.hyperplaneSig(v, hyper), id) } ++
+      big.map(id => (-1L, id)) ++ Seq((-2L, 3000L), (-2L, 3001L)))
+      .toDF("bucket", "vec_id").withColumn("p", lit(true))
+    val embPairs = bothSides(bucketed, Seq("bucket"), Dedup.everyPair(maxBucket, dedup = false))
+    assert(ab(embPairs).contains((3000L, 3001L)) && !touchesBig(embPairs))
+  }
+
+  test("stamped cache: a failed load is retried, a new stamp replaces the entry") {
+    val cache = new StampedCache[String, String]
+    var loads = 0
+    def load(v: String): String = { loads += 1; v }
+    intercept[java.io.IOException](cache("dir", "s1")(throw new java.io.IOException("transient")))
+    assert(cache.size == 0)
+    assert(cache("dir", "s1")(load("v1")) == "v1")
+    assert(cache("dir", "s1")(load("unused")) == "v1" && loads == 1)
+    assert(cache("dir", "s2")(load("v2")) == "v2" && loads == 2)
+    assert(cache.size == 1)
+    // a failure under a newer stamp neither pins nor evicts
+    intercept[java.io.IOException](cache("dir", "s3")(throw new java.io.IOException("transient")))
+    assert(cache("dir", "s2")(load("unused")) == "v2" && loads == 2)
+    assert(cache("dir", "s3")(load("v3")) == "v3" && cache.size == 1)
   }
 
   test("media features: deterministic, exercises all kinds") {
