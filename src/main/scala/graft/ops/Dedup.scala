@@ -972,7 +972,11 @@ object Dedup {
     * propagation: each iteration is one distributed join+aggregate, and
     * the loop runs ≤ component-diameter times (near-dup clusters are
     * shallow; `maxIter` guards pathological chains). The driver loop holds
-    * only a change COUNTER per iteration — never rows.
+    * only a change COUNTER per iteration — never rows. The two sides of
+    * the `MaxDriverEdgeRows` gate fail differently: at or below it,
+    * union-find returns the exact fixpoint for any component diameter;
+    * above it, the loop throws "did not converge" once a diameter exceeds
+    * `maxIter`. Any result either side returns is the same.
     *
     * @return (doc_id, cluster_id = min doc_id in the component, keep) for
     *         every node in `nodes`; singletons cluster to themselves. */

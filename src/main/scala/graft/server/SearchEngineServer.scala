@@ -54,6 +54,10 @@ final class SearchEngineServer(
   private def open(): (SparkSearchEngine, Option[scala.util.Try[DataFrame]]) =
     (new SparkSearchEngine(spark, io, params), inputPath.map(p => scala.util.Try(spark.read.parquet(p))))
   private def reopen(): Unit = serving = open()
+  /** Writes run one at a time: batch ids are minted from the lineage and
+    * `Stats` is replaced by drop-then-rename, so two concurrent writers
+    * would collide. Reads never take it. */
+  private val writeLock = new Object
 
   // ---- minimal flat-JSON helpers (fields are numbers/bools/strings/
   // string arrays — the reference's bodies are exactly this shape) -------
@@ -288,8 +292,7 @@ final class SearchEngineServer(
       val body = readBody(ex)
       (jsonField(body, "seedUrls"), jsonField(body, "numberOfPages")) match {
         case (Some(urls), Some(n)) =>
-          ingest(jsonStringArray(urls), Some(unquote(n).toInt))
-          reopen()
+          writeLock.synchronized { ingest(jsonStringArray(urls), Some(unquote(n).toInt)); reopen() }
           (200, "Successfully crawled the pages")
         case _ => (400, "Invalid JSON data")
       }
@@ -300,7 +303,7 @@ final class SearchEngineServer(
       jsonField(body, "clearDocumentsHistory") match {
         case Some(v) =>
           Cancellation.cancelGroup(spark, "graft-ingest")
-          if (unquote(v).toInt != 0) clearAll()
+          if (unquote(v).toInt != 0) writeLock.synchronized(clearAll())
           (200, "Successfully terminated crawl process")
         case None => (400, "Invalid JSON data")
       }
@@ -310,8 +313,7 @@ final class SearchEngineServer(
       val body = readBody(ex)
       jsonField(body, "clear") match {
         case Some(v) =>
-          buildIndex(unquote(v).toInt != 0)
-          reopen()
+          writeLock.synchronized { buildIndex(unquote(v).toInt != 0); reopen() }
           (200, "Successfully created Inverted Index")
         case None => (400, "Invalid JSON data")
       }
@@ -323,8 +325,7 @@ final class SearchEngineServer(
         case (Some(urls), Some(n), Some(_)) =>
           // table-input engine: "crawl and index" = incremental-ingest the
           // sources (which indexes them); `clear` folds into batch resume
-          ingest(jsonStringArray(urls), Some(unquote(n).toInt))
-          reopen()
+          writeLock.synchronized { ingest(jsonStringArray(urls), Some(unquote(n).toInt)); reopen() }
           (200, "Successfully crawled the pages and created Inverted Index")
         case _ => (400, "Invalid JSON data")
       }
@@ -341,7 +342,7 @@ final class SearchEngineServer(
         case Some(arr) =>
           val ids = jsonLongArray(arr)
           if (ids.isEmpty) (400, "docIds must be a non-empty array of ids")
-          else {
+          else writeLock.synchronized {
             val b = new IndexBuilder(spark, io)
             val batchId = jsonField(body, "batchId").map(v => unquote(v).toLong)
               .getOrElse(b.nextDeleteBatchId())
@@ -361,16 +362,18 @@ final class SearchEngineServer(
       (jsonField(body, "BM25_K1"), jsonField(body, "BM25_B"),
         jsonField(body, "PHRASE_BOOST"), jsonField(body, "EXACT_MATCH_WEIGHT")) match {
         case (Some(k1), Some(b), Some(pb), Some(emw)) =>
-          params = params.copy(k1 = unquote(k1).toDouble, b = unquote(b).toDouble,
-            phraseBoost = unquote(pb).toDouble, exactMatchWeight = unquote(emw).toDouble)
-          reopen()
+          writeLock.synchronized {
+            params = params.copy(k1 = unquote(k1).toDouble, b = unquote(b).toDouble,
+              phraseBoost = unquote(pb).toDouble, exactMatchWeight = unquote(emw).toDouble)
+            reopen()
+          }
           (200, "Successfully set new Ranker parameters")
         case _ => (404, "Invalid JSON data")
       }
     })
 
     server.createContext("/clearCrawlHistory", handler("DELETE") { _ =>
-      clearAll()
+      writeLock.synchronized(clearAll())
       (200, "Successfully cleared crawl history.")
     })
 
@@ -379,7 +382,7 @@ final class SearchEngineServer(
       jsonField(body, "clearIndexHistory") match {
         case Some(v) =>
           Cancellation.cancelGroup(spark, "graft-index")
-          if (unquote(v).toInt != 0) clearAll()
+          if (unquote(v).toInt != 0) writeLock.synchronized(clearAll())
           (200, "Successfully terminated indexing process")
         case None => (400, "Invalid JSON data")
       }

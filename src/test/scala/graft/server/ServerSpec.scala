@@ -190,6 +190,48 @@ class ServerSpec extends AnyFunSuite {
     assert(post("/deleteDocuments", """{"docIds": []}""").statusCode() == 400)
   }
 
+  test("concurrent unkeyed /deleteDocuments: two batches, both id sets gone") {
+    import spark.implicits._
+    import graft.build.Tables
+    val dir = java.nio.file.Files.createTempDirectory("srv_del_").toString
+    graft.corpus.TranscriptGen.generate(spark, 20).write.parquet(s"$dir/turns")
+    val s = new SearchEngineServer(spark, s"$dir/wh", Some(s"$dir/turns"), port = 0)
+    val p = s.start()
+    try {
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      val io = new graft.store.ParquetTableIO(spark, s"$dir/wh")
+      val urlOf = io.read(Tables.DocDict).select($"docId", $"conv_id", $"turn_idx")
+        .as[(Long, String, Int)].collect()
+        .map { case (d, c, t) => d -> s"graft://$c/$t" }.toMap
+      val query = "/search?query=whale&accuracy=0.0"
+      val before = get(query, p).body()
+      // two disjoint id sets, each drawn from the hits the query returns
+      val hit = urlOf.filter { case (_, u) => before.contains(s"\"$u\"") }.keys.toSeq.sorted
+      assert(hit.size >= 4, before.take(300))
+      val (a, b) = hit.zipWithIndex.partition(_._2 % 2 == 0)
+      val sets = Seq(a.map(_._1), b.map(_._1))
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val replies = try {
+        sets.map { ids =>
+          val call: java.util.concurrent.Callable[java.net.http.HttpResponse[String]] = () => {
+            start.await()
+            post("/deleteDocuments", s"""{"docIds": [${ids.mkString(", ")}]}""", p)
+          }
+          pool.submit(call)
+        }.map { f => start.countDown(); f.get() }
+      } finally { pool.shutdown(); () }
+      replies.foreach(r => assert(r.statusCode() == 200, r.body()))
+      val batches = io.read(Tables.Lineage).filter($"stage" === Tables.DeleteLedgerStage)
+        .select($"partition_id").as[Int].collect().toSeq
+      assert(batches.distinct.size == 2, s"delete ledger batches: $batches")
+      val after = get(query, p)
+      assert(after.statusCode() == 200, after.body())
+      sets.flatten.foreach(d =>
+        assert(!after.body().contains(s"\"${urlOf(d)}\""), s"deleted doc $d still returned"))
+    } finally s.stop()
+  }
+
   test("clearCrawlHistory drops the index; search then fails cleanly") {
     assert(delete("/clearCrawlHistory").statusCode() == 200)
     val r = get("/search?query=whale&accuracy=0.0")
