@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.api.SparkSearchEngine
-import graft.build.{IndexBuilder, StreamingIngest, Tables}
+import graft.build.{IndexBuilder, StreamingIngest}
 import graft.corpus.TranscriptGen
 import graft.model.Turn
 import graft.store.ParquetTableIO
@@ -179,9 +179,7 @@ object Main {
         }
 
       case "clear" =>
-        Seq(Tables.PostingsRaw, Tables.DocDict, Tables.Stats, Tables.TermStats,
-          Tables.Postings, Tables.Blocks, Tables.Lineage,
-          Tables.Deletes, Tables.DeletedTermDf, Tables.NextDocId).foreach(io.drop)
+        new IndexBuilder(spark, io).clear()
         println("warehouse cleared")
 
       case other =>

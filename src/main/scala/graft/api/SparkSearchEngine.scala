@@ -33,11 +33,13 @@ import graft.text.TextPipeline
   * fetches across a batch. A call that caches a frame unpersists it
   * before it returns.
   *
-  * An engine is a snapshot of the warehouse as opened: stats, tombstones
-  * and the never-cached `postings`, `dict`, `blocks` and `deleted_term_df`
-  * handles resolve once, on first use, so a warm query runs no schema
-  * inference. Re-open after any write; the HTTP server does, and resolves
-  * its `--input` turns frame with each re-open.
+  * An engine is one version of the warehouse's commit log: stats and the
+  * tombstone count come from the log, and the never-cached `postings`,
+  * `dict`, `blocks` and `deleted_term_df` handles are read from that
+  * version's file list with declared schemas, so neither opening nor a
+  * first query runs a metadata job. Re-open after any write to see it;
+  * the HTTP server does, and resolves its `--input` turns frame with each
+  * re-open.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -45,47 +47,51 @@ final class SparkSearchEngine(
     val params: GraftParams = GraftParams()) {
   import spark.implicits._
 
+  /** The log version this engine serves: opening reads the log on the
+    * driver (no Spark job), and every table below is read from exactly
+    * this version's file list, so a query that races a write sees one
+    * whole snapshot. */
+  val snapshot: graft.store.Snapshot = io.snapshot()
   // refuse a warehouse whose block layout this engine cannot decode
-  graft.build.FormatGuard.check(spark, io, "SparkSearchEngine")
+  graft.build.FormatGuard.check(snapshot, "SparkSearchEngine")
 
   lazy val stats: IndexStats = {
-    val r = io.read(Tables.Stats).as[(Long, Double)].head()
-    IndexStats(r._1, r._2)
+    require(snapshot.has(Tables.DocDict), s"warehouse has no index (version ${snapshot.version})")
+    IndexStats(snapshot.state.docs, snapshot.state.avgDocLen)
   }
 
   /** Un-compacted tombstones (IndexBuilder.deleteDocs), applied by every
-    * query path; None on the common never-deleted path — the exists()
-    * check is one file stat, and the plans below are byte-identical to
-    * the pre-deletes engine when it returns None. Engine-lifetime
-    * snapshot, like every other table here: re-open the engine after a
-    * maintenance op (delete/compact/incremental append). */
+    * query path; None on the common never-deleted path — the plans below
+    * are byte-identical to the pre-deletes engine when it returns None. */
   private lazy val deletes: Option[DataFrame] =
-    if (io.exists(Tables.Deletes)) Some(io.read(Tables.Deletes).select($"docId"))
+    if (snapshot.has(Tables.Deletes)) Some(io.read(Tables.Deletes, snapshot).select($"docId"))
     else None
   private def minusDeleted(df: DataFrame): DataFrame =
     deletes.fold(df)(d => df.join(broadcast(d), Seq("docId"), "left_anti"))
-  private lazy val postings = minusDeleted(io.read(Tables.Postings))
-  private lazy val dict = minusDeleted(io.read(Tables.DocDict))
-  private lazy val blocks = io.read(Tables.Blocks)
+  private lazy val postings = minusDeleted(io.read(Tables.Postings, snapshot))
+  private lazy val dict = minusDeleted(io.read(Tables.DocDict, snapshot))
+  private lazy val blocks = io.read(Tables.Blocks, snapshot)
   private lazy val deletedTermDf: Option[DataFrame] =
-    if (deletes.isDefined && io.exists(Tables.DeletedTermDf)) Some(io.read(Tables.DeletedTermDf))
+    if (deletes.isDefined && snapshot.has(Tables.DeletedTermDf))
+      Some(io.read(Tables.DeletedTermDf, snapshot))
     else None
 
   /** Exact deleted-id test for the WAND kernels (a Bloom filter's false
     * positive would drop a LIVE doc — unacceptable, unlike the phrase
     * prefilter where FPs fold to tf=0). The sorted ids are collected and
-    * broadcast once per engine, bounded by `params.maxDeletedIdsInMemory`,
-    * past which the warehouse needs a compact() before block-index
-    * queries. The lambda captures only the broadcast handle: bind it to a
-    * local `val` BEFORE a mapPartitions closure (reading the field inside
-    * one captures the non-serializable engine). */
+    * broadcast once per engine, bounded by `params.maxDeletedIdsInMemory`
+    * (checked against the log's tombstone count before any job), past
+    * which the warehouse needs a compact() before block-index queries.
+    * The lambda captures only the broadcast handle: bind it to a local
+    * `val` BEFORE a mapPartitions closure (reading the field inside one
+    * captures the non-serializable engine). */
   private lazy val deletedFn: Long => Boolean = deletes match {
     case None => _ => false
     case Some(d) =>
-      val arr = d.limit(params.maxDeletedIdsInMemory + 1).as[Long].collect()
-      if (arr.length > params.maxDeletedIdsInMemory) throw new IllegalStateException(
+      if (snapshot.state.tombstones > params.maxDeletedIdsInMemory) throw new IllegalStateException(
         s"more than ${params.maxDeletedIdsInMemory} tombstoned docs — run " +
           "IndexBuilder.compact() to purge them (or raise maxDeletedIdsInMemory)")
+      val arr = d.as[Long].collect()
       java.util.Arrays.sort(arr)
       val bc = spark.sparkContext.broadcast(arr)
       id => java.util.Arrays.binarySearch(bc.value, id) >= 0

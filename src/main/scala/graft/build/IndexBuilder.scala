@@ -1,9 +1,10 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.model._
-import graft.store.TableIO
+import graft.store.{Commit, Snapshot, State, TableIO, Written}
 import graft.text.TextPipeline
 import graft.codec.VarByte
 
@@ -17,15 +18,25 @@ object Tables {
     * v6: optional tombstone tables (`deleted_docs` + per-term `deleted_df`
     * deltas) that every query path must apply — a deletes-unaware engine
     * reading a tombstoned warehouse would silently resurrect deleted docs,
-    * which is exactly the silent-wrong-results class the marker guards. */
-  val FormatVersion = 6
-  val Format = "format"
+    * which is exactly the silent-wrong-results class the format check
+    * guards.
+    * v7: one commit log per warehouse (`graft.store.CommitLog`). Each
+    * commit lists the files it adds and removes per table and carries the
+    * stats, the exact live doc count and doc_len sum, the docId watermark
+    * and the lineage rows; the `format` marker, the `stats` and `lineage`
+    * tables, the `next_doc_id` marker and tag-named appends are gone. The
+    * data tables' columns are unchanged, and a v6 warehouse migrates on
+    * first open (one commit synthesized from its tables). */
+  val FormatVersion = 7
   val PostingsRaw = "postings_raw"
   val DocDict = "doc_dict"
+  /** The stats singleton (total_docs, avg_doc_len): a local relation over
+    * the log's state, no longer a table. */
   val Stats = "stats"
   val TermStats = "term_stats"
   val Postings = "postings"
   val Blocks = "index_blocks"
+  /** Lineage rows (LineageRow): a local relation over the log's commits. */
   val Lineage = "lineage"
   /** Tombstoned docIds (docId: Long) — applied by every query path until
     * `compact()` physically purges them. */
@@ -34,47 +45,52 @@ object Tables {
     * WAND path's block-metadata df exact without re-scanning postings at
     * query time. */
   val DeletedTermDf = "deleted_df"
-  /** Lineage-ledger stage name of committed delete batches (deleteDocs
-    * idempotency; the server derives its next batchId from it). */
+  /** Lineage stage of committed delete batches (deleteDocs idempotency;
+    * the server derives its next batchId from it). */
   val DeleteLedgerStage = "delete_batch"
-  /** Marker: the lowest docId a future incremental append may assign.
-    * Written by compact() before it purges tombstoned dictionary rows, so
-    * a purged id is never reused (a recycled id would alias any state an
-    * external consumer keyed on it). */
-  val NextDocId = "next_doc_id"
+  /** Lineage stage of committed incremental batches. */
+  val IngestLedgerStage = "incremental_batch"
+
+  /** The parquet tables and their declared schemas: every read uses
+    * these (no inference), every write is checked against them. */
+  private val schemas: Map[String, StructType] = {
+    def of[T <: Product : scala.reflect.runtime.universe.TypeTag] = Encoders.product[T].schema
+    val postings = of[RawIndexRow].fields.take(5) // term, docId, tf, doc_len, positions_vb
+    Map(
+      PostingsRaw -> of[RawIndexRow],
+      DocDict -> of[DocDictEntry],
+      TermStats -> of[graft.model.TermStats],
+      Postings -> StructType(postings),
+      Blocks -> of[IndexBlock],
+      Deletes -> new StructType().add("docId", LongType, nullable = false),
+      DeletedTermDf -> new StructType().add("term", StringType).add("delta", LongType, nullable = false))
+  }
+  val Data: Seq[String] = Seq(PostingsRaw, DocDict, TermStats, Postings, Blocks, Deletes, DeletedTermDf)
+  def schema(table: String): StructType =
+    schemas.getOrElse(table, throw new IllegalArgumentException(s"unknown table '$table'"))
+
+  /** Whether `name` reads as present at `snap`. */
+  def present(snap: Snapshot, name: String): Boolean = name match {
+    case Stats => snap.has(DocDict)
+    case Lineage => snap.lineage.nonEmpty
+    case t => snap.has(t)
+  }
 }
 
 final case class StageMetric(stage: String, rows: Long, wallMs: Long, skipped: Boolean)
 
-/** Persisted layout marker (round-2 ADVICE): `Tables.FormatVersion` used to
-  * gate only /tmp cache PATHS, so `Main search`/`buildIncremental` against a
-  * pre-existing user warehouse built at an older block layout would silently
-  * misdecode every block (v3 stored interleaved positions where v5 reads
-  * tf/docLen pairs) instead of failing. The marker table is written before
-  * the first build stage; every resume / incremental / query entry point
-  * refuses a mismatched or unversioned non-empty warehouse. */
+/** The format check every resume / incremental / delete / compact / query
+  * entry point runs (round-2 ADVICE): `Tables.FormatVersion` used to gate
+  * only /tmp cache PATHS, so a warehouse built at an older block layout
+  * would silently misdecode every block instead of failing. The version
+  * now lives in each commit of the log; a warehouse without a log is
+  * migrated (v6) or refused (`Snapshot.refusal`). */
 object FormatGuard {
-  /** Filesystem marker, NOT a Spark job: a one-row parquet table cost a
-    * full job per build, a fixed cost that taxed the build's 2→8 scaling
-    * ratio by ~1-2 points at bench corpus size (round-3 VERDICT item 4). */
-  def write(spark: SparkSession, io: TableIO): Unit =
-    io.writeMarker(Tables.Format, Tables.FormatVersion.toString)
-
-  def check(spark: SparkSession, io: TableIO, context: String): Unit = {
-    io.readMarker(Tables.Format) match {
-      case Some(raw) =>
-        // a truncated/corrupt marker (crash mid-write) must surface as the
-        // same clean refusal as a version mismatch, not a NumberFormatException
-        val v = scala.util.Try(raw.trim.toInt).getOrElse(-1)
-        if (v != Tables.FormatVersion) throw new IllegalStateException(
-          s"$context: warehouse format v$v (unparseable/corrupt = -1) != engine " +
-            s"v${Tables.FormatVersion} — " +
-            "refusing to read/resume (blocks would misdecode); rebuild with resume=false")
-      case None =>
-        if (io.exists(Tables.DocDict)) throw new IllegalStateException(
-          s"$context: unversioned warehouse (pre-v${Tables.FormatVersion} layout, " +
-            s"no '${Tables.Format}' table) — refusing to read/resume; rebuild required")
-    }
+  def check(snap: Snapshot, context: String): Unit = {
+    snap.refusal.foreach(r => throw new IllegalStateException(s"$context: $r"))
+    if (snap.state.format != Tables.FormatVersion) throw new IllegalStateException(
+      s"$context: warehouse format v${snap.state.format} != engine v${Tables.FormatVersion} — " +
+        "refusing to read/resume (blocks would misdecode); rebuild with resume=false")
   }
 }
 
@@ -90,8 +106,9 @@ object FormatGuard {
   *            (term, doc) + one sentinel row per doc carrying dict columns.
   *            tf/positions are doc-local, so this stage needs NO shuffle
   *            beyond the range partitioning for id assignment.
-  *   dict     sentinel rows → docID↔(conv_id,turn_idx) dictionary (north rule)
-  *   stats    corpus count + avg doc length (reference metadata singleton)
+  *   dict     sentinel rows → docID↔(conv_id,turn_idx) dictionary (north
+  *            rule); its write also observes the doc count and doc_len sum,
+  *            which give the stats singleton (reference metadata doc)
   *   terms    per-term df/ctf — map-side partial agg, shuffles only the
   *            tiny (term, counts) pairs
   *   postings flat index sorted by (term, docId): parquet min/max on `term`
@@ -100,14 +117,20 @@ object FormatGuard {
   *            WAND pruning; bounded row size even for `the`-class terms
   *            (stop words are NOT removed — SURVEY.md §1.3)
   *
-  * Resume: a stage whose output table already committed (parquet _SUCCESS)
-  * is skipped — the scalable analogue of the reference's per-document
-  * `processed` flag (InvertedIndex.cpp:29-46). Per-partition lineage rows
-  * with row counts and wall time are appended per stage.
+  * Every write puts new files beside the live ones and commits them to the
+  * warehouse's log (`TableIO.commit`) with its lineage row, whose row count
+  * the write itself observed. Resume: a build stage the log records as
+  * committed is skipped — the scalable analogue of the reference's
+  * per-document `processed` flag (InvertedIndex.cpp:29-46).
+  *
+  * Run one writer per warehouse (the HTTP server serializes its writes).
+  * Two writers that do race take the same log version, and the loser's
+  * commit fails with nothing of it visible.
   */
 final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096,
     rawShards: Int = 1) {
   import spark.implicits._
+  import IndexBuilder.rawRows
 
   /** Explicit shuffle width. An un-parameterized repartitionByRange lets
     * AQE coalesce to its 64 MB advisory size — at local[32] that collapses
@@ -118,24 +141,18 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       spark.sparkContext.defaultParallelism)
 
-  private def runStage(name: String, resume: Boolean, metrics: scala.collection.mutable.ArrayBuffer[StageMetric])(body: => Unit): Unit = {
-    if (resume && io.exists(name)) {
-      metrics += StageMetric(name, -1L, 0L, skipped = true)
-      return
-    }
-    val t0 = System.nanoTime()
-    body
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    // per-partition lineage from the committed table (count(*) per split is
-    // served from parquet row-group metadata — no column decode)
-    val perPart = io.read(name)
-      .groupBy(spark_partition_id().as("partition_id")).count()
-      .as[(Int, Long)].collect()
-    val rows = perPart.map(_._2).sum
-    val lineage = perPart.map { case (pid, n) => LineageRow(name, pid, "done", n, wallMs) } :+
-      LineageRow(name, -1, "done", rows, wallMs)
-    io.append(spark.createDataset(lineage.toIndexedSeq).toDF(), Tables.Lineage)
-    metrics += StageMetric(name, rows, wallMs, skipped = false)
+  private def millisSince(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
+
+  /** Commit `add` (and the removal of every current file of `replaced`)
+    * on `base`, then vacuum: the one step that makes a write visible. */
+  private def commit(base: Snapshot, action: String, add: Map[String, Written], state: State,
+      lineage: Seq[LineageRow], batchId: Long = -1L, replaced: Seq[String] = Nil,
+      reset: Boolean = false): Snapshot = {
+    val remove = replaced.flatMap(t => base.files.get(t).map(fs => t -> fs.map(_.path))).toMap
+    val snap = io.commit(base, Commit(-1L, action, batchId, reset,
+      add.map { case (t, w) => t -> w.files }, remove, state, lineage, 0L))
+    io.vacuum(snap)
+    snap
   }
 
   /** Dense docId = global rank under (conv_id, turn_idx) ordering.
@@ -156,92 +173,114 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
   }
 
   def build(turns: Dataset[Turn], resume: Boolean = false,
-      assumeSorted: Boolean = false): Seq[StageMetric] = {
+      assumeSorted: Boolean = false): Seq[StageMetric] =
+    buildStages(turns, resume, assumeSorted, ingestBatch = None)
+
+  /** The build stages, one commit each. The first commit of a fresh build
+    * (`resume = false`) resets the warehouse: a new corpus life restarts
+    * docIds at 0, so stale tombstones, watermark and ledger go with it.
+    * `ingestBatch` is the incremental batch a bootstrap build indexes: its
+    * ledger row rides on the last commit. */
+  private def buildStages(turns: Dataset[Turn], resume: Boolean, assumeSorted: Boolean,
+      ingestBatch: Option[Long]): Seq[StageMetric] = {
+    val latest = io.snapshot()
+    if (resume) FormatGuard.check(latest, "IndexBuilder.build(resume)")
+    // a fresh build's first commit resets the warehouse to this state
+    var snap =
+      if (resume) latest else latest.copy(state = Snapshot.empty(Tables.FormatVersion).state)
     val metrics = scala.collection.mutable.ArrayBuffer.empty[StageMetric]
-    if (resume) FormatGuard.check(spark, io, "IndexBuilder.build(resume)")
-    if (!resume || !io.exists(Tables.Format)) FormatGuard.write(spark, io)
-    if (!resume) {
-      io.drop(Tables.Lineage)
-      // a fresh build restarts docIds at 0 over a new corpus — stale
-      // tombstones or a stale id watermark from the warehouse's previous
-      // life would poison it
-      io.drop(Tables.Deletes); io.drop(Tables.DeletedTermDf); io.drop(Tables.NextDocId)
+    var reset = !resume
+    def done(stage: String) = resume && snap.lineage.exists(_.stage == stage)
+    def commitStage(stage: String, table: String, w: Written, t0: Long, state: State = snap.state,
+        extra: Long => Seq[LineageRow] = _ => Nil, replace: Boolean = true): Unit = {
+      val wallMs = millisSince(t0)
+      snap = commit(snap, "build", Map(table -> w), state,
+        LineageRow(stage, -1, "done", w.rows, wallMs) +: extra(wallMs), ingestBatch.getOrElse(-1L),
+        replaced = if (replace) Seq(table) else Nil, reset = reset)
+      reset = false
+      if (stage == table) metrics += StageMetric(stage, w.rows, wallMs, skipped = false)
     }
+    def stage(name: String)(run: Long => Unit): Unit =
+      if (done(name)) metrics += StageMetric(name, -1L, 0L, skipped = true)
+      else run(System.nanoTime())
+    def raw = io.read(Tables.PostingsRaw, snap)
 
-    runStage(Tables.PostingsRaw, resume, metrics) {
-      def tokenized(slice: Dataset[(Long, Turn)]) = slice.mapPartitions { iter =>
-        iter.flatMap { case (docId, turn) =>
-          val (docLen, terms) = TextPipeline.analyze(turn.text)
-          val sentinel = RawIndexRow("", docId, 0, docLen, Array.empty[Byte],
-            turn.conv_id, turn.turn_idx)
-          val postings = terms.iterator.map { case (term, poss) =>
-            RawIndexRow(term, docId, poss.length, docLen,
-              VarByte.encodePositions(poss), null, -1)
-          }
-          Iterator.single(sentinel) ++ postings
-        }
-      }
+    stage(Tables.PostingsRaw) { t0 =>
+      def tokenized(slice: Dataset[(Long, Turn)]) =
+        slice.mapPartitions(_.flatMap { case (docId, turn) => rawRows(docId, turn) }).toDF()
       val ids = withDocIds(turns, assumeSorted)
-      if (rawShards <= 1) {
-        io.write(tokenized(ids).toDF(), Tables.PostingsRaw)
-      } else {
+      if (rawShards <= 1) commitStage(Tables.PostingsRaw, Tables.PostingsRaw,
+        io.write(tokenized(ids), Tables.PostingsRaw), t0)
+      else {
         // shard-level resume: at corpus scale a restart must not redo the
-        // whole tokenize pass, so each docId-modulo shard commits its own
-        // sub-table (the shuffle files behind the id assignment are reused
+        // whole tokenize pass, so each docId-modulo shard commits on its
+        // own (the shuffle files behind the id assignment are reused
         // across shard jobs within a session; a restarted session skips
-        // committed shards entirely). Reading `postings_raw` sees all
-        // shards via parquet partition discovery (shard=N dirs).
+        // committed shards entirely)
         val s = rawShards
-        (0 until s).foreach { i =>
-          val shardName = s"${Tables.PostingsRaw}/shard=$i"
-          if (!(resume && io.exists(shardName)))
-            io.write(tokenized(ids.filter(_._1 % s == i)).toDF(), shardName)
+        val shardStages = (0 until s).map(i => s"${Tables.PostingsRaw}/shard=$i")
+        shardStages.zipWithIndex.foreach { case (shard, i) =>
+          if (!done(shard)) commitStage(shard, Tables.PostingsRaw,
+            io.write(tokenized(ids.filter(_._1 % s == i)), Tables.PostingsRaw), System.nanoTime(),
+            replace = false)
         }
-        // top-level commit marker, written after the last shard
-        io.touchSuccess(Tables.PostingsRaw)
+        // the stage's own row, over every shard's rows
+        val rows = snap.lineage.filter(r => shardStages.contains(r.stage)).map(_.rows).sum
+        val wallMs = millisSince(t0)
+        snap = commit(snap, "build", Map.empty, snap.state,
+          Seq(LineageRow(Tables.PostingsRaw, -1, "done", rows, wallMs)), ingestBatch.getOrElse(-1L))
+        metrics += StageMetric(Tables.PostingsRaw, rows, wallMs, skipped = false)
       }
     }
 
-    lazy val raw = io.read(Tables.PostingsRaw).drop("shard")
-
-    runStage(Tables.DocDict, resume, metrics) {
+    stage(Tables.DocDict) { t0 =>
       val dict = raw.filter(col("term") === "")
         .select(col("docId"), col("conv_id"), col("turn_idx"), col("doc_len"))
-      io.write(dict, Tables.DocDict, sortCols = Seq("docId"))
+      val w = io.write(dict, Tables.DocDict, sortCols = Seq("docId"),
+        observe = Seq(sum(col("doc_len")).as("doc_len_sum"), max(col("docId")).as("max_doc_id")))
+      // the stats singleton from the dictionary write itself: Spark's
+      // avg(doc_len) is the exact integer sum as a double over the count
+      val n = w.rows
+      val dlSum = Option(w.observed("doc_len_sum")).fold(0L)(_.asInstanceOf[Long])
+      val maxId = Option(w.observed("max_doc_id")).fold(-1L)(_.asInstanceOf[Long])
+      val state = snap.state.copy(docs = n, docLenSum = dlSum,
+        avgDocLen = if (n == 0) 0.0 else dlSum.toDouble / n, nextDocId = maxId + 1L, tombstones = 0L)
+      commitStage(Tables.DocDict, Tables.DocDict, w, t0, state,
+        extra = _ => Seq(LineageRow(Tables.Stats, -1, "done", 1L, 0L)))
+      metrics += StageMetric(Tables.Stats, 1L, 0L, skipped = false)
     }
+    if (done(Tables.DocDict)) metrics += StageMetric(Tables.Stats, -1L, 0L, skipped = true)
 
-    runStage(Tables.Stats, resume, metrics) {
-      val stats = io.read(Tables.DocDict)
-        .agg(count(lit(1)).as("total_docs"), avg(col("doc_len")).as("avg_doc_len"))
-      io.write(stats.coalesce(1), Tables.Stats)
-    }
-
-    runStage(Tables.TermStats, resume, metrics) {
+    stage(Tables.TermStats) { t0 =>
       val ts = raw.filter(col("term") =!= "")
         .groupBy(col("term"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"))
-      io.write(ts, Tables.TermStats, sortCols = Seq("term"))
+      commitStage(Tables.TermStats, Tables.TermStats,
+        io.write(ts, Tables.TermStats, sortCols = Seq("term")), t0)
     }
 
-    runStage(Tables.Postings, resume, metrics) {
+    stage(Tables.Postings) { t0 =>
       val postings = raw.filter(col("term") =!= "")
         .select("term", "docId", "tf", "doc_len", "positions_vb")
         .repartitionByRange(nShuffle, col("term"), col("docId"))
         .sortWithinPartitions("term", "docId")
-      io.write(postings, Tables.Postings)
+      commitStage(Tables.Postings, Tables.Postings, io.write(postings, Tables.Postings), t0)
     }
 
-    runStage(Tables.Blocks, resume, metrics) {
+    stage(Tables.Blocks) { t0 =>
       // positions are NOT part of built blocks (v5 layout) — pruning the
       // positions_vb column out of this scan skips decoding the largest
       // column of the postings table for all ~rows of it (guide §6:
       // verify ReadSchema lists only what is used). Split boundaries are
       // computed from file sizes, not read schema, so the term-clustered
       // row runs (and the resulting blocks) are byte-identical.
-      val blocks = blockify(io.read(Tables.Postings)
+      val blocks = blockify(io.read(Tables.Postings, snap)
         .select("term", "docId", "tf", "doc_len")
         .as[(String, Long, Int, Int)])
-      io.write(blocks.toDF(), Tables.Blocks, sortCols = Seq("term", "min_doc"))
+      val w = io.write(blocks.toDF(), Tables.Blocks, sortCols = Seq("term", "min_doc"))
+      commitStage(Tables.Blocks, Tables.Blocks, w, t0, extra = wallMs => ingestBatch.toSeq.map(b =>
+        LineageRow(Tables.IngestLedgerStage, b.toInt, "done",
+          metrics.map(_.rows).sum + w.rows, metrics.map(_.wallMs).sum + wallMs)))
     }
 
     metrics.toSeq
@@ -282,83 +321,60 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     * rebuilds the block index from it — query results are bit-identical
     * (same posting rows; WAND is exact under any blocking), stats keep
     * their incremental weighted mean untouched (recomputing it would
-    * drift the IEEE value), and the dictionary/ledger are unchanged.
+    * drift the IEEE value), and the ledger and docId watermark are
+    * unchanged.
     *
     * Deletions: when the warehouse carries tombstones (`deleteDocs`), the
     * rewrite also PURGES them — postings/blocks lose the tombstoned rows,
     * the dictionary loses the tombstoned docs, and the tombstone tables
-    * are dropped (queries stop paying the anti-join/skip-set). The docId
-    * watermark is advanced FIRST (max-monotone, so a crashed/re-run
-    * compact can never lower it) so purged ids are never reused by a
-    * later incremental append. Query results are unchanged: the purge
-    * removes exactly the rows every query path was already filtering.
+    * are retired (queries stop paying the anti-join/skip-set). Query
+    * results are unchanged: the purge removes exactly the rows every query
+    * path was already filtering.
     *
-    * Single-writer maintenance op: run only with NO in-flight incremental
-    * batch — crash repair is tag-based, and compacting an un-ledgered
-    * partial append folds its rows where the tag sweep cannot remove them.
-    * A crash mid-compact is repaired by re-running compact (each step is
-    * an idempotent anti-join/rewrite; the watermark is monotone).
+    * The rewritten tables are new files; one commit swaps them in and
+    * retires the old ones, so there is no moment without a `postings`
+    * table, and a crash before the commit leaves the warehouse as it was.
     */
   def compact(): Seq[StageMetric] = {
-    FormatGuard.check(spark, io, "IndexBuilder.compact")
+    val snap = io.snapshot()
+    FormatGuard.check(snap, "IndexBuilder.compact")
+    require(snap.has(Tables.DocDict), "compact: warehouse has no index")
     val metrics = scala.collection.mutable.ArrayBuffer.empty[StageMetric]
-    def timed(stage: String)(body: => Unit): Unit = {
+    val written = scala.collection.mutable.LinkedHashMap.empty[String, Written]
+    def timed(table: String)(write: => Written): Written = {
       val t0 = System.nanoTime()
-      body
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      val rows = io.read(stage).count()
-      io.append(spark.createDataset(
-        Seq(LineageRow(s"compact:$stage", -1, "done", rows, wallMs))).toDF(),
-        Tables.Lineage)
-      metrics += StageMetric(s"compact:$stage", rows, wallMs, skipped = false)
+      val w = write
+      metrics += StageMetric(s"compact:$table", w.rows, millisSince(t0), skipped = false)
+      written(table) = w
+      w
     }
-    val hasDeletes = io.exists(Tables.Deletes)
+    val hasDeletes = snap.has(Tables.Deletes)
     def purged(df: DataFrame): DataFrame =
       if (!hasDeletes) df
-      else df.join(broadcast(io.read(Tables.Deletes).select(col("docId"))),
+      else df.join(broadcast(io.read(Tables.Deletes, snap).select(col("docId"))),
         Seq("docId"), "left_anti")
-    if (hasDeletes) {
-      // watermark BEFORE the dictionary rewrite (it is the only record of
-      // the purged ids' ceiling once they leave the dict); max-monotone
-      // against a previous marker so a re-run after the rewrite can't
-      // lower it back into the purged range
-      val maxId = io.read(Tables.DocDict).agg(max(col("docId")))
-        .as[Option[Long]].head().getOrElse(-1L)
-      val prior = io.readMarker(Tables.NextDocId)
-        .flatMap(s => scala.util.Try(s.trim.toLong).toOption).getOrElse(0L)
-      io.writeMarker(Tables.NextDocId, math.max(prior, maxId + 1L).toString)
-    }
-    timed(Tables.Postings) {
-      io.replace(purged(io.read(Tables.Postings)
-        .select("term", "docId", "tf", "doc_len", "positions_vb"))
+    val postings = timed(Tables.Postings) {
+      io.write(purged(io.read(Tables.Postings, snap))
+        .select("term", "docId", "tf", "doc_len", "positions_vb")
         .repartitionByRange(nShuffle, col("term"), col("docId"))
         .sortWithinPartitions("term", "docId"), Tables.Postings)
     }
     timed(Tables.Blocks) {
-      io.replace(blockify(io.read(Tables.Postings)
+      io.write(blockify(io.readFiles(Tables.Postings, postings.files)
         .select("term", "docId", "tf", "doc_len")
         .as[(String, Long, Int, Int)]).toDF(), Tables.Blocks)
     }
-    if (hasDeletes) {
-      timed(Tables.DocDict) {
-        io.replace(purged(io.read(Tables.DocDict))
-          .repartitionByRange(nShuffle, col("docId"))
-          .sortWithinPartitions("docId"), Tables.DocDict)
-      }
-      // stats were made exact at delete time — nothing to recompute; the
-      // tombstones are fully folded in, so retire them
-      io.drop(Tables.Deletes); io.drop(Tables.DeletedTermDf)
+    if (hasDeletes) timed(Tables.DocDict) {
+      io.write(purged(io.read(Tables.DocDict, snap))
+        .repartitionByRange(nShuffle, col("docId"))
+        .sortWithinPartitions("docId"), Tables.DocDict)
     }
+    // stats were made exact at delete time — nothing to recompute; the
+    // tombstones are fully folded in, so retire them
+    commit(snap, "compact", written.toMap, snap.state.copy(tombstones = 0L),
+      metrics.map(m => LineageRow(m.stage, -1, "done", m.rows, m.wallMs)).toSeq,
+      replaced = written.keys.toSeq ++ Seq(Tables.Deletes, Tables.DeletedTermDf))
     metrics.toSeq
-  }
-
-  /** The dictionary minus any committed tombstones — the row set corpus
-    * stats must be computed over. */
-  private def survivingDict(): DataFrame = {
-    val dict = io.read(Tables.DocDict)
-    if (!io.exists(Tables.Deletes)) dict
-    else dict.join(broadcast(io.read(Tables.Deletes).select(col("docId"))),
-      Seq("docId"), "left_anti")
   }
 
   /** Delete documents from the index — the maintenance op between builds
@@ -371,206 +387,174 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     *  - `deleted_docs` gets the ids; every query path anti-joins/skips
     *    them (postings, dictionary, dense fill, WAND decode);
     *  - `deleted_df` gets per-term df deltas — ONE column-pruned pass over
-    *    postings with the id set broadcast (linear in index size, the
-    *    price of keeping the WAND path's block-metadata df exact; batch
-    *    deletes to amortize it — every other path derives df from the
+    *    postings with the id set inlined (linear in index size, the price
+    *    of keeping the WAND path's block-metadata df exact; batch deletes
+    *    to amortize it — every other path derives df from the
     *    already-filtered rows for free);
-    *  - the stats singleton is recomputed over the surviving dictionary
-    *    with the same aggregate the batch build uses, so post-delete
-    *    scores are bit-identical to a from-scratch build on the surviving
-    *    corpus (integer doc_len sums < 2^53 are exact in IEEE double, so
-    *    summation order cannot drift the mean);
+    *  - the stats are recomputed from the log's exact live count and
+    *    doc_len sum, minus the deleted docs' — bit-identical to the batch
+    *    build's `avg(doc_len)` over the surviving dictionary, so post-delete
+    *    scores equal a from-scratch build on the surviving corpus (integer
+    *    doc_len sums < 2^53 are exact in IEEE double);
     *  - `compact()` later purges the tombstoned rows physically and
     *    retires both tables.
     *
-    * Idempotent per `batchId` via the same lineage-ledger + tagged-append
-    * contract as `buildIncremental`: a replay of a crashed batch removes
-    * its partial files and redoes it. Ids not in the index (or already
-    * tombstoned) are ignored, so retrying with a superset id list is safe.
+    * One job finds the ids' dictionary rows (and which are already
+    * tombstoned); the batch's ids are held on the driver, as the engine
+    * holds every tombstone (`GraftParams.maxDeletedIdsInMemory`).
+    * Idempotent per `batchId` through the log's ledger: the tables, stats
+    * and ledger row land in one commit, so a crashed batch left nothing
+    * visible and its replay simply redoes it. Ids not in the index (or
+    * already tombstoned) are ignored, so retrying with a superset id list
+    * is safe.
     */
-  def deleteDocs(ids: Dataset[Long], batchId: Long): Seq[StageMetric] = {
-    FormatGuard.check(spark, io, "IndexBuilder.deleteDocs")
-    require(io.exists(Tables.DocDict), "deleteDocs: warehouse has no index")
-    val ledgerStage = Tables.DeleteLedgerStage
-    val tag = s"del$batchId"
-    if (io.exists(Tables.Lineage) &&
-      io.read(Tables.Lineage)
-        .filter(col("stage") === ledgerStage && col("partition_id") === batchId.toInt)
-        .limit(1).count() > 0) return Seq.empty // batch already committed
-
-    // crash repair: drop un-ledgered partial appends of THIS batch (both
-    // tables, so ids and df deltas can never disagree after a replay)
-    val removedPartial =
-      Seq(Tables.Deletes, Tables.DeletedTermDf).map(io.deleteTagged(_, tag)).sum
+  def deleteDocs(ids: Seq[Long], batchId: Long): Seq[StageMetric] = {
+    val snap = io.snapshot()
+    FormatGuard.check(snap, "IndexBuilder.deleteDocs")
+    require(snap.has(Tables.DocDict), "deleteDocs: warehouse has no index")
+    if (snap.committed(Tables.DeleteLedgerStage, batchId)) return Seq.empty // batch already committed
 
     val t0 = System.nanoTime()
-    val existing: Option[DataFrame] =
-      if (io.exists(Tables.Deletes)) Some(io.read(Tables.Deletes).select(col("docId")))
-      else None
-    val base = ids.toDF("docId").distinct()
-      .join(io.read(Tables.DocDict).select(col("docId")), Seq("docId"), "left_semi")
-    val newIds = existing.fold(base)(e => base.join(broadcast(e), Seq("docId"), "left_anti"))
-      .cache()
-    val nNew = newIds.count()
-    if (nNew > 0) {
-      // df deltas first, ids second: a crash between the two leaves the
-      // warehouse mis-scored either way until the batch is replayed (the
-      // documented single-writer contract) — but tag repair removes both
-      // sides together, so a replay always restores consistency
-      val delta = io.read(Tables.Postings).select(col("term"), col("docId"))
-        .join(broadcast(newIds), Seq("docId"))
-        .groupBy(col("term")).agg(count(lit(1)).as("delta"))
-      io.appendTagged(delta.repartitionByRange(1, col("term"))
-        .sortWithinPartitions("term"), Tables.DeletedTermDf, tag)
-      io.touchSuccess(Tables.DeletedTermDf)
-      io.appendTagged(newIds.repartitionByRange(1, col("docId"))
-        .sortWithinPartitions("docId"), Tables.Deletes, tag)
-      io.touchSuccess(Tables.Deletes)
-    }
-    if (nNew > 0 || removedPartial > 0 || !io.exists(Tables.Stats)) {
-      val recomputed = survivingDict()
-        .agg(count(lit(1)).as("total_docs"), avg(col("doc_len")).as("avg_doc_len"))
-      io.replace(recomputed.coalesce(1), Tables.Stats)
-    }
-    newIds.unpersist()
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    io.append(spark.createDataset(
-      Seq(LineageRow(ledgerStage, batchId.toInt, "done", nNew, wallMs))).toDF(),
-      Tables.Lineage)
-    Seq(StageMetric(s"$ledgerStage:$batchId", nNew, wallMs, skipped = false))
+    val wanted = ids.distinct
+    val inDict = io.read(Tables.DocDict, snap).filter(col("docId").isin(wanted: _*))
+      .select(col("docId"), col("doc_len"), lit(false).as("tombstoned"))
+    val found = (if (!snap.has(Tables.Deletes)) inDict
+      else inDict.union(io.read(Tables.Deletes, snap).filter(col("docId").isin(wanted: _*))
+        .select(col("docId"), lit(0).as("doc_len"), lit(true).as("tombstoned"))))
+      .as[(Long, Int, Boolean)].collect()
+    val already = found.collect { case (d, _, true) => d }.toSet
+    val fresh = found.filter { case (d, _, t) => !t && !already(d) }.sortBy(_._1)
+    val nNew = fresh.length.toLong
+    val written =
+      if (nNew == 0) Map.empty[String, Written]
+      else {
+        val newIds = fresh.map(_._1).toSeq
+        val delta = io.read(Tables.Postings, snap).select(col("term"), col("docId"))
+          .filter(col("docId").isin(newIds: _*))
+          .groupBy(col("term")).agg(count(lit(1)).as("delta"))
+          .repartitionByRange(1, col("term"))
+        Map(
+          Tables.DeletedTermDf -> io.write(delta, Tables.DeletedTermDf, sortCols = Seq("term")),
+          Tables.Deletes -> io.write(newIds.toDF("docId").coalesce(1), Tables.Deletes,
+            sortCols = Seq("docId")))
+      }
+    val st = snap.state
+    val docs = st.docs - nNew
+    val docLenSum = st.docLenSum - fresh.map(_._2.toLong).sum
+    val state =
+      if (nNew == 0) st
+      else st.copy(docs = docs, docLenSum = docLenSum,
+        avgDocLen = if (docs == 0) 0.0 else docLenSum.toDouble / docs,
+        tombstones = st.tombstones + nNew)
+    val wallMs = millisSince(t0)
+    commit(snap, "delete", written, state,
+      Seq(LineageRow(Tables.DeleteLedgerStage, batchId.toInt, "done", nNew, wallMs)), batchId)
+    Seq(StageMetric(s"${Tables.DeleteLedgerStage}:$batchId", nNew, wallMs, skipped = false))
   }
 
-  /** Convenience overload for driver-held id lists. */
-  def deleteDocs(ids: Seq[Long], batchId: Long): Seq[StageMetric] =
-    deleteDocs(spark.createDataset(ids), batchId)
+  /** Distributed id lists: collected (distinct) to the driver first. */
+  def deleteDocs(ids: Dataset[Long], batchId: Long): Seq[StageMetric] =
+    if (io.snapshot().committed(Tables.DeleteLedgerStage, batchId)) Seq.empty
+    else deleteDocs(ids.distinct().collect().toSeq, batchId)
 
   /** One past the last committed delete batch (0 on a never-deleted
     * warehouse) — the default idempotency key for callers that don't
     * number their own batches (CLI, HTTP route). Single-writer like the
     * op itself: two concurrent unkeyed deleters could mint the same id. */
-  def nextDeleteBatchId(): Long =
-    if (!io.exists(Tables.Lineage)) 0L
-    else io.read(Tables.Lineage)
-      .filter(col("stage") === Tables.DeleteLedgerStage)
-      .agg(max(col("partition_id"))).as[Option[Int]].head()
-      .map(_.toLong + 1L).getOrElse(0L)
+  def nextDeleteBatchId(): Long = io.snapshot().nextBatchId(Tables.DeleteLedgerStage)
+
+  /** One past the last committed incremental batch. */
+  def nextIngestBatchId(): Long = io.snapshot().nextBatchId(Tables.IngestLedgerStage)
+
+  /** Empty the warehouse: one reset commit with no tables. Every table,
+    * tombstone, the docId watermark and the ledger go together, so the
+    * next build starts a new corpus life at docId 0. */
+  def clear(): Unit = {
+    val snap = io.snapshot()
+    commit(snap, "clear", Map.empty, Snapshot.empty(Tables.FormatVersion).state, Nil, reset = true)
+    ()
+  }
 
   /** Incremental indexing — the scalable re-expression of the reference's
     * `processed`-flag batches (/root/reference/source/InvertedIndex.cpp:29-51):
-    * new turns get docIds continuing after the current dictionary (insertion
+    * new turns get docIds continuing after the docId watermark (insertion
     * order, exactly like the reference's ObjectId-ordered batches), their
     * postings/blocks/dict rows are APPENDED as new parquet segments (the
     * term-pruned reads see all segments; new docIds are disjoint so no
     * merge is needed), and the stats singleton is advanced with the
     * reference's weighted incremental mean (InvertedIndex.cpp:317-334).
     *
-    * Idempotent per `batchId` via a lineage ledger row written last — the
-    * standard exactly-once foreachBatch sink contract, and this pipeline's
-    * equivalent of marking documents processed. Crash safety:
-    *  - every append is batch-TAGGED (TableIO.appendTagged), so a replay of
-    *    a partially-written batch detects and removes the partial files
-    *    before re-appending — no duplicate documents, no docId reuse drift;
-    *  - bootstrap is gated on DocDict, not Stats: a crash inside the stats
-    *    swap (replace = drop+rename) can lose only the stats singleton,
-    *    which is then recomputed EXACTLY from the committed dictionary
-    *    instead of triggering a full build that would overwrite the index;
-    *  - a replay that removed partial files also recomputes stats from the
-    *    dictionary (the crashed attempt may have swapped stats in before
-    *    dying short of the ledger row).
+    * Idempotent per `batchId` via the log's ledger — the standard
+    * exactly-once foreachBatch sink contract, and this pipeline's
+    * equivalent of marking documents processed. The three segments, the
+    * stats and the ledger row land in ONE commit: a crash before it leaves
+    * only unreferenced files (vacuumed by the next commit), and the replay
+    * redoes the batch exactly. A warehouse without a complete index (no
+    * committed blocks) is bootstrapped by a full build of the batch.
     *
     * term_stats is a batch-build analytics artifact; the query paths derive
     * df from postings/blocks directly, so it is not maintained here.
     */
   def buildIncremental(newTurns: Dataset[Turn], batchId: Long): Seq[StageMetric] = {
-    FormatGuard.check(spark, io, "IndexBuilder.buildIncremental")
-    val ledgerStage = "incremental_batch"
-    val tag = s"batch$batchId"
-    def ledgerRow(rows: Long, wallMs: Long) =
-      io.append(spark.createDataset(
-        Seq(LineageRow(ledgerStage, batchId.toInt, "done", rows, wallMs))).toDF(),
-        Tables.Lineage)
-    if (io.exists(Tables.Lineage) &&
-      io.read(Tables.Lineage)
-        .filter(col("stage") === ledgerStage && col("partition_id") === batchId.toInt)
-        .limit(1).count() > 0) return Seq.empty // batch already committed
-    if (!io.exists(Tables.DocDict)) {
-      // bootstrap: full build, but still ledger this batchId for idempotency
-      val m = build(newTurns)
-      ledgerRow(m.map(_.rows).sum, m.map(_.wallMs).sum)
-      return m
-    }
-
-    // crash repair: remove un-ledgered partial appends of THIS batch, and
-    // rebuild the stats singleton from the dictionary if the partial run
-    // swapped it (or died inside the swap)
-    val removedPartial =
-      Seq(Tables.DocDict, Tables.Postings, Tables.Blocks)
-        .map(io.deleteTagged(_, tag)).sum
-    if (removedPartial > 0 || !io.exists(Tables.Stats)) {
-      val repaired = survivingDict()
-        .agg(count(lit(1)).as("total_docs"), avg(col("doc_len")).as("avg_doc_len"))
-      io.replace(repaired.coalesce(1), Tables.Stats)
-    }
+    val snap = io.snapshot()
+    FormatGuard.check(snap, "IndexBuilder.buildIncremental")
+    if (snap.committed(Tables.IngestLedgerStage, batchId)) return Seq.empty // batch already committed
+    if (!snap.has(Tables.Blocks))
+      return buildStages(newTurns, resume = false, assumeSorted = false, ingestBatch = Some(batchId))
 
     val t0 = System.nanoTime()
-    val (n1, m1) = io.read(Tables.Stats).as[(Long, Double)].head()
-    // the watermark (written by a post-delete compact) floors the next id:
-    // tombstoned docs purged out of the dict must never have their ids
-    // reused by a new document
-    val watermark = io.readMarker(Tables.NextDocId)
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).getOrElse(0L)
-    val nextId = math.max(watermark, io.read(Tables.DocDict).agg(max(col("docId")))
-      .as[Option[Long]].head().getOrElse(-1L) + 1L)
-
-    val raw = withDocIds(newTurns, assumeSorted = false).mapPartitions { iter =>
-      iter.flatMap { case (rank, turn) =>
-        val docId = nextId + rank
-        val (docLen, terms) = TextPipeline.analyze(turn.text)
-        val sentinel = RawIndexRow("", docId, 0, docLen, Array.empty[Byte],
-          turn.conv_id, turn.turn_idx)
-        val postings = terms.iterator.map { case (term, poss) =>
-          RawIndexRow(term, docId, poss.length, docLen,
-            VarByte.encodePositions(poss), null, -1)
-        }
-        Iterator.single(sentinel) ++ postings
-      }
-    }.toDF().cache()
-
-    val dictDelta = raw.filter(col("term") === "")
-      .select(col("docId"), col("conv_id"), col("turn_idx"), col("doc_len"))
-    io.appendTagged(dictDelta, Tables.DocDict, tag)
-
+    val nextId = snap.state.nextDocId
+    val raw = withDocIds(newTurns, assumeSorted = false)
+      .mapPartitions(_.flatMap { case (rank, turn) => rawRows(nextId + rank, turn) })
+      .toDF().cache()
     val sortedDelta = raw.filter(col("term") =!= "")
       .select("term", "docId", "tf", "doc_len", "positions_vb")
       .repartitionByRange(nShuffle, col("term"), col("docId"))
       .sortWithinPartitions("term", "docId")
       .cache()
-    io.appendTagged(sortedDelta, Tables.Postings, tag)
+    try {
+      val dict = io.write(raw.filter(col("term") === "")
+        .select(col("docId"), col("conv_id"), col("turn_idx"), col("doc_len")),
+        Tables.DocDict, observe = Seq(sum(col("doc_len")).as("doc_len_sum")))
+      val postings = io.write(sortedDelta, Tables.Postings)
+      val blocks = io.write(blockify(sortedDelta
+        .select("term", "docId", "tf", "doc_len")
+        .as[(String, Long, Int, Int)]).toDF(), Tables.Blocks)
 
-    io.appendTagged(blockify(sortedDelta
-      .select("term", "docId", "tf", "doc_len")
-      .as[(String, Long, Int, Int)]).toDF(), Tables.Blocks, tag)
+      // weighted incremental mean — the reference's updateMetadataDocument
+      val (n1, m1) = (snap.state.docs, snap.state.avgDocLen)
+      val n2 = dict.rows
+      val sum2 = Option(dict.observed("doc_len_sum")).fold(0L)(_.asInstanceOf[Long])
+      val m2 = if (n2 == 0) 0.0 else sum2.toDouble / n2
+      val (n, m) =
+        if (n1 + n2 == 0) (0L, 0.0)
+        else (n1 + n2, (n1 * m1 + n2 * m2) / (n1 + n2))
+      val rows = dict.rows + postings.rows // the tokenizer's rows: sentinels + postings
+      val wallMs = millisSince(t0)
+      commit(snap, "ingest",
+        Map(Tables.DocDict -> dict, Tables.Postings -> postings, Tables.Blocks -> blocks),
+        snap.state.copy(docs = n, docLenSum = snap.state.docLenSum + sum2, avgDocLen = m,
+          nextDocId = nextId + n2),
+        Seq(LineageRow(Tables.IngestLedgerStage, batchId.toInt, "done", rows, wallMs)), batchId)
+      Seq(StageMetric(s"${Tables.IngestLedgerStage}:$batchId", rows, wallMs, skipped = false))
+    } finally { raw.unpersist(); sortedDelta.unpersist(); () }
+  }
+}
 
-    // weighted incremental mean — the reference's updateMetadataDocument
-    val (n2, sum2) = dictDelta.agg(count(lit(1)), sum(col("doc_len")))
-      .as[(Long, Option[Long])].head()
-    val m2 = if (n2 == 0) 0.0 else sum2.getOrElse(0L).toDouble / n2
-    val newStats =
-      if (n1 + n2 == 0) (0L, 0.0)
-      else (n1 + n2, (n1 * m1 + n2 * m2) / (n1 + n2))
-    io.replace(spark.createDataset(Seq(newStats)).toDF("total_docs", "avg_doc_len"),
-      Tables.Stats)
-
-    val rows = raw.count()
-    raw.unpersist(); sortedDelta.unpersist()
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    ledgerRow(rows, wallMs)
-    Seq(StageMetric(s"$ledgerStage:$batchId", rows, wallMs, skipped = false))
+object IndexBuilder {
+  /** The tokenizer's rows for one turn: a sentinel carrying the dictionary
+    * columns, then one posting per term. */
+  private def rawRows(docId: Long, turn: Turn): Iterator[RawIndexRow] = {
+    val (docLen, terms) = TextPipeline.analyze(turn.text)
+    Iterator.single(RawIndexRow("", docId, 0, docLen, Array.empty[Byte], turn.conv_id, turn.turn_idx)) ++
+      terms.iterator.map { case (term, poss) =>
+        RawIndexRow(term, docId, poss.length, docLen, VarByte.encodePositions(poss), null, -1)
+      }
   }
 }
 
 /** Structured Streaming ingest: stream of turns → incremental index.
-  * foreachBatch + the idempotent batchId ledger gives exactly-once index
+  * foreachBatch + the log's idempotent batchId ledger gives exactly-once index
   * updates under restarts (with the checkpointLocation).
   */
 object StreamingIngest {

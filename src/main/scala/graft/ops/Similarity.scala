@@ -39,9 +39,9 @@ object Similarity {
   /** Replace a parquet directory with a rewritten copy: `writeTmp` writes
     * the new contents to a sibling temp dir (reading the original is fine —
     * the temp write fully materializes first), then the original is swapped
-    * out. Mirrors ParquetTableIO.replace; like it, the swap window is the
-    * non-transactional cost of a filesystem warehouse (an Iceberg catalog
-    * makes this a transactional rewrite). Single-writer maintenance op —
+    * out. The swap window is the non-transactional cost of a plain
+    * directory (the text warehouse avoids it with its commit log; an
+    * Iceberg catalog makes this a transactional rewrite). Single-writer maintenance op —
     * run between batches, not under a live appender. */
   private[ops] def replaceDir(spark: SparkSession, dir: String)(
       writeTmp: String => Unit): Unit = {

@@ -4,7 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftParams
 import graft.api.SparkSearchEngine
-import graft.build.{IndexBuilder, Tables}
+import graft.build.IndexBuilder
 import graft.model.Turn
 import graft.store.ParquetTableIO
 import graft.util.Cancellation
@@ -26,7 +26,7 @@ import graft.util.Cancellation
   *   POST   /indexDocuments         {clear} → (re)build the index from --input
   *   POST   /crawlAndIndexDocument  {seedUrls, numberOfPages, clear}
   *   PUT    /setRankerParameters    {BM25_K1, BM25_B, PHRASE_BOOST, EXACT_MATCH_WEIGHT}
-  *   DELETE /clearCrawlHistory      drop all index tables
+  *   DELETE /clearCrawlHistory      empty the warehouse (one reset commit)
   *   PUT    /indexDocuments_terminate {clearIndexHistory} → cancel build jobs
   *
   * Built on the JDK's HttpServer — no external dependencies. Long-running
@@ -46,17 +46,19 @@ final class SearchEngineServer(
 
   @volatile private var params = GraftParams()
   private def io = new ParquetTableIO(spark, warehouse)
-  /** The engine (a snapshot: every write re-opens it) and the `--input`
-    * turns frame its hits are snippeted from, resolved together and
-    * swapped as one value; a request reads it once. A failed turns read
-    * is retried by each request, never pinned. */
+  /** The engine (one log version: every write re-opens it) and the
+    * `--input` turns frame its hits are snippeted from, resolved together
+    * and swapped as one value; a request reads it once. Opening reads the
+    * log on the driver, and the turns frame uses the declared `Turn`
+    * schema, so a re-open runs no Spark job. A failed turns read is
+    * retried by each request, never pinned. */
   @volatile private var serving = open()
   private def open(): (SparkSearchEngine, Option[scala.util.Try[DataFrame]]) =
-    (new SparkSearchEngine(spark, io, params), inputPath.map(p => scala.util.Try(spark.read.parquet(p))))
+    (new SparkSearchEngine(spark, io, params), inputPath.map(p => scala.util.Try(turnsFrom(p).toDF())))
   private def reopen(): Unit = serving = open()
-  /** Writes run one at a time: batch ids are minted from the lineage and
-    * `Stats` is replaced by drop-then-rename, so two concurrent writers
-    * would collide. Reads never take it. */
+  /** Writes run one at a time: each mints its batch id from the latest
+    * commit, and two writers on one version would race for the next (the
+    * loser's commit fails). Reads never take it. */
   private val writeLock = new Object
 
   // ---- minimal flat-JSON helpers (fields are numbers/bools/strings/
@@ -119,22 +121,17 @@ final class SearchEngineServer(
         case e: Throwable => respond(ex, 500, "Error " + String.valueOf(e.getMessage))
       }
 
-  private def turnsFrom(path: String) = spark.read.parquet(path).as[Turn]
-
-  private def nextBatchId(): Long =
-    if (!io.exists(Tables.Lineage)) 0L
-    else io.read(Tables.Lineage)
-      .filter($"stage" === "incremental_batch")
-      .agg(org.apache.spark.sql.functions.max($"partition_id"))
-      .as[Option[Int]].head().map(_.toLong + 1L).getOrElse(0L)
+  private def turnsFrom(path: String) =
+    spark.read.schema(org.apache.spark.sql.Encoders.product[Turn].schema).parquet(path).as[Turn]
 
   private def ingest(paths: Seq[String], limit: Option[Int]): Long = {
     Cancellation.tag(spark.sparkContext, "graft-ingest")
     try {
-      var batch = nextBatchId()
+      val b = new IndexBuilder(spark, io)
+      var batch = b.nextIngestBatchId()
       paths.foreach { p =>
         val t = limit.map(n => turnsFrom(p).limit(n)).getOrElse(turnsFrom(p))
-        new IndexBuilder(spark, io).buildIncremental(t, batch)
+        b.buildIncremental(t, batch)
         batch += 1
       }
       batch
@@ -151,7 +148,7 @@ final class SearchEngineServer(
   private def searchJson(query: String, accuracy: Double): String = {
     val (engine, turns) = serving
     val hits = turns match {
-      case Some(t) => engine.search(query, t.getOrElse(spark.read.parquet(inputPath.get)), accuracy)
+      case Some(t) => engine.search(query, t.getOrElse(turnsFrom(inputPath.get).toDF()), accuracy)
       case None =>
         engine.topKAuto(query, accuracy, params.topK).map { case (d, s) =>
           graft.model.SearchHit(d, s"doc-$d", -1, s, "", "")
@@ -171,7 +168,7 @@ final class SearchEngineServer(
     val (engine, turns) = serving
     val rows: Seq[(String, Long, String, Int, Double, String)] = turns match {
       case Some(t) =>
-        engine.searchManyWithSnippets(queries, t.getOrElse(spark.read.parquet(inputPath.get)),
+        engine.searchManyWithSnippets(queries, t.getOrElse(turnsFrom(inputPath.get).toDF()),
           params.topK, accuracy)
           .select($"query", $"docId", $"conv_id", $"turn_idx", $"score", $"snippet")
           .as[(String, Long, String, Int, Double, String)].collect().toSeq
@@ -303,7 +300,7 @@ final class SearchEngineServer(
       jsonField(body, "clearDocumentsHistory") match {
         case Some(v) =>
           Cancellation.cancelGroup(spark, "graft-ingest")
-          if (unquote(v).toInt != 0) writeLock.synchronized(clearAll())
+          if (unquote(v).toInt != 0) clearAll()
           (200, "Successfully terminated crawl process")
         case None => (400, "Invalid JSON data")
       }
@@ -373,7 +370,7 @@ final class SearchEngineServer(
     })
 
     server.createContext("/clearCrawlHistory", handler("DELETE") { _ =>
-      writeLock.synchronized(clearAll())
+      clearAll()
       (200, "Successfully cleared crawl history.")
     })
 
@@ -382,7 +379,7 @@ final class SearchEngineServer(
       jsonField(body, "clearIndexHistory") match {
         case Some(v) =>
           Cancellation.cancelGroup(spark, "graft-index")
-          if (unquote(v).toInt != 0) writeLock.synchronized(clearAll())
+          if (unquote(v).toInt != 0) clearAll()
           (200, "Successfully terminated indexing process")
         case None => (400, "Invalid JSON data")
       }
@@ -392,9 +389,13 @@ final class SearchEngineServer(
     server.getAddress.getPort
   }
 
-  private def clearAll(): Unit =
-    Seq(Tables.PostingsRaw, Tables.DocDict, Tables.Stats, Tables.TermStats,
-      Tables.Postings, Tables.Blocks, Tables.Lineage).foreach(io.drop)
+  /** One clear for every route (and `Main clear`): an empty-snapshot
+    * commit, so tombstones, the docId watermark and the ledger go with the
+    * tables and a later resume build starts a clean corpus life. */
+  private def clearAll(): Unit = writeLock.synchronized {
+    new IndexBuilder(spark, io).clear()
+    reopen()
+  }
 
   def stop(): Unit = {
     if (server != null) server.stop(0)

@@ -1,144 +1,239 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
+import graft.build.Tables
+import graft.model.LineageRow
 
-/** Thin table-persistence facade.
+/** Files a `TableIO.write` produced — invisible to readers until a commit
+  * adds them — and the aggregates observed on the written rows themselves:
+  * their count, and each extra (aliased) aggregate the caller asked for,
+  * by alias. */
+final case class Written(files: Seq[FileEntry], rows: Long, observed: Map[String, Any])
+
+/** Table persistence over a commit log.
   *
-  * The north rule targets Iceberg tables; this sandbox ships no Iceberg
-  * runtime jar (BASELINE.md), so the default implementation persists
-  * through parquet under a warehouse directory. On a real cluster an
-  * Iceberg-catalog implementation drops in behind the same trait
-  * (`df.writeTo(name).append()` / `MERGE INTO`) with no caller changes.
+  * The north rule targets Iceberg tables; the build ships no Iceberg or
+  * Delta runtime jar (BASELINE.md), so the default implementation keeps
+  * parquet files under a warehouse directory and a `CommitLog` beside
+  * them. A write never touches a live file: `write` puts new files in a
+  * fresh directory, and only `commit` makes them (and the removal of the
+  * files they replace) visible, in one atomic step. Readers resolve one
+  * `Snapshot` and read exactly its files, so a reader that races a write
+  * sees either the whole old version or the whole new one.
   */
 trait TableIO {
-  def write(df: DataFrame, name: String, sortCols: Seq[String] = Nil): Unit
-  def append(df: DataFrame, name: String): Unit
-  def read(name: String): DataFrame
-  def exists(name: String): Boolean
-  def drop(name: String): Unit
-  /** Replace a table that the new contents may also read from. */
-  def replace(df: DataFrame, name: String): Unit
-  /** Mark a multi-part (sharded) table committed. */
-  def touchSuccess(name: String): Unit
-  /** Append under a batch tag: fully written to a temp table first, then
-    * moved in with tag-prefixed file names, so a crashed append is
-    * detectable and removable by tag (see deleteTagged). */
-  def appendTagged(df: DataFrame, name: String, tag: String): Unit
-  /** Persist a tiny scalar marker (e.g. the format-version stamp) WITHOUT
-    * launching a Spark job — markers are metadata, and paying a job per
-    * build for a one-row table taxes the build's scaling ratio. */
-  def writeMarker(name: String, value: String): Unit
-  /** Read a marker written by writeMarker; None if absent. */
-  def readMarker(name: String): Option[String]
-  /** Remove files previously appendTagged with `tag` (crash cleanup);
-    * returns how many data files were removed. */
-  def deleteTagged(name: String, tag: String): Int
+  /** The latest committed version: a driver read of the log, no Spark job. */
+  def snapshot(): Snapshot
+  /** `name` as of `snap`, read from its file list with the table's
+    * declared schema (no listing, no schema inference). `stats` and
+    * `lineage` are local relations over the log. */
+  def read(name: String, snap: Snapshot): DataFrame
+  def read(name: String): DataFrame = read(name, snapshot())
+  def exists(name: String): Boolean = Tables.present(snapshot(), name)
+  /** Write `df` as new files of `table` (optionally sorted within each
+    * file), observing the row count and the aliased `observe` aggregates
+    * on the written rows — in the write's own job. */
+  def write(df: DataFrame, table: String, sortCols: Seq[String] = Nil,
+      observe: Seq[Column] = Nil): Written
+  /** Files written but not yet committed (a rewrite that reads its own
+    * output before the commit). */
+  def readFiles(table: String, files: Seq[FileEntry]): DataFrame
+  /** Commit on top of `base`; fails if another commit landed since. */
+  def commit(base: Snapshot, c: Commit): Snapshot
+  /** Delete every data file that is neither live at `snap` nor removed by
+    * its own commit: orphans of crashed writes, and files the commit
+    * before it removed. A snapshot's files thus stay readable until the
+    * second commit after it, so a query that raced a rewrite finishes on
+    * the files it resolved. Files newer than `snap`'s commit are kept:
+    * they belong to a write that started after it (a writer whose base
+    * is older fails at its own commit instead). */
+  def vacuum(snap: Snapshot): Unit
 }
 
 final class ParquetTableIO(spark: SparkSession, warehouse: String) extends TableIO {
-  private def path(name: String) = s"$warehouse/$name"
+  private val root: Path = {
+    val uri = new HPath(warehouse).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"warehouse $warehouse: the commit log needs a local filesystem")
+    Paths.get(uri.getPath)
+  }
+  private val log = new CommitLog(root)
+  private def abs(rel: String): String = root.resolve(rel).toString
 
-  /** Writes are atomic-ish: parquet commit protocol moves task files into
-    * place only on job success, so a killed build leaves no half-table
-    * visible (the _SUCCESS marker gates `exists`). */
-  override def write(df: DataFrame, name: String, sortCols: Seq[String]): Unit = {
-    val out = if (sortCols.nonEmpty)
-      df.sortWithinPartitions(sortCols.map(df.col): _*)
-    else df
-    out.write.mode(SaveMode.Overwrite).parquet(path(name))
+  override def snapshot(): Snapshot =
+    log.latest().getOrElse(LegacyWarehouse.snapshot(spark, this, root))
+
+  override def read(name: String, snap: Snapshot): DataFrame = {
+    import spark.implicits._
+    snap.refusal.foreach(r => throw new IllegalStateException(r))
+    name match {
+      case Tables.Stats =>
+        require(snap.has(Tables.DocDict), s"warehouse $warehouse has no index (version ${snap.version})")
+        Seq((snap.state.docs, snap.state.avgDocLen)).toDF("total_docs", "avg_doc_len")
+      case Tables.Lineage => snap.lineage.toDF()
+      case t =>
+        readFiles(t, snap.files.getOrElse(t, throw new IllegalStateException(
+          s"warehouse $warehouse has no table '$t' at version ${snap.version}")))
+    }
   }
 
-  override def append(df: DataFrame, name: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path(name))
+  override def readFiles(table: String, files: Seq[FileEntry]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ListedFileIndex(files.map(f => (abs(f.path), f.bytes))),
+      new StructType(), Tables.schema(table), None, new ParquetFileFormat, Map.empty)(spark))
 
-  override def read(name: String): DataFrame = spark.read.parquet(path(name))
-
-  override def touchSuccess(name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(name), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
+  override def write(df: DataFrame, table: String, sortCols: Seq[String],
+      observe: Seq[Column]): Written = {
+    val declared = Tables.schema(table)
+    require(df.schema.map(f => (f.name, f.dataType)) == declared.map(f => (f.name, f.dataType)),
+      s"$table: writing ${df.schema.simpleString}, declared ${declared.simpleString}")
+    val dir = s"$table/w-${java.util.UUID.randomUUID()}"
+    val sorted = if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.map(col): _*) else df
+    // observed on top of the written plan, so sampling jobs of a range
+    // partitioning below it never run the aggregate
+    val obs = Observation()
+    sorted.observe(obs, count(lit(1)).as("rows"), observe: _*).write.parquet(abs(dir))
+    val observed = obs.get
+    val files = {
+      val st = Files.list(root.resolve(dir))
+      try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => FileEntry(s"$dir/${p.getFileName}", Files.size(p))).toVector.sortBy(_.path)
+      finally st.close()
+    }
+    Written(files, observed("rows").asInstanceOf[Long], observed)
   }
 
-  override def exists(name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(name), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  override def commit(base: Snapshot, c: Commit): Snapshot = log.append(base, c)
 
-  override def drop(name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  private def fs =
-    new org.apache.hadoop.fs.Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  override def appendTagged(df: DataFrame, name: String, tag: String): Unit = {
-    val tmp = s"${name}__${tag}_tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(path(tmp))
-    val dest = new org.apache.hadoop.fs.Path(path(name))
-    fs.mkdirs(dest)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path(tmp)))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest, s"$tag-${f.getPath.getName}"))
+  override def vacuum(snap: Snapshot): Unit = {
+    val keep = snap.files.values.flatten.map(_.path).toSet ++ snap.retired
+    def referenced(rel: String) = keep.exists(k => k == rel || k.startsWith(rel + "/"))
+    Tables.Data.foreach { t =>
+      val d = root.resolve(t)
+      if (Files.isDirectory(d)) {
+        val st = Files.list(d)
+        val entries = try st.iterator().asScala.toVector finally st.close()
+        entries.foreach { p =>
+          if (!referenced(s"$t/${p.getFileName}") &&
+            Files.getLastModifiedTime(p).toMillis < snap.committedAtMs) deleteTree(p)
+        }
       }
-    drop(tmp)
+    }
+    // the metadata directories of a format-6 warehouse: the log replaces them
+    LegacyWarehouse.MetadataDirs.foreach(d => deleteTree(root.resolve(d)))
   }
 
-  override def deleteTagged(name: String, tag: String): Int = {
-    drop(s"${name}__${tag}_tmp") // stale temp from a crashed write
-    val p = new org.apache.hadoop.fs.Path(path(name))
-    if (!fs.exists(p)) return 0
-    val tagged = fs.listStatus(p).filter(_.getPath.getName.startsWith(s"$tag-"))
-    tagged.foreach(f => fs.delete(f.getPath, false))
-    tagged.length
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toVector.reverse.foreach(Files.deleteIfExists) finally st.close()
+    }
+}
+
+/** The file list of one table version, as the log recorded it: Spark
+  * plans the scan from these paths and sizes without listing or touching
+  * the files (as Delta's `TahoeFileIndex` does). */
+private final class ListedFileIndex(files: Seq[(String, Long)]) extends FileIndex {
+  private val statuses = files.map { case (p, n) =>
+    FileStatusWithMetadata(new FileStatus(n, false, 1, 128L << 20, 0L, new HPath(p)))
+  }
+  override def rootPaths: Seq[HPath] = statuses.map(_.getPath)
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, statuses))
+  override def inputFiles: Array[String] = files.map(_._1).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_._2).sum
+  override def partitionSchema: StructType = new StructType()
+}
+
+/** Format-6 warehouses (no log; a `format` marker, `stats` and `lineage`
+  * tables, a `next_doc_id` marker, `_SUCCESS`-gated table directories).
+  * A version-6 warehouse migrates to the log on first open: one reset
+  * commit synthesized from its tables. Anything else without a log but
+  * with index tables is refused. */
+private object LegacyWarehouse {
+  val MetadataDirs = Seq("format", "stats", "lineage", "next_doc_id")
+  private val MigratableFormat = 6
+
+  private def marker(spark: SparkSession, root: Path, name: String): Option[String] = {
+    val m = root.resolve(name).resolve("MARKER")
+    if (Files.exists(m)) Some(Files.readString(m))
+    else if (Files.exists(root.resolve(name).resolve("_SUCCESS")))
+      // before round 4 the marker was a one-row parquet table
+      spark.read.parquet(root.resolve(name).toString).take(1).headOption.map(_.get(0).toString)
+    else None
   }
 
-  override def writeMarker(name: String, value: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path(name))
-    val f = fs
-    f.mkdirs(dir)
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, "MARKER"), true)
-    out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    touchSuccess(name)
+  private def committed(root: Path, table: String) =
+    Files.exists(root.resolve(table).resolve("_SUCCESS"))
+
+  def snapshot(spark: SparkSession, io: TableIO, root: Path): Snapshot = {
+    val empty = Snapshot.empty(Tables.FormatVersion)
+    marker(spark, root, "format") match {
+      case Some(raw) =>
+        // a truncated/corrupt marker (crash mid-write) is refused like a
+        // version mismatch, not a NumberFormatException
+        val v = scala.util.Try(raw.trim.toInt).getOrElse(-1)
+        if (v == MigratableFormat) migrate(spark, io, root)
+        else empty.copy(refusal = Some(
+          s"warehouse format v$v (unparseable/corrupt = -1) != engine v${Tables.FormatVersion} — " +
+            "refusing to read/resume (blocks would misdecode); rebuild with resume=false"))
+      case None if Tables.Data.exists(t => Files.isDirectory(root.resolve(t))) =>
+        empty.copy(refusal = Some(
+          s"unversioned warehouse (no commit log, no format marker) — refusing to read/resume; " +
+            "rebuild required"))
+      case None => empty
+    }
   }
 
-  override def readMarker(name: String): Option[String] = {
-    val m = new org.apache.hadoop.fs.Path(path(name), "MARKER")
-    val f = fs
-    if (f.exists(m)) {
-      val in = f.open(m)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    } else if (exists(name)) {
-      // pre-round-4 warehouses persisted the marker as a one-row parquet
-      // table — still readable (a cold read here is fine; only the write
-      // path is on the measured build). An EMPTY legacy table (partial
-      // write) reads as no marker rather than a NoSuchElementException.
-      spark.read.parquet(path(name)).take(1).headOption.map(_.get(0).toString)
-    } else None
-  }
-
-  /** Write to a temp name first, then swap. (With an Iceberg catalog this
-    * is a plain transactional overwrite.) Readers created before the swap
-    * pin their old file listing and must be re-created (e.g. re-open the
-    * engine after IndexBuilder.compact). */
-  override def replace(df: DataFrame, name: String): Unit = {
-    val tmp = name + "__tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(path(tmp))
-    val fs = new org.apache.hadoop.fs.Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    drop(name)
-    fs.rename(new org.apache.hadoop.fs.Path(path(tmp)),
-      new org.apache.hadoop.fs.Path(path(name)))
-    // invalidate any session-cached listing of the replaced files
-    spark.catalog.refreshByPath(path(name))
+  /** Commit 0 from the v6 tables: their parquet files, the stats singleton
+    * as stored, the exact live count and doc_len sum, the watermark and
+    * the lineage rows. Runs a few Spark jobs, once per warehouse. */
+  private def migrate(spark: SparkSession, io: TableIO, root: Path): Snapshot = {
+    import spark.implicits._
+    val files = Tables.Data.filter(committed(root, _)).map { t =>
+      val st = Files.walk(root.resolve(t))
+      val fs = try st.iterator().asScala.filter { p =>
+        val rel = root.resolve(t).relativize(p).toString
+        rel.endsWith(".parquet") && !rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
+      }.map(p => FileEntry(root.relativize(p).toString, Files.size(p))).toVector.sortBy(_.path)
+      finally st.close()
+      t -> fs
+    }.toMap
+    val base = Snapshot.empty(Tables.FormatVersion)
+    def table(t: String) = io.readFiles(t, files(t))
+    val dict = if (files.contains(Tables.DocDict)) Some(table(Tables.DocDict)) else None
+    val deletes = if (files.contains(Tables.Deletes)) Some(table(Tables.Deletes)) else None
+    val state = dict.fold(base.state) { d =>
+      val maxId = d.agg(org.apache.spark.sql.functions.max($"docId")).as[Option[Long]].head()
+      val live = deletes.fold(d)(x => d.join(x, Seq("docId"), "left_anti"))
+      val (docs, sum) = live.agg(count(lit(1)), org.apache.spark.sql.functions.sum($"doc_len"))
+        .as[(Long, Option[Long])].head()
+      val stats = if (committed(root, Tables.Stats))
+        spark.read.parquet(root.resolve(Tables.Stats).toString).as[(Long, Double)].head()._2
+      else if (docs == 0) 0.0 else sum.getOrElse(0L).toDouble / docs
+      val watermark = marker(spark, root, "next_doc_id").flatMap(s => scala.util.Try(s.trim.toLong).toOption)
+      base.state.copy(docs = docs, docLenSum = sum.getOrElse(0L), avgDocLen = stats,
+        nextDocId = math.max(watermark.getOrElse(0L), maxId.getOrElse(-1L) + 1L),
+        tombstones = deletes.fold(0L)(_.count()))
+    }
+    val lineage =
+      if (committed(root, Tables.Lineage))
+        spark.read.parquet(root.resolve(Tables.Lineage).toString).as[LineageRow].collect().toSeq
+      else Nil
+    val snap = io.commit(Snapshot.empty(Tables.FormatVersion), Commit(0L, "migrate", -1L, reset = true,
+      files, Map.empty, state, lineage, 0L))
+    io.vacuum(snap)
+    snap
   }
 }

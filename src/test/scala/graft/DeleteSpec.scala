@@ -142,7 +142,7 @@ class DeleteSpec extends AnyFunSuite {
     assert(io.read(Tables.DocDict).count() == survivors.size)
     assert(io.read(Tables.Postings).filter(col("docId").isin(delIds: _*)).count() == 0)
     // blocks rebuilt from the purged postings: no tombstoned doc survives
-    val eC = new SparkSearchEngine(spark, io) // re-open: replace() swapped files
+    val eC = new SparkSearchEngine(spark, io) // re-open: compact committed a new version
     queries.foreach { q =>
       assert(keyed(eC, io, q) == before(q), s"query $q after compact")
     }
@@ -182,11 +182,12 @@ class DeleteSpec extends AnyFunSuite {
   test("fresh full build clears stale tombstones and watermark") {
     import spark.implicits._
     val (io, b, _, _) = tombstoned()
-    b.compact() // leaves a next_doc_id watermark
-    assert(io.readMarker(Tables.NextDocId).nonEmpty)
-    b.build(spark.createDataset(allTurns)) // resume = false: new corpus life
-    assert(!io.exists(Tables.Deletes) && io.readMarker(Tables.NextDocId).isEmpty)
+    b.compact() // the docId watermark outlives the purge
+    assert(io.snapshot().state.nextDocId == allTurns.size)
+    val rebuilt = allTurns.dropRight(5)
+    b.build(spark.createDataset(rebuilt)) // resume = false: new corpus life
+    assert(!io.exists(Tables.Deletes) && io.snapshot().state.nextDocId == rebuilt.size)
     val e = new SparkSearchEngine(spark, io)
-    assert(e.stats.total_docs == allTurns.size)
+    assert(e.stats.total_docs == rebuilt.size)
   }
 }

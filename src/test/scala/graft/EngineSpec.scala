@@ -443,14 +443,17 @@ class EngineSpec extends AnyFunSuite {
       .as[(String, Long, Int, Int, Array[Byte])].collect()
       .map(r => (r._1, r._2, r._3, r._4, r._5.toSeq)).sortBy(r => (r._1, r._2)).toSeq
     assert(content(io4) == content(io))
-    // drop one shard + downstream stages: resume redoes only those
-    io4.drop(s"${Tables.PostingsRaw}/shard=1")
-    io4.drop(Tables.PostingsRaw + "/_SUCCESS_DUMMY") // no-op guard
-    new java.io.File(s"$wh4/${Tables.PostingsRaw}/_SUCCESS").delete()
-    Seq(Tables.DocDict, Tables.Stats, Tables.TermStats, Tables.Postings, Tables.Blocks)
-      .foreach(io4.drop)
+    // a fresh build killed right after shard 0 committed (shard write,
+    // commit, vacuum — then the shard-1 write): resume redoes only the
+    // missing shards and the downstream stages
+    intercept[graft.store.CrashingIO.Crash] {
+      new IndexBuilder(spark, new graft.store.CrashingIO(io4, failAt = 3), blockSize = 8,
+        rawShards = 3).build(turns)
+    }
     new IndexBuilder(spark, io4, blockSize = 8, rawShards = 3).build(turns, resume = true)
     assert(content(io4) == content(io))
+    assert(io4.read(Tables.Lineage).filter($"stage" === s"${Tables.PostingsRaw}/shard=0").count() == 1,
+      "the committed shard is not redone")
   }
 
   test("resume: killed-after-stage build completes to an identical index") {
@@ -459,9 +462,11 @@ class EngineSpec extends AnyFunSuite {
     val wh3 = java.nio.file.Files.createTempDirectory("graft_wh3_").toString
     val io3 = new ParquetTableIO(spark, wh3)
     val turns = TranscriptGen.generate(spark, Convs)
-    new IndexBuilder(spark, io3, blockSize = 8).build(turns)
-    // simulate a crash that lost everything after stage 2
-    io3.drop(Tables.Postings); io3.drop(Tables.Blocks); io3.drop(Tables.TermStats)
+    // a build killed after stage 2 committed: the raw and dict stages
+    // (write, commit, vacuum each), then the term_stats write throws
+    intercept[graft.store.CrashingIO.Crash] {
+      new IndexBuilder(spark, new graft.store.CrashingIO(io3, failAt = 6), blockSize = 8).build(turns)
+    }
     val metrics = new IndexBuilder(spark, io3, blockSize = 8).build(turns, resume = true)
     val skipped = metrics.filter(_.skipped).map(_.stage).toSet
     assert(skipped == Set(Tables.PostingsRaw, Tables.DocDict, Tables.Stats))

@@ -7,7 +7,7 @@ import graft.build.{IndexBuilder, StreamingIngest, Tables}
 import graft.corpus.TranscriptGen
 import graft.model.Turn
 import graft.oracle.RefOracle
-import graft.store.ParquetTableIO
+import graft.store.{Commit, CrashingIO, ParquetTableIO, TestWarehouses}
 
 /** Incremental (foreachBatch) indexing: batches append disjoint-docId
   * segments; stats advance by the reference's weighted mean; results match
@@ -68,18 +68,21 @@ class IncrementalSpec extends AnyFunSuite {
     val parts = allTurns.grouped((allTurns.size + 1) / 2).toSeq
     b.buildIncremental(spark.createDataset(parts.head), batchId = 0L)
 
-    // simulate a crash mid-batch-1: some tagged dict rows landed, the
-    // stats singleton was swapped to the crashed attempt's values, but no
-    // ledger row was written
+    // simulate a crash mid-batch-1: stray dict rows landed as files, the
+    // batch's three segments were written, but nothing was committed (the
+    // stats ride on the same commit, so no crash can swap them alone)
     val fake = spark.createDataset(Seq(
         (99990L, "conv-zzzzzzzz", 0, 7), (99991L, "conv-zzzzzzzz", 1, 9)))
       .toDF("docId", "conv_id", "turn_idx", "doc_len")
-    io.appendTagged(fake, Tables.DocDict, "batch1")
-    io.replace(spark.createDataset(Seq((12345L, 99.9)))
-      .toDF("total_docs", "avg_doc_len"), Tables.Stats)
+    io.write(fake, Tables.DocDict)
+    def crashAtCommit(part: Seq[Turn], batch: Long) = intercept[CrashingIO.Crash] {
+      // dict, postings and blocks writes, then the commit throws
+      new IndexBuilder(spark, new CrashingIO(io, failAt = 3), blockSize = 8)
+        .buildIncremental(spark.createDataset(part), batch)
+    }
+    crashAtCommit(parts(1), 1L)
 
-    // replay of batch 1 must remove the partial files, repair stats, and
-    // append exactly once
+    // replay of batch 1 must ignore the partial files and append exactly once
     b.buildIncremental(spark.createDataset(parts(1)), batchId = 1L)
     val dict = io.read(Tables.DocDict).as[(Long, String, Int, Int)].collect()
     assert(dict.length == allTurns.size, "no duplicates, no leftover partial rows")
@@ -89,11 +92,11 @@ class IncrementalSpec extends AnyFunSuite {
     val (n, _) = io.read(Tables.Stats).as[(Long, Double)].head()
     assert(n == allTurns.size)
 
-    // crash inside the stats swap alone (stats missing, dict intact) must
-    // NOT trigger the bootstrap full build — batch 2 repairs and appends
-    io.drop(Tables.Stats)
-    b.buildIncremental(spark.createDataset(parts.head.map(t =>
-      t.copy(conv_id = "conv-extra" + t.conv_id)).toIndexedSeq), batchId = 2L)
+    // a crash before the stats commit (the dict intact) must NOT trigger
+    // the bootstrap full build — batch 2's replay appends
+    val extra = parts.head.map(t => t.copy(conv_id = "conv-extra" + t.conv_id)).toIndexedSeq
+    crashAtCommit(extra, 2L)
+    b.buildIncremental(spark.createDataset(extra), batchId = 2L)
     assert(io.read(Tables.DocDict).count() == allTurns.size + parts.head.size)
     val (n2, m2) = io.read(Tables.Stats).as[(Long, Double)].head()
     assert(n2 == allTurns.size + parts.head.size)
@@ -102,16 +105,34 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("format guard: mismatched or unversioned warehouse is refused by resume/incremental/engine") {
     import spark.implicits._
-    val io = new ParquetTableIO(spark,
-      java.nio.file.Files.createTempDirectory("fmt_wh_").toString)
+    val wh = java.nio.file.Files.createTempDirectory("fmt_wh_").toString
+    val io = new ParquetTableIO(spark, wh)
     val b = new IndexBuilder(spark, io, blockSize = 8)
     b.build(spark.createDataset(allTurns))
-    // marker written by build; engine opens fine
-    assert(io.readMarker(Tables.Format).map(_.trim.toInt).contains(Tables.FormatVersion))
-    new SparkSearchEngine(spark, io).stats
+    // the format rides on every commit; engine opens fine
+    assert(io.snapshot().state.format == Tables.FormatVersion)
+    val stats = new SparkSearchEngine(spark, io).stats
 
-    // tamper: pretend the warehouse was built at layout v3
-    io.writeMarker(Tables.Format, "3")
+    // format-6 copies of it: a v6 MARKER (and the pre-round-4 one-row
+    // parquet marker) migrate to the log on first open; any other version
+    // and an unversioned warehouse with index tables are refused
+    def v6(marker: Option[String], parquetMarker: Boolean = false) = {
+      val dst = java.nio.file.Files.createTempDirectory("fmt_v6_").toString
+      TestWarehouses.asFormat6(spark, wh, dst, marker, parquetMarker)
+      new ParquetTableIO(spark, dst)
+    }
+    assert(new SparkSearchEngine(spark, v6(Some("6"))).stats == stats)
+    assert(new SparkSearchEngine(spark, v6(Some("6"), parquetMarker = true)).stats == stats)
+    intercept[IllegalStateException] { new SparkSearchEngine(spark, v6(Some("3"))).stats }
+    intercept[IllegalStateException] { new SparkSearchEngine(spark, v6(Some("3"), parquetMarker = true)) }
+    intercept[IllegalStateException] { new SparkSearchEngine(spark, v6(None)).stats }
+    val corrupt = v6(Some("6\u0000garbage"))
+    intercept[IllegalStateException] { new IndexBuilder(spark, corrupt).build(spark.createDataset(allTurns), resume = true) }
+
+    // tamper: a commit claiming the warehouse was built at layout v3
+    val s0 = io.snapshot()
+    io.commit(s0, Commit(-1L, "tamper", -1L, reset = false, Map.empty, Map.empty,
+      s0.state.copy(format = 3), Nil, 0L))
     intercept[IllegalStateException] { new SparkSearchEngine(spark, io).stats }
     intercept[IllegalStateException] {
       b.build(spark.createDataset(allTurns), resume = true)
@@ -120,19 +141,7 @@ class IncrementalSpec extends AnyFunSuite {
       b.buildIncremental(spark.createDataset(allTurns.take(2)), batchId = 99L)
     }
 
-    // unversioned (pre-marker) warehouse with index tables: also refused
-    io.drop(Tables.Format)
-    intercept[IllegalStateException] { new SparkSearchEngine(spark, io).stats }
-
-    // legacy marker (pre-round-4 one-row parquet table): readable both ways
-    io.replace(spark.createDataset(Seq(Tables.FormatVersion)).toDF("format_version"),
-      Tables.Format)
-    new SparkSearchEngine(spark, io).stats
-    io.replace(spark.createDataset(Seq(3)).toDF("format_version"), Tables.Format)
-    intercept[IllegalStateException] { new SparkSearchEngine(spark, io).stats }
-    io.drop(Tables.Format)
-
-    // a full rebuild (resume = false) re-stamps the marker and recovers
+    // a full rebuild (resume = false) commits a fresh version and recovers
     b.build(spark.createDataset(allTurns))
     new SparkSearchEngine(spark, io).stats
   }

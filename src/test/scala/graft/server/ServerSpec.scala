@@ -7,6 +7,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 /** End-to-end drive of the HTTP surface: route-for-route against the
   * reference server's contract (methods, bodies, status codes). */
 class ServerSpec extends AnyFunSuite {
+  import graft.model.Turn
   lazy val spark = graft.EngineSpecFixture.spark
 
   private lazy val (srv, port, turnsPath) = {
@@ -229,6 +230,112 @@ class ServerSpec extends AnyFunSuite {
       assert(after.statusCode() == 200, after.body())
       sets.flatten.foreach(d =>
         assert(!after.body().contains(s"\"${urlOf(d)}\""), s"deleted doc $d still returned"))
+    } finally s.stop()
+  }
+
+  test("clear retires tombstones too: a resume build after it equals a fresh server") {
+    val dir = java.nio.file.Files.createTempDirectory("srv_clear_").toString
+    graft.corpus.TranscriptGen.generate(spark, 20).write.parquet(s"$dir/turns")
+    val query = "/search?query=whale&accuracy=0.0"
+    def serving[T](wh: String)(f: Int => T): T = {
+      val s = new SearchEngineServer(spark, s"$dir/$wh", Some(s"$dir/turns"), port = 0)
+      val p = s.start()
+      try f(p) finally s.stop()
+    }
+    val fresh = serving("fresh") { p =>
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      get(query, p).body()
+    }
+    serving("cleared") { p =>
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      assert(post("/deleteDocuments", """{"docIds": [0, 2, 4, 6, 8, 10, 12]}""", p).statusCode() == 200)
+      assert(send(HttpRequest.newBuilder(URI.create(url("/clearCrawlHistory", p))).DELETE().build())
+        .statusCode() == 200)
+      // a resume build restarts docIds at 0: stale tombstones would hide live docs
+      assert(post("/indexDocuments", """{"clear": 0}""", p).statusCode() == 200)
+      val r = get(query, p)
+      assert(r.statusCode() == 200 && r.body() == fresh, r.body().take(300))
+    }
+  }
+
+  test("/search during ingest, delete and compact: every reply is the before or the after snapshot's") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("srv_race_").toString
+    val input = s"$dir/turns"
+    val batch = s"$dir/batch"
+    val base = graft.corpus.TranscriptGen.generateLocal(12)
+    val extra = graft.corpus.TranscriptGen.generateLocal(18).filterNot(t => base.exists(_.conv_id == t.conv_id))
+    spark.createDataset(base).write.parquet(input)
+    val s = new SearchEngineServer(spark, s"$dir/wh", Some(input), port = 0)
+    val p = s.start()
+    val queries = Seq("whale", "%22blue%20whale%22",
+      "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22")
+    val acc = Double.MinPositiveValue
+    def search(q: String) = get(s"/search?query=$q&accuracy=$acc", p)
+    def serial() = queries.map { q => val r = search(q); assert(r.statusCode() == 200, r.body()); r.body() }
+    // the expected reply of each query: the oracle over the live turns,
+    // keyed by (conv_id, turn_idx) as the reply's titles are
+    def oracleKeys(live: Seq[Turn], q: String) = {
+      val oracle = new graft.oracle.RefOracle(live)
+      val key = oracle.docs.map { case (d, t) => d -> s"${t.conv_id}#${t.turn_idx}" }.toMap
+      oracle.search(java.net.URLDecoder.decode(q, "UTF-8"), acc, 100).map { case (d, sc) => (key(d), sc) }.toSet
+    }
+    def replyKeys(body: String) =
+      "\"title\":\"([^\"]*)\".*?\"score\":([-0-9.eE]+)".r.findAllMatchIn(body)
+        .map(m => (m.group(1), m.group(2).toDouble)).toSet
+    try {
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      spark.createDataset(extra).write.parquet(batch)
+      var live: Seq[Turn] = base
+      var before = serial()
+      queries.zip(before).foreach { case (q, b) => assert(replyKeys(b) == oracleKeys(live, q), q) }
+      val dict = new graft.store.ParquetTableIO(spark, s"$dir/wh").read(graft.build.Tables.DocDict)
+        .select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      val ids = dict.keys.toSeq.sorted
+      def without(del: Seq[Long])(l: Seq[Turn]) = {
+        val keys = del.map(dict).toSet
+        l.filterNot(t => keys((t.conv_id, t.turn_idx)))
+      }
+      val writes: Seq[(String, () => Int, Seq[Turn] => Seq[Turn])] = Seq(
+        ("ingest", () => {
+          // the crawler delivers the batch beside the served input, then
+          // asks for it to be indexed
+          spark.createDataset(extra).write.mode("append").parquet(input)
+          post("/crawl", s"""{"seedUrls": ["$batch"], "numberOfPages": ${extra.size}}""", p)
+            .statusCode()
+        }, l => l ++ extra),
+        ("delete", () => post("/deleteDocuments", s"""{"docIds": [${ids.take(6).mkString(",")}]}""", p)
+          .statusCode(), without(ids.take(6))),
+        ("compact", () => post("/deleteDocuments", s"""{"docIds": [${ids(6)}], "compact": 1}""", p)
+          .statusCode(), without(Seq(ids(6)))))
+      writes.foreach { case (name, write, liveAfter) =>
+        val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+        val clients = (0 until 3).map { c =>
+          val call: java.util.concurrent.Callable[Seq[(Int, Int, String)]] = () => {
+            val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+            var i = c
+            while (!done.get || out.size < 3) {
+              val r = search(queries(i % queries.size))
+              out += ((i % queries.size, r.statusCode(), r.body())); i += 1
+            }
+            out.toSeq
+          }
+          pool.submit(call)
+        }
+        val code = try write() finally done.set(true)
+        val replies = try clients.flatMap(_.get()) finally { pool.shutdown(); () }
+        assert(code == 200, s"$name write")
+        live = liveAfter(live)
+        val after = serial()
+        queries.zip(after).foreach { case (q, a) => assert(replyKeys(a) == oracleKeys(live, q), s"$name $q") }
+        replies.foreach { case (qi, status, body) =>
+          assert(status == 200 && (body == before(qi) || body == after(qi)),
+            s"$name: ${queries(qi)} -> $status ${body.take(200)}")
+        }
+        before = after
+      }
     } finally s.stop()
   }
 
