@@ -136,20 +136,17 @@ object Main {
           new IndexBuilder(spark, io).compact().foreach(m => println(
             f"stage=${m.stage} rows=${m.rows} wall_ms=${m.wallMs}"))
         }
-        arg(args, "minhash-index").foreach { p =>
-          graft.ops.Dedup.compactMinHashIndex(spark, p); println(s"compacted $p")
-        }
-        arg(args, "ann-index").foreach { p =>
-          graft.ops.Similarity.compactIndex(spark, p); println(s"compacted $p")
+        (arg(args, "minhash-index") ++ arg(args, "ann-index")).foreach { p =>
+          graft.ops.IndexStore.compact(spark, p); println(s"compacted $p")
         }
 
       case "delete" =>
-        // tombstone documents/vectors out of an index: --warehouse (text
-        // index, IndexBuilder.deleteDocs — --batch is the idempotency key,
-        // default one past the last committed delete batch) and/or
-        // --minhash-index / --ann-index (Dedup/Similarity tombstones);
-        // --ids 1,2,3 or --ids-parquet <path with a docId column>;
-        // --compact purges the tombstones in the same run
+        // delete documents/vectors from an index: --warehouse (text index,
+        // IndexBuilder.deleteDocs tombstones — --batch is the idempotency
+        // key, default one past the last committed delete batch) and/or
+        // --minhash-index / --ann-index (IndexStore.delete rewrites the
+        // files holding the ids); --ids 1,2,3 or --ids-parquet <path with
+        // a docId column>; --compact compacts in the same run
         val ids = (arg(args, "ids"), arg(args, "ids-parquet")) match {
           case (Some(csv), _) =>
             spark.createDataset(csv.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq)
@@ -167,15 +164,10 @@ object Main {
           if (args.contains("--compact")) b.compact().foreach(x => println(
             f"stage=${x.stage} rows=${x.rows} wall_ms=${x.wallMs}"))
         }
-        arg(args, "minhash-index").foreach { p =>
-          graft.ops.Dedup.deleteFromMinHashIndex(spark, p, ids)
-          if (args.contains("--compact")) graft.ops.Dedup.compactMinHashIndex(spark, p)
-          println(s"tombstoned in $p")
-        }
-        arg(args, "ann-index").foreach { p =>
-          graft.ops.Similarity.deleteFromIndex(spark, p, ids)
-          if (args.contains("--compact")) graft.ops.Similarity.compactIndex(spark, p)
-          println(s"tombstoned in $p")
+        (arg(args, "minhash-index") ++ arg(args, "ann-index")).foreach { p =>
+          graft.ops.IndexStore.delete(spark, p, ids.collect().toSeq)
+          if (args.contains("--compact")) graft.ops.IndexStore.compact(spark, p)
+          println(s"deleted from $p")
         }
 
       case "clear" =>

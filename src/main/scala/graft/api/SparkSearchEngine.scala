@@ -69,7 +69,11 @@ final class SparkSearchEngine(
   private def minusDeleted(df: DataFrame): DataFrame =
     deletes.fold(df)(d => df.join(broadcast(d), Seq("docId"), "left_anti"))
   private lazy val postings = minusDeleted(io.read(Tables.Postings, snapshot))
-  private lazy val dict = minusDeleted(io.read(Tables.DocDict, snapshot))
+  /** The dictionary with tombstoned docs: enough to look up result ids,
+    * which are live by construction (postings, the dense fill and the
+    * WAND skip set all exclude tombstones), with no anti-join job. */
+  private lazy val rawDict = io.read(Tables.DocDict, snapshot)
+  private lazy val dict = minusDeleted(rawDict)
   private lazy val blocks = io.read(Tables.Blocks, snapshot)
   private lazy val deletedTermDf: Option[DataFrame] =
     if (deletes.isDefined && snapshot.has(Tables.DeletedTermDf))
@@ -559,23 +563,33 @@ final class SparkSearchEngine(
         .getOrElse(topKDense(query, accuracy, k))
     }
 
-  /** Full search with snippets over the source turns table. */
+  /** Full search with snippets over the source turns table: every top-k
+    * hit in rank order. A hit whose turn `turns` lacks (a crawled source
+    * not delivered to the input) keeps its place with an empty text and
+    * snippet. */
   def search(query: String, turns: DataFrame, accuracy: Double = 0.0): Vector[SearchHit] = {
     val top = topKAuto(query, accuracy, params.topK)
     if (top.isEmpty) return Vector.empty
-    val ids = top.map(_._1)
-    val byId = top.toMap
     val keys = Snippeter.queryKeys(query, params.stemBareTerms)
     val weights = QueryEvaluator.wordsAndPhrasesWeights(query)
-    // ≤ k dict rows: always the broadcast side, so no shuffle of turns
-    val hits = broadcast(dict.filter($"docId".isin(ids: _*)))
-      .join(turns, Seq("conv_id", "turn_idx"))
-      .select($"docId", $"conv_id", $"turn_idx", $"text")
-      .as[(Long, String, Int, String)].collect()
-    hits.map { case (docId, convId, turnIdx, text) =>
-      SearchHit(docId, convId, turnIdx, byId(docId), text,
-        Snippeter.snippet(text, keys, weights))
-    }.sortBy(h => (-h.score, h.docId)).toVector
+    // ≤ k dict rows to the driver, then ONE filtered scan of turns for
+    // exactly their keys (conv_id pushed down to the scan): no join, so no
+    // broadcast job and no shuffle of turns
+    val refs = rawDict.filter($"docId".isin(top.map(_._1): _*))
+      .select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
+      .map { case (d, c, t) => d -> ((c, t)) }.toMap
+    val wanted = refs.values.toSeq.distinct
+    val texts = turns
+      .filter($"conv_id".isin(wanted.map(_._1).distinct: _*) && struct($"conv_id", $"turn_idx").isin(
+        wanted.map { case (c, t) => struct(lit(c).as("conv_id"), lit(t).as("turn_idx")) }: _*))
+      .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)].collect()
+      .map { case (c, t, text) => (c, t) -> text }.toMap
+    top.map { case (docId, score) =>
+      val (convId, turnIdx) = refs(docId)
+      val text = texts.get((convId, turnIdx))
+      SearchHit(docId, convId, turnIdx, score, text.getOrElse(""),
+        text.fold("")(Snippeter.snippet(_, keys, weights)))
+    }
   }
 
   /** Bulk multi-query scoring: the top-k of MANY bare-term queries in one
@@ -807,7 +821,7 @@ final class SparkSearchEngine(
     * and inner lets Spark broadcast the (N·k-row) result side instead of
     * shuffling the corpus-sized dictionary. */
   private def withDict(top: DataFrame): DataFrame =
-    top.join(dict, Seq("docId"))
+    top.join(rawDict, Seq("docId"))
       .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
 
   /** Bulk search with snippets over the source turns table: the bulk
@@ -840,7 +854,7 @@ final class SparkSearchEngine(
   def searchFrame(query: String, accuracy: Double = 0.0, k: Int = 100): DataFrame = {
     val top = topKAuto(query, accuracy, k)
     spark.createDataset(top).toDF("docId", "score")
-      .join(dict, Seq("docId"), "left")
+      .join(rawDict, Seq("docId"), "left")
       .select($"docId", $"conv_id", $"turn_idx", $"score")
       .orderBy($"score".desc, $"docId".asc)
   }

@@ -51,10 +51,32 @@ object Tables {
   /** Lineage stage of committed incremental batches. */
   val IngestLedgerStage = "incremental_batch"
 
+  // The tables of the ops indexes (`graft.ops.IndexStore`): each index
+  // directory holds one family's tables under its own commit log.
+  /** LSH: (vec_id, embedding, bucket), partitioned by `part` = the bucket's high bits. */
+  val LshAssignments = "lsh_assignments"
+  /** IVF: (vec_id, embedding), partitioned by `cell`. */
+  val IvfAssignments = "ivf_assignments"
+  /** IVF and IVF-PQ codebook: (cell, embedding). */
+  val Centroids = "centroids"
+  /** PQ: (vec_id, codes). */
+  val PqCodes = "pq_codes"
+  /** IVF-PQ: (vec_id, codes), partitioned by `cell`. */
+  val IvfPqCodes = "ivfpq_codes"
+  /** PQ and IVF-PQ codebook: (j, code, sub). */
+  val Codebook = "codebook"
+  /** MinHash signatures: (doc_id, sig). */
+  val MinHashSigs = "minhash_sigs"
+  /** MinHash banding rows: (band, bucket, doc_id). */
+  val MinHashBuckets = "minhash_buckets"
+
   /** The parquet tables and their declared schemas: every read uses
     * these (no inference), every write is checked against them. */
   private val schemas: Map[String, StructType] = {
-    def of[T <: Product : scala.reflect.runtime.universe.TypeTag] = Encoders.product[T].schema
+    import scala.reflect.runtime.universe.TypeTag
+    def of[T <: Product : TypeTag] = Encoders.product[T].schema
+    def cols[T <: Product : TypeTag](names: String*) =
+      StructType(of[T].fields.zip(names).map { case (f, n) => f.copy(name = n) })
     val postings = of[RawIndexRow].fields.take(5) // term, docId, tf, doc_len, positions_vb
     Map(
       PostingsRaw -> of[RawIndexRow],
@@ -63,11 +85,28 @@ object Tables {
       Postings -> StructType(postings),
       Blocks -> of[IndexBlock],
       Deletes -> new StructType().add("docId", LongType, nullable = false),
-      DeletedTermDf -> new StructType().add("term", StringType).add("delta", LongType, nullable = false))
+      DeletedTermDf -> new StructType().add("term", StringType).add("delta", LongType, nullable = false),
+      LshAssignments -> cols[(Long, Seq[Float], Long, Long)]("vec_id", "embedding", "bucket", "part"),
+      IvfAssignments -> cols[(Long, Seq[Float], Int)]("vec_id", "embedding", "cell"),
+      Centroids -> cols[(Int, Seq[Float])]("cell", "embedding"),
+      PqCodes -> cols[(Long, Seq[Int])]("vec_id", "codes"),
+      IvfPqCodes -> cols[(Long, Seq[Int], Int)]("vec_id", "codes", "cell"),
+      Codebook -> cols[(Int, Int, Seq[Double])]("j", "code", "sub"),
+      MinHashSigs -> cols[(Long, Array[Long])]("doc_id", "sig"),
+      MinHashBuckets -> cols[(Int, Long, Long)]("band", "bucket", "doc_id"))
   }
   val Data: Seq[String] = Seq(PostingsRaw, DocDict, TermStats, Postings, Blocks, Deletes, DeletedTermDf)
+  val IndexData: Seq[String] = Seq(LshAssignments, IvfAssignments, Centroids, PqCodes, IvfPqCodes,
+    Codebook, MinHashSigs, MinHashBuckets)
   def schema(table: String): StructType =
     schemas.getOrElse(table, throw new IllegalArgumentException(s"unknown table '$table'"))
+  /** The Hive partition column of a table (its last declared column), so
+    * a probe's filter on it prunes whole partitions of the file list. */
+  def partitionColumn(table: String): Option[String] = table match {
+    case LshAssignments => Some("part")
+    case IvfAssignments | IvfPqCodes => Some("cell")
+    case _ => None
+  }
 
   /** Whether `name` reads as present at `snap`. */
   def present(snap: Snapshot, name: String): Boolean = name match {

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.build.Tables
+import graft.model.LineageRow
 
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.runtime.universe.TypeTag
@@ -477,13 +479,12 @@ object Dedup {
   // for TEXT dedup: the expensive pass (tokenize → shingle → 1 md5/shingle
   // → k Carter–Wegman permutations) runs once per document ever; daily
   // batches append their signatures and probe the corpus WITHOUT
-  // rescanning or re-hashing it. Layout (version-guarded like
-  // Similarity.buildLshIndex):
-  //   path/sigs    (doc_id, sig ARRAY<LONG>[k])
-  //   path/buckets (band, bucket, doc_id) — range-sorted on (band, bucket)
-  //                so point/range probes prune files via parquet min-max
-  //   path/meta    (shingle_n, k, bands)
-  //   path/version
+  // rescanning or re-hashing it. Layout (an `IndexStore`, version-guarded
+  // like the ANN indexes; shingle_n, k and bands in the commit state):
+  //   minhash_sigs    (doc_id, sig ARRAY<LONG>[k]) — range-sorted on doc_id
+  //   minhash_buckets (band, bucket, doc_id) — range-sorted on (band,
+  //                   bucket), so point/range probes prune files via
+  //                   parquet min-max
 
   /** One-time signature index build over a document corpus. */
   def buildMinHashIndex(
@@ -493,98 +494,44 @@ object Dedup {
       shingleN: Int = 3,
       k: Int = 64,
       bands: Int = 16): Unit = {
-    import spark.implicits._
     require(k % bands == 0, s"k ($k) must be a multiple of bands ($bands)")
     val sigs = minHashSigs(spark, docs, shingleN, k).cache()
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // sigs range-sorted on doc_id: the candidate-pruned estimate pushes an
     // id `isin` into this scan, and tight per-file min/max makes that a
     // row-group-pruned point read instead of a table scan
-    sigs.repartitionByRange(n, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    bandRows(spark, sigs, k, bands)
-      .repartitionByRange(n, col("band"), col("bucket"))
-      .sortWithinPartitions("band", "bucket")
-      .write.mode("overwrite").parquet(s"$path/buckets")
-    Seq((shingleN, k, bands)).toDF("shingle_n", "k", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    Similarity.writeVersion(spark, path)
-    sigs.unpersist()
+    try IndexStore.build(spark, path, "build_minhash",
+        Map("shingle_n" -> shingleN.toLong, "k" -> k.toLong, "bands" -> bands.toLong)) { idx =>
+      Map(Tables.MinHashSigs -> idx.writeClustered(sigs, Tables.MinHashSigs),
+        Tables.MinHashBuckets -> idx.writeClustered(bandRows(spark, sigs, k, bands), Tables.MinHashBuckets))
+    } finally { sigs.unpersist(); () }
   }
 
-  private def readMinHashMeta(spark: SparkSession, path: String): (Int, Int, Int) = {
-    import spark.implicits._
-    // stamp-cached like the ANN metadata (Similarity.cachedLoad): meta is
-    // written once per build; repeated probes skip the per-call read job
-    Similarity.cachedLoad[(Integer, Integer, Integer)](spark, s"$path/meta") {
-      val t = spark.read.parquet(s"$path/meta").as[(Int, Int, Int)].head()
-      (Integer.valueOf(t._1), Integer.valueOf(t._2), Integer.valueOf(t._3))
-    } match { case (a, b, c) => (a.intValue(), b.intValue(), c.intValue()) }
-  }
+  /** (shingle_n, k, bands) of a built MinHash index. */
+  private def minHashParams(idx: IndexStore): (Int, Int, Int) =
+    (idx.param("shingle_n").toInt, idx.param("k").toInt, idx.param("bands").toInt)
 
   /** Incremental growth: sign a NEW disjoint batch with the index's own
-    * parameters and append signatures + banding rows — the next read sees
-    * the union (same contract as appendLshAssignments / appendIvfAssignments). */
-  def appendMinHashSigs(spark: SparkSession, newDocs: DataFrame, path: String): Unit = {
-    Similarity.checkVersion(spark, path)
-    val (shingleN, k, bands) = readMinHashMeta(spark, path)
-    val sigs = minHashSigs(spark, newDocs, shingleN, k).cache()
-    sigs.write.mode("append").parquet(s"$path/sigs")
-    bandRows(spark, sigs, k, bands).write.mode("append").parquet(s"$path/buckets")
-    sigs.unpersist()
-  }
+    * parameters and commit its signatures + banding rows — the next open
+    * sees the union (same contract as appendLshAssignments /
+    * appendIvfAssignments). */
+  def appendMinHashSigs(spark: SparkSession, newDocs: DataFrame, path: String): Unit =
+    appendMinHash(IndexStore.open(spark, path), newDocs, ledger = None)
 
-  /** Compact the MinHash index's appended segments (round-4 VERDICT item
-    * 1): `appendMinHashSigs` (and every streaming-gate micro-batch) appends
-    * banding rows UNSORTED and sigs as small files — after thousands of
-    * batches the buckets table degrades to a small-file sprawl with no
-    * (band, bucket) clustering, so probes lose their parquet min/max
-    * pruning and pay per-file open costs. This restores the build layout:
-    * buckets range-sorted on (band, bucket), sigs range-sorted on doc_id.
-    * Same rows → pairs and batch probes are bit-identical (spec-pinned).
-    * meta/version/stream_ledger are untouched; single-writer maintenance
-    * op — run between batches, not under a live appender. When the index
-    * carries tombstones (`deleteFromMinHashIndex`), the rewrite purges
-    * them and retires the `deleted` table. */
-  def compactMinHashIndex(spark: SparkSession, path: String): Unit = {
-    Similarity.checkVersion(spark, path)
-    val n = Similarity.shuffleN(spark)
-    Similarity.replaceDir(spark, s"$path/buckets") { tmp =>
-      Similarity.readLive(spark, path, "buckets", "doc_id")
-        .repartitionByRange(n, col("band"), col("bucket"))
-        .sortWithinPartitions("band", "bucket")
-        .write.mode("overwrite").parquet(tmp)
-    }
-    Similarity.replaceDir(spark, s"$path/sigs") { tmp =>
-      Similarity.readLive(spark, path, "sigs", "doc_id")
-        .repartitionByRange(n, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(tmp)
-    }
-    val del = new org.apache.hadoop.fs.Path(s"$path/deleted")
-    del.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(del, true)
-  }
-
-  /** Tombstone documents out of the persisted MinHash index — the dedup
-    * side of the retraction story (`IndexBuilder.deleteDocs` for the text
-    * index, `Similarity.deleteFromIndex` for the ANN indexes): deleted
-    * docs stop appearing in any pair/probe immediately (every sigs/
-    * buckets read goes through the `readLive` anti-join), and
-    * `compactMinHashIndex` purges them physically. Exactness is free
-    * here: signatures are per-doc, so a tombstoned index behaves
-    * identically to one built over the surviving corpus with the same
-    * parameters (OpsSpec pins it). Append-only, replay-safe, ids never
-    * reused — same contracts as the other two. */
-  def deleteFromMinHashIndex(spark: SparkSession, path: String, ids: Dataset[Long]): Unit = {
-    Similarity.checkVersion(spark, path)
-    ids.toDF("id").distinct().coalesce(1)
-      .write.mode("append").parquet(s"$path/deleted")
-  }
-
-  def deleteFromMinHashIndex(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    deleteFromMinHashIndex(spark, path, spark.createDataset(ids))
+  /** The append commit; `ledger` = (stage, batchId) adds the batch's
+    * lineage row to the same commit (the streaming gate's exactly-once
+    * ledger). */
+  private[graft] def appendMinHash(idx: IndexStore, docs: DataFrame, ledger: Option[(String, Long)]): Unit = {
+    val t0 = System.nanoTime()
+    val (shingleN, k, bands) = minHashParams(idx)
+    val sigs = minHashSigs(docs.sparkSession, docs, shingleN, k).cache()
+    try {
+      val written = idx.write(sigs, Tables.MinHashSigs)
+      val banded = idx.write(bandRows(docs.sparkSession, sigs, k, bands), Tables.MinHashBuckets)
+      idx.commit("append", Map(Tables.MinHashSigs -> written, Tables.MinHashBuckets -> banded),
+        lineage = ledger.toSeq.map { case (stage, batchId) =>
+          LineageRow(stage, batchId.toInt, "done", written.rows, (System.nanoTime() - t0) / 1000000L)
+        })
+    } finally { sigs.unpersist(); () }
   }
 
   /** Full-corpus near-dup pairs off the persisted index — identical output
@@ -595,10 +542,9 @@ object Dedup {
       indexPath: String,
       threshold: Double = 0.5,
       maxBucket: Int = 100000): DataFrame = {
-    Similarity.checkVersion(spark, indexPath)
-    val cands = pairsFromBandRows(
-      spark, Similarity.readLive(spark, indexPath, "buckets", "doc_id"), maxBucket)
-    estimatePairs(spark, cands, Similarity.readLive(spark, indexPath, "sigs", "doc_id"), threshold)
+    val idx = IndexStore.open(spark, indexPath)
+    val cands = pairsFromBandRows(spark, idx.read(Tables.MinHashBuckets), maxBucket)
+    estimatePairs(spark, cands, idx.read(Tables.MinHashSigs), threshold)
   }
 
   /** Dedup a NEW batch against the indexed corpus (and within itself) —
@@ -618,7 +564,7 @@ object Dedup {
       newDocs: DataFrame,
       threshold: Double = 0.5,
       maxBucket: Int = 100000): DataFrame =
-    minHashDedupBatchImpl(spark, indexPath, newDocs, threshold, maxBucket)._1
+    minHashDedupBatchImpl(spark, IndexStore.open(spark, indexPath), newDocs, threshold, maxBucket)._1
 
   /** minHashDedupBatch with deterministic cleanup: the per-batch caches
     * (batch signatures, banding rows, candidate pairs) are unpersisted after
@@ -632,19 +578,20 @@ object Dedup {
       newDocs: DataFrame,
       threshold: Double = 0.5,
       maxBucket: Int = 100000)(use: DataFrame => T): T = {
-    val (out, caches) = minHashDedupBatchImpl(spark, indexPath, newDocs, threshold, maxBucket)
+    val (out, caches) =
+      minHashDedupBatchImpl(spark, IndexStore.open(spark, indexPath), newDocs, threshold, maxBucket)
     try use(out) finally caches.foreach(_.unpersist(false))
   }
 
-  private def minHashDedupBatchImpl(
+  /** The batch probe against one index version, and the caches it holds. */
+  private[graft] def minHashDedupBatchImpl(
       spark: SparkSession,
-      indexPath: String,
+      idx: IndexStore,
       newDocs: DataFrame,
       threshold: Double,
       maxBucket: Int): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
-    Similarity.checkVersion(spark, indexPath)
-    val (shingleN, k, bands) = readMinHashMeta(spark, indexPath)
+    val (shingleN, k, bands) = minHashParams(idx)
     val newSigs = minHashSigs(spark, newDocs, shingleN, k).cache()
     val newBands = bandRows(spark, newSigs, k, bands).cache()
     // Corpus-side prefilter on the batch's (band, bucket) keys. Round 6:
@@ -681,7 +628,7 @@ object Dedup {
     // (disjoint ids, the documented contract) the anti-join removes
     // nothing, so results are bit-identical.
     val newIds = newSigs.select($"doc_id")
-    val corpusBands = Similarity.readLive(spark, indexPath, "buckets", "doc_id")
+    val corpusBands = idx.read(Tables.MinHashBuckets)
       .filter(mightContainKey)
       .join(newIds, Seq("doc_id"), "left_anti")
     val members = newBands
@@ -691,7 +638,7 @@ object Dedup {
       .select($"a".as("doc_a"), $"b".as("doc_b"))
     // same replay rule for the estimate: the index copy of a replayed
     // batch doc would duplicate its signature row and multiply pair rows
-    val allSigs = Similarity.readLive(spark, indexPath, "sigs", "doc_id")
+    val allSigs = idx.read(Tables.MinHashSigs)
       .join(newIds, Seq("doc_id"), "left_anti")
       .union(newSigs.toDF("doc_id", "sig"))
     val (est, estCaches) = estimatePairsImpl(spark, cands, allSigs, threshold)
@@ -1193,8 +1140,7 @@ object Dedup {
       indexPath: String,
       threshold: Double = 0.95,
       maxBucket: Int = 100000): DataFrame = {
-    Similarity.checkVersion(spark, indexPath)
-    val assignments = Similarity.readLive(spark, indexPath, "assignments", "vec_id")
+    val assignments = IndexStore.open(spark, indexPath).read(Tables.LshAssignments)
     pairsFromBuckets(spark, assignments.select("vec_id", "bucket"),
       assignments.select("vec_id", "embedding"), threshold, maxBucket)
   }

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.build.Tables
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale path: a PERSISTED index (build once, query many — the shape the
   * reference's own one-time index build + cheap per-query lookups has,
   * `/root/reference/source/BM25Ranker.cpp:26-30`):
-  *   - `buildIvfIndex` / `buildLshIndex` write an assignment table
-  *     `partitionBy(cell | part)`, so
+  *   - `buildIvfIndex` / `buildLshIndex` commit an assignment table
+  *     partitioned by `cell` | `part` to the directory's `IndexStore`, so
   *   - `ivfTopKIndexed` / `lshTopKIndexed` probes are PARTITION-PRUNED
   *     parquet reads (`PartitionFilters` in the scan) — a top-k query
   *     touches nProbe cells / hamming-ball buckets, never the corpus.
@@ -23,173 +24,40 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** On-disk index layout version — bump on any change (cache paths embed
-    * it, and every index carries it as a `version` marker table: probes
-    * REFUSE a mismatched or unversioned index instead of misdecoding —
-    * the warehouse FormatGuard contract extended to the ANN indexes).
-    * v3: optional `deleted` tombstone table every probe must anti-join —
-    * a deletes-unaware reader would silently resurrect deleted vectors. */
-  val IndexVersion = 3
+    * it, and every commit of an index's log carries it: probes REFUSE a
+    * mismatched or pre-log index instead of misdecoding — the warehouse
+    * FormatGuard contract extended to the ops indexes).
+    * v3: optional `deleted` tombstone table every probe must anti-join.
+    * v4: each index directory is an `IndexStore` over the warehouse's
+    * commit log — builds, retrains, appends, deletes and compactions are
+    * single commits, the parameters live in the commit state, and a
+    * delete rewrites the files holding its ids (no tombstones). */
+  val IndexVersion = 4
 
-  private[ops] def writeVersion(spark: SparkSession, path: String): Unit = {
+  /** Sorted (cell, centroid) rows of an IVF-family index — cached until a
+    * commit rewrites them. */
+  private def readCentroids(spark: SparkSession, idx: IndexStore): Array[(Int, Seq[Float])] = {
     import spark.implicits._
-    Seq(IndexVersion).toDF("version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/version")
+    idx.cached(Tables.Centroids)(_.as[(Int, Seq[Float])].collect().sortBy(_._1))
   }
 
-  /** Replace a parquet directory with a rewritten copy: `writeTmp` writes
-    * the new contents to a sibling temp dir (reading the original is fine —
-    * the temp write fully materializes first), then the original is swapped
-    * out. The swap window is the non-transactional cost of a plain
-    * directory (the text warehouse avoids it with its commit log; an
-    * Iceberg catalog makes this a transactional rewrite). Single-writer maintenance op —
-    * run between batches, not under a live appender. */
-  private[ops] def replaceDir(spark: SparkSession, dir: String)(
-      writeTmp: String => Unit): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compact")
-    fs.delete(tmp, true)
-    writeTmp(tmp.toString)
-    fs.delete(p, true)
-    fs.rename(tmp, p)
-    // drop any session-cached file listing of the old segment files —
-    // without this a later read of the same path can resolve to deleted
-    // parquet paths (FAILED_READ_FILE). DataFrames created BEFORE the
-    // compaction pin their own listing and must be re-created by callers.
-    spark.catalog.refreshByPath(dir)
+  /** The `n` lowest-vec_id vectors in id order: the deterministic initial
+    * codebook of IVF (centroids) and PQ (subvector seeds). */
+  private def lowestVectors(spark: SparkSession, embeddings: DataFrame, n: Int): Array[Seq[Float]] = {
+    import spark.implicits._
+    embeddings.select("vec_id", "embedding").orderBy("vec_id").limit(n)
+      .as[(Long, Seq[Float])].collect().sortBy(_._1).map(_._2)
   }
 
-  private[ops] def shuffleN(spark: SparkSession): Int =
-    math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      spark.sparkContext.defaultParallelism)
-
-  /** Compact an ANN index's appended segments (round-4 VERDICT item 1).
-    * Incremental appends (`appendLshAssignments` / `appendIvfAssignments` /
-    * `appendPqCodes`) each add small parquet files with no sort clustering;
-    * after many batches every probe pays the per-file open/footer cost and
-    * parquet min/max pruning degrades. This rewrites the data tables back
-    * to build-shaped layout — same rows, same schema, same partition dirs,
-    * so probes are bit-identical (spec-pinned) — and leaves
-    * centroids/codebook/meta/version untouched. When the index carries
-    * tombstones (`deleteFromIndex`), the rewrite also purges them and
-    * retires the `deleted` table — probes stop paying the anti-join. */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    checkVersion(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = shuffleN(spark)
-    def has(t: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t"))
-    Seq("assignments", "codes").filter(has).foreach { t =>
-      val dir = s"$path/$t"
-      val cols = spark.read.parquet(dir).columns.toSet
-      // LSH assignments carry `part`, IVF-family tables carry `cell`;
-      // plain PQ codes are unpartitioned
-      val partCol = if (cols.contains("part")) Some("part")
-        else if (cols.contains("cell")) Some("cell") else None
-      replaceDir(spark, dir) { tmp =>
-        val df = readLive(spark, path, t, "vec_id")
-        partCol match {
-          case Some(pc) =>
-            df.repartitionByRange(n, col(pc), col("vec_id"))
-              .sortWithinPartitions(pc, "vec_id")
-              .write.mode("overwrite").partitionBy(pc).parquet(tmp)
-          case None =>
-            df.repartitionByRange(n, col("vec_id"))
-              .sortWithinPartitions("vec_id")
-              .write.mode("overwrite").parquet(tmp)
-        }
-      }
+  /** Index of the max-cosine centroid (ties → lowest cell). */
+  private def nearestCell(v: Seq[Float], cs: Array[Seq[Float]]): Int = {
+    var best = 0; var bestCos = Double.MinValue; var i = 0
+    while (i < cs.length) {
+      val c = cosine(v, cs(i))
+      if (c > bestCos) { bestCos = c; best = i } // first wins: lowest cell on ties
+      i += 1
     }
-    // every data table above was rewritten without the tombstoned rows —
-    // they are fully folded in, so retire the table
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/deleted"), true)
-  }
-
-  /** A data table of the index minus its tombstoned ids (`deleteFromIndex`
-    * / `Dedup.deleteFromMinHashIndex`) — the ONLY way probe/pair paths may
-    * read `assignments`/`codes`/`sigs`/`buckets`, so no path can resurrect
-    * a deleted row. The common never-deleted case costs one file stat and
-    * returns the identical plan; partition-pruning filters applied by the
-    * caller still push down past the (broadcast) anti-join. */
-  private[ops] def readLive(
-      spark: SparkSession, indexPath: String, table: String,
-      idCol: String): DataFrame = {
-    val df = spark.read.parquet(s"$indexPath/$table")
-    val del = new org.apache.hadoop.fs.Path(s"$indexPath/deleted")
-    val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(del)) df
-    else df.join(
-      broadcast(spark.read.parquet(del.toString).select(col("id").as(idCol))),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Tombstone vectors out of a persisted ANN index (LSH / IVF / PQ /
-    * IVF-PQ alike — the delete side of the GDPR/takedown story the text
-    * index's `IndexBuilder.deleteDocs` starts): every probe stops
-    * returning them immediately via `readLive`'s anti-join, and
-    * `compactIndex` purges them physically. Centroids/codebooks are NOT
-    * retrained — the surviving vectors' quantization is unchanged, so a
-    * post-delete probe equals probing an index whose rows were filtered
-    * at build time against the same codebook (OpsSpec pins it). Append-
-    * only and replay-safe (duplicate tombstones are harmless to an
-    * anti-join); deleted ids must never be reused, the same contract the
-    * text index's `next_doc_id` watermark enforces for docIds. */
-  def deleteFromIndex(spark: SparkSession, path: String, ids: Dataset[Long]): Unit = {
-    checkVersion(spark, path)
-    ids.toDF("id").distinct().coalesce(1)
-      .write.mode("append").parquet(s"$path/deleted")
-  }
-
-  def deleteFromIndex(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    deleteFromIndex(spark, path, spark.createDataset(ids))
-  }
-
-  // ---- probe-metadata cache ------------------------------------------
-  // Version stamps, meta triples and centroid/codebook arrays are
-  // immutable for a given on-disk directory state, yet round 5 re-ran a
-  // driver Spark job (read + head/collect) for them on EVERY probe — a
-  // fixed per-query tax across the whole ANN/minhash family. Loads are
-  // now cached per directory against its file listing: any rewrite/
-  // tamper/rebuild changes the listing and forces a re-read (the
-  // version-guard spec exercises this), while repeated probes of an
-  // unchanged index skip the job entirely.
-  private val metaCache = new StampedCache[String, AnyRef]
-
-  private[ops] def cachedLoad[T <: AnyRef](
-      spark: SparkSession, dir: String)(load: => T): T =
-    metaCache(dir, StampedCache.dirStamp(spark, dir))(load).asInstanceOf[T]
-
-  /** Refuse to probe an index this code cannot decode. */
-  private[ops] def checkVersion(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    // only a missing/unreadable version table means "unversioned" — fatal
-    // errors (OOM, interrupts) must propagate, not masquerade as staleness;
-    // an unreadable read throws out of the load, so it is never cached
-    val v =
-      try cachedLoad[Integer](spark, s"$path/version") {
-        Integer.valueOf(spark.read.parquet(s"$path/version").as[Int].head())
-      }.intValue()
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => -1
-        case e: org.apache.spark.SparkException
-          if e.getCause != null && e.getCause.isInstanceOf[java.io.IOException] => -1
-        case _: java.io.IOException => -1
-      }
-    if (v != IndexVersion) throw new IllegalStateException(
-      s"ANN index at $path has version $v (unversioned = -1) but this build " +
-        s"decodes version $IndexVersion — rebuild the index (buildLshIndex/" +
-        "buildIvfIndex/buildPqIndex/buildIvfPqIndex)")
-  }
-
-  /** Sorted (cell, centroid) rows of an IVF-family index — stamp-cached. */
-  private[ops] def readCentroids(
-      spark: SparkSession, path: String): Array[(Int, Seq[Float])] = {
-    import spark.implicits._
-    cachedLoad[Array[(Int, Seq[Float])]](spark, s"$path/centroids") {
-      spark.read.parquet(s"$path/centroids")
-        .as[(Int, Seq[Float])].collect().sortBy(_._1)
-    }
+    best
   }
 
   def cosine(a: Seq[Float], b: Seq[Float]): Double = {
@@ -262,8 +130,6 @@ object Similarity {
     * stays a row column, pruned file-level by parquet min/max stats. */
   private def partShift(planes: Int): Int = math.max(0, planes - 12)
 
-  private def metaPath(path: String) = s"$path/meta"
-
   // ---------------------------------------------------------------- LSH --
 
   /** One-time LSH index build: every vector is assigned its hyperplane-sign
@@ -279,43 +145,39 @@ object Similarity {
     import spark.implicits._
     val dims = embeddings.select(size(col("embedding"))).as[Int].head()
     val planes = planesOpt.getOrElse(adaptivePlanes(embeddings.count()))
+    IndexStore.build(spark, path, "build_lsh",
+        Map("planes" -> planes.toLong, "dims" -> dims.toLong, "seed" -> seed)) { idx =>
+      Map(Tables.LshAssignments -> idx.write(lshRows(spark, embeddings, planes, dims, seed),
+        Tables.LshAssignments))
+    }
+    planes
+  }
+
+  /** (planes, dims, seed) of a built LSH index. */
+  private def lshParams(idx: IndexStore): (Int, Int, Long) =
+    (idx.param("planes").toInt, idx.param("dims").toInt, idx.param("seed"))
+
+  private def lshRows(spark: SparkSession, embeddings: DataFrame, planes: Int, dims: Int,
+      seed: Long): DataFrame = {
+    import spark.implicits._
     val shift = partShift(planes)
-    val hyper = DetHash.signPlanes(planes, dims, seed)
-    val bHyper = spark.sparkContext.broadcast(hyper)
+    val bHyper = spark.sparkContext.broadcast(DetHash.signPlanes(planes, dims, seed))
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
       .map { case (id, v) =>
         val b = hyperplaneSig(v, bHyper.value)
         (id, v, b, b >>> shift)
       }
       .toDF("vec_id", "embedding", "bucket", "part")
-      .write.mode("overwrite").partitionBy("part").parquet(s"$path/assignments")
-    Seq((planes, dims, seed)).toDF("planes", "dims", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath(path))
-    writeVersion(spark, path)
-    planes
   }
 
   /** Incremental LSH growth: bucket a NEW disjoint batch with the
-    * EXISTING hyperplanes (persisted meta), appended into the same part
-    * partitions — probes see the union on their next read. */
+    * EXISTING hyperplanes (the committed parameters), one commit adding
+    * its files to the same part partitions. */
   def appendLshAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
-    import spark.implicits._
-    checkVersion(spark, path)
-    val (planes, dims, seed) = cachedLoad[(Integer, Integer, java.lang.Long)](
-      spark, metaPath(path)) {
-        val t = spark.read.parquet(metaPath(path)).as[(Int, Int, Long)].head()
-        (Integer.valueOf(t._1), Integer.valueOf(t._2), java.lang.Long.valueOf(t._3))
-      } match { case (a, b, c) => (a.intValue(), b.intValue(), c.longValue()) }
-    val shift = partShift(planes)
-    val hyper = DetHash.signPlanes(planes, dims, seed)
-    val bHyper = spark.sparkContext.broadcast(hyper)
-    newEmbeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) =>
-        val b = hyperplaneSig(v, bHyper.value)
-        (id, v, b, b >>> shift)
-      }
-      .toDF("vec_id", "embedding", "bucket", "part")
-      .write.mode("append").partitionBy("part").parquet(s"$path/assignments")
+    val idx = IndexStore.open(spark, path)
+    val (planes, dims, seed) = lshParams(idx)
+    idx.commit("append", Map(Tables.LshAssignments ->
+      idx.write(lshRows(spark, newEmbeddings, planes, dims, seed), Tables.LshAssignments)))
   }
 
   /** Top-k over a persisted LSH index: reads ONLY the partitions covering
@@ -328,13 +190,8 @@ object Similarity {
       queryId: Long,
       k: Int,
       probeHamming: Int = 1): DataFrame = {
-    import spark.implicits._
-    checkVersion(spark, indexPath)
-    val (planes, dims, seed) = cachedLoad[(Integer, Integer, java.lang.Long)](
-      spark, metaPath(indexPath)) {
-        val t = spark.read.parquet(metaPath(indexPath)).as[(Int, Int, Long)].head()
-        (Integer.valueOf(t._1), Integer.valueOf(t._2), java.lang.Long.valueOf(t._3))
-      } match { case (a, b, c) => (a.intValue(), b.intValue(), c.longValue()) }
+    val idx = IndexStore.open(spark, indexPath)
+    val (planes, dims, seed) = lshParams(idx)
     require(queryVec.length == dims, s"query dims ${queryVec.length} != index dims $dims")
     val hyper = DetHash.signPlanes(planes, dims, seed)
     val qBucket = hyperplaneSig(queryVec, hyper)
@@ -342,7 +199,7 @@ object Similarity {
     val shift = partShift(planes)
     val parts = probes.map(_ >>> shift).distinct
     val qd = typedLit(queryVec.map(_.toDouble))
-    readLive(spark, indexPath, "assignments", "vec_id")
+    idx.read(Tables.LshAssignments)
       .filter(col("part").isin(parts: _*) && col("bucket").isin(probes: _*)
         && col("vec_id") =!= queryId)
       .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
@@ -372,12 +229,8 @@ object Similarity {
     require(queries.nonEmpty, "lshTopKManyIndexed needs at least one query")
     require(queries.map(_._1).distinct.size == queries.size,
       "lshTopKManyIndexed: duplicate query ids in the batch")
-    checkVersion(spark, indexPath)
-    val (planes, dims, seed) = cachedLoad[(Integer, Integer, java.lang.Long)](
-      spark, metaPath(indexPath)) {
-        val t = spark.read.parquet(metaPath(indexPath)).as[(Int, Int, Long)].head()
-        (Integer.valueOf(t._1), Integer.valueOf(t._2), java.lang.Long.valueOf(t._3))
-      } match { case (a, b, c) => (a.intValue(), b.intValue(), c.longValue()) }
+    val idx = IndexStore.open(spark, indexPath)
+    val (planes, dims, seed) = lshParams(idx)
     val hyper = DetHash.signPlanes(planes, dims, seed)
     val probePairs = queries.flatMap { case (qid, v) =>
       require(v.length == dims, s"query $qid dims ${v.length} != index dims $dims")
@@ -387,14 +240,25 @@ object Similarity {
     val parts = probePairs.map(_._1 >>> shift).distinct
     val allBuckets = probePairs.map(_._1).distinct
     val pp = spark.createDataset(probePairs).toDF("bucket", "query_id")
+    bulkRerank(spark, idx.read(Tables.LshAssignments)
+      .filter(col("part").isin(parts: _*) && col("bucket").isin(allBuckets: _*))
+      .join(broadcast(pp), Seq("bucket")), queries, k)
+  }
+
+  /** Each query's exact-cosine top-k (cosine desc, vec_id asc) among its
+    * `candidates` rows (query_id, vec_id, embedding, …), the query's own
+    * vector excluded: the tail of every bulk probe.
+    *
+    * @return (query_id, vec_id, cosine), ≤ k rows per query */
+  private def bulkRerank(spark: SparkSession, candidates: DataFrame,
+      queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
+    import spark.implicits._
     val qVecs = spark.createDataset(
         queries.map { case (qid, v) => (qid, v.map(_.toDouble)) })
       .toDF("query_id", "qvec")
     val wK = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    readLive(spark, indexPath, "assignments", "vec_id")
-      .filter(col("part").isin(parts: _*) && col("bucket").isin(allBuckets: _*))
-      .join(broadcast(pp), Seq("bucket"))
+    candidates
       .join(broadcast(qVecs), Seq("query_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
@@ -438,59 +302,47 @@ object Similarity {
   // ---------------------------------------------------------------- IVF --
 
   /** One-time IVF-flat index build. Centroids are the lowest-`nCells`
-    * vec_ids (deterministic, engine-reproducible; a trained k-means
-    * codebook drops in by pre-writing `path/centroids` and calling
-    * `buildIvfAssignments`); every vector goes to its max-cosine centroid
-    * (ties → lowest cell), a broadcast map pass; the assignment table is
-    * written `partitionBy("cell")`. */
+    * vec_ids (deterministic, engine-reproducible; `trainIvfCentroids`
+    * commits a trained codebook instead); every vector goes to its
+    * max-cosine centroid (ties → lowest cell), a broadcast map pass; the
+    * assignment table is partitioned by `cell`. */
   def buildIvfIndex(
       spark: SparkSession,
       embeddings: DataFrame,
       path: String,
-      nCells: Int = 16): Unit = {
-    import spark.implicits._
-    val centroids = embeddings.select("vec_id", "embedding")
-      .orderBy("vec_id").limit(nCells)
-      .as[(Long, Seq[Float])].collect()
-      .sortBy(_._1).zipWithIndex
-      .map { case ((_, v), cell) => (cell, v) }
+      nCells: Int = 16): Unit =
+    writeIvfIndex(spark, embeddings, path, lowestVectors(spark, embeddings, nCells))
+
+  /** Build (or retrain) commit of an IVF index over `centroids`. */
+  private def writeIvfIndex(
+      spark: SparkSession, embeddings: DataFrame, path: String, centroids: Array[Seq[Float]]): Unit = {
     require(centroids.nonEmpty, "no centroids sampled")
-    spark.createDataset(centroids.toIndexedSeq).toDF("cell", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    buildIvfAssignments(spark, embeddings, path)
-    writeVersion(spark, path)
+    IndexStore.build(spark, path, "build_ivf") { idx =>
+      Map(Tables.Centroids -> idx.write(centroidRows(spark, centroids), Tables.Centroids),
+        Tables.IvfAssignments -> idx.write(ivfRows(spark, embeddings, centroids), Tables.IvfAssignments))
+    }
   }
 
-  /** Assignment pass against an existing `path/centroids` codebook. */
-  def buildIvfAssignments(spark: SparkSession, embeddings: DataFrame, path: String): Unit =
-    writeIvfAssignments(spark, embeddings, path, overwrite = true)
-
-  /** Incremental IVF growth: assign a NEW disjoint batch with the
-    * EXISTING codebook, appended into the same cell partitions. */
-  def appendIvfAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
-    checkVersion(spark, path)
-    writeIvfAssignments(spark, newEmbeddings, path, overwrite = false)
-  }
-
-  private def writeIvfAssignments(
-      spark: SparkSession, embeddings: DataFrame, path: String, overwrite: Boolean): Unit = {
+  private def centroidRows(spark: SparkSession, centroids: Array[Seq[Float]]): DataFrame = {
     import spark.implicits._
-    val centroids = readCentroids(spark, path).map(_._2)
+    spark.createDataset(centroids.toIndexedSeq.zipWithIndex.map(_.swap))
+      .toDF("cell", "embedding").coalesce(1)
+  }
+
+  private def ivfRows(spark: SparkSession, embeddings: DataFrame, centroids: Array[Seq[Float]]): DataFrame = {
+    import spark.implicits._
     val bC = spark.sparkContext.broadcast(centroids)
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) =>
-        val cs = bC.value
-        var best = 0; var bestCos = Double.MinValue; var i = 0
-        while (i < cs.length) {
-          val c = cosine(v, cs(i))
-          if (c > bestCos) { bestCos = c; best = i } // first wins: lowest cell on ties
-          i += 1
-        }
-        (id, v, best)
-      }
+      .map { case (id, v) => (id, v, nearestCell(v, bC.value)) }
       .toDF("vec_id", "embedding", "cell")
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("cell").parquet(s"$path/assignments")
+  }
+
+  /** Incremental IVF growth: assign a NEW disjoint batch with the
+    * EXISTING codebook, one commit adding its files to the same cells. */
+  def appendIvfAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
+    val idx = IndexStore.open(spark, path)
+    idx.commit("append", Map(Tables.IvfAssignments -> idx.write(
+      ivfRows(spark, newEmbeddings, readCentroids(spark, idx).map(_._2)), Tables.IvfAssignments)))
   }
 
   private def cosineFD(v: Seq[Float], c: Array[Double]): Double = {
@@ -508,10 +360,10 @@ object Similarity {
     * lowest-`nCells` vectors, i.e. the untrained codebook). Each iteration
     * is ONE broadcast map + groupBy aggregation over the corpus; the
     * driver holds only the k×dims codebook. Empty cells keep their old
-    * centroid. Writes `path/centroids` (float, the codebook schema) and
-    * re-runs the assignment pass — the drop-in-codebook contract of
-    * buildIvfIndex. The q27 oracle keeps the untrained codebook; training
-    * is the recall knob (spec: recall tightens at the same nProbe). */
+    * centroid. Commits the trained centroids (as floats, the codebook
+    * schema) with a fresh assignment pass — a rebuild of the index at
+    * `path`. The q27 oracle keeps the untrained codebook; training is the
+    * recall knob (spec: recall tightens at the same nProbe). */
   def trainIvfCentroids(
       spark: SparkSession,
       embeddings: DataFrame,
@@ -519,10 +371,8 @@ object Similarity {
       nCells: Int = 16,
       iters: Int = 5): Unit = {
     import spark.implicits._
-    var cs: Array[Array[Double]] = embeddings.select("vec_id", "embedding")
-      .orderBy("vec_id").limit(nCells)
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      .map(_._2.map(_.toDouble).toArray)
+    var cs: Array[Array[Double]] =
+      lowestVectors(spark, embeddings, nCells).map(_.map(_.toDouble).toArray)
     val ds = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
     for (_ <- 0 until iters) {
       val bC = spark.sparkContext.broadcast(cs)
@@ -553,12 +403,7 @@ object Similarity {
       sums.foreach { case (cell, mean, _) => next(cell) = mean }
       cs = next
     }
-    spark.createDataset(cs.toIndexedSeq.zipWithIndex
-        .map { case (c, cell) => (cell, c.map(_.toFloat).toSeq) })
-      .toDF("cell", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    buildIvfAssignments(spark, embeddings, path)
-    writeVersion(spark, path)
+    writeIvfIndex(spark, embeddings, path, cs.map(_.map(_.toFloat).toSeq))
   }
 
   // ------------------------------------------------------------------ PQ --
@@ -580,9 +425,9 @@ object Similarity {
   // The codebook is DetHash-free but still deterministic: init = the
   // subvectors of the `nCodes` lowest vec_ids (engine-reproducible, so the
   // q32 DuckDB oracle recomputes identical codes); `trainPqCodebook` runs
-  // per-subspace Lloyd's as the recall knob — same drop-in-codebook
-  // contract as trainIvfCentroids. Composes with IVF: write the codes
-  // table partitionBy(cell) to get IVF-PQ (partition-pruned ADC scans).
+  // per-subspace Lloyd's as the recall knob, a rebuild like
+  // trainIvfCentroids. Composes with IVF: a codes table partitioned by
+  // `cell` is IVF-PQ (partition-pruned ADC scans).
 
   /** L2-normalize to double precision (the zero vector stays zero). */
   def l2normalize(v: Seq[Float]): Array[Double] = {
@@ -627,11 +472,7 @@ object Similarity {
       embeddings: DataFrame,
       m: Int,
       nCodes: Int): Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    val seeds = embeddings.select("vec_id", "embedding")
-      .orderBy("vec_id").limit(nCodes)
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      .map(r => l2normalize(r._2))
+    val seeds = lowestVectors(spark, embeddings, nCodes).map(l2normalize)
     require(seeds.nonEmpty, "no vectors to seed the PQ codebook")
     val dims = seeds.head.length
     require(dims % m == 0, s"dims $dims not divisible by m=$m subspaces")
@@ -639,52 +480,45 @@ object Similarity {
     Array.tabulate(m, seeds.length)((j, c) => seeds(c).slice(j * subDim, (j + 1) * subDim))
   }
 
-  private def writePqCodebook(
-      spark: SparkSession, book: Array[Array[Array[Double]]], path: String): Unit = {
+  private def codebookRows(spark: SparkSession, book: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
     val rows = for (j <- book.indices; c <- book(j).indices)
       yield (j, c, book(j)(c).toSeq)
-    spark.createDataset(rows).toDF("j", "code", "sub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+    spark.createDataset(rows).toDF("j", "code", "sub").coalesce(1)
   }
 
-  private def readPqCodebook(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
+  private def readPqCodebook(spark: SparkSession, idx: IndexStore): Array[Array[Array[Double]]] = {
     import spark.implicits._
-    cachedLoad[Array[Array[Array[Double]]]](spark, s"$path/codebook") {
-    val rows = spark.read.parquet(s"$path/codebook")
-      .as[(Int, Int, Seq[Double])].collect()
-    val m = rows.map(_._1).max + 1
-    val nCodes = rows.map(_._2).max + 1
-    val book = Array.ofDim[Array[Double]](m, nCodes)
-    rows.foreach { case (j, c, sub) => book(j)(c) = sub.toArray }
-    book
+    idx.cached(Tables.Codebook) { df =>
+      val rows = df.as[(Int, Int, Seq[Double])].collect()
+      val m = rows.map(_._1).max + 1
+      val nCodes = rows.map(_._2).max + 1
+      val book = Array.ofDim[Array[Double]](m, nCodes)
+      rows.foreach { case (j, c, sub) => book(j)(c) = sub.toArray }
+      book
     }
   }
 
-  /** Encode pass against an existing `path/codebook` (broadcast map-only;
-    * the codes table is the persisted index the ADC scan reads). */
-  def buildPqCodes(spark: SparkSession, embeddings: DataFrame, path: String): Unit =
-    writePqCodes(spark, embeddings, path, overwrite = true)
-
-  /** Incremental index growth: encode a NEW batch of vectors with the
-    * EXISTING codebook and append its codes — queries see the union on
-    * their next scan, codebook/LUTs unchanged. Batches must carry fresh
-    * vec_ids (the same disjoint-segment contract as the text index's
-    * incremental appends). */
-  def appendPqCodes(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
-    checkVersion(spark, path)
-    writePqCodes(spark, newEmbeddings, path, overwrite = false)
-  }
-
-  private def writePqCodes(
-      spark: SparkSession, embeddings: DataFrame, path: String, overwrite: Boolean): Unit = {
+  /** Encode pass against a codebook (broadcast map-only; the codes table
+    * is the persisted index the ADC scan reads). */
+  private def pqRows(spark: SparkSession, embeddings: DataFrame,
+      book: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    val book = readPqCodebook(spark, path)
     val b = spark.sparkContext.broadcast(book)
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
       .map { case (id, v) => (id, pqEncode(l2normalize(v), b.value).toSeq) }
       .toDF("vec_id", "codes")
-      .write.mode(if (overwrite) "overwrite" else "append").parquet(s"$path/codes")
+  }
+
+  /** Incremental index growth: encode a NEW batch of vectors with the
+    * EXISTING codebook and commit its codes — queries see the union on
+    * their next open, codebook/LUTs unchanged. Batches must carry fresh
+    * vec_ids (the same disjoint-segment contract as the text index's
+    * incremental appends). */
+  def appendPqCodes(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
+    val idx = IndexStore.open(spark, path)
+    idx.commit("append", Map(Tables.PqCodes ->
+      idx.write(pqRows(spark, newEmbeddings, readPqCodebook(spark, idx)), Tables.PqCodes)))
   }
 
   /** One-time PQ index build with the deterministic init codebook. */
@@ -693,16 +527,22 @@ object Similarity {
       embeddings: DataFrame,
       path: String,
       m: Int = 8,
-      nCodes: Int = 16): Unit = {
-    writePqCodebook(spark, pqInitCodebook(spark, embeddings, m, nCodes), path)
-    buildPqCodes(spark, embeddings, path)
-    writeVersion(spark, path)
-  }
+      nCodes: Int = 16): Unit =
+    writePqIndex(spark, embeddings, path, pqInitCodebook(spark, embeddings, m, nCodes))
+
+  /** Build (or retrain) commit of a PQ index over `book`. */
+  private def writePqIndex(spark: SparkSession, embeddings: DataFrame, path: String,
+      book: Array[Array[Array[Double]]]): Unit =
+    IndexStore.build(spark, path, "build_pq") { idx =>
+      Map(Tables.Codebook -> idx.write(codebookRows(spark, book), Tables.Codebook),
+        Tables.PqCodes -> idx.write(pqRows(spark, embeddings, book), Tables.PqCodes))
+    }
 
   /** Per-subspace Lloyd's refinement of the PQ codebook (deterministic
     * init = the untrained codebook). One broadcast map + grouped mean per
     * iteration; the driver holds only the m×nCodes×subDim codebook. Empty
-    * codes keep their old codeword. The q32 oracle keeps the untrained
+    * codes keep their old codeword; commits the trained codebook with a
+    * fresh encode pass (a rebuild). The q32 oracle keeps the untrained
     * codebook; training is the recall knob. */
   def trainPqCodebook(
       spark: SparkSession,
@@ -746,9 +586,7 @@ object Similarity {
       means.foreach { case (j, c, mean) => next(j)(c) = mean.toArray }
       book = next
     }
-    writePqCodebook(spark, book, path)
-    buildPqCodes(spark, embeddings, path)
-    writeVersion(spark, path)
+    writePqIndex(spark, embeddings, path, book)
   }
 
   /** Top-k over a persisted PQ index: ADC scan of the codes table (m
@@ -763,9 +601,24 @@ object Similarity {
       queryId: Long,
       k: Int,
       shortlist: Int = 100): DataFrame = {
+    val idx = IndexStore.open(spark, indexPath)
+    adcTopK(spark, readPqCodebook(spark, idx), idx.read(Tables.PqCodes).filter(col("vec_id") =!= queryId),
+      embeddings, queryVec, k, shortlist)
+  }
+
+  /** ADC scan of `codes` (m element_at lookups into the query's
+    * broadcast-literal LUT, whole-stage codegen) → the `shortlist` ids of
+    * least approximate distance → exact cosine re-rank against
+    * `embeddings`: the tail of the PQ and IVF-PQ probes. */
+  private def adcTopK(
+      spark: SparkSession,
+      book: Array[Array[Array[Double]]],
+      codes: DataFrame,
+      embeddings: DataFrame,
+      queryVec: Seq[Float],
+      k: Int,
+      shortlist: Int): DataFrame = {
     import spark.implicits._
-    checkVersion(spark, indexPath)
-    val book = readPqCodebook(spark, indexPath)
     val m = book.length
     val nCodes = book(0).length
     val qn = l2normalize(queryVec)
@@ -779,8 +632,7 @@ object Similarity {
     val approx = (0 until m).foldLeft(lit(0.0): Column) { (acc, j) =>
       acc + element_at(lutCol, (col("codes").getItem(j) + lit(j * nCodes + 1)).cast("int"))
     }
-    val ids = readLive(spark, indexPath, "codes", "vec_id")
-      .filter(col("vec_id") =!= queryId)
+    val ids = codes
       .select(col("vec_id"), approx.as("adc"))
       .orderBy(col("adc").asc, col("vec_id").asc)
       .limit(shortlist)
@@ -791,6 +643,14 @@ object Similarity {
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
   }
+
+  /** The `nProbe` cells whose centroids are nearest `v` (cosine desc, then
+    * the lower cell). */
+  private def probeCells(centroids: Array[(Int, Seq[Float])], v: Seq[Float], nProbe: Int): Seq[Int] =
+    centroids
+      .map { case (cell, c) => (cell, cosine(v, c)) }
+      .sortBy { case (cell, c) => (-c, cell) }
+      .take(nProbe).map(_._1).toSeq
 
   /** Bulk ANN: top-k for MANY query vectors in ONE ADC scan of the codes
     * table (the searchMany story for similarity search — deduping a batch
@@ -813,8 +673,8 @@ object Similarity {
     // row_number shortlist — ambiguous input, refuse instead of guessing
     require(queries.map(_._1).distinct.size == queries.size,
       "pqTopKManyIndexed: duplicate query ids in the batch")
-    checkVersion(spark, indexPath)
-    val book = readPqCodebook(spark, indexPath)
+    val idx = IndexStore.open(spark, indexPath)
+    val book = readPqCodebook(spark, idx)
     val m = book.length
     val nCodes = book(0).length
     val luts: Array[(Long, Array[Double])] = queries.map { case (qid, v) =>
@@ -827,7 +687,7 @@ object Similarity {
     val bLuts = spark.sparkContext.broadcast(luts)
     val sl = shortlist
     val nc = nCodes
-    val cands = readLive(spark, indexPath, "codes", "vec_id")
+    val cands = idx.read(Tables.PqCodes)
       .select("vec_id", "codes").as[(Long, Seq[Int])]
       .mapPartitions { it =>
         val qs = bLuts.value
@@ -857,26 +717,16 @@ object Similarity {
       .partitionBy(col("query_id")).orderBy(col("adc").asc, col("vec_id").asc)
     val short = cands.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= sl).select("query_id", "vec_id")
-    val qVecs = spark.createDataset(
-        queries.map { case (qid, v) => (qid, v.map(_.toDouble)) })
-      .toDF("query_id", "qvec")
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    embeddings.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cosine"))
-      .withColumn("rn", row_number().over(wK)).filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine")
+    bulkRerank(spark, embeddings.join(broadcast(short), Seq("vec_id")), queries, k)
   }
 
   // -------------------------------------------------------------- IVF-PQ --
 
-  /** IVF-PQ: the two prunings composed. The PQ codes table is written
-    * `partitionBy(cell)` against the deterministic IVF codebook, so a
-    * query ADC-scans only its nProbe cell partitions — at 10^10 vectors
-    * that is (nProbe/nCells) × 80 GB of codes instead of 2.56 TB of fp32.
-    * Same deterministic init codebooks as the parents → q33 is exactly
+  /** IVF-PQ: the two prunings composed. The PQ codes table is partitioned
+    * by `cell` against the deterministic IVF codebook, so a query
+    * ADC-scans only its nProbe cell partitions — at 10^10 vectors that is
+    * (nProbe/nCells) × 80 GB of codes instead of 2.56 TB of fp32. Same
+    * deterministic init codebooks as the parents → q33 is exactly
     * DuckDB-reproducible. */
   def buildIvfPqIndex(
       spark: SparkSession,
@@ -886,32 +736,19 @@ object Similarity {
       m: Int = 8,
       nCodes: Int = 16): Unit = {
     import spark.implicits._
-    val centroids = embeddings.select("vec_id", "embedding")
-      .orderBy("vec_id").limit(nCells)
-      .as[(Long, Seq[Float])].collect()
-      .sortBy(_._1).zipWithIndex
-      .map { case ((_, v), cell) => (cell, v) }
+    val centroids = lowestVectors(spark, embeddings, nCells)
     require(centroids.nonEmpty, "no centroids sampled")
-    spark.createDataset(centroids.toIndexedSeq).toDF("cell", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val book = pqInitCodebook(spark, embeddings, m, nCodes)
-    writePqCodebook(spark, book, path)
-    val bC = spark.sparkContext.broadcast(centroids.map(_._2))
+    val bC = spark.sparkContext.broadcast(centroids)
     val bB = spark.sparkContext.broadcast(book)
-    embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) =>
-        val cs = bC.value
-        var best = 0; var bestCos = Double.MinValue; var i = 0
-        while (i < cs.length) {
-          val c = cosine(v, cs(i))
-          if (c > bestCos) { bestCos = c; best = i } // first wins: lowest cell on ties
-          i += 1
-        }
-        (id, pqEncode(l2normalize(v), bB.value).toSeq, best)
-      }
+    val codes = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
+      .map { case (id, v) => (id, pqEncode(l2normalize(v), bB.value).toSeq, nearestCell(v, bC.value)) }
       .toDF("vec_id", "codes", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    writeVersion(spark, path)
+    IndexStore.build(spark, path, "build_ivfpq") { idx =>
+      Map(Tables.Centroids -> idx.write(centroidRows(spark, centroids), Tables.Centroids),
+        Tables.Codebook -> idx.write(codebookRows(spark, book), Tables.Codebook),
+        Tables.IvfPqCodes -> idx.write(codes, Tables.IvfPqCodes))
+    }
   }
 
   /** Top-k over a persisted IVF-PQ index: rank the driver-side centroid
@@ -927,35 +764,11 @@ object Similarity {
       k: Int,
       nProbe: Int = 4,
       shortlist: Int = 100): DataFrame = {
-    import spark.implicits._
-    checkVersion(spark, indexPath)
-    val centroids = readCentroids(spark, indexPath)
-    val probeCells = centroids
-      .map { case (cell, v) => (cell, cosine(queryVec, v)) }
-      .sortBy { case (cell, c) => (-c, cell) }
-      .take(nProbe).map(_._1).toSeq
-    val book = readPqCodebook(spark, indexPath)
-    val m = book.length
-    val nCodes = book(0).length
-    val qn = l2normalize(queryVec)
-    val subDim = qn.length / m
-    val lut: Seq[Double] =
-      for (j <- 0 until m; c <- 0 until nCodes) yield sqDist(qn, j * subDim, book(j)(c))
-    val lutCol = typedLit(lut)
-    val approx = (0 until m).foldLeft(lit(0.0): Column) { (acc, j) =>
-      acc + element_at(lutCol, (col("codes").getItem(j) + lit(j * nCodes + 1)).cast("int"))
-    }
-    val ids = readLive(spark, indexPath, "codes", "vec_id")
-      .filter(col("cell").isin(probeCells: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), approx.as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select("vec_id").as[Long].collect()
-    val qd = typedLit(queryVec.map(_.toDouble))
-    embeddings.filter(col("vec_id").isin(ids.toSeq: _*))
-      .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    val idx = IndexStore.open(spark, indexPath)
+    val cells = probeCells(readCentroids(spark, idx), queryVec, nProbe)
+    adcTopK(spark, readPqCodebook(spark, idx),
+      idx.read(Tables.IvfPqCodes).filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId),
+      embeddings, queryVec, k, shortlist)
   }
 
   /** Bulk IVF ANN: the `lshTopKManyIndexed` shape over cells — every
@@ -975,30 +788,16 @@ object Similarity {
     require(queries.nonEmpty, "ivfTopKManyIndexed needs at least one query")
     require(queries.map(_._1).distinct.size == queries.size,
       "ivfTopKManyIndexed: duplicate query ids in the batch")
-    checkVersion(spark, indexPath)
-    val centroids = readCentroids(spark, indexPath)
+    val idx = IndexStore.open(spark, indexPath)
+    val centroids = readCentroids(spark, idx)
     val probePairs = queries.flatMap { case (qid, v) =>
-      centroids
-        .map { case (cell, cv) => (cell, cosine(v, cv)) }
-        .sortBy { case (cell, c) => (-c, cell) }
-        .take(nProbe).map { case (cell, _) => (cell, qid) }
+      probeCells(centroids, v, nProbe).map(cell => (cell, qid))
     }
     val allCells = probePairs.map(_._1).distinct
     val pp = spark.createDataset(probePairs).toDF("cell", "query_id")
-    val qVecs = spark.createDataset(
-        queries.map { case (qid, v) => (qid, v.map(_.toDouble)) })
-      .toDF("query_id", "qvec")
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    readLive(spark, indexPath, "assignments", "vec_id")
+    bulkRerank(spark, idx.read(Tables.IvfAssignments)
       .filter(col("cell").isin(allCells: _*))
-      .join(broadcast(pp), Seq("cell"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cosine"))
-      .withColumn("rn", row_number().over(wK)).filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine")
+      .join(broadcast(pp), Seq("cell")), queries, k)
   }
 
   /** Top-k over a persisted IVF index: the query ranks the (tiny, driver-
@@ -1011,16 +810,11 @@ object Similarity {
       queryId: Long,
       k: Int,
       nProbe: Int = 4): DataFrame = {
-    import spark.implicits._
-    checkVersion(spark, indexPath)
-    val centroids = readCentroids(spark, indexPath)
-    val probeCells = centroids
-      .map { case (cell, v) => (cell, cosine(queryVec, v)) }
-      .sortBy { case (cell, c) => (-c, cell) }
-      .take(nProbe).map(_._1).toSeq
+    val idx = IndexStore.open(spark, indexPath)
+    val cells = probeCells(readCentroids(spark, idx), queryVec, nProbe)
     val qd = typedLit(queryVec.map(_.toDouble))
-    readLive(spark, indexPath, "assignments", "vec_id")
-      .filter(col("cell").isin(probeCells: _*) && col("vec_id") =!= queryId)
+    idx.read(Tables.IvfAssignments)
+      .filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId)
       .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)

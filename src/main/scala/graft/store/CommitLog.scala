@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileAlreadyExistsException, Files, Path}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.model.LineageRow
 
@@ -24,14 +25,19 @@ final case class FileEntry(path: String, bytes: Long)
   *  - `nextDocId`: one past the highest docId ever assigned (the docId
   *    watermark) — compaction purges tombstoned ids, which must never be
   *    reused;
-  *  - `tombstones`: rows of the `deleted_docs` table. */
+  *  - `tombstones`: rows of the `deleted_docs` table;
+  *  - `params`: an ops index's build parameters (`graft.ops.IndexStore`),
+  *    empty for a warehouse. A commit without the field reads as empty, so
+  *    every earlier commit opens unchanged. */
 final case class State(
     format: Int,
     docs: Long,
     docLenSum: Long,
     avgDocLen: Double,
     nextDocId: Long,
-    tombstones: Long)
+    tombstones: Long,
+    // the element type, which erasure hides from the JSON reader
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) params: Map[String, Long] = Map.empty)
 
 /** One numbered entry of the log: what a write did (`action`, `batchId`,
   * -1 when the write has none), the files it added and removed per

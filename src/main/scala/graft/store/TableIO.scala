@@ -5,11 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, count, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.build.Tables
 import graft.model.LineageRow
 
@@ -86,10 +86,14 @@ final class ParquetTableIO(spark: SparkSession, warehouse: String) extends Table
     }
   }
 
-  override def readFiles(table: String, files: Seq[FileEntry]): DataFrame =
+  override def readFiles(table: String, files: Seq[FileEntry]): DataFrame = {
+    val declared = Tables.schema(table)
+    val partition = Tables.partitionColumn(table).map(declared(_))
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      new ListedFileIndex(files.map(f => (abs(f.path), f.bytes))),
-      new StructType(), Tables.schema(table), None, new ParquetFileFormat, Map.empty)(spark))
+      new ListedFileIndex(files.map(f => (abs(f.path), f.bytes)), partition),
+      StructType(partition.toSeq), StructType(declared.filterNot(partition.contains)), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
 
   override def write(df: DataFrame, table: String, sortCols: Seq[String],
       observe: Seq[Column]): Written = {
@@ -101,14 +105,11 @@ final class ParquetTableIO(spark: SparkSession, warehouse: String) extends Table
     // observed on top of the written plan, so sampling jobs of a range
     // partitioning below it never run the aggregate
     val obs = Observation()
-    sorted.observe(obs, count(lit(1)).as("rows"), observe: _*).write.parquet(abs(dir))
+    val writer = sorted.observe(obs, count(lit(1)).as("rows"), observe: _*).write
+    Tables.partitionColumn(table).fold(writer)(writer.partitionBy(_)).parquet(abs(dir))
     val observed = obs.get
-    val files = {
-      val st = Files.list(root.resolve(dir))
-      try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => FileEntry(s"$dir/${p.getFileName}", Files.size(p))).toVector.sortBy(_.path)
-      finally st.close()
-    }
+    val files = walk(root.resolve(dir)).filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => FileEntry(root.relativize(p).toString, Files.size(p))).sortBy(_.path)
     Written(files, observed("rows").asInstanceOf[Long], observed)
   }
 
@@ -116,44 +117,70 @@ final class ParquetTableIO(spark: SparkSession, warehouse: String) extends Table
 
   override def vacuum(snap: Snapshot): Unit = {
     val keep = snap.files.values.flatten.map(_.path).toSet ++ snap.retired
-    def referenced(rel: String) = keep.exists(k => k == rel || k.startsWith(rel + "/"))
-    Tables.Data.foreach { t =>
-      val d = root.resolve(t)
-      if (Files.isDirectory(d)) {
-        val st = Files.list(d)
-        val entries = try st.iterator().asScala.toVector finally st.close()
-        entries.foreach { p =>
-          if (!referenced(s"$t/${p.getFileName}") &&
-            Files.getLastModifiedTime(p).toMillis < snap.committedAtMs) deleteTree(p)
-        }
+    (Tables.Data ++ Tables.IndexData).map(root.resolve).filter(Files.isDirectory(_)).foreach { d =>
+      val st = Files.list(d)
+      val entries = try st.iterator().asScala.toVector finally st.close()
+      entries.filter(Files.getLastModifiedTime(_).toMillis < snap.committedAtMs).foreach { p =>
+        val rel = root.relativize(p).toString
+        val held = keep.filter(_.startsWith(rel + "/"))
+        if (held.isEmpty && !keep(rel)) deleteTree(p)
+        else if (held.nonEmpty)
+          // an ops index delete retires single files of a write directory
+          walk(p).filter(f => f.toString.endsWith(".parquet") && !held(root.relativize(f).toString))
+            .foreach { f => Files.delete(f); Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc")) }
       }
     }
-    // the metadata directories of a format-6 warehouse: the log replaces them
-    LegacyWarehouse.MetadataDirs.foreach(d => deleteTree(root.resolve(d)))
+    // the metadata directories of a format-6 warehouse and of a pre-log
+    // ops index: the log replaces them
+    (LegacyWarehouse.MetadataDirs ++ LegacyWarehouse.IndexDirs).foreach(d => deleteTree(root.resolve(d)))
+  }
+
+  private def walk(p: Path): Vector[Path] = {
+    val st = Files.walk(p)
+    try st.iterator().asScala.toVector finally st.close()
   }
 
   private def deleteTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toVector.reverse.foreach(Files.deleteIfExists) finally st.close()
-    }
+    if (Files.exists(p)) walk(p).reverse.foreach(Files.deleteIfExists)
 }
 
 /** The file list of one table version, as the log recorded it: Spark
   * plans the scan from these paths and sizes without listing or touching
-  * the files (as Delta's `TahoeFileIndex` does). */
-private final class ListedFileIndex(files: Seq[(String, Long)]) extends FileIndex {
+  * the files (as Delta's `TahoeFileIndex` does). A partitioned table's
+  * files sit under `<column>=<value>` directories; the value is read from
+  * that path, and a scan's partition filters drop whole partitions here. */
+private final class ListedFileIndex(files: Seq[(String, Long)], partition: Option[StructField])
+    extends FileIndex {
   private val statuses = files.map { case (p, n) =>
     FileStatusWithMetadata(new FileStatus(n, false, 1, 128L << 20, 0L, new HPath(p)))
+  }
+  private val partitions: Seq[PartitionDirectory] = partition match {
+    case None => Seq(PartitionDirectory(InternalRow.empty, statuses))
+    case Some(f) =>
+      statuses.groupBy { s =>
+        val v = s.getPath.getParent.getName.stripPrefix(s"${f.name}=")
+        f.dataType match {
+          case IntegerType => v.toInt
+          case LongType => v.toLong
+          case t => throw new IllegalArgumentException(s"partition column ${f.name}: unsupported type $t")
+        }
+      }.toSeq.sortBy(_._1.toString).map { case (v, ss) => PartitionDirectory(InternalRow(v), ss) }
   }
   override def rootPaths: Seq[HPath] = statuses.map(_.getPath)
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, statuses))
+    (partition, partitionFilters.reduceOption(And)) match {
+      case (Some(f), Some(filter)) =>
+        val keep = Predicate.createInterpreted(filter.transform {
+          case a: AttributeReference if a.name == f.name => BoundReference(0, f.dataType, nullable = true)
+        })
+        partitions.filter(p => keep.eval(p.values))
+      case _ => partitions
+    }
   override def inputFiles: Array[String] = files.map(_._1).toArray
   override def refresh(): Unit = ()
   override def sizeInBytes: Long = files.map(_._2).sum
-  override def partitionSchema: StructType = new StructType()
+  override def partitionSchema: StructType = StructType(partition.toSeq)
 }
 
 /** Format-6 warehouses (no log; a `format` marker, `stats` and `lineage`
@@ -163,6 +190,9 @@ private final class ListedFileIndex(files: Seq[(String, Long)]) extends FileInde
   * with index tables is refused. */
 private object LegacyWarehouse {
   val MetadataDirs = Seq("format", "stats", "lineage", "next_doc_id")
+  /** The directories of an ops index from before the log (index version
+    * 3 and older): such an index is refused, and its rebuild removes them. */
+  val IndexDirs = Seq("version", "meta", "deleted", "stream_ledger", "assignments", "codes", "sigs", "buckets")
   private val MigratableFormat = 6
 
   private def marker(spark: SparkSession, root: Path, name: String): Option[String] = {
@@ -188,7 +218,7 @@ private object LegacyWarehouse {
         else empty.copy(refusal = Some(
           s"warehouse format v$v (unparseable/corrupt = -1) != engine v${Tables.FormatVersion} — " +
             "refusing to read/resume (blocks would misdecode); rebuild with resume=false"))
-      case None if Tables.Data.exists(t => Files.isDirectory(root.resolve(t))) =>
+      case None if (Tables.Data ++ Tables.IndexData ++ IndexDirs).exists(t => Files.isDirectory(root.resolve(t))) =>
         empty.copy(refusal = Some(
           s"unversioned warehouse (no commit log, no format marker) — refusing to read/resume; " +
             "rebuild required"))

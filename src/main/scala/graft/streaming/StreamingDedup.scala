@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.ops.Dedup
+import graft.ops.{Dedup, IndexStore}
 
 /** Structured-Streaming near-dup GATE — the streaming composition of the
   * persisted MinHash index (q38): every micro-batch of documents is
@@ -19,29 +19,23 @@ import graft.ops.Dedup
   * require); the kept document of a near-dup pair is the LOWER id, so an
   * arriving duplicate can never evict an already-ingested document.
   *
-  * Idempotency: a ledger marker under `indexPath/stream_ledger` commits
-  * each batch AFTER its append, so a replayed batch (foreachBatch is
-  * at-least-once) recomputes the same survivors without re-appending.
-  * Ledger keys carry a RUN identity derived from the checkpoint location
-  * (round-4 ADVICE): Structured Streaming batchIds restart at 0 for every
-  * new checkpoint, so a fresh-checkpoint restart against an existing index
-  * must see its early batches as NEW work (append + ledger under the new
-  * run key), never as silent replays of a previous stream's batches.
-  * A crash between append and marker can leave duplicate signature rows;
-  * the replay excludes the batch's own appended copies before the size
-  * gate and the estimate (Dedup.minHashDedupBatch), so survivors stay
-  * exact even then.
+  * Idempotency: a batch's survivor append and its ledger row (a lineage
+  * row of stage `stream_batch/<runId>`, partition = batchId) are ONE
+  * commit of the index's log, so a replayed batch (foreachBatch is
+  * at-least-once) sees the row and recomputes the same survivors without
+  * re-appending, and a crash leaves either both or neither. The run
+  * identity is derived from the checkpoint location (round-4 ADVICE):
+  * Structured Streaming batchIds restart at 0 for every new checkpoint,
+  * so a fresh-checkpoint restart against an existing index must see its
+  * early batches as NEW work, never as silent replays of a previous
+  * stream's batches. A replay also excludes the batch's own appended
+  * copies before the size gate and the estimate
+  * (Dedup.minHashDedupBatch), so its survivors equal the first run's.
   */
 object StreamingDedup {
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def ledgerPath(indexPath: String, runId: String, batchId: Long) = {
-    val prefix = if (runId.isEmpty) "" else s"$runId-"
-    new org.apache.hadoop.fs.Path(s"$indexPath/stream_ledger/batch-$prefix$batchId")
-  }
+  private def ledgerStage(runId: String) =
+    if (runId.isEmpty) "stream_batch" else s"stream_batch/$runId"
 
   /** Stable run identity of a checkpoint location (same checkpoint →
     * same ledger keys across restarts; new checkpoint → fresh keys). */
@@ -66,11 +60,10 @@ object StreamingDedup {
       threshold: Double = 0.5,
       maxBucket: Int = 100000,
       runId: String = ""): DataFrame = {
-    import spark.implicits._
-    val replay = fs(spark, indexPath).exists(ledgerPath(indexPath, runId, batchId))
-    val pairs = Dedup.minHashDedupBatch(spark, indexPath, batch, threshold, maxBucket)
+    val idx = IndexStore.open(spark, indexPath)
+    val (pairs, _) = Dedup.minHashDedupBatchImpl(spark, idx, batch, threshold, maxBucket)
     val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti")
-    if (!replay) commit(spark, indexPath, survivors, runId, batchId)
+    commit(idx, survivors, runId, batchId)
     survivors
   }
 
@@ -86,15 +79,14 @@ object StreamingDedup {
       threshold: Double = 0.5,
       maxBucket: Int = 100000,
       runId: String = "")(use: DataFrame => T): T = {
-    val replay = fs(spark, indexPath).exists(ledgerPath(indexPath, runId, batchId))
-    Dedup.minHashDedupBatchManaged(spark, indexPath, batch, threshold, maxBucket) { pairs =>
-      // cached: the append pass materializes it, the sink re-reads it
-      val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti").cache()
-      try {
-        if (!replay) commit(spark, indexPath, survivors, runId, batchId)
-        use(survivors)
-      } finally { survivors.unpersist(false); () }
-    }
+    val idx = IndexStore.open(spark, indexPath)
+    val (pairs, caches) = Dedup.minHashDedupBatchImpl(spark, idx, batch, threshold, maxBucket)
+    // cached: the append pass materializes it, the sink re-reads it
+    val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti").cache()
+    try {
+      commit(idx, survivors, runId, batchId)
+      use(survivors)
+    } finally { (survivors +: caches).foreach(_.unpersist(false)) }
   }
 
   /** Keep the lower id of every near-dup pair: the LARGER ids lose. The
@@ -109,15 +101,11 @@ object StreamingDedup {
       .distinct()
   }
 
-  private def commit(
-      spark: SparkSession, indexPath: String, survivors: DataFrame,
-      runId: String, batchId: Long): Unit = {
-    Dedup.appendMinHashSigs(spark, survivors, indexPath)
-    val f = fs(spark, indexPath)
-    f.mkdirs(ledgerPath(indexPath, runId, batchId).getParent)
-    f.create(ledgerPath(indexPath, runId, batchId), true).close()
-    ()
-  }
+  /** Append the survivors with the batch's ledger row, unless the index
+    * version the batch was deduplicated against already holds that row. */
+  private def commit(idx: IndexStore, survivors: DataFrame, runId: String, batchId: Long): Unit =
+    if (!idx.snap.committed(ledgerStage(runId), batchId))
+      Dedup.appendMinHash(idx, survivors, Some(ledgerStage(runId) -> batchId))
 
   /** Streaming entry point: `docsStream` rows are (doc_id, text, ...);
     * `sink(survivors, batchId)` receives each batch's deduplicated

@@ -10,7 +10,7 @@ import graft.api.SparkSearchEngine
 import graft.build.{IndexBuilder, Tables}
 import graft.corpus.TranscriptGen
 import graft.model.Turn
-import graft.ops.{Dedup, Pipeline, Similarity, TextOps}
+import graft.ops.{Dedup, IndexStore, Pipeline, Similarity, TextOps}
 import graft.store.ParquetTableIO
 import graft.streaming.StreamingDedup
 
@@ -130,7 +130,7 @@ object Drive {
     lazy val batch: DataFrame = hold(survivors.filter($"doc_id" % 10 === 0))
     lazy val minHashIndex: String = {
       val p = s"$base/minhash_v${Similarity.IndexVersion}"
-      if (!new java.io.File(s"$p/version/_SUCCESS").exists())
+      if (!IndexStore.exists(spark, p))
         timed("minhash index build (90% of survivors)")(
           Dedup.buildMinHashIndex(spark, survivors.filter($"doc_id" % 10 =!= 0), p))
       p
@@ -300,7 +300,7 @@ object Drive {
         threshold = 0.5, maxBucket = MaxBucket, runId = "drive")(_.count()))
       kept += n
       println(f"GATE batch=$i%02d survivors=$n wall=$sec%.1f s")
-      if (i == 24) timed("gate compaction (mid-run)")(Dedup.compactMinHashIndex(c.spark, gate))
+      if (i == 24) timed("gate compaction (mid-run)")(IndexStore.compact(c.spark, gate))
     }
     println(s"GATE total survivors=$kept of ${c.batch.count()}")
   }

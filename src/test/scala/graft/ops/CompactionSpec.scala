@@ -14,13 +14,9 @@ import graft.store.ParquetTableIO
 class CompactionSpec extends AnyFunSuite {
   lazy val spark = graft.EngineSpecFixture.spark
 
-  private def parquetFiles(dir: String): Int = {
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).map(walk).sum
-      else if (f.getName.endsWith(".parquet")) 1
-      else 0
-    walk(new java.io.File(dir))
-  }
+  /** Files of `table` the latest version of the index at `idx` reads. */
+  private def parquetFiles(idx: String, table: String): Int =
+    IndexStore.open(spark, idx).snap.files.getOrElse(table, Nil).size
 
   test("minhash index: compaction is bit-identical and collapses appended small files") {
     import spark.implicits._
@@ -38,20 +34,20 @@ class CompactionSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSeq
     val probeBefore = Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.2)
       .as[(Long, Long, Double)].collect().toSeq
-    val filesBefore = parquetFiles(s"$idx/buckets") + parquetFiles(s"$idx/sigs")
+    val filesBefore = parquetFiles(idx, Tables.MinHashBuckets) + parquetFiles(idx, Tables.MinHashSigs)
 
-    Dedup.compactMinHashIndex(spark, idx)
+    IndexStore.compact(spark, idx)
 
     assert(Dedup.minHashLshIndexed(spark, idx, threshold = 0.2)
       .as[(Long, Long, Double)].collect().toSeq == pairsBefore)
     assert(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.2)
       .as[(Long, Long, Double)].collect().toSeq == probeBefore)
-    val filesAfter = parquetFiles(s"$idx/buckets") + parquetFiles(s"$idx/sigs")
+    val filesAfter = parquetFiles(idx, Tables.MinHashBuckets) + parquetFiles(idx, Tables.MinHashSigs)
     assert(filesAfter < filesBefore,
       s"compaction must shrink the file count: $filesBefore -> $filesAfter")
     // restored clustering: every compacted buckets file covers a disjoint
     // (band, bucket) range — file-level min/max pruning works again
-    val perFile = spark.read.parquet(s"$idx/buckets")
+    val perFile = IndexStore.open(spark, idx).read(Tables.MinHashBuckets)
       .groupBy(input_file_name().as("f"))
       .agg(min(struct($"band", $"bucket")).as("lo"), max(struct($"band", $"bucket")).as("hi"))
       .select($"lo", $"hi").as[((Int, Long), (Int, Long))].collect()
@@ -92,11 +88,11 @@ class CompactionSpec extends AnyFunSuite {
     }
     val before = Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10, probeHamming = 2)
       .as[(Long, Double)].collect().toSeq
-    val fBefore = parquetFiles(s"$lsh/assignments")
-    Similarity.compactIndex(spark, lsh)
+    val fBefore = parquetFiles(lsh, Tables.LshAssignments)
+    IndexStore.compact(spark, lsh)
     assert(Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10, probeHamming = 2)
       .as[(Long, Double)].collect().toSeq == before)
-    assert(parquetFiles(s"$lsh/assignments") < fBefore)
+    assert(parquetFiles(lsh, Tables.LshAssignments) < fBefore)
     // appends still work on the compacted index
     Similarity.appendLshAssignments(spark, spark.createDataset(
         (300L until 320L).map(i => (i, vecs((i % 300).toInt)._2))).toDF("vec_id", "embedding"),
@@ -112,11 +108,11 @@ class CompactionSpec extends AnyFunSuite {
     }
     val pqBefore = Similarity.pqTopKIndexed(spark, pq, emb, q, 0L, 10)
       .as[(Long, Double)].collect().toSeq
-    val pqFilesBefore = parquetFiles(s"$pq/codes")
-    Similarity.compactIndex(spark, pq)
+    val pqFilesBefore = parquetFiles(pq, Tables.PqCodes)
+    IndexStore.compact(spark, pq)
     assert(Similarity.pqTopKIndexed(spark, pq, emb, q, 0L, 10)
       .as[(Long, Double)].collect().toSeq == pqBefore)
-    assert(parquetFiles(s"$pq/codes") < pqFilesBefore)
+    assert(parquetFiles(pq, Tables.PqCodes) < pqFilesBefore)
   }
 
   test("text index: compaction keeps every query bit-identical and re-clusters segments") {

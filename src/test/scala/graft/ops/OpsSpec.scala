@@ -3,10 +3,27 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.build.Tables
+import graft.store.{Commit, ParquetTableIO}
 
 object OpsFixture {
   lazy val spark: SparkSession = graft.EngineSpecFixture.spark
   val sfDir = "/root/testdata/sf0.001"
+}
+
+object OpsSpec {
+  /** Tamper: a commit claiming the index at `path` has layout `version`. */
+  def commitVersion(spark: SparkSession, path: String, version: Int): Unit = {
+    val io = new ParquetTableIO(spark, path)
+    val s0 = io.snapshot()
+    io.commit(s0, Commit(-1L, "tamper", -1L, reset = false, Map.empty, Map.empty,
+      s0.state.copy(format = version), Nil, 0L))
+    ()
+  }
+
+  def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+  }
 }
 
 class OpsSpec extends AnyFunSuite {
@@ -208,7 +225,7 @@ class OpsSpec extends AnyFunSuite {
     Similarity.buildPqIndex(spark, emb, idx, m = 8, nCodes = 16)
     // the persisted index stores m codes per vector, not the raw floats —
     // the 32×-at-dims-64 compression claim is structural
-    val codes = spark.read.parquet(s"$idx/codes")
+    val codes = IndexStore.open(spark, idx).read(Tables.PqCodes)
     assert(codes.columns.toSeq == Seq("vec_id", "codes"))
     val sample = codes.limit(5).as[(Long, Seq[Int])].collect()
     assert(sample.forall(_._2.length == 8))
@@ -244,7 +261,7 @@ class OpsSpec extends AnyFunSuite {
     }
     // the ADC scan must be a partition-pruned read of the codes table
     import org.apache.spark.sql.functions.col
-    val scan = spark.read.parquet(s"$idx/codes")
+    val scan = IndexStore.open(spark, idx).read(Tables.IvfPqCodes)
       .filter(col("cell").isin(0, 1) && col("vec_id") =!= 0L)
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
@@ -319,20 +336,26 @@ class OpsSpec extends AnyFunSuite {
     // healthy index probes fine
     assert(Similarity.pqTopKIndexed(spark, idx, emb, q, 0L, 5).count() == 5)
     // tamper: an older layout version must be refused, not misdecoded
-    Seq(1).toDF("version").coalesce(1)
-      .write.mode("overwrite").parquet(s"$idx/version")
+    OpsSpec.commitVersion(spark, idx, 1)
     intercept[IllegalStateException](
       Similarity.pqTopKIndexed(spark, idx, emb, q, 0L, 5))
     intercept[IllegalStateException](Similarity.appendPqCodes(spark, emb, idx))
-    // unversioned (pre-marker) index: also refused
+    // unversioned (pre-log) index: also refused
     val idx2 = java.nio.file.Files.createTempDirectory("pq_nover").toString
     Similarity.buildPqIndex(spark, emb, idx2)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(s"$idx2/version"))
+    OpsSpec.rm(new java.io.File(s"$idx2/${graft.store.CommitLog.DirName}"))
     intercept[IllegalStateException](
       Similarity.pqTopKIndexed(spark, idx2, emb, q, 0L, 5))
+    // a pre-log index (a `version` table beside its data): refused, and a
+    // rebuild over it removes the old directories
+    val idx3 = java.nio.file.Files.createTempDirectory("pq_prelog").toString
+    Seq(3).toDF("version").coalesce(1).write.parquet(s"$idx3/version")
+    emb.write.parquet(s"$idx3/codes")
+    intercept[IllegalStateException](
+      Similarity.pqTopKIndexed(spark, idx3, emb, q, 0L, 5))
+    Similarity.buildPqIndex(spark, emb, idx3)
+    assert(Similarity.pqTopKIndexed(spark, idx3, emb, q, 0L, 5).count() == 5)
+    assert(Seq("version", "codes").forall(d => !new java.io.File(s"$idx3/$d").exists()))
   }
 
   test("incremental ANN appends: build-half + append-half ≡ build-all (PQ, IVF, LSH)") {
@@ -481,8 +504,7 @@ class OpsSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSeq == oneShot)
 
     // stale/unversioned index refused like the ANN families
-    Seq(1).toDF("version").coalesce(1)
-      .write.mode("overwrite").parquet(s"$idxAll/version")
+    OpsSpec.commitVersion(spark, idxAll, 1)
     intercept[IllegalStateException](Dedup.minHashLshIndexed(spark, idxAll))
     intercept[IllegalStateException](Dedup.appendMinHashSigs(spark, docs, idxAll))
     intercept[IllegalStateException](Dedup.minHashDedupBatch(spark, idxAll, docs))
@@ -515,7 +537,7 @@ class OpsSpec extends AnyFunSuite {
     val delIds = Seq(0L, 2L)
     val idxDel = java.nio.file.Files.createTempDirectory("mh_del").toString
     Dedup.buildMinHashIndex(spark, docs, idxDel)
-    Dedup.deleteFromMinHashIndex(spark, idxDel, delIds)
+    IndexStore.delete(spark, idxDel, delIds)
     val idxSurv = java.nio.file.Files.createTempDirectory("mh_surv").toString
     Dedup.buildMinHashIndex(spark, docs.filter(!$"doc_id".isin(delIds: _*)), idxSurv)
     def pairs(p: String) = Dedup.minHashLshIndexed(spark, p, threshold = 0.5)
@@ -529,10 +551,10 @@ class OpsSpec extends AnyFunSuite {
     def probe(p: String) = Dedup.minHashDedupBatch(spark, p, batch, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSeq
     assert(probe(idxDel) == probe(idxSurv))
-    // physical purge: identical results, tombstones retired, rows gone
-    Dedup.compactMinHashIndex(spark, idxDel)
+    // compaction: identical results, no tombstone table, rows gone
+    IndexStore.compact(spark, idxDel)
     assert(!new java.io.File(s"$idxDel/deleted").exists())
-    assert(spark.read.parquet(s"$idxDel/sigs")
+    assert(IndexStore.open(spark, idxDel).read(Tables.MinHashSigs)
       .filter($"doc_id".isin(delIds: _*)).count() == 0)
     assert(pairs(idxDel) == want)
   }
@@ -550,7 +572,7 @@ class OpsSpec extends AnyFunSuite {
 
     val (lshDel, lshSurv) = (tmp("lsh_del"), tmp("lsh_surv"))
     Similarity.buildLshIndex(spark, emb, lshDel, planesOpt = Some(4))
-    Similarity.deleteFromIndex(spark, lshDel, delIds)
+    IndexStore.delete(spark, lshDel, delIds)
     Similarity.buildLshIndex(spark, surv, lshSurv, planesOpt = Some(4))
     def lshTop(p: String) = Similarity.lshTopKIndexed(spark, p, q, 0L, 15, probeHamming = 2)
       .as[(Long, Double)].collect().toSeq
@@ -559,7 +581,7 @@ class OpsSpec extends AnyFunSuite {
 
     val (ivfDel, ivfSurv) = (tmp("ivf_del"), tmp("ivf_surv"))
     Similarity.buildIvfIndex(spark, emb, ivfDel, nCells = 16)
-    Similarity.deleteFromIndex(spark, ivfDel, delIds)
+    IndexStore.delete(spark, ivfDel, delIds)
     Similarity.buildIvfIndex(spark, surv, ivfSurv, nCells = 16)
     def ivfTop(p: String) = Similarity.ivfTopKIndexed(spark, p, q, 0L, 15, nProbe = 6)
       .as[(Long, Double)].collect().toSeq
@@ -567,7 +589,7 @@ class OpsSpec extends AnyFunSuite {
 
     val (pqDel, pqSurv) = (tmp("pq_del"), tmp("pq_surv"))
     Similarity.buildPqIndex(spark, emb, pqDel, m = 8, nCodes = 16)
-    Similarity.deleteFromIndex(spark, pqDel, delIds)
+    IndexStore.delete(spark, pqDel, delIds)
     Similarity.buildPqIndex(spark, surv, pqSurv, m = 8, nCodes = 16)
     def pqTop(p: String) = Similarity.pqTopKIndexed(spark, p, emb, q, 0L, 15, shortlist = 60)
       .as[(Long, Double)].collect().toSeq
@@ -575,24 +597,24 @@ class OpsSpec extends AnyFunSuite {
 
     val (ipDel, ipSurv) = (tmp("ivfpq_del"), tmp("ivfpq_surv"))
     Similarity.buildIvfPqIndex(spark, emb, ipDel, nCells = 16, m = 8, nCodes = 16)
-    Similarity.deleteFromIndex(spark, ipDel, delIds)
+    IndexStore.delete(spark, ipDel, delIds)
     Similarity.buildIvfPqIndex(spark, surv, ipSurv, nCells = 16, m = 8, nCodes = 16)
     def ipTop(p: String) = Similarity.ivfPqTopKIndexed(spark, p, emb, q, 0L, 15,
       nProbe = 6, shortlist = 60).as[(Long, Double)].collect().toSeq
     assert(ipTop(ipDel) == ipTop(ipSurv))
 
-    // physical purge on both layouts (IVF-PQ: codes; IVF: assignments):
-    // probes identical, tombstones retired, rows gone
+    // compaction on both layouts (IVF-PQ: codes; IVF: assignments):
+    // probes identical, no tombstone table, rows gone
     val before = ipTop(ipDel)
-    Similarity.compactIndex(spark, ipDel)
+    IndexStore.compact(spark, ipDel)
     assert(!new java.io.File(s"$ipDel/deleted").exists())
-    assert(spark.read.parquet(s"$ipDel/codes")
+    assert(IndexStore.open(spark, ipDel).read(Tables.IvfPqCodes)
       .filter($"vec_id".isin(delIds: _*)).count() == 0)
     assert(ipTop(ipDel) == before)
     val ivfBefore = ivfTop(ivfDel)
-    Similarity.compactIndex(spark, ivfDel)
+    IndexStore.compact(spark, ivfDel)
     assert(!new java.io.File(s"$ivfDel/deleted").exists())
-    assert(spark.read.parquet(s"$ivfDel/assignments")
+    assert(IndexStore.open(spark, ivfDel).read(Tables.IvfAssignments)
       .filter($"vec_id".isin(delIds: _*)).count() == 0)
     assert(ivfTop(ivfDel) == ivfBefore)
   }

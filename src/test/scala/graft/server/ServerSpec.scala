@@ -273,16 +273,8 @@ class ServerSpec extends AnyFunSuite {
     val acc = Double.MinPositiveValue
     def search(q: String) = get(s"/search?query=$q&accuracy=$acc", p)
     def serial() = queries.map { q => val r = search(q); assert(r.statusCode() == 200, r.body()); r.body() }
-    // the expected reply of each query: the oracle over the live turns,
-    // keyed by (conv_id, turn_idx) as the reply's titles are
-    def oracleKeys(live: Seq[Turn], q: String) = {
-      val oracle = new graft.oracle.RefOracle(live)
-      val key = oracle.docs.map { case (d, t) => d -> s"${t.conv_id}#${t.turn_idx}" }.toMap
-      oracle.search(java.net.URLDecoder.decode(q, "UTF-8"), acc, 100).map { case (d, sc) => (key(d), sc) }.toSet
-    }
-    def replyKeys(body: String) =
-      "\"title\":\"([^\"]*)\".*?\"score\":([-0-9.eE]+)".r.findAllMatchIn(body)
-        .map(m => (m.group(1), m.group(2).toDouble)).toSet
+    def oracleKeys(live: Seq[Turn], q: String) = oracleHits(live, q, acc).toSet
+    def replyKeys(body: String) = replyHits(body).toSet
     try {
       assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
       spark.createDataset(extra).write.parquet(batch)
@@ -335,6 +327,50 @@ class ServerSpec extends AnyFunSuite {
             s"$name: ${queries(qi)} -> $status ${body.take(200)}")
         }
         before = after
+      }
+    } finally s.stop()
+  }
+
+  /** The expected reply of `q` (URL-encoded): the oracle over `live`,
+    * keyed by (conv_id, turn_idx) as the reply's titles are, in rank order. */
+  private def oracleHits(live: Seq[Turn], q: String, acc: Double): Seq[(String, Double)] = {
+    val oracle = new graft.oracle.RefOracle(live)
+    val key = oracle.docs.map { case (d, t) => d -> s"${t.conv_id}#${t.turn_idx}" }.toMap
+    oracle.search(java.net.URLDecoder.decode(q, "UTF-8"), acc, 100).map { case (d, sc) => (key(d), sc) }
+  }
+
+  /** (title, score) of each hit of a /search reply, in reply order. */
+  private def replyHits(body: String): Seq[(String, Double)] =
+    "\"title\":\"([^\"]*)\".*?\"score\":([-0-9.eE]+)".r.findAllMatchIn(body)
+      .map(m => (m.group(1), m.group(2).toDouble)).toSeq
+
+  test("a crawled turn missing from --input still answers /search, in rank order with empty content") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("srv_absent_").toString
+    val input = s"$dir/turns"
+    val batch = s"$dir/batch"
+    val base = graft.corpus.TranscriptGen.generateLocal(12)
+    val extra = graft.corpus.TranscriptGen.generateLocal(18).filterNot(t => base.exists(_.conv_id == t.conv_id))
+    spark.createDataset(base).write.parquet(input)
+    // crawled, but never delivered to the served input
+    spark.createDataset(extra).write.parquet(batch)
+    val s = new SearchEngineServer(spark, s"$dir/wh", Some(input), port = 0)
+    val p = s.start()
+    try {
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      assert(post("/crawl", s"""{"seedUrls": ["$batch"], "numberOfPages": ${extra.size}}""", p)
+        .statusCode() == 200)
+      val acc = Double.MinPositiveValue
+      val extraKeys = extra.map(t => s"${t.conv_id}#${t.turn_idx}").toSet
+      Seq("whale", "%22blue%20whale%22").foreach { q =>
+        val r = get(s"/search?query=$q&accuracy=$acc", p)
+        assert(r.statusCode() == 200, r.body())
+        val want = oracleHits(base ++ extra, q, acc)
+        assert(want.exists(h => extraKeys(h._1)), s"$q: the crawled batch must rank")
+        // every hit, ranked (ties may order by either side's docIds)
+        val got = replyHits(r.body())
+        assert(got.toSet == want.toSet && got.map(_._2) == want.map(_._2), q)
+        assert(r.body().contains("\"content\":\"\""), "an absent turn has empty content")
       }
     } finally s.stop()
   }

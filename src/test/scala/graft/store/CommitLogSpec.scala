@@ -103,27 +103,40 @@ class CommitLogSpec extends AnyFunSuite {
     assert(new CommitLog(wh).commits().last.action == "first")
   }
 
-  test("write-path job floor: metadata is read from the log, not from Spark jobs") {
-    val wh = base(_ => ())
-    val io = new ParquetTableIO(spark, wh.toString)
-    val sc = spark.sparkContext
-    val group = "commit-log-job-floor"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
+  /** Counts the Spark jobs of one call (this thread's job group only). */
+  private final class JobCount(group: String) {
+    private val sc = spark.sparkContext
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener: SparkListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           jobs.incrementAndGet()
     }
-    def count(call: => Any): Int = {
+    def apply(call: => Any): Int = {
       org.apache.spark.TestBus.drain(sc)
       jobs.set(0)
       call
       org.apache.spark.TestBus.drain(sc)
       jobs.get
     }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job floor")
-    try {
+  }
+
+  private def withJobCount[T](group: String)(body: JobCount => T): T = {
+    val sc = spark.sparkContext
+    val count = new JobCount(group)
+    sc.addSparkListener(count.listener)
+    sc.setJobGroup(group, group)
+    try body(count)
+    finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(count.listener)
+    }
+  }
+
+  test("write-path job floor: metadata is read from the log, not from Spark jobs") {
+    val wh = base(_ => ())
+    val io = new ParquetTableIO(spark, wh.toString)
+    withJobCount("commit-log-job-floor") { count =>
       val b = builder(io)
       val ingest = count(b.buildIncremental(ds(batchTurns), batchId = 1L))
       val delete = count(b.deleteDocs(tombstoneIds, batchId = 0L))
@@ -140,10 +153,53 @@ class CommitLogSpec extends AnyFunSuite {
       assert(ingest == 8, s"ingest jobs $ingest")
       assert(delete == 5, s"delete jobs $delete")
       assert(compact == 9, s"compact jobs $compact")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+  }
+
+  test("search looks its hits up in the raw dictionary: tombstones add no job to a warm search") {
+    val wh = base(b => b.deleteDocs(tombstoneIds, batchId = 0L))
+    val io = new ParquetTableIO(spark, wh.toString)
+    val turns = ds(baseTurns).toDF()
+    def warm(count: JobCount) = {
+      val e = new SparkSearchEngine(spark, io)
+      e.search("whale", turns)
+      (count(e.search("whale", turns)), e.search("whale", turns))
+    }
+    withJobCount("commit-log-search-jobs") { count =>
+      val (tombstoned, hits) = warm(count)
+      builder(io).compact()
+      val (compacted, hitsAfter) = warm(count)
+      info(s"warm search jobs: tombstoned $tombstoned, compacted $compacted")
+      assert(tombstoned == compacted)
+      assert(hits == hitsAfter && hits.nonEmpty)
+      assert(hits.forall(h => !tombstoneIds.contains(h.docId)))
+    }
+  }
+
+  test("log compatibility: a commit written before State.params existed opens to the same snapshot") {
+    val wh = tmp("log_compat_")
+    val dir = Files.createDirectories(wh.resolve(CommitLog.DirName))
+    // exactly the fields FormatVersion 7 wrote before `State.params` existed
+    Files.writeString(dir.resolve(CommitLog.fileName(0L)),
+      "{\"version\":0,\"action\":\"build\",\"batchId\":-1,\"reset\":true," +
+        "\"add\":{\"doc_dict\":[{\"path\":\"doc_dict/w-1/part-0.parquet\",\"bytes\":3488}]}," +
+        "\"remove\":{},\"state\":{\"format\":7,\"docs\":898,\"docLenSum\":70234," +
+        "\"avgDocLen\":78.21158129175947,\"nextDocId\":898,\"tombstones\":0}," +
+        "\"lineage\":[{\"stage\":\"doc_dict\",\"partition_id\":-1,\"status\":\"done\"," +
+        "\"rows\":898,\"wall_ms\":423}],\"timestampMs\":1792384546852}")
+    val state = State(7, 898L, 70234L, 78.21158129175947, 898L, 0L)
+    val want = Snapshot.empty(7).next(Commit(0L, "build", -1L, reset = true,
+      Map("doc_dict" -> Seq(FileEntry("doc_dict/w-1/part-0.parquet", 3488L))), Map.empty, state,
+      Seq(graft.model.LineageRow("doc_dict", -1, "done", 898L, 423L)), 1792384546852L))
+    val got = new CommitLog(wh).latest()
+    assert(got.contains(want))
+    assert(got.get.state.params == Map.empty[String, Long])
+    // and a commit that carries parameters reads them back as Longs
+    val io = new ParquetTableIO(spark, wh.toString)
+    val s1 = io.commit(got.get, Commit(-1L, "params", -1L, reset = false, Map.empty, Map.empty,
+      state.copy(params = Map("planes" -> 3L, "seed" -> (1L << 40))), Nil, 0L))
+    assert(new CommitLog(wh).latest().map(_.state) == Some(s1.state))
+    assert(new CommitLog(wh).latest().get.state.params("seed") == (1L << 40))
   }
 
   test("reads race a compaction: an engine opened before it keeps its whole snapshot") {

@@ -71,12 +71,14 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming dedup gate: batches dedup against the growing index, idempotent per batch") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    import graft.ops.Dedup
+    import graft.build.Tables
+    import graft.ops.{Dedup, IndexStore}
     val idx = java.nio.file.Files.createTempDirectory("stream_mh_").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").filter($"doc_id" < 40)
     Dedup.buildMinHashIndex(spark, docs, idx)
     val texts = docs.as[(Long, String)].collect().toMap
+    def sigRows() = IndexStore.open(spark, idx).read(Tables.MinHashSigs).count()
 
     // batch: one exact dup of a corpus doc, one fresh doc → dup dropped
     val fresh1 = "totally original content about streaming dedup gates number one"
@@ -97,11 +99,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(s2 == Set(2001L), "dup of an appended survivor must be dropped")
 
     // replay of the same batchId: identical survivors, NO double-append
-    val sigCount = spark.read.parquet(s"$idx/sigs").count()
+    val sigCount = sigRows()
     val s2r = StreamingDedup.dedupBatch(spark, idx, b2, 101L)
       .as[(Long, String)].collect().map(_._1).toSet
     assert(s2r == s2)
-    assert(spark.read.parquet(s"$idx/sigs").count() == sigCount,
+    assert(sigRows() == sigCount,
       "replayed batch must not re-append signatures")
 
     // a NEW run (fresh checkpoint → batchIds restart at 0) against the
@@ -111,17 +113,17 @@ class StreamingSpec extends AnyFunSuite {
         (4000L, fresh1), // dup of an indexed survivor: must still be caught
         (4001L, "a brand new document arriving on the second stream run four")))
       .toDF("doc_id", "text")
-    val preRun2 = spark.read.parquet(s"$idx/sigs").count()
+    val preRun2 = sigRows()
     val s3 = StreamingDedup.dedupBatch(spark, idx, b3, 101L, runId = "run2")
       .as[(Long, String)].collect().map(_._1).toSet
     assert(s3 == Set(4001L))
-    assert(spark.read.parquet(s"$idx/sigs").count() == preRun2 + 1,
+    assert(sigRows() == preRun2 + 1,
       "fresh-run batch with a committed old-run batchId must append its survivor")
     // and a replay WITHIN the new run is still idempotent
     val s3r = StreamingDedup.dedupBatch(spark, idx, b3, 101L, runId = "run2")
       .as[(Long, String)].collect().map(_._1).toSet
     assert(s3r == s3)
-    assert(spark.read.parquet(s"$idx/sigs").count() == preRun2 + 1)
+    assert(sigRows() == preRun2 + 1)
 
     // the managed variant: same survivors, no cache growth per batch
     def persisted = spark.sparkContext.getPersistentRDDs.size
@@ -137,7 +139,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // compaction between batches: the gate keeps working on the compacted
     // index — dups of earlier survivors are still caught, fresh docs pass
-    Dedup.compactMinHashIndex(spark, idx)
+    IndexStore.compact(spark, idx)
     val b5 = spark.createDataset(Seq(
         (5000L, texts(2L)), // dup of an original corpus doc
         (5001L, fresh1), // dup of batch 1's survivor (post-compact lookup)
