@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.build.Tables
 import graft.model.LineageRow
 
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.runtime.universe.TypeTag
+import scala.util.DynamicVariable
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -14,8 +15,54 @@ import scala.reflect.runtime.universe.TypeTag
   * (hash / band bucket), i.e. a single shuffle whose reduce-side state per
   * key is tiny; pairwise work only happens inside near-dup buckets
   * (candidate pairs), never across the corpus.
+  *
+  * Size gates: each distributed chain has a driver side for small inputs
+  * (one collect instead of a shuffle cascade). `Gates` holds every
+  * threshold, `probe` makes every choice, and the two sides of a gate
+  * share their kernel, so they return the same rows.
   */
 object Dedup {
+
+  /** The size gates of the dedup family, one table. At or below a gate
+    * the chain collects its probed input once and runs on the driver;
+    * above it runs the distributed side the 10M-doc drives validated.
+    * Each gate names what its probe counts:
+    *  - `driverBandRows`: keyed rows of the LSH pair chain (`keyedPairs`);
+    *    ≤ ~32 bytes each, so ≤ ~6 MB collected;
+    *  - `isinIds`: distinct candidate ids of the signature prune
+    *    (`estimatePairsImpl`): an `isin` pushed into the parquet scan,
+    *    else a broadcast semi-join;
+    *  - `exactPrefilterKeys`: distinct batch (band, bucket) keys of the
+    *    dedup-batch corpus prefilter: an exact broadcast hash set, else
+    *    the Bloom filter;
+    *  - `bruteRows`: rows of the brute-force all-pairs ops
+    *    (`allPairsAtLeast`): a broadcast pair loop, else a self-join;
+    *  - `driverEdgeRows`: symmetric edge rows of the clustering step
+    *    (`dedupClusters`): union-find, else the Pregel loop. */
+  private[graft] final case class Gates(
+      driverBandRows: Int = 200000,
+      isinIds: Int = 10000,
+      exactPrefilterKeys: Int = 500000,
+      bruteRows: Int = 20000,
+      driverEdgeRows: Int = 200000)
+
+  private[graft] object Gates {
+    /** Every chain on its distributed side (for a non-empty input). */
+    val Zero: Gates = Gates(0, 0, 0, 0, 0)
+  }
+
+  /** The gates the calling thread's chains read. Thread-scoped so a test
+    * can move its own calls to the other side of every gate while other
+    * suites run at the defaults. */
+  private[graft] val gates = new DynamicVariable[Gates](Gates())
+
+  /** THE driver-or-executors choice of every gate: the rows of `ds` when
+    * it has at most `gate` of them (the driver side), else None. One
+    * `limit(gate + 1)` collect answers both questions. */
+  private def probe[T](ds: Dataset[T], gate: Int): Option[Array[T]] = {
+    val head = ds.limit(gate + 1).collect()
+    if (head.length <= gate) Some(head) else None
+  }
 
   /** Exact dedup by content hash: keep the smallest doc_id per md5(text).
     * Map-side partial agg → one shuffle of (hash, id) pairs. */
@@ -259,14 +306,6 @@ object Dedup {
     df.join(sizes, keys, "left_semi")
   }
 
-  /** Above this many keyed rows the in-bucket pair search runs on the
-    * executors; at or below it the rows (≤ ~32 bytes each, ≤ ~6 MB) are
-    * collected once and grouped on the driver — one job instead of the
-    * 4-shuffle groupBy/semi-join/collect_list/dropDuplicates cascade.
-    * Same gate philosophy as MaxIsinIds / MaxDriverEdgeRows; a 10M-doc
-    * corpus blows the gate and keeps the skew-capped distributed path. */
-  private val MaxDriverBandRows = 200000
-
   /** What one LSH variant pairs inside a key group of `(id, payload)`
     * members. A group pairs only with 2..`maxBucket` members (the skew
     * cap: a degenerate key is SKIPPED, trading recall on pathological
@@ -323,7 +362,7 @@ object Dedup {
   /** Driver side of the pair chain over collected `(keys…, id, payload)`
     * rows: groups in a HashMap, runs `bucketPairs` per group, drops
     * repeats first-seen when `rule.dedup`. */
-  private[ops] def pairsOnDriver[P](
+  private def pairsOnDriver[P](
       rows: Array[Row], nKeys: Int, rule: PairRule[P]): Seq[(Long, Long, Int)] = {
     val groups = new java.util.HashMap[Seq[Any], ArrayBuffer[(Long, P)]]()
     rows.foreach { r =>
@@ -344,7 +383,7 @@ object Dedup {
     * payload)`: the size filter runs before any group is materialized
     * (`keepMidSizedGroups`), then `bucketPairs` per collected group, then
     * `dropDuplicates` when `rule.dedup`. Columns `(a, b, v)`. */
-  private[ops] def pairsOnExecutors[P: TypeTag](
+  private def pairsOnExecutors[P: TypeTag](
       spark: SparkSession, keyed: DataFrame, keys: Seq[String], rule: PairRule[P]): DataFrame = {
     import spark.implicits._
     val Array(id, payload) = keyed.columns.drop(keys.length)
@@ -357,17 +396,18 @@ object Dedup {
     if (rule.dedup) pairs.dropDuplicates("a", "b") else pairs
   }
 
-  /** The in-bucket pair search of every LSH variant: one
-    * `limit(MaxDriverBandRows + 1)` probe of the keyed frame, then the
-    * driver side at or below the gate, the executor side above it.
-    * Columns `(a, b, v)`, a before b in id order. */
-  private def keyedPairs[P: TypeTag](
+  /** The in-bucket pair search of every LSH variant: the
+    * `driverBandRows` gate over the keyed frame — the driver side at or
+    * below it (one job instead of the 4-shuffle groupBy/semi-join/
+    * collect_list/dropDuplicates cascade), the skew-capped executor side
+    * above it. Columns `(a, b, v)`, a before b in id order. */
+  private[ops] def keyedPairs[P: TypeTag](
       spark: SparkSession, keyed: DataFrame, keys: Seq[String], rule: PairRule[P]): DataFrame = {
     import spark.implicits._
-    val head = keyed.limit(MaxDriverBandRows + 1).collect()
-    if (head.length <= MaxDriverBandRows)
-      pairsOnDriver(head, keys.length, rule).toDF("a", "b", "v")
-    else pairsOnExecutors(spark, keyed, keys, rule)
+    probe(keyed, gates.value.driverBandRows) match {
+      case Some(rows) => pairsOnDriver(rows, keys.length, rule).toDF("a", "b", "v")
+      case None => pairsOnExecutors(spark, keyed, keys, rule)
+    }
   }
 
   /** Candidate pairs from banding rows: every pair sharing a (band,
@@ -386,16 +426,6 @@ object Dedup {
       maxBucket: Int): DataFrame =
     pairsFromBandRows(spark, bandRows(spark, sigs, k, bands), maxBucket)
 
-  /** Above this many distinct candidate ids the signature prune switches
-    * from a collected-id `isin` (parquet row-group pushdown) to a broadcast
-    * semi-join (no driver collect, still never widens the join input). */
-  private val MaxIsinIds = 10000
-
-  /** Above this many distinct batch (band, bucket) keys the dedup-batch
-    * corpus prefilter switches from an exact collected hash set (~12
-    * bytes/key broadcast) to the adaptive Bloom filter. */
-  private val MaxExactPrefilterKeys = 500000
-
   /** est_jaccard = matching signature components / k, per candidate pair;
     * pairs ≪ docs so AQE broadcasts the pair side of both joins.
     *
@@ -403,10 +433,11 @@ object Dedup {
     * (round-4 VERDICT item 2): without it the estimate scanned the FULL
     * sigs table per call — at 10^10 docs ≈ 5 TB of 64-long signatures to
     * estimate a handful of pairs, the dominant avoidable cost of the
-    * batch-dedup path. Small candidate sets collect their ids and push an
-    * `isin` into the parquet scan (row-group min/max pruning); larger ones
-    * semi-join (ids stay ≪ corpus, so AQE broadcasts them). Results are
-    * identical either way — non-candidate signatures never joined anyway.
+    * batch-dedup path. At or below the `isinIds` gate the candidate ids
+    * are collected and pushed as an `isin` into the parquet scan (row-group
+    * min/max pruning); above it they semi-join (ids stay ≪ corpus, so
+    * they are broadcast). Results are identical either way — non-candidate
+    * signatures never joined anyway.
     *
     * Returns the estimate frame plus the candidate cache backing it (the
     * candidate plan is consumed twice: id prune + join); managed callers
@@ -420,14 +451,14 @@ object Dedup {
     val c = cands.cache()
     val ids = c.select($"doc_a".as("doc_id"))
       .union(c.select($"doc_b".as("doc_id"))).distinct()
-    val idArr = ids.limit(MaxIsinIds + 1).as[Long].collect()
-    val pruned =
-      if (idArr.isEmpty) sigs.filter(lit(false))
-      else if (idArr.length <= MaxIsinIds) sigs.filter(col("doc_id").isin(idArr.toIndexedSeq: _*))
+    val pruned = probe(ids.as[Long], gates.value.isinIds) match {
+      case Some(idArr) if idArr.isEmpty => sigs.filter(lit(false))
+      case Some(idArr) => sigs.filter(col("doc_id").isin(idArr.toIndexedSeq: _*))
       // explicit broadcast: a size-estimated sort-merge semi-join would
       // SHUFFLE the corpus-sized sigs table, which is worse than the scan
       // it replaces; the id set is candidate-sized by construction
-      else sigs.join(broadcast(ids), Seq("doc_id"), "left_semi")
+      case None => sigs.join(broadcast(ids), Seq("doc_id"), "left_semi")
+    }
     val est = c
       .join(pruned.toDF("doc_a", "sig_a"), Seq("doc_a"))
       .join(pruned.toDF("doc_b", "sig_b"), Seq("doc_b"))
@@ -594,30 +625,29 @@ object Dedup {
     val (shingleN, k, bands) = minHashParams(idx)
     val newSigs = minHashSigs(spark, newDocs, shingleN, k).cache()
     val newBands = bandRows(spark, newSigs, k, bands).cache()
-    // Corpus-side prefilter on the batch's (band, bucket) keys. Round 6:
-    // when the DISTINCT key set is gate-small (the daily-batch common
-    // case) it is collected exactly and probed as a broadcast hash set —
-    // ONE job (which also populates both caches) instead of the round-5
-    // count + bloom-build pair, and zero false positives. Above the gate
-    // the Bloom filter remains (a 10M-doc batch must not collect 40M
-    // keys). Results are identical either way: neither filter has false
-    // negatives, and false positives only admit corpus rows whose
-    // buckets the `newTouchingPairs` member prune drops.
-    val keyCol = xxhash64(col("band"), col("bucket"))
-    val keyArr = newBands.select($"band", $"bucket").distinct()
-      .limit(MaxExactPrefilterKeys + 1).as[(Int, Long)].collect()
+    // Corpus-side prefilter on the batch's (band, bucket) keys, the
+    // `exactPrefilterKeys` gate: at or below it (the daily-batch common
+    // case) the DISTINCT key set is collected exactly and probed as a
+    // broadcast hash set — ONE job (which also populates both caches) and
+    // zero false positives. Above it the Bloom filter remains (a 10M-doc
+    // batch must not collect 40M keys). Results are identical either way:
+    // neither filter has false negatives, and false positives only admit
+    // corpus rows whose buckets the `newTouchingPairs` member prune drops.
     val mightContainKey: org.apache.spark.sql.Column =
-      if (keyArr.length <= MaxExactPrefilterKeys) {
-        val bSet = spark.sparkContext.broadcast(keyArr.toSet)
-        val f = udf((b: Int, h: Long) => bSet.value.contains((b, h)))
-        f(col("band"), col("bucket"))
-      } else {
-        val nKeys = newBands.count()
-        val bf = newBands.select(keyCol.as("bk"))
-          .stat.bloomFilter("bk", math.max(nKeys, 1L), 0.01)
-        val bBf = spark.sparkContext.broadcast(bf)
-        val mightContain = udf((x: Long) => bBf.value.mightContain(x))
-        mightContain(keyCol)
+      probe(newBands.select($"band", $"bucket").distinct().as[(Int, Long)],
+          gates.value.exactPrefilterKeys) match {
+        case Some(keyArr) =>
+          val bSet = spark.sparkContext.broadcast(keyArr.toSet)
+          val f = udf((b: Int, h: Long) => bSet.value.contains((b, h)))
+          f(col("band"), col("bucket"))
+        case None =>
+          val keyCol = xxhash64(col("band"), col("bucket"))
+          val nKeys = newBands.count()
+          val bf = newBands.select(keyCol.as("bk"))
+            .stat.bloomFilter("bk", math.max(nKeys, 1L), 0.01)
+          val bBf = spark.sparkContext.broadcast(bf)
+          val mightContain = udf((x: Long) => bBf.value.mightContain(x))
+          mightContain(keyCol)
       }
     // Replay robustness (round-4 ADVICE): corpus rows whose doc_id is in
     // the batch are the batch's OWN previously-appended copies (an
@@ -749,34 +779,92 @@ object Dedup {
     if (a.isEmpty && b.isEmpty) 1.0
     else (a intersect b).size.toDouble / (a union b).size.toDouble
 
-  /** |a ∩ b| for SORTED distinct arrays by a single merge walk — the
-    * per-pair kernel of the brute-force jaccard (no per-pair set builds). */
-  private def sortedIntersectionSize(a: Array[String], b: Array[String]): Int = {
-    var i = 0; var j = 0; var n = 0
+  /** Jaccard of SORTED distinct shingle arrays by a single merge walk
+    * (|union| = |a|+|b|−|∩|, no per-pair set builds; two empty sets give
+    * 1.0 like `jaccard`) — the pair kernel of both sides of
+    * `ngramJaccardBrute`. */
+  private def sortedJaccard(a: Array[String], b: Array[String]): Double = {
+    var i = 0; var j = 0; var inter = 0
     while (i < a.length && j < b.length) {
       val c = a(i).compareTo(b(j))
-      if (c == 0) { n += 1; i += 1; j += 1 }
+      if (c == 0) { inter += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1
     }
-    n
+    val union = a.length + b.length - inter
+    if (union == 0) 1.0 else inter.toDouble / union.toDouble
+  }
+
+  /** A vector as the cosine chain reads it: cast to double once, with its
+    * norm (sqrt of the left-folded self dot). */
+  private type Normed = (Array[Double], Double)
+
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc = acc + a(i) * b(i); i += 1 }
+    acc
+  }
+
+  private def normed(v: Seq[Float]): Normed = {
+    val d = v.iterator.map(_.toDouble).toArray
+    (d, math.sqrt(dot(d, d)))
+  }
+
+  /** THE cosine of the embedding dedup, on every side of its gates:
+    * dot / (na * nb), norms computed once per vector. */
+  private def cosine(a: Normed, b: Normed): Double = dot(a._1, b._1) / (a._2 * b._2)
+
+  private def normedVectors(embeddings: DataFrame): Dataset[(Long, Normed)] = {
+    import embeddings.sparkSession.implicits._
+    embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
+      .map { case (id, v) => (id, normed(v)) }
+  }
+
+  /** Every pair a < b of `feats` whose `score` is ≥ `threshold`, as
+    * columns `names` = (a, b, score) ordered by (a, b) — the O(n²) kernel
+    * of the brute-force ops, for bounded inputs only. At or below the
+    * `bruteRows` gate the features are collected once and BROADCAST and
+    * the pair loop runs over `spark.range(n)` with only the verdict rows
+    * materialized; above it a self-join ships both features per pair (the
+    * gate keeps the driver safe if an op is misused). Both sides call the
+    * same `score` and the same filter. */
+  private def allPairsAtLeast[F: TypeTag](
+      feats: Dataset[(Long, F)],
+      score: (F, F) => Double,
+      threshold: Double,
+      names: Seq[String]): DataFrame = {
+    val spark = feats.sparkSession
+    import spark.implicits._
+    val pairs = probe(feats, gates.value.bruteRows) match {
+      case Some(head) =>
+        // sort by id so position pairs (i, j>i) with distinct ids reproduce
+        // exactly the join's a < b pair set (duplicate ids pair each copy
+        // with every strictly-larger id, as the strict join does)
+        val bc = spark.sparkContext.broadcast(head.sortBy(_._1))
+        spark.range(head.length).as[Long].flatMap { i0 =>
+          val arr = bc.value
+          val i = i0.toInt
+          val (a, fa) = arr(i)
+          (i + 1 until arr.length).iterator.flatMap { j =>
+            val (b, fb) = arr(j)
+            if (a == b) Iterator.empty else Iterator.single((a, b, score(fa, fb)))
+          }.filter(_._3 >= threshold)
+        }
+      case None =>
+        feats.toDF("a", "fa").join(feats.toDF("b", "fb"), $"a" < $"b")
+          .as[(Long, F, Long, F)]
+          .map { case (a, fa, b, fb) => (a, b, score(fa, fb)) }
+          .filter(_._3 >= threshold)
+    }
+    pairs.toDF(names: _*).orderBy(col(names(0)), col(names(1)))
   }
 
   /** Exact ALL-PAIRS n-gram Jaccard — the contract/oracle-scale ground
     * truth (O(n²) pairs: use only on bounded inputs; the 100 TB path is
     * ngramJaccardPairs, which prunes candidates with MinHash LSH first).
-    * Shingle arrays are sorted once per doc; each pair is one merge walk
-    * (|union| = |a|+|b|−|∩|), so the inner loop allocates nothing. */
-  /** Row cap for the brute-force all-pairs fast paths: at or below it the
-    * per-doc features (shingle arrays / embeddings) are collected once and
-    * BROADCAST, and the O(n²) pair loop runs over `spark.range(n)` with
-    * nothing but the verdict rows ever materialized — the round-5 shape
-    * shipped BOTH feature arrays through a nested-loop join row per pair
-    * (n²·|features| join bytes for n²·24-byte results). Above the cap the
-    * join shape remains (these ops are documented bounded-input ground
-    * truth; the cap just keeps the driver safe if one is misused). */
-  private val MaxBruteRows = 20000
-
+    * Shingle arrays are sorted once per doc; each pair is one merge walk,
+    * so the inner loop allocates nothing. */
   def ngramJaccardBrute(
       spark: SparkSession,
       docs: DataFrame,
@@ -785,45 +873,7 @@ object Dedup {
     import spark.implicits._
     val sh = docs.select("doc_id", "text").as[(Long, String)]
       .map { case (id, t) => (id, shingles(t, shingleN).toArray.sorted) }
-      .toDF("doc_id", "sh")
-    val head = sh.limit(MaxBruteRows + 1).as[(Long, Array[String])].collect()
-    if (head.length <= MaxBruteRows) {
-      // sort by id so position pairs (i, j>i) with distinct ids reproduce
-      // exactly the join's doc_a < doc_b pair set (duplicate ids pair each
-      // copy with every strictly-larger id, as the strict join did)
-      val sorted = head.sortBy(_._1)
-      val bc = spark.sparkContext.broadcast(sorted)
-      spark.range(sorted.length).as[Long]
-        .flatMap { i0 =>
-          val arr = bc.value
-          val i = i0.toInt
-          val (a, sa) = arr(i)
-          (i + 1 until arr.length).iterator.flatMap { j =>
-            val (b, sb) = arr(j)
-            if (a == b) Iterator.empty
-            else {
-              val inter = sortedIntersectionSize(sa, sb)
-              val union = sa.length + sb.length - inter
-              val jac = if (union == 0) 1.0 else inter.toDouble / union.toDouble
-              if (jac >= threshold) Iterator.single((a, b, jac)) else Iterator.empty
-            }
-          }
-        }
-        .toDF("doc_a", "doc_b", "jaccard")
-        .orderBy($"doc_a", $"doc_b")
-    } else
-      sh.select($"doc_id".as("doc_a"), $"sh".as("sh_a"))
-        .join(sh.select($"doc_id".as("doc_b"), $"sh".as("sh_b")), $"doc_a" < $"doc_b")
-        .as[(Long, Array[String], Long, Array[String])]
-        .map { case (a, sa, b, sb) =>
-          val inter = sortedIntersectionSize(sa, sb)
-          val union = sa.length + sb.length - inter
-          val j = if (union == 0) 1.0 else inter.toDouble / union.toDouble
-          (a, b, j)
-        }
-        .toDF("doc_a", "doc_b", "jaccard")
-        .filter($"jaccard" >= threshold)
-        .orderBy($"doc_a", $"doc_b")
+    allPairsAtLeast(sh, sortedJaccard, threshold, Seq("doc_a", "doc_b", "jaccard"))
   }
 
   /** N-gram-Jaccard near-dup pairs, bucketed by fingerprint-prefix to keep
@@ -853,77 +903,22 @@ object Dedup {
   }
 
   /** Exact ALL-PAIRS embedding-cosine near-dup — contract/oracle-scale
-    * ground truth (O(n²) pairs over broadcast-nested-loop; bounded inputs
-    * only — at corpus scale use embeddingNearDup's hyperplane buckets).
-    * Pure Catalyst (`zip_with`/`aggregate` cosine), whole-stage codegen'd. */
-  def embeddingNearDupExact(embeddings: DataFrame, threshold: Double): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val head = embeddings.select(col("vec_id"), col("embedding"))
-      .limit(MaxBruteRows + 1).as[(Long, Array[Float])].collect()
-    if (head.length <= MaxBruteRows) {
-      // broadcast (id, double-cast vector, norm), pair loop over range —
-      // same gate rationale as ngramJaccardBrute. The arithmetic is the
-      // exact dotCol/norm chain of the expression version: dot is a left
-      // fold in index order, norms once per vector, cosine =
-      // dot / (nrm_a * nrm_b), all in the identical IEEE order.
-      val sorted = head.sortBy(_._1).map { case (id, v) =>
-        val d = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { d(i) = v(i).toDouble; i += 1 }
-        var acc = 0.0
-        i = 0
-        while (i < d.length) { acc = acc + d(i) * d(i); i += 1 }
-        (id, d, math.sqrt(acc))
-      }
-      val bc = spark.sparkContext.broadcast(sorted)
-      spark.range(sorted.length).as[Long]
-        .flatMap { i0 =>
-          val arr = bc.value
-          val i = i0.toInt
-          val (a, da, na) = arr(i)
-          (i + 1 until arr.length).iterator.flatMap { j =>
-            val (b, db, nb) = arr(j)
-            if (a == b) Iterator.empty
-            else {
-              var dot = 0.0
-              var k = 0
-              while (k < da.length) { dot = dot + da(k) * db(k); k += 1 }
-              val cos = dot / (na * nb)
-              if (cos >= threshold) Iterator.single((a, b, cos)) else Iterator.empty
-            }
-          }
-        }
-        .toDF("vec_a", "vec_b", "cosine")
-        .orderBy(col("vec_a"), col("vec_b"))
-    } else {
-      // norms once per vector (not per pair): cosine = dot/(‖a‖·‖b‖) with
-      // identical IEEE values, 3× fewer per-pair flops
-      val withNorm = embeddings.select(col("vec_id"),
-          transform(col("embedding"), _.cast("double")).as("emb"))
-        .select(col("vec_id"), col("emb"),
-          sqrt(Similarity.dotCol(col("emb"), col("emb"))).as("nrm"))
-      val l = withNorm.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"), col("nrm").as("nrm_a"))
-      val r = withNorm.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"), col("nrm").as("nrm_b"))
-      l.join(r, col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"),
-          (Similarity.dotCol(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b"))).as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .orderBy(col("vec_a"), col("vec_b"))
-    }
-  }
+    * ground truth (O(n²) pairs; bounded inputs only — at corpus scale use
+    * embeddingNearDup's hyperplane buckets). Norms once per vector, then
+    * `cosine` per pair on either side of the `bruteRows` gate. */
+  def embeddingNearDupExact(embeddings: DataFrame, threshold: Double): DataFrame =
+    allPairsAtLeast(normedVectors(embeddings), cosine, threshold,
+      Seq("vec_a", "vec_b", "cosine"))
 
   /** Connected components over near-dup pairs — the keeper-selection step
     * of a dedup pipeline (near-dup is transitive only through clustering;
-    * keeping min-id per PAIR over-deletes). Pregel-style min-label
-    * propagation: each iteration is one distributed join+aggregate, and
-    * the loop runs ≤ component-diameter times (near-dup clusters are
-    * shallow; `maxIter` guards pathological chains). The driver loop holds
-    * only a change COUNTER per iteration — never rows. The two sides of
-    * the `MaxDriverEdgeRows` gate fail differently: at or below it,
-    * union-find returns the exact fixpoint for any component diameter;
-    * above it, the loop throws "did not converge" once a diameter exceeds
-    * `maxIter`. Any result either side returns is the same.
+    * keeping min-id per PAIR over-deletes). The symmetric edge list is
+    * checkpointed once; at or below the `driverEdgeRows` gate a driver
+    * union-find clusters it (`clustersOnDriver`), above it the distributed
+    * Pregel loop does (`clustersByPregel`). The two sides fail differently:
+    * union-find returns the exact fixpoint for any component diameter,
+    * the loop throws "did not converge" once a diameter exceeds `maxIter`.
+    * Any result either side returns is the same.
     *
     * @return (doc_id, cluster_id = min doc_id in the component, keep) for
     *         every node in `nodes`; singletons cluster to themselves. */
@@ -948,95 +943,111 @@ object Dedup {
       case _ => df.unpersist(false); ()
     }
 
-  /** Above this many symmetric edge rows the cluster step runs the
-    * distributed Pregel loop; at or below it, a driver union-find over the
-    * already-materialized edge checkpoint (16 bytes/row collected — ≤
-    * ~3 MB) replaces `diameter` join+aggregate jobs with one broadcast
-    * join. Same gate philosophy as `MaxIsinIds`: near-dup EDGES are ≪
-    * corpus by construction, so the common case is tiny even when the
-    * node universe is 10^10 docs — and the node side NEVER leaves the
-    * cluster (only edge-endpoint ids, bounded by the gate, are collected). */
-  private val MaxDriverEdgeRows = 200000L
-
+  /** The clusters and the release of what backs them: the final Pregel
+    * checkpoint above the gate, nothing below it. Callers release through
+    * the returned function, never by unpersisting a frame themselves. */
   private[ops] def dedupClustersImpl(
       spark: SparkSession,
       pairs: DataFrame,
       nodes: DataFrame,
-      maxIter: Int): (DataFrame, DataFrame) = {
+      maxIter: Int): (DataFrame, () => Unit) = {
     import spark.implicits._
     val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // localCheckpoint (not cache) each iteration: iterative self-joins grow
-    // the logical plan linearly and the optimizer cost superlinearly —
-    // truncating lineage per step is the standard iterative-algorithm
-    // pattern (on a real cluster use reliable checkpointing for fault
-    // tolerance; localCheckpoint trades that for speed).
     // The edge list is hash-partitioned+sorted on dst ONCE (explicit
     // numPartitions — AQE would coalesce a bare repartition; CLAUDE.md):
     // LogicalRDD keeps partitioning/ordering metadata through the
-    // checkpoint, so every iteration's join reuses this exchange and only
-    // the (changing) labels side reshuffles.
+    // checkpoint, so every Pregel join reuses this exchange and only the
+    // (changing) labels side reshuffles.
     val sym = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
       .repartition(shuffleN, $"dst")
       .sortWithinPartitions($"dst")
       .localCheckpoint(true)
-    // Round-6 fast path: the edge checkpoint is already materialized, so
-    // its count is free — when it is gate-small, cluster on the driver.
-    // Semantics are EXACTLY the induced-subgraph CC the loop computes:
-    // the loop only ever propagates labels of dst ids that are in
-    // `nodes`, so edges touching out-of-universe ids are inert — the fast
-    // path reproduces that by keeping only edges whose endpoints survive
-    // the nodes semi-join below. min-id-per-component union-find is the
-    // loop's exact fixpoint.
-    val nSymRows = sym.count()
-    if (nSymRows <= MaxDriverEdgeRows) {
-      val rawEdges = sym.as[(Long, Long)].collect()
-      // which edge endpoints are actually in the node universe: one
-      // broadcast semi-join over nodes, collecting ≤ 2·edges ids
-      val endpointIds = rawEdges.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toArray.distinct
-      val present: java.util.HashSet[java.lang.Long] = {
-        val epDf = spark.createDataset(endpointIds.toIndexedSeq).toDF("doc_id")
-        val s = new java.util.HashSet[java.lang.Long](endpointIds.length * 2)
-        nodes.select($"doc_id")
-          .join(broadcast(epDf), Seq("doc_id"), "left_semi")
-          .as[Long].collect().foreach(id => s.add(id))
-        s
-      }
-      // union-find with the min id as the representative
-      val parent = new java.util.HashMap[Long, Long](endpointIds.length * 2)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x
-        while (parent.getOrDefault(c, c) != r) {
-          val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-        }
-        r
-      }
-      rawEdges.foreach { case (a, b) =>
-        if (present.contains(a) && present.contains(b)) {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-      }
-      val lbl = endpointIds.iterator
-        .filter(present.contains(_))
-        .map(id => (id, find(id)))
-        .filter { case (id, r) => id != r } // self-labels are the coalesce default
-        .toSeq
-      val lblDf = spark.createDataset(lbl).toDF("id", "clab")
-      val out = nodes.select($"doc_id".as("id"))
-        .join(broadcast(lblDf), Seq("id"), "left")
-        .select($"id".as("doc_id"),
-          coalesce($"clab", $"id").as("cluster_id"),
-          ($"id" === coalesce($"clab", $"id")).as("keep"))
-        .orderBy($"doc_id")
-      releaseCheckpoint(sym)
-      return (out, out) // nothing checkpoint-backed to release
+    // the checkpoint is materialized, so one task reads its partitions in
+    // turn: a plain limit-collect would scale up over several jobs
+    probe(sym.coalesce(1).as[(Long, Long)], gates.value.driverEdgeRows) match {
+      case Some(edges) =>
+        releaseCheckpoint(sym)
+        (clustersOnDriver(spark, edges, nodes), () => ())
+      case None =>
+        try {
+          val labels = clustersByPregel(spark, sym, nodes, maxIter)
+          (labels.select($"id".as("doc_id"), $"label".as("cluster_id"),
+            ($"id" === $"label").as("keep")).orderBy($"doc_id"),
+            () => releaseCheckpoint(labels))
+        } finally releaseCheckpoint(sym)
     }
+  }
+
+  /** Driver side of the clustering gate: min-id union-find over the
+    * collected edges (16 bytes/row — ≤ ~3 MB), then one broadcast join.
+    * Near-dup EDGES are ≪ corpus by construction, so this is the common
+    * case even when the node universe is 10^10 docs — and the node side
+    * NEVER leaves the cluster (only edge-endpoint ids are collected).
+    * Semantics are EXACTLY the induced-subgraph CC the loop computes: the
+    * loop only ever propagates labels of dst ids that are in `nodes`, so
+    * edges touching out-of-universe ids are inert — reproduced here by
+    * keeping only edges whose endpoints survive the nodes semi-join. */
+  private def clustersOnDriver(
+      spark: SparkSession, edges: Array[(Long, Long)], nodes: DataFrame): DataFrame = {
+    import spark.implicits._
+    // which edge endpoints are actually in the node universe: one
+    // broadcast semi-join over nodes, collecting ≤ 2·edges ids
+    val endpointIds = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+    val present: java.util.HashSet[java.lang.Long] = {
+      val epDf = spark.createDataset(endpointIds.toIndexedSeq).toDF("doc_id")
+      val s = new java.util.HashSet[java.lang.Long](endpointIds.length * 2)
+      nodes.select($"doc_id")
+        .join(broadcast(epDf), Seq("doc_id"), "left_semi")
+        .as[Long].collect().foreach(id => s.add(id))
+      s
+    }
+    val parent = new java.util.HashMap[Long, Long](endpointIds.length * 2)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x
+      while (parent.getOrDefault(c, c) != r) {
+        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      if (present.contains(a) && present.contains(b)) {
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) {
+          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+        }
+      }
+    }
+    val lbl = endpointIds.iterator
+      .filter(present.contains(_))
+      .map(id => (id, find(id)))
+      .filter { case (id, r) => id != r } // self-labels are the coalesce default
+      .toSeq
+    val lblDf = spark.createDataset(lbl).toDF("id", "clab")
+    nodes.select($"doc_id".as("id"))
+      .join(broadcast(lblDf), Seq("id"), "left")
+      .select($"id".as("doc_id"),
+        coalesce($"clab", $"id").as("cluster_id"),
+        ($"id" === coalesce($"clab", $"id")).as("keep"))
+      .orderBy($"doc_id")
+  }
+
+  /** Executor side of the clustering gate: Pregel-style min-label
+    * propagation over the edge checkpoint, one distributed join+aggregate
+    * per iteration, ≤ component-diameter iterations (near-dup clusters are
+    * shallow; `maxIter` guards pathological chains). The driver holds only
+    * a change COUNTER per iteration — never rows. Returns the final
+    * `(id, label)` checkpoint, which the caller releases. */
+  private def clustersByPregel(
+      spark: SparkSession, sym: DataFrame, nodes: DataFrame, maxIter: Int): DataFrame = {
+    import spark.implicits._
+    // localCheckpoint (not cache) each iteration: iterative self-joins grow
+    // the logical plan linearly and the optimizer cost superlinearly —
+    // truncating lineage per step is the standard iterative-algorithm
+    // pattern (on a real cluster use reliable checkpointing for fault
+    // tolerance; localCheckpoint trades that for speed)
     var labels = nodes.select($"doc_id".as("id"), $"doc_id".as("label"))
       .localCheckpoint(true)
     var changed = 1L
@@ -1061,15 +1072,9 @@ object Dedup {
       labels = next
       it += 1
     }
-    releaseCheckpoint(sym)
+    if (changed != 0) releaseCheckpoint(labels)
     require(changed == 0, s"dedupClusters did not converge in $maxIter iterations")
-    // NOTE: the returned frame is backed by the final localCheckpoint —
-    // long-lived sessions should consume it via dedupClustersManaged (which
-    // releases the checkpoint), else one materialized RDD leaks per call.
-    (labels.select($"id".as("doc_id"), $"label".as("cluster_id"),
-      ($"id" === $"label").as("keep"))
-      .orderBy($"doc_id"),
-      labels)
+    labels
   }
 
   /** The last dedup step: keep ONE document per near-dup cluster (the
@@ -1087,15 +1092,15 @@ object Dedup {
   }
 
   /** dedupClusters with deterministic cleanup: runs `use` on the result and
-    * unpersists the final checkpoint afterwards (the result must be fully
+    * releases the final checkpoint afterwards (the result must be fully
     * consumed inside `use` — it is not recomputable once released). */
   def dedupClustersManaged[T](
       spark: SparkSession,
       pairs: DataFrame,
       nodes: DataFrame,
       maxIter: Int = 30)(use: DataFrame => T): T = {
-    val (out, ckpt) = dedupClustersImpl(spark, pairs, nodes, maxIter)
-    try use(out) finally releaseCheckpoint(ckpt)
+    val (out, release) = dedupClustersImpl(spark, pairs, nodes, maxIter)
+    try use(out) finally release()
   }
 
   /** Embedding-cosine near-dup pairs over an LSH-style bucket (random
@@ -1158,33 +1163,15 @@ object Dedup {
     val cands = keyedPairs(spark, bucketed.select($"bucket", $"vec_id", lit(true)),
         Seq("bucket"), everyPair(maxBucket, dedup = false))
       .select($"a".as("vec_a"), $"b".as("vec_b"))
-    // round 6: the cast/norm pass and the per-pair cosine ran as
-    // interpreted transform/aggregate expressions over EVERY embedding row
-    // (twice — once per join side); now one typed pass each with the
-    // identical IEEE chain (cast-to-double, left-fold dot, sqrt;
-    // cosine = dot / (nrm_a * nrm_b))
-    val withNorm = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) =>
-        val d = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { d(i) = v(i).toDouble; i += 1 }
-        var acc = 0.0
-        i = 0
-        while (i < d.length) { acc = acc + d(i) * d(i); i += 1 }
-        (id, d, math.sqrt(acc))
-      }
-      .toDF("vec_id", "emb", "nrm")
+    // one typed pass per side: the vectors are cast and normed once,
+    // then `cosine` per candidate pair
+    val withNorm = normedVectors(embeddings)
     cands
-      .join(withNorm.toDF("vec_a", "emb_a", "nrm_a"), Seq("vec_a"))
-      .join(withNorm.toDF("vec_b", "emb_b", "nrm_b"), Seq("vec_b"))
-      .select($"vec_a", $"vec_b", $"emb_a", $"nrm_a", $"emb_b", $"nrm_b")
-      .as[(Long, Long, Array[Double], Double, Array[Double], Double)]
-      .map { case (a, b, da, na, db, nb) =>
-        var dot = 0.0
-        var i = 0
-        while (i < da.length) { dot = dot + da(i) * db(i); i += 1 }
-        (a, b, dot / (na * nb))
-      }
+      .join(withNorm.toDF("vec_a", "nv_a"), Seq("vec_a"))
+      .join(withNorm.toDF("vec_b", "nv_b"), Seq("vec_b"))
+      .select($"vec_a", $"vec_b", $"nv_a", $"nv_b")
+      .as[(Long, Long, Normed, Normed)]
+      .map { case (a, b, va, vb) => (a, b, cosine(va, vb)) }
       .toDF("vec_a", "vec_b", "cosine")
       .filter($"cosine" >= threshold)
       .orderBy($"vec_a", $"vec_b")

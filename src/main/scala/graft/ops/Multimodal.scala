@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * JDK-only decode round-trips: IMAGE (ImageIO PNG, `imageFeatures`),
   * AUDIO (javax.sound.sampled WAVE, `audioFeatures`), VIDEO (RIFF/AVI
   * container walk + per-frame ImageIO decode, `videoFrameFeatures`).
-  * `decodeStub` remains only as the labeled generic plumbing seam where a
-  * cluster with external codecs (JPEG-XL, H.264, ...) plugs in a decoder
-  * with the same signature; nothing else changes.
+  * A cluster with external codecs (JPEG-XL, H.264, ...) plugs them in
+  * where these decoders sit; the Spark plumbing around them stays.
   */
 object Multimodal {
 
@@ -26,44 +25,10 @@ object Multimodal {
   final case class MediaMeta(media_id: Long, kind: String, width: Int,
       height: Int, n_frames: Int, bytes: Long)
 
-  /** Deterministic fake "media store": derive a binary payload + metadata
-    * from the documents table (text bytes stand in for encoded media). */
-  def synthesize(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id").as("media_id"),
-      when(col("doc_id") % 3 === 0, lit("image"))
-        .when(col("doc_id") % 3 === 1, lit("audio"))
-        .otherwise(lit("video")).as("kind"),
-      encode(col("text"), "UTF-8").cast("binary").as("payload"))
-
-  /** STUB decode: a real implementation would call the image/audio codec
-    * here (e.g. via JNI or a vendored pure-JVM decoder). The stub derives
-    * deterministic pseudo-pixels from the payload so every downstream
-    * stage (feature extraction, resize, frame sampling) is exercised with
-    * stable expected values. Accumulation is INTEGER (byte sums per slot)
-    * so any engine can recompute it exactly (the DuckDB q17 oracle does);
-    * the float feature vector is a single exact division away. */
-  def decodeStubSums(payload: Array[Byte]): Array[Long] = {
-    // ??? <- real codec goes here; deterministic fake below
-    val n = 16
-    val out = new Array[Long](n)
-    var i = 0
-    while (i < payload.length) {
-      out(i % n) += (payload(i) & 0xff).toLong
-      i += 1
-    }
-    out
-  }
-
-  def decodeStub(payload: Array[Byte], kind: String): Array[Float] =
-    decodeStubSums(payload).map(_ / 255.0f)
-
   // ---- REAL kind-dispatched media (round-4 VERDICT item 7) -------------
   //
-  // q17/q18 originally ran the stub decoder while real PNG/WAVE/AVI paths
-  // existed for q23/q29/q30; the unified path below synthesizes ACTUAL
-  // encoded media per kind and extracts features through the REAL codecs.
-  // decodeStub stays only as the labeled plug-in seam for external codecs.
+  // q17/q18 synthesize ACTUAL encoded media per kind and extract features
+  // through the REAL codecs, like q23/q29/q30.
 
   /** Deterministic REAL media store derived from the documents table:
     * image rows carry an encoded PNG, audio rows a WAVE container, video
@@ -227,32 +192,10 @@ object Multimodal {
     (fmt.getSampleRate.toInt, n.toLong, sum, sumAbs)
   }
 
-  /** Feature extraction over media batches: binary → fixed-width feature
-    * vector + metadata. `mapPartitions` so a real decoder can amortize
-    * per-batch setup (model load, codec contexts) exactly like a Pandas
-    * UDF batch would. */
-  def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
-    media.select("media_id", "kind", "payload")
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { batch =>
-        // per-partition decoder setup would happen here
-        batch.map { case (id, kind, payload) =>
-          val sums = decodeStubSums(payload)
-          val feat = sums.map(_ / 255.0f)
-          val norm = math.sqrt(feat.map(x => x.toDouble * x).sum)
-          (id, kind, payload.length.toLong, sums, feat, norm)
-        }
-      }
-      .toDF("media_id", "kind", "n_bytes", "feature_sums", "features", "feature_norm")
-      .orderBy($"media_id")
-  }
-
   // ---- REAL image path (JDK ImageIO — no external codecs needed) -------
 
   /** Deterministic 16×16 RGB PNG derived from the doc text: an actual
-    * encoded image, so the decode below is a REAL codec round-trip, not a
-    * stub (audio/video remain stubbed — their codecs aren't in the JVM). */
+    * encoded image, so the decode below is a REAL codec round-trip. */
   def synthesizeImages(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select("doc_id", "text").as[(Long, String)].mapPartitions { it =>
@@ -355,9 +298,7 @@ object Multimodal {
     * `audioFeatures` below is a REAL codec round-trip like the PNG path
     * (q23). Sample i = (byte(i mod L) − 128)·256 + ((id + i) mod 256) over
     * the UTF-8 bytes of text||id — integer-exact, so an independent engine
-    * recomputes the decoded features from the text alone (the q29 oracle).
-    * With this, video alone remains stubbed (no JVM-native container
-    * parser ships with the JDK). */
+    * recomputes the decoded features from the text alone (the q29 oracle). */
   def synthesizeAudio(docs: DataFrame, nSamples: Int = 256): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select("doc_id", "text").as[(Long, String)].mapPartitions { it =>
@@ -522,22 +463,6 @@ object Multimodal {
         }
       }
       .toDF("media_id", "frame_idx", "width", "height", "mean_r", "mean_g", "mean_b")
-      .orderBy($"media_id", $"frame_idx")
-  }
-
-  /** Frame sampling for video rows: every `stride`-th 4-byte window of the
-    * payload is a "frame"; real decoders substitute frame extraction with
-    * the same (media_id, frame_idx, frame_bytes) output shape. */
-  def sampleFrames(spark: SparkSession, media: DataFrame, stride: Int = 64, maxFrames: Int = 4): DataFrame = {
-    import spark.implicits._
-    media.filter(col("kind") === "video")
-      .select("media_id", "payload").as[(Long, Array[Byte])]
-      .flatMap { case (id, payload) =>
-        (0 until maxFrames).iterator
-          .map(f => (id, f, payload.slice(f * stride, f * stride + 4)))
-          .filter(_._3.nonEmpty)
-      }
-      .toDF("media_id", "frame_idx", "frame_bytes")
       .orderBy($"media_id", $"frame_idx")
   }
 }

@@ -146,7 +146,7 @@ object Pipeline {
       filt.select($"doc_id", $"text"), benchmark, ngramN).select($"doc_id")
     val surv = filt.join(contaminated, Seq("doc_id"), "left_anti").cache()
     val pairs = Dedup.simHashNearDup(spark, surv, maxBits, blocks)
-    val (clusters, ckpt) =
+    val (clusters, releaseClusters) =
       Dedup.dedupClustersImpl(spark, pairs, surv.select($"doc_id"), 30)
     val keepers = Dedup.applyKeepers(spark, surv, clusters)
     val out = keepers
@@ -157,7 +157,7 @@ object Pipeline {
         $"top_bigram_frac", $"cluster_id", $"n_members", $"bucket",
         $"split", $"shard")
       .orderBy($"doc_id")
-    (out, () => { surv.unpersist(false); ckpt.unpersist(false); () })
+    (out, () => { surv.unpersist(false); releaseClusters() })
   }
 
   /** NOTE: the unmanaged frame is backed by the survivor cache and the
@@ -194,7 +194,7 @@ object Pipeline {
       .filter($"n_words" >= minWords && $"stopword_ratio" >= langThreshold)
       .cache() // read by simhash, the CC node universe, and the final join
     val pairs = Dedup.simHashNearDup(spark, surv, maxBits, blocks)
-    val (clusters, ckpt) =
+    val (clusters, releaseClusters) =
       Dedup.dedupClustersImpl(spark, pairs, surv.select($"doc_id"), 30)
     val keepers = Dedup.applyKeepers(spark, surv, clusters)
     val out = keepers
@@ -203,6 +203,6 @@ object Pipeline {
       .select($"doc_id", $"n_words", $"stopword_ratio", $"cluster_id",
         $"n_members", $"bucket", $"split", $"shard")
       .orderBy($"doc_id")
-    (out, () => { surv.unpersist(false); ckpt.unpersist(false); () })
+    (out, () => { surv.unpersist(false); releaseClusters() })
   }
 }

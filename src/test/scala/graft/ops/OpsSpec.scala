@@ -4,11 +4,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.build.Tables
+import graft.ops.GateSides.both
 import graft.store.{Commit, ParquetTableIO}
 
 object OpsFixture {
   lazy val spark: SparkSession = graft.EngineSpecFixture.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** 50 fixture docs plus planted exact dups of docs 0 and 1 (ids 1000,
+    * 1001) and a near-dup of doc 2 (1002, one word changed). */
+  def docsWithDups: DataFrame = {
+    import spark.implicits._
+    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect().take(50)
+    val planted = base ++ Seq(
+      (1000L, base(0)._2),
+      (1001L, base(1)._2),
+      (1002L, base(2)._2.replaceFirst("\\w+", "zzzz")))
+    spark.createDataset(planted.toIndexedSeq).toDF("doc_id", "text")
+  }
 }
 
 object OpsSpec {
@@ -28,17 +42,6 @@ object OpsSpec {
 
 class OpsSpec extends AnyFunSuite {
   import OpsFixture._
-  private def docsWithDups = {
-    import spark.implicits._
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text").as[(Long, String)].collect().take(50)
-    // plant exact dups and a near-dup (one word changed)
-    val planted = base ++ Seq(
-      (1000L, base(0)._2),
-      (1001L, base(1)._2),
-      (1002L, base(2)._2.replaceFirst("\\w+", "zzzz")))
-    spark.createDataset(planted.toIndexedSeq).toDF("doc_id", "text")
-  }
 
   test("exact dedup groups planted duplicates") {
     import spark.implicits._
@@ -50,8 +53,8 @@ class OpsSpec extends AnyFunSuite {
 
   test("minhash LSH finds the planted dups with est_jaccard 1.0") {
     import spark.implicits._
-    val pairs = Dedup.minHashLsh(spark, docsWithDups, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
+    val pairs = both(Dedup.minHashLsh(spark, docsWithDups, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet)
     assert(pairs.exists(p => p._1 == 0 && p._2 == 1000 && p._3 == 1.0))
     assert(pairs.exists(p => p._1 == 1 && p._2 == 1001 && p._3 == 1.0))
     // estimated jaccard of every reported pair is close to the true value
@@ -75,8 +78,8 @@ class OpsSpec extends AnyFunSuite {
   test("simhash near-dup pairs: banded search equals brute force (pigeonhole recall)") {
     import spark.implicits._
     val docs = docsWithDups
-    val got = Dedup.simHashNearDup(spark, docs, maxBits = 3, blocks = 4)
-      .as[(Long, Long, Int)].collect().toSet
+    val got = both(Dedup.simHashNearDup(spark, docs, maxBits = 3, blocks = 4)
+      .as[(Long, Long, Int)].collect().toSet)
     val hashes = docs.as[(Long, String)].collect().map { case (id, t) => (id, Dedup.simHash64(t)) }
     val want = (for {
       (a, ha) <- hashes; (b, hb) <- hashes if a < b
@@ -89,9 +92,10 @@ class OpsSpec extends AnyFunSuite {
   test("dedup clusters: connected components equal a driver union-find") {
     import spark.implicits._
     val docs = docsWithDups
-    val pairs = Dedup.simHashNearDup(spark, docs, maxBits = 3, blocks = 4)
-    val got = Dedup.dedupClustersManaged(spark, pairs, docs)(
-      _.as[(Long, Long, Boolean)].collect()).map(r => r._1 -> r._2).toMap
+    def pairs = Dedup.simHashNearDup(spark, docs, maxBits = 3, blocks = 4)
+    // the driver union-find below the edge gate, the Pregel loop above it
+    val got = both(Dedup.dedupClustersManaged(spark, pairs, docs)(
+      _.as[(Long, Long, Boolean)].collect().toSeq)).map(r => r._1 -> r._2).toMap
     // driver union-find ground truth
     val ids = docs.select("doc_id").as[Long].collect()
     val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
@@ -111,10 +115,10 @@ class OpsSpec extends AnyFunSuite {
   test("applyKeepers: one survivor per cluster, sizes account for every doc") {
     import spark.implicits._
     val docs = docsWithDups
-    val clusters = Dedup.dedupClusters(
+    def clusters = Dedup.dedupClusters(
       spark, Dedup.simHashNearDup(spark, docs, maxBits = 3, blocks = 4), docs)
-    val kept = Dedup.applyKeepers(spark, docs, clusters)
-      .as[(Long, Long, Long)].collect()
+    val kept = both(Dedup.applyKeepers(spark, docs, clusters)
+      .as[(Long, Long, Long)].collect().toSeq.sorted)
     val nClusters = clusters.select("cluster_id").distinct().count()
     assert(kept.length.toLong == nClusters, "exactly one keeper per cluster")
     assert(kept.map(_._3).sum == docs.count(), "cluster sizes sum to the corpus")
@@ -126,8 +130,8 @@ class OpsSpec extends AnyFunSuite {
 
   test("ngram jaccard verifies planted near-dup above threshold") {
     import spark.implicits._
-    val pairs = Dedup.ngramJaccardPairs(spark, docsWithDups, threshold = 0.3)
-      .as[(Long, Long, Double)].collect()
+    val pairs = both(Dedup.ngramJaccardPairs(spark, docsWithDups, threshold = 0.3)
+      .as[(Long, Long, Double)].collect().toSeq)
     assert(pairs.exists(p => p._1 == 0 && p._2 == 1000 && p._3 == 1.0))
     assert(pairs.exists(p => p._1 == 2 && p._2 == 1002 && p._3 >= 0.3 && p._3 < 1.0))
   }
@@ -413,10 +417,10 @@ class OpsSpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val idx = java.nio.file.Files.createTempDirectory("lsh_dedup").toString
     Similarity.buildLshIndex(spark, emb, idx) // same adaptive planes + seed
-    val inline = Dedup.embeddingNearDup(spark, emb, threshold = 0.3)
-      .as[(Long, Long, Double)].collect().toSeq
-    val indexed = Dedup.embeddingNearDupIndexed(spark, idx, threshold = 0.3)
-      .as[(Long, Long, Double)].collect().toSeq
+    val inline = both(Dedup.embeddingNearDup(spark, emb, threshold = 0.3)
+      .as[(Long, Long, Double)].collect().toSeq)
+    val indexed = both(Dedup.embeddingNearDupIndexed(spark, idx, threshold = 0.3)
+      .as[(Long, Long, Double)].collect().toSeq)
     assert(inline == indexed)
     assert(inline.nonEmpty)
   }
@@ -424,8 +428,8 @@ class OpsSpec extends AnyFunSuite {
   test("composed training pipeline ≡ the standalone stages chained by hand") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    val out = Pipeline.trainingCorpus(spark, docs)
-      .as[(Long, Long, Double, Long, Long, Int, String, Int)].collect().toSeq
+    val out = both(Pipeline.trainingCorpus(spark, docs)
+      .as[(Long, Long, Double, Long, Long, Int, String, Int)].collect().toSeq)
     // survivors via the standalone q12/q13 operators
     val nWords = TextOps.qualityScore(docs)
       .select("doc_id", "n_words").as[(Long, Long)].collect().toMap
@@ -452,9 +456,9 @@ class OpsSpec extends AnyFunSuite {
     val all = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     val docs = all.filter($"doc_id" % 50 =!= 7)
     val bench = all.filter($"doc_id" % 50 === 7)
-    val out = Pipeline.hygieneCorpus(spark, docs, bench)
+    val out = both(Pipeline.hygieneCorpus(spark, docs, bench)
       .as[(Long, Long, Double, Double, Double, Long, Long, Int, String, Int)]
-      .collect().toSeq
+      .collect().toSeq)
     // survivors via the standalone q12/q13/q47/q46 operators
     val nWords = TextOps.qualityScore(docs)
       .select("doc_id", "n_words").as[(Long, Long)].collect().toMap
@@ -488,20 +492,20 @@ class OpsSpec extends AnyFunSuite {
   test("minhash index: indexed ≡ one-shot; build-half+append-half ≡ build-all; version guard") {
     import spark.implicits._
     val docs = docsWithDups
-    val oneShot = Dedup.minHashLsh(spark, docs, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    val oneShot = both(Dedup.minHashLsh(spark, docs, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     assert(oneShot.nonEmpty)
+    def indexed(p: String) = both(Dedup.minHashLshIndexed(spark, p, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
 
     val idxAll = java.nio.file.Files.createTempDirectory("mh_all").toString
     Dedup.buildMinHashIndex(spark, docs, idxAll)
-    assert(Dedup.minHashLshIndexed(spark, idxAll, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq == oneShot)
+    assert(indexed(idxAll) == oneShot)
 
     val idxInc = java.nio.file.Files.createTempDirectory("mh_inc").toString
     Dedup.buildMinHashIndex(spark, docs.filter($"doc_id" < 25), idxInc)
     Dedup.appendMinHashSigs(spark, docs.filter($"doc_id" >= 25), idxInc)
-    assert(Dedup.minHashLshIndexed(spark, idxInc, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq == oneShot)
+    assert(indexed(idxInc) == oneShot)
 
     // stale/unversioned index refused like the ANN families
     OpsSpec.commitVersion(spark, idxAll, 1)
@@ -517,8 +521,8 @@ class OpsSpec extends AnyFunSuite {
     val batch = docs.filter($"doc_id" >= 1000)
     val idx = java.nio.file.Files.createTempDirectory("mh_batch").toString
     Dedup.buildMinHashIndex(spark, corpus, idx)
-    val got = Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    val got = both(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     val want = Dedup.minHashLsh(spark, docs, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSeq
       .filter { case (a, b, _) => a >= 1000 || b >= 1000 }
@@ -540,16 +544,16 @@ class OpsSpec extends AnyFunSuite {
     IndexStore.delete(spark, idxDel, delIds)
     val idxSurv = java.nio.file.Files.createTempDirectory("mh_surv").toString
     Dedup.buildMinHashIndex(spark, docs.filter(!$"doc_id".isin(delIds: _*)), idxSurv)
-    def pairs(p: String) = Dedup.minHashLshIndexed(spark, p, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    def pairs(p: String) = both(Dedup.minHashLshIndexed(spark, p, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     val want = pairs(idxSurv)
     assert(pairs(idxDel) == want)
     assert(want.exists { case (a, b, _) => a == 1L && b == 1001L })
     assert(!want.exists { case (a, b, _) => delIds.contains(a) || delIds.contains(b) })
     // the batch probe applies the tombstones to bands AND the estimate
     val batch = docs.filter($"doc_id" >= 1000)
-    def probe(p: String) = Dedup.minHashDedupBatch(spark, p, batch, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    def probe(p: String) = both(Dedup.minHashDedupBatch(spark, p, batch, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     assert(probe(idxDel) == probe(idxSurv))
     // compaction: identical results, no tombstone table, rows gone
     IndexStore.compact(spark, idxDel)
@@ -631,11 +635,11 @@ class OpsSpec extends AnyFunSuite {
     val batch = docs.filter($"doc_id" >= 1000)
     val idx = java.nio.file.Files.createTempDirectory("mh_replay").toString
     Dedup.buildMinHashIndex(spark, corpus, idx)
-    val first = Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    val first = both(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     Dedup.appendMinHashSigs(spark, batch, idx) // the committed append
-    val replay = Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSeq
+    val replay = both(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq)
     assert(replay == first)
     assert(first.nonEmpty)
   }
@@ -700,11 +704,11 @@ class OpsSpec extends AnyFunSuite {
     val df = spark.createDataset((hashes ++ planted).toIndexedSeq).toDF("doc_id", "simhash")
     val maxBucket = 100
     // old shape: blocks=4 → 16-bit keys; every key overflows maxBucket=100
-    val old = Dedup.simHashNearDupBits(spark, df, maxBits = 3, blocks = 4, maxBucket = maxBucket)
-      .as[(Long, Long, Int)].collect()
+    val old = both(Dedup.simHashNearDupBits(spark, df, maxBits = 3, blocks = 4, maxBucket = maxBucket)
+      .as[(Long, Long, Int)].collect().toSeq)
     // Manku keys: blocks=8 → C(8,5)=56 combos of 40-bit keys; recall 1.0
-    val got = Dedup.simHashNearDupBits(spark, df, maxBits = 3, blocks = 8, maxBucket = maxBucket)
-      .as[(Long, Long, Int)].collect().map(r => (r._1, r._2)).toSet
+    val got = both(Dedup.simHashNearDupBits(spark, df, maxBits = 3, blocks = 8, maxBucket = maxBucket)
+      .as[(Long, Long, Int)].collect().toSeq).map(r => (r._1, r._2)).toSet
     val plantedPairs = (0 until 20).map(i => (i.toLong, (n + i).toLong)).toSet
     assert((plantedPairs -- got).isEmpty,
       s"wide-key recall lost pairs: ${(plantedPairs -- got).take(5)}")
@@ -716,17 +720,15 @@ class OpsSpec extends AnyFunSuite {
   test("pair chain: driver and executor sides emit the same pairs for every LSH variant") {
     import spark.implicits._
     val maxBucket = 70
-    // the executor side is called directly, so the fixture crosses the
-    // MaxDriverBandRows gate without a knob; both sides must agree row for
-    // row (sorted), including the dedup of pairs met under several keys
+    // the fixture sits below the driverBandRows gate and Gates.Zero moves
+    // it above; both sides must agree row for row (sorted), including the
+    // dedup of pairs met under several keys
     def bothSides[P: scala.reflect.runtime.universe.TypeTag](
         keyed: DataFrame, keys: Seq[String], rule: Dedup.PairRule[P]): Seq[(Long, Long, Int)] = {
-      val onDriver = Dedup.pairsOnDriver(keyed.collect(), keys.length, rule).sorted
-      val onExecutors = Dedup.pairsOnExecutors(spark, keyed, keys, rule)
-        .as[(Long, Long, Int)].collect().toSeq.sorted
-      assert(onDriver == onExecutors)
-      assert(onDriver.nonEmpty)
-      onDriver
+      val pairs = both(Dedup.keyedPairs(spark, keyed, keys, rule)
+        .as[(Long, Long, Int)].collect().toSeq.sorted)
+      assert(pairs.nonEmpty)
+      pairs
     }
     def ab(ps: Seq[(Long, Long, Int)]) = ps.map(p => (p._1, p._2))
     val big = (0 to maxBucket).map(i => 2000L + i) // one bucket above maxBucket
@@ -806,20 +808,6 @@ class OpsSpec extends AnyFunSuite {
     intercept[java.io.IOException](cache("dir", "s3")(throw new java.io.IOException("transient")))
     assert(cache("dir", "s2")(load("unused")) == "v2" && loads == 2)
     assert(cache("dir", "s3")(load("v3")) == "v3" && cache.size == 1)
-  }
-
-  test("media features: deterministic, exercises all kinds") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(60)
-    val media = Multimodal.synthesize(docs)
-    val f1 = Multimodal.extractFeatures(spark, media).collect()
-    val f2 = Multimodal.extractFeatures(spark, media).collect()
-    assert(f1.toSeq == f2.toSeq)
-    val kinds = f1.map(_.getString(1)).toSet
-    assert(kinds == Set("image", "audio", "video"))
-    assert(f1.forall(_.getDouble(5) > 0)) // feature_norm
-    val frames = Multimodal.sampleFrames(spark, media).collect()
-    assert(frames.nonEmpty)
   }
 
   test("kind-dispatched real media: features + sampled frames recompute from the formulas") {
