@@ -18,8 +18,10 @@ final case class GraftParams(
     exactMatchWeight: Double = 0.6,
     stemBareTerms: Boolean = false,
     topK: Int = 100,
-    /** operand-size ceiling for the driver-side boolean algebra; above it
-      * the engine falls back to the fully distributed algebra */
+    /** driver-route ceiling: the most docs any one operand may match and
+      * the most docs the driver aligns for a query (the union of its
+      * operands' docs); above either the engine falls back to the dense
+      * evaluator, which runs the same kernel per partition */
     driverAlgebraMaxDocs: Int = 2000000,
     /** minimum Σ df of a phrase's queried stems — the docId-shuffle size
       * the head-stem Bloom prefilter could save — for the prefilter to

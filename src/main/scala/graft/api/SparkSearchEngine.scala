@@ -13,22 +13,24 @@ import graft.text.TextPipeline
   *
   * The reference loads the whole index into driver memory and scores dense
   * per-corpus vectors (/root/reference/source/BM25Ranker.cpp:26-30,311-319).
-  * Here a score vector is sparse — the docs its atoms match plus the score
-  * every absent doc implicitly holds (its default) — an exact encoding of
-  * the dense algebra: NOT flips the default to 1−d instead of
-  * materializing 10^12 rows; only the final top-k densifies, and only
-  * when the default can still reach the result set.
+  * Here only the docs a query's atoms match are scored, each by one
+  * per-doc kernel (`DenseEval.Kernel`); every other doc holds the query's
+  * default score — an exact encoding of the dense algebra: NOT flips the
+  * default to 1−d instead of materializing 10^12 rows; only the final
+  * top-k densifies, and only when the default can still reach the result
+  * set.
   *
   * `topKAuto` routes each query along one of three exact paths:
   *  - a single bare term → block-max WAND over the compressed block index
   *    (`termTopKWand`);
   *  - driver-sized operands → one pruned postings scan for the bare-term
-  *    atoms and one phrase fold for the phrase atoms, then the boolean
-  *    algebra as driver arithmetic (`topKDriver`);
-  *  - anything bigger → the dense evaluator: one docId shuffle aligns
-  *    every atom, then per-doc scalar scoring (`topKDense`).
-  * All three score with `Bm25` in the same IEEE operation order and are
-  * bit-identical to `RefOracle` (EngineSpec). The bulk entry points
+  *    atoms and one phrase fold for the phrase atoms, then the kernel
+  *    in-process on the driver (`topKDriver`);
+  *  - anything bigger → one docId shuffle aligns every atom, then the same
+  *    kernel per partition (`topKDense`).
+  * All three score with `Bm25` in the same IEEE operation order, end in
+  * one top-k tail and are bit-identical to `RefOracle` (EngineSpec). The
+  * bulk entry points
   * (`searchManyTerms`, `searchMany`, `searchManyAuto`) share operand
   * fetches across a batch. A call that caches a frame unpersists it
   * before it returns.
@@ -157,85 +159,7 @@ final class SparkSearchEngine(
     }
   }
 
-  /** Driver-side algebra over sparse (map, default) vectors — operand
-    * FETCH is a distributed term-pruned scan + fold (that's where 10^12
-    * docs matter), but once an operand fits on the driver the boolean
-    * algebra is pure arithmetic; paying a Spark stage per min/max would be
-    * all scheduling overhead. Bails out (TooBig) when any operand exceeds
-    * `params.driverAlgebraMaxDocs`, falling back to the dense evaluator.
-    * Identical operation order → bit-identical scores (tested).
-    */
-  final class TooBigForDriver extends RuntimeException
-  type DScores = (scala.collection.Map[Long, Double], Double)
   private type Rows = Array[(Long, Int, Int)] // (docId, tf, doc_len)
-
-  /** Scalar sparse-vector algebra over PREFETCHED operand rows: the
-    * single-query path (`topKDriver`) fetches its query's atoms, the bulk
-    * path (`searchManyAuto`) every atom of the whole batch, both in shared
-    * scans, and hands the rows over from maps. Everything after fetch is
-    * the same code, so the two paths are bit-identical by construction.
-    * Fetchers throw TooBigForDriver when an operand exceeds
-    * `driverAlgebraMaxDocs`. */
-  private final class DriverScalarAlgebra(
-      fetchTermRows: String => Rows, // post-stem key → rows
-      fetchPhraseRows: Vector[String] => Rows)
-    extends ScoreAlgebra[DScores] {
-
-    private val limit = params.driverAlgebraMaxDocs
-
-    private def scoreRows(rows: Rows): DScores = {
-      val idf = Bm25.idf(stats.total_docs.toDouble, rows.length.toDouble)
-      var mx = 0.0
-      val m = new scala.collection.mutable.HashMap[Long, Double]()
-      rows.foreach { case (d, tf, dl) =>
-        val s = idf * Bm25.tfPart(tf.toDouble, dl.toDouble, params.k1, params.b, stats.avg_doc_len)
-        if (s > mx) mx = s
-        m(d) = s
-      }
-      val trueMax = if (m.size >= stats.total_docs) mx else math.max(mx, 0.0)
-      if (trueMax > 0) (m.map { case (d, s) => d -> s / trueMax }, 0.0)
-      else (m, 0.0)
-    }
-
-    override def empty: DScores = (Map.empty[Long, Double], 0.0)
-
-    override def termScore(rawTerm: String): DScores = {
-      val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-      scoreRows(fetchTermRows(key))
-    }
-
-    override def phraseScore(phraseText: String): DScores = {
-      val stems = TextPipeline.tokenizeQuery(phraseText)
-      if (stems.isEmpty) return empty
-      scoreRows(fetchPhraseRows(stems))
-    }
-
-    override def not(a: DScores): DScores =
-      (a._1.map { case (d, s) => d -> (1 - s) }, 1.0 - a._2)
-
-    private def merge(a: DScores, b: DScores, f: (Double, Double) => Double, d: Double): DScores = {
-      val keys = a._1.keySet ++ b._1.keySet
-      if (keys.size > limit) throw new TooBigForDriver
-      (keys.iterator.map { k =>
-        k -> f(a._1.getOrElse(k, a._2), b._1.getOrElse(k, b._2))
-      }.toMap, d)
-    }
-
-    override def and(a: DScores, b: DScores): DScores =
-      merge(a, b, math.min, math.min(a._2, b._2))
-    override def or(a: DScores, b: DScores): DScores =
-      merge(a, b, math.max, math.max(a._2, b._2))
-    override def add(a: DScores, b: DScores, wa: Double, wb: Double): DScores =
-      merge(a, b, (x, y) => wa * x + wb * y, wa * a._2 + wb * b._2)
-
-    override def normalize(a: DScores): DScores = {
-      var mx = 0.0
-      a._1.valuesIterator.foreach(v => if (v > mx) mx = v)
-      val trueMax = if (a._1.size >= stats.total_docs) mx else math.max(mx, a._2)
-      if (trueMax > 0) (a._1.map { case (d, s) => d -> s / trueMax }, a._2 / trueMax)
-      else a
-    }
-  }
 
   /** Rows of every bare-term key in ONE pruned postings scan, gated up
     * front on `liveDf` (the exact row count): keys above
@@ -253,20 +177,20 @@ final class SparkSearchEngine(
     (rows, tooBig)
   }
 
-  /** Rows of every phrase from ONE `phraseFold`; TooBigForDriver when a
-    * phrase matches more than `driverAlgebraMaxDocs` docs. The collect
-    * stops at phrases·max + 1 rows: reaching that quota means some phrase
-    * is over (pigeonhole); below it the per-phrase counts decide exactly. */
-  private def fetchPhrases(phrases: Seq[Vector[String]]): Map[Vector[String], Rows] =
-    if (phrases.isEmpty) Map.empty
+  /** Rows of every phrase from ONE `phraseFold`; None when a phrase
+    * matches more than `driverAlgebraMaxDocs` docs. The collect stops at
+    * phrases·max + 1 rows: reaching that quota means some phrase is over
+    * (pigeonhole); below it the per-phrase counts decide exactly. */
+  private def fetchPhrases(phrases: Seq[Vector[String]]): Option[Map[Vector[String], Rows]] =
+    if (phrases.isEmpty) Some(Map.empty)
     else {
       val ps = phrases.distinct
       val max = params.driverAlgebraMaxDocs
       val quota = math.min(ps.length.toLong * max + 1, Int.MaxValue.toLong).toInt
       val rows = phraseFold(ps).limit(quota).as[(Int, Long, Int, Int)].collect()
       val byPhrase = rows.groupBy(_._1)
-      if (rows.length >= quota || byPhrase.exists(_._2.length > max)) throw new TooBigForDriver
-      byPhrase.map { case (i, rs) => ps(i) -> rs.map(r => (r._2, r._3, r._4)) }
+      if (rows.length >= quota || byPhrase.exists(_._2.length > max)) None
+      else Some(byPhrase.map { case (i, rs) => ps(i) -> rs.map(r => (r._2, r._3, r._4)) })
     }
 
   /** The phrase positional fold, for many phrases at once: ONE shuffle on
@@ -295,50 +219,79 @@ final class SparkSearchEngine(
       .toDF("pidx", "docId", "tf", "doc_len")
   }
 
-  /** The top-k tail over a driver-side sparse vector: accuracy filter,
-    * (score desc, docId asc) order, dense fill with absent docs when the
-    * default can still qualify. */
-  private def driverTopK(
-      m: scala.collection.Map[Long, Double],
+  /** The top-k tail of every route: the accuracy filter, (score desc,
+    * docId asc), then the dense fill — when `default`, the score of every
+    * doc outside the scored support, can still qualify, the k lowest of
+    * those docIds (`absent`) join at `default`. `scored` may already be
+    * cut to its top k in that order: the filter keeps a prefix of it. */
+  private def topKTail(
+      scored: Iterator[(Long, Double)],
       default: Double,
       accuracy: Double,
-      k: Int): Vector[(Long, Double)] = {
-    val sparseTop = m.toVector.filter(_._2 >= accuracy)
+      k: Int,
+      absent: => DataFrame): Vector[(Long, Double)] = {
+    val top = scored.filter(_._2 >= accuracy).toVector
       .sortBy { case (d, s) => (-s, d) }.take(k)
-    val needFill = default >= accuracy &&
-      (sparseTop.length < k || sparseTop.last._2 <= default)
-    if (!needFill) sparseTop
+    val needFill = default >= accuracy && (top.length < k || top.last._2 <= default)
+    if (!needFill) top
     else {
-      val present = m.keySet
-      val absentSrc =
-        if (present.size <= 10000)
-          dict.select($"docId").filter(!$"docId".isin(present.toSeq: _*))
-        else
-          dict.select($"docId").join(
-            spark.createDataset(present.toSeq).toDF("docId"),
-            Seq("docId"), "left_anti")
-      val absent = absentSrc.orderBy($"docId".asc).limit(k)
+      val fill = absent.orderBy($"docId".asc).limit(k)
         .as[Long].collect().toVector.map(d => (d, default))
-      (sparseTop ++ absent).sortBy { case (d, sc) => (-sc, d) }.take(k)
+      (top ++ fill).sortBy { case (d, sc) => (-sc, d) }.take(k)
     }
   }
 
-  /** Driver-algebra top-k; None when an operand is too big for the driver.
-    * The query's operands are fetched together: every bare-term atom in
-    * one postings scan gated on its live df, every phrase atom in one
-    * `phraseFold` (one docId shuffle). */
+  /** Live docIds outside a driver-held `present` set. */
+  private def absentFrom(present: Seq[Long]): DataFrame =
+    if (present.size <= 10000) dict.select($"docId").filter(!$"docId".isin(present: _*))
+    else dict.select($"docId").join(spark.createDataset(present).toDF("docId"), Seq("docId"), "left_anti")
+
+  private def kernel(root: DenseEval.QNode, nAtoms: Int): DenseEval.Kernel =
+    new DenseEval.Kernel(root, nAtoms, stats.total_docs, params.k1, params.b, stats.avg_doc_len)
+
+  /** The driver route over prefetched rows (`rowsOf` an atom): the rows
+    * aligned per doc in-process and the kernel run there, no Spark job;
+    * None when the aligned union holds more than `driverAlgebraMaxDocs`
+    * docs — the reference's algebra unions its operands' docs at every
+    * operator, so that union is the largest set it would hold. */
+  private def driverTopK(
+      root: DenseEval.QNode,
+      atoms: IndexedSeq[DenseEval.Atom],
+      rowsOf: DenseEval.Atom => Rows,
+      accuracy: Double,
+      k: Int): Option[Vector[(Long, Double)]] = {
+    import scala.collection.mutable
+    val byDoc = mutable.HashMap.empty[Long, mutable.ArrayBuffer[(Int, Int, Int)]]
+    for ((atom, i) <- atoms.zipWithIndex; (d, tf, dl) <- rowsOf(atom))
+      byDoc.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += ((i, tf, dl))
+    if (byDoc.size > params.driverAlgebraMaxDocs) None
+    else {
+      val docs = byDoc.iterator.map { case (d, rows) => (d, rows.toArray) }.toArray
+      val resolved = kernel(root, atoms.length).resolve(pass => Seq(pass(docs.iterator)))
+      Some(topKTail(resolved.scores(docs.iterator), resolved.default, accuracy, k,
+        absentFrom(docs.map(_._1).toSeq)))
+    }
+  }
+
+  /** An atom's prefetched rows; an atom absent from its map matched no doc. */
+  private def rowsOf(terms: Map[String, Rows], phrases: Map[Vector[String], Rows])(
+      atom: DenseEval.Atom): Rows =
+    atom.fold(terms.get, phrases.get).getOrElse(Array.empty)
+
+  /** Driver-route top-k; None when an operand, or the docs the operands
+    * match together, exceed `driverAlgebraMaxDocs`. The query's operands
+    * are fetched together: every bare-term atom in one postings scan gated
+    * on its live df, every phrase atom in one `phraseFold` (one docId
+    * shuffle); the kernel then runs in-process. */
   def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] = {
     val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
-    QueryEvaluator.evaluate(query, ast, params)
-    try {
-      val (termRows, bigTerms) = fetchTerms(ast.atomList.collect { case Left(t) => t })
-      if (bigTerms.nonEmpty) throw new TooBigForDriver
-      val phraseRows = fetchPhrases(ast.atomList.collect { case Right(st) => st })
-      val alg = new DriverScalarAlgebra(
-        termRows.getOrElse(_, Array.empty), phraseRows.getOrElse(_, Array.empty))
-      val (m, default) = QueryEvaluator.evaluate(query, alg, params)
-      Some(driverTopK(m, default, accuracy, k))
-    } catch { case _: TooBigForDriver => None }
+    val root = QueryEvaluator.evaluate(query, ast, params)
+    val atoms = ast.atomList
+    val (termRows, bigTerms) = fetchTerms(atoms.collect { case Left(t) => t })
+    if (bigTerms.nonEmpty) None
+    else fetchPhrases(atoms.collect { case Right(st) => st }).flatMap { phraseRows =>
+      driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k)
+    }
   }
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
@@ -352,23 +305,20 @@ final class SparkSearchEngine(
     *      shuffle that aligns every atom's (tf, doc_len) per doc — every
     *      phrase's positional fold runs inside that same grouping (its own
     *      grouping, not `phraseFold`: term and phrase rows share it);
-    *   2. one no-shuffle aggregate pass over the cached aligned frame per
-    *      normalization node (the data-dependent max constants, resolved
-    *      bottom-up — stackCombine contributes one per stack + one final);
-    *   3. one no-shuffle map computing the final per-doc score with the
-    *      SAME scalar arithmetic as `DriverScalarAlgebra` (DenseEval
-    *      replicates its IEEE operation order exactly), then the top-k.
+    *   2. the `DenseEval` kernel's constant passes, each one no-shuffle
+    *      `mapPartitions` over the cached aligned frame (per-atom df and
+    *      max, then each normalization node bottom-up — stackCombine
+    *      contributes one per stack + one final);
+    *   3. the kernel's final per-doc score in one no-shuffle map, then the
+    *      top-k (TakeOrderedAndProject) and the shared tail.
     * The aligned frame is cached for those passes and unpersisted before
-    * returning. Results are bit-identical to the driver algebra, WAND and
-    * `RefOracle` (EngineSpec). */
+    * returning. The kernel is the one `topKDriver` runs in-process, so the
+    * two routes agree bit for bit; both equal WAND and `RefOracle`
+    * (EngineSpec). */
   def topKDense(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] = {
-    import graft.query.DenseEval
-    import graft.query.DenseEval._
     val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
     val root = QueryEvaluator.evaluate(query, ast, params)
     val atoms = ast.atomList
-    val nAtoms = atoms.length
-    val norms = DenseEval.normNodes(root)
     val termAtoms = atoms.zipWithIndex.collect { case (Left(t), i) => (t, i) }
     val phraseAtoms = atoms.zipWithIndex.collect { case (Right(st), i) => (st, i) }
 
@@ -419,98 +369,17 @@ final class SparkSearchEngine(
       }
       .cache()
     try {
-      // ---- 2a. per-atom constants: df + max tf-part in one pass --------
-      val k1L = params.k1; val bL = params.b; val avgdlL = stats.avg_doc_len
-      val nDocs = stats.total_docs
-      val aggParts = aligned.mapPartitions { it =>
-        val cnt = new Array[Long](nAtoms)
-        val mx = new Array[Double](nAtoms)
-        it.foreach { case (_, entries) =>
-          entries.foreach { case (a, tf, dl) =>
-            cnt(a) += 1
-            val tp = Bm25.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
-            if (tp > mx(a)) mx(a) = tp
-          }
-        }
-        Iterator.single((cnt, mx))
-      }.collect()
-      val dfA = new Array[Long](nAtoms)
-      val mxTf = new Array[Double](nAtoms)
-      aggParts.foreach { case (c, m) =>
-        var i = 0
-        while (i < nAtoms) {
-          dfA(i) += c(i); if (m(i) > mxTf(i)) mxTf(i) = m(i); i += 1
-        }
-      }
-      // idf exactly as DriverScalarAlgebra.scoreRows; the atom's max
-      // score is idf · maxTfPart — bitwise the driver's max-of-per-row-
-      // scores loop (x → fl(idf·x) is monotone for idf > 0, attained at
-      // the argmax)
-      val idf = Array.tabulate(nAtoms)(i => Bm25.idf(nDocs.toDouble, dfA(i).toDouble))
-      val atomMax = Array.tabulate(nAtoms) { i =>
-        val mxS = if (dfA(i) == 0) 0.0 else idf(i) * mxTf(i)
-        if (dfA(i) >= nDocs) mxS else math.max(mxS, 0.0)
-      }
-      // per-doc normalized atom scores — the scoreRows arithmetic
-      val docArrays: Array[(Int, Int, Int)] => (Array[Double], Array[Boolean]) =
-        entries => {
-          val vals = new Array[Double](nAtoms)
-          val pres = new Array[Boolean](nAtoms)
-          entries.foreach { case (a, tf, dl) =>
-            val s = idf(a) * Bm25.tfPart(tf.toDouble, dl.toDouble, k1L, bL, avgdlL)
-            vals(a) = if (atomMax(a) > 0) s / atomMax(a) else s
-            pres(a) = true
-          }
-          (vals, pres)
-        }
-
-      // ---- 2b. normalization constants, bottom-up, one pass each -------
-      val normMax = new Array[Double](norms.length)
-      norms.foreach { nn =>
-        val sub = nn.a
-        val subAtoms = DenseEval.atomsOf(sub)
-        val resolved = normMax.clone() // ids < nn.id are final
-        val parts = aligned.mapPartitions { it =>
-          var cnt = 0L
-          var mx = 0.0
-          it.foreach { case (_, entries) =>
-            val (vals, pres) = docArrays(entries)
-            if (subAtoms.exists(pres)) {
-              val v = DenseEval.evalDoc(sub, vals, pres, resolved)
-              cnt += 1
-              if (v > mx) mx = v
-            }
-          }
-          Iterator.single((cnt, mx))
-        }.collect()
-        val cnt = parts.map(_._1).sum
-        var mx = 0.0
-        parts.foreach(p => if (p._2 > mx) mx = p._2)
-        normMax(nn.id) =
-          if (cnt >= nDocs) mx
-          else math.max(mx, DenseEval.defaultOf(sub, resolved))
-      }
-
-      // ---- 3. final scores + top-k (+ dense fill, as driverTopK) -------
-      val rootDefault = DenseEval.defaultOf(root, normMax)
-      val sparseTop = aligned.flatMap { case (d, entries) =>
-          val (vals, pres) = docArrays(entries)
-          val v = DenseEval.evalDoc(root, vals, pres, normMax)
-          if (v >= accuracy) Iterator.single((d, v)) else Iterator.empty
-        }
+      // ---- 2. the kernel's constant passes, one job each ---------------
+      val resolved = kernel(root, atoms.length).resolve(pass =>
+        aligned.mapPartitions(it => Iterator.single(pass(it))).collect().toSeq)
+      // ---- 3. final scores + top-k + the shared tail --------------------
+      val top = aligned.mapPartitions(resolved.scores)
         .toDF("docId", "score")
         .orderBy($"score".desc, $"docId".asc).limit(k)
-        .as[(Long, Double)].collect().toVector
-      val needFill = rootDefault >= accuracy &&
-        (sparseTop.length < k || sparseTop.last._2 <= rootDefault)
-      if (!needFill) sparseTop
-      else {
-        val absent = dict.select($"docId")
-          .join(aligned.toDF("docId", "entries").select($"docId"), Seq("docId"), "left_anti")
-          .orderBy($"docId".asc).limit(k)
-          .as[Long].collect().toVector.map(d => (d, rootDefault))
-        (sparseTop ++ absent).sortBy { case (d, sc) => (-sc, d) }.take(k)
-      }
+        .as[(Long, Double)].collect()
+      topKTail(top.iterator, resolved.default, accuracy, k,
+        dict.select($"docId")
+          .join(aligned.toDF("docId", "entries").select($"docId"), Seq("docId"), "left_anti"))
     } finally { aligned.unpersist(false); () }
   }
 
@@ -539,10 +408,10 @@ final class SparkSearchEngine(
     // must be applied here too for bit-identity with the algebra path;
     // absent docs hold 0 (the driver tail's dense zero-fill)
     val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
-    driverTopK(raw.map { case (d, s) =>
+    topKTail(raw.iterator.map { case (d, s) =>
       val n = if (mx > 0) s / mx else s
       d -> (tfw * n + emw * n)
-    }.toMap, 0.0, accuracy, k)
+    }, 0.0, accuracy, k, absentFrom(raw.map(_._1)))
   }
 
   /** Single bare term (no quotes, no operators) → WAND-routable. */
@@ -554,7 +423,7 @@ final class SparkSearchEngine(
 
   /** Route a query along the cheapest exact path: single bare term → WAND
     * over the block index; driver-sized operands → distributed fetch +
-    * driver algebra; otherwise the dense one-shuffle evaluator. All
+    * the kernel on the driver; otherwise the dense one-shuffle evaluator. All
     * paths are bit-identical to `RefOracle` (tested). */
   def topKAuto(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] =
     asSingleTerm(query) match {
@@ -672,12 +541,13 @@ final class SparkSearchEngine(
     * FETCH shared across the whole batch: ONE pruned postings scan for
     * every bare-term atom of every query, and ONE docId shuffle (head-
     * stem Bloom-prefiltered) folding every phrase atom of every query
-    * doc-locally. The boolean combine itself is per-query driver
-    * arithmetic over the prefetched sparse vectors (`DriverScalarAlgebra`
-    * — the same code the single-query driver path runs, so results are
+    * doc-locally. Each query then takes the driver route over the
+    * prefetched rows (`driverTopK`, the `DenseEval` kernel in-process —
+    * the same code the single-query driver path runs, so results are
     * bit-identical to `topKAuto` by construction; EngineSpec asserts it).
-    * A query whose operand exceeds `driverAlgebraMaxDocs` falls back to
-    * its own `topKAuto` evaluation — correct, just unshared.
+    * A query whose operand, or whose operands' union, exceeds
+    * `driverAlgebraMaxDocs` falls back to its own `topKAuto` evaluation —
+    * correct, just unshared.
     *
     * This is the filtering-pipeline shape: thousands of `"a" AND "b"`
     * style queries pay atom-count scans, not query-count scans.
@@ -717,21 +587,14 @@ final class SparkSearchEngine(
         } finally folded.unpersist(false)
       }
 
-    // ---- per-query combine: pure arithmetic over the prefetched atoms --
-    val bulkAlg: ScoreAlgebra[DScores] = new DriverScalarAlgebra(
-      key =>
-        if (oversizedTerms(key)) throw new TooBigForDriver
-        else termRows.getOrElse(key, Array.empty),
-      stems =>
-        if (oversizedPhrases(stems)) throw new TooBigForDriver
-        else phraseRows.getOrElse(stems, Array.empty))
+    // ---- per query: the driver route over the prefetched atoms ---------
     val perQuery = qs.map { q =>
-      val top =
-        try {
-          val (m, default) = QueryEvaluator.evaluate(q, bulkAlg, params)
-          driverTopK(m, default, accuracy, k)
-        } catch { case _: TooBigForDriver => topKAuto(q, accuracy, k) }
-      q -> top
+      val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
+      val root = QueryEvaluator.evaluate(q, ast, params)
+      val atoms = ast.atomList
+      val fits = atoms.forall(_.fold(t => !oversizedTerms(t), st => !oversizedPhrases(st)))
+      q -> (if (fits) driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k) else None)
+        .getOrElse(topKAuto(q, accuracy, k))
     }
     val rows = perQuery.flatMap { case (q, top) =>
       top.map { case (d, s) => (q, d, s) }

@@ -35,10 +35,11 @@ object Similarity {
   val IndexVersion = 4
 
   /** Sorted (cell, centroid) rows of an IVF-family index — cached until a
-    * commit rewrites them. */
-  private def readCentroids(spark: SparkSession, idx: IndexStore): Array[(Int, Seq[Float])] = {
+    * commit rewrites them. Stored as floats, held as doubles (exact). */
+  private def readCentroids(spark: SparkSession, idx: IndexStore): Array[(Int, Array[Double])] = {
     import spark.implicits._
-    idx.cached(Tables.Centroids)(_.as[(Int, Seq[Float])].collect().sortBy(_._1))
+    idx.cached(Tables.Centroids)(_.as[(Int, Seq[Float])].collect().sortBy(_._1)
+      .map { case (cell, c) => (cell, c.map(_.toDouble).toArray) })
   }
 
   /** The `n` lowest-vec_id vectors in id order: the deterministic initial
@@ -50,7 +51,7 @@ object Similarity {
   }
 
   /** Index of the max-cosine centroid (ties → lowest cell). */
-  private def nearestCell(v: Seq[Float], cs: Array[Seq[Float]]): Int = {
+  private def nearestCell(v: Seq[Float], cs: Array[Array[Double]]): Int = {
     var best = 0; var bestCos = Double.MinValue; var i = 0
     while (i < cs.length) {
       val c = cosine(v, cs(i))
@@ -60,12 +61,14 @@ object Similarity {
     best
   }
 
-  def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+  /** Cosine of a float vector against a double one (a float vector
+    * widens exactly, so float pairs score alike through it). */
+  def cosine(a: Seq[Float], b: Array[Double]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < a.length) {
-      dot += a(i).toDouble * b(i).toDouble
+      dot += a(i).toDouble * b(i)
       na += a(i).toDouble * a(i).toDouble
-      nb += b(i).toDouble * b(i).toDouble
+      nb += b(i) * b(i)
       i += 1
     }
     if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
@@ -311,11 +314,15 @@ object Similarity {
       embeddings: DataFrame,
       path: String,
       nCells: Int = 16): Unit =
-    writeIvfIndex(spark, embeddings, path, lowestVectors(spark, embeddings, nCells))
+    writeIvfIndex(spark, embeddings, path, lowestCentroids(spark, embeddings, nCells))
+
+  /** The untrained codebook: the lowest-`nCells` vectors, as doubles. */
+  private def lowestCentroids(spark: SparkSession, embeddings: DataFrame, nCells: Int): Array[Array[Double]] =
+    lowestVectors(spark, embeddings, nCells).map(_.map(_.toDouble).toArray)
 
   /** Build (or retrain) commit of an IVF index over `centroids`. */
   private def writeIvfIndex(
-      spark: SparkSession, embeddings: DataFrame, path: String, centroids: Array[Seq[Float]]): Unit = {
+      spark: SparkSession, embeddings: DataFrame, path: String, centroids: Array[Array[Double]]): Unit = {
     require(centroids.nonEmpty, "no centroids sampled")
     IndexStore.build(spark, path, "build_ivf") { idx =>
       Map(Tables.Centroids -> idx.write(centroidRows(spark, centroids), Tables.Centroids),
@@ -323,13 +330,13 @@ object Similarity {
     }
   }
 
-  private def centroidRows(spark: SparkSession, centroids: Array[Seq[Float]]): DataFrame = {
+  private def centroidRows(spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(centroids.toIndexedSeq.zipWithIndex.map(_.swap))
+    spark.createDataset(centroids.toIndexedSeq.map(_.map(_.toFloat).toSeq).zipWithIndex.map(_.swap))
       .toDF("cell", "embedding").coalesce(1)
   }
 
-  private def ivfRows(spark: SparkSession, embeddings: DataFrame, centroids: Array[Seq[Float]]): DataFrame = {
+  private def ivfRows(spark: SparkSession, embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
     val bC = spark.sparkContext.broadcast(centroids)
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
@@ -343,17 +350,6 @@ object Similarity {
     val idx = IndexStore.open(spark, path)
     idx.commit("append", Map(Tables.IvfAssignments -> idx.write(
       ivfRows(spark, newEmbeddings, readCentroids(spark, idx).map(_._2)), Tables.IvfAssignments)))
-  }
-
-  private def cosineFD(v: Seq[Float], c: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < v.length) {
-      dot += v(i).toDouble * c(i)
-      na += v(i).toDouble * v(i).toDouble
-      nb += c(i) * c(i)
-      i += 1
-    }
-    if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
   /** Lloyd's refinement of the IVF codebook (deterministic init = the
@@ -371,21 +367,11 @@ object Similarity {
       nCells: Int = 16,
       iters: Int = 5): Unit = {
     import spark.implicits._
-    var cs: Array[Array[Double]] =
-      lowestVectors(spark, embeddings, nCells).map(_.map(_.toDouble).toArray)
+    var cs = lowestCentroids(spark, embeddings, nCells)
     val ds = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
     for (_ <- 0 until iters) {
       val bC = spark.sparkContext.broadcast(cs)
-      val sums = ds.map { case (_, v) =>
-          val c = bC.value
-          var best = 0; var bestCos = Double.MinValue; var i = 0
-          while (i < c.length) {
-            val cc = cosineFD(v, c(i))
-            if (cc > bestCos) { bestCos = cc; best = i }
-            i += 1
-          }
-          (best, v.map(_.toDouble).toArray, 1L)
-        }
+      val sums = ds.map { case (_, v) => (nearestCell(v, bC.value), v.map(_.toDouble).toArray, 1L) }
         .groupByKey(_._1)
         .mapGroups { (cell, it) =>
           var n = 0L
@@ -403,7 +389,9 @@ object Similarity {
       sums.foreach { case (cell, mean, _) => next(cell) = mean }
       cs = next
     }
-    writeIvfIndex(spark, embeddings, path, cs.map(_.map(_.toFloat).toSeq))
+    // rounded to the stored float codebook: the assignment pass uses
+    // exactly the centroids the index keeps
+    writeIvfIndex(spark, embeddings, path, cs.map(_.map(_.toFloat.toDouble)))
   }
 
   // ------------------------------------------------------------------ PQ --
@@ -557,16 +545,9 @@ object Similarity {
     for (_ <- 0 until iters) {
       val b = spark.sparkContext.broadcast(book)
       val means = ds.flatMap { vn =>
-          val bk = b.value
-          val subDim = vn.length / bk.length
-          bk.indices.iterator.map { j =>
-            var best = 0; var bestD = Double.MaxValue; var c = 0
-            while (c < bk(j).length) {
-              val d = sqDist(vn, j * subDim, bk(j)(c))
-              if (d < bestD) { bestD = d; best = c }
-              c += 1
-            }
-            ((j, best), vn.slice(j * subDim, (j + 1) * subDim))
+          val subDim = vn.length / b.value.length
+          pqEncode(vn, b.value).iterator.zipWithIndex.map { case (code, j) =>
+            ((j, code), vn.slice(j * subDim, (j + 1) * subDim))
           }
         }
         .groupByKey(_._1)
@@ -646,7 +627,7 @@ object Similarity {
 
   /** The `nProbe` cells whose centroids are nearest `v` (cosine desc, then
     * the lower cell). */
-  private def probeCells(centroids: Array[(Int, Seq[Float])], v: Seq[Float], nProbe: Int): Seq[Int] =
+  private def probeCells(centroids: Array[(Int, Array[Double])], v: Seq[Float], nProbe: Int): Seq[Int] =
     centroids
       .map { case (cell, c) => (cell, cosine(v, c)) }
       .sortBy { case (cell, c) => (-c, cell) }
@@ -736,7 +717,7 @@ object Similarity {
       m: Int = 8,
       nCodes: Int = 16): Unit = {
     import spark.implicits._
-    val centroids = lowestVectors(spark, embeddings, nCells)
+    val centroids = lowestCentroids(spark, embeddings, nCells)
     require(centroids.nonEmpty, "no centroids sampled")
     val book = pqInitCodebook(spark, embeddings, m, nCodes)
     val bC = spark.sparkContext.broadcast(centroids)

@@ -2,10 +2,11 @@ package graft.query
 
 /** The engine's one BM25 formula (BM25Ranker.cpp:431-437), split into
   * the df-only factor and the per-posting factor so callers can hoist idf
-  * out of their loops. Every scalar scoring site — driver algebra, dense
-  * evaluator, WAND kernels, bulk atom frames — calls these, so they share
-  * one IEEE operation order and score bit-identically. `RefOracle` keeps
-  * its own transcription on purpose: it is the independent reference.
+  * out of their loops. Every scalar scoring site — the boolean kernel
+  * (`DenseEval.Kernel`, both routes), WAND kernels, bulk atom frames —
+  * calls these, so they share one IEEE operation order and score
+  * bit-identically. `RefOracle` keeps its own transcription on purpose:
+  * it is the independent reference.
   */
 object Bm25 {
 

@@ -3,28 +3,27 @@ package graft.query
 import graft.text.TextPipeline
 import scala.collection.mutable
 
-/** The dense one-shuffle boolean evaluator's query-side machinery: an AST
-  * capture of the reference algebra plus the per-document scalar kernel.
+/** The engine's one boolean evaluator: an AST capture of the reference
+  * algebra (ProcessQuery, the reference's BM25Ranker.cpp:64-182)
+  * plus the per-document scalar kernel that scores it.
   *
-  * Motivation: evaluating the algebra operator by operator over
-  * distributed sparse frames costs one full_outer JOIN (a shuffle of
-  * operand-sized frames) per boolean operator plus a cached frame and a
-  * max aggregate per op — a query like `"a" AND "b" OR "c"` over head
-  * stems at 10^7+ docs is join-cascade-bound. But the whole computation
-  * is a per-document scalar expression once (a) every atom's rows are
-  * aligned per doc and (b) the data-dependent normalization constants
-  * are known. So: evaluate the
-  * query ONCE with `AstAlgebra` to get the expression tree, fetch all
-  * atoms in ONE pruned scan + ONE docId shuffle, resolve each
-  * normalization constant bottom-up with a no-shuffle aggregate pass over
-  * the aligned frame, and compute final scores in a single map.
+  * The reference scores dense per-corpus vectors (:26-30,311-319). Here
+  * the query is evaluated ONCE with `AstAlgebra` to get its expression
+  * tree; once every atom's rows are aligned per doc and the
+  * data-dependent normalization constants are known, a doc's score is a
+  * scalar expression of its own rows. The `Kernel` resolves those
+  * constants bottom-up, one pass over the aligned docs each, then scores
+  * every doc. Both sides of the engine's `driverAlgebraMaxDocs` gate run
+  * it and differ only in where the aligned rows come from and where the
+  * passes run: the driver route aligns its fetched rows in-process, the
+  * dense route groups them by docId in one shuffle and runs each pass per
+  * partition. A pass returns partial counts and maxima whose merges are
+  * exact under any partitioning, so the two routes give the same bits by
+  * construction (EngineSpec asserts every path `==` `RefOracle`).
   *
-  * Bit-identity: `evalDoc`/`defaultOf` replicate `DriverScalarAlgebra`'s
-  * scalar operations exactly — same expressions, same IEEE order, same
-  * `var mx = 0.0; if (v > mx)` max-loop semantics (the engine asserts all
-  * paths equal in EngineSpec). A doc absent from a subtree's support
-  * evaluates to that subtree's default by induction, which is exactly
-  * `getOrElse(k, default)` in the driver's sparse merge.
+  * A doc outside a subtree's support evaluates to that subtree's default
+  * by induction (`evalDoc` with every atom absent is `defaultOf`), which
+  * is the value the dense vector holds at that doc.
   */
 object DenseEval {
 
@@ -107,8 +106,7 @@ object DenseEval {
   /** Per-document value of `n` given the doc's normalized atom scores
     * (`vals`/`present`; an absent atom holds its default 0) and the
     * resolved normalization constants (`normMax(id)` = that node's
-    * trueMax; ≤ 0 means no rescale, mirroring the driver's
-    * `if (trueMax > 0)` branch). */
+    * trueMax; ≤ 0 means no rescale, the reference's `if (max > 0)`). */
   def evalDoc(
       n: QNode,
       vals: Array[Double],
@@ -129,9 +127,8 @@ object DenseEval {
       if (t > 0) v / t else v
   }
 
-  /** The dense default of `n` (the score every doc outside its support
-    * holds) — the same scalar chain `DriverScalarAlgebra` threads through
-    * its `_2` component. Norm ids above `resolvedUpTo` must not occur. */
+  /** The dense default of `n`: the score every doc outside its support
+    * holds. Norm ids not yet resolved in `normMax` must not occur. */
   def defaultOf(n: QNode, normMax: Array[Double]): Double = n match {
     case NEmpty => 0.0
     case NAtom(_) => 0.0
@@ -143,5 +140,118 @@ object DenseEval {
       val d = defaultOf(a, normMax)
       val t = normMax(id)
       if (t > 0) d / t else d
+  }
+
+  /** One doc's aligned rows: (docId, [(atomIdx, tf, doc_len)]), one entry
+    * per atom the doc matches. */
+  type Doc = (Long, Array[(Int, Int, Int)])
+
+  /** A pass's partial result over some of the aligned docs: per slot, a
+    * count sum and a max (from 0.0). Summing counts and taking maxima are
+    * exact under any partitioning. */
+  type Partial = (Array[Long], Array[Double])
+
+  private def merge(parts: Seq[Partial], slots: Int): Partial = {
+    val cnt = new Array[Long](slots)
+    val mx = new Array[Double](slots)
+    parts.foreach { case (c, m) =>
+      var i = 0
+      while (i < slots) {
+        cnt(i) += c(i); if (m(i) > mx(i)) mx(i) = m(i); i += 1
+      }
+    }
+    (cnt, mx)
+  }
+
+  /** The per-doc kernel of the query `root` over `nAtoms` atoms, scored
+    * against a corpus of `nDocs` docs with BM25 constants `k1`, `b`,
+    * `avgdl`. Holds plain values only, so executors can run its passes. */
+  final class Kernel(root: QNode, nAtoms: Int, nDocs: Long, k1: Double, b: Double, avgdl: Double)
+    extends Serializable {
+
+    private def tfPart(tf: Int, dl: Int): Double =
+      Bm25.tfPart(tf.toDouble, dl.toDouble, k1, b, avgdl)
+
+    /** Pass 1, per atom: its df and its max tf-part. */
+    def atomPass(docs: Iterator[Doc]): Partial = {
+      val cnt = new Array[Long](nAtoms)
+      val mx = new Array[Double](nAtoms)
+      docs.foreach { case (_, rows) =>
+        rows.foreach { case (a, tf, dl) =>
+          cnt(a) += 1
+          val tp = tfPart(tf, dl)
+          if (tp > mx(a)) mx(a) = tp
+        }
+      }
+      (cnt, mx)
+    }
+
+    /** Resolves every constant of the query: `run` applies a pass to
+      * every aligned doc and returns its partials (one per partition, or
+      * one for a local iterator). */
+    def resolve(run: (Iterator[Doc] => Partial) => Seq[Partial]): Resolved = {
+      val (df, mxTf) = merge(run(atomPass), nAtoms)
+      val idf = Array.tabulate(nAtoms)(i => Bm25.idf(nDocs.toDouble, df(i).toDouble))
+      // an atom's max score is idf · maxTfPart — bitwise the max of its
+      // per-row scores (x → fl(idf·x) is monotone for idf > 0, attained
+      // at the argmax); absent docs hold 0, so it counts unless every
+      // doc matches
+      val atomMax = Array.tabulate(nAtoms) { i =>
+        val mxS = if (df(i) == 0) 0.0 else idf(i) * mxTf(i)
+        if (df(i) >= nDocs) mxS else math.max(mxS, 0.0)
+      }
+      val norms = normNodes(root)
+      val normMax = new Array[Double](norms.length)
+      norms.foreach { nn => // bottom-up: ids < nn.id are final
+        val (cnt, mx) = merge(run(new Resolved(idf, atomMax, normMax.clone()).normPass(nn.a)), 1)
+        normMax(nn.id) =
+          if (cnt(0) >= nDocs) mx(0)
+          else math.max(mx(0), defaultOf(nn.a, normMax))
+      }
+      new Resolved(idf, atomMax, normMax)
+    }
+
+    /** The kernel with its constants resolved (up to some norm id). */
+    final class Resolved private[Kernel] (
+        idf: Array[Double], atomMax: Array[Double], normMax: Array[Double]) extends Serializable {
+
+      /** A doc's max-normalized atom scores and which atoms it matches. */
+      private def atomScores(rows: Array[(Int, Int, Int)]): (Array[Double], Array[Boolean]) = {
+        val vals = new Array[Double](nAtoms)
+        val pres = new Array[Boolean](nAtoms)
+        rows.foreach { case (a, tf, dl) =>
+          val s = idf(a) * tfPart(tf, dl)
+          vals(a) = if (atomMax(a) > 0) s / atomMax(a) else s
+          pres(a) = true
+        }
+        (vals, pres)
+      }
+
+      /** A norm pass: the count and max of `sub` over its support. */
+      def normPass(sub: QNode)(docs: Iterator[Doc]): Partial = {
+        val subAtoms = atomsOf(sub)
+        var cnt = 0L
+        var mx = 0.0
+        docs.foreach { case (_, rows) =>
+          val (vals, pres) = atomScores(rows)
+          if (subAtoms.exists(pres)) {
+            val v = evalDoc(sub, vals, pres, normMax)
+            cnt += 1
+            if (v > mx) mx = v
+          }
+        }
+        (Array(cnt), Array(mx))
+      }
+
+      /** The final pass: every aligned doc's score. */
+      def scores(docs: Iterator[Doc]): Iterator[(Long, Double)] =
+        docs.map { case (d, rows) =>
+          val (vals, pres) = atomScores(rows)
+          (d, evalDoc(root, vals, pres, normMax))
+        }
+
+      /** The score of every doc outside the aligned support. */
+      def default: Double = defaultOf(root, normMax)
+    }
   }
 }

@@ -88,34 +88,61 @@ class DeleteSpec extends AnyFunSuite {
     }
   }
 
-  test("driver gate at its boundary: max operand live df → driver, one less → dense") {
+  /** The tombstoned warehouse, the survivors' oracle, and top-k lists
+    * keyed by (conv_id, turn_idx): docIds relabel between the two, but
+    * both rank by that key. */
+  private def gateFixture() = {
     import spark.implicits._
     val (io, _, survivors, _) = tombstoned()
     val oracle = new graft.oracle.RefOracle(survivors)
-    // docIds relabel between the tombstoned warehouse and the survivors'
-    // oracle, but both rank by (conv_id, turn_idx): compare ranked keys
     val engineKey = io.read(Tables.DocDict).as[(Long, String, Int, Int)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     val oracleKey = oracle.docs.map { case (d, t) => d -> ((t.conv_id, t.turn_idx)) }.toMap
     def ranked(top: Vector[(Long, Double)], key: Map[Long, (String, Int)]) =
       top.map { case (d, s) => (key(d), s) }
-    def liveDf(atom: String): Int =
+    /** The live docs an atom matches, from the oracle. */
+    def docsOf(atom: String): Set[Long] =
       if (atom.startsWith("\""))
-        oracle.DenseAlgebra.phraseScore(atom.stripPrefix("\"").stripSuffix("\"")).count(_._2 > 0)
-      else oracle.index.getOrElse(atom, Map.empty).size
+        oracle.DenseAlgebra.phraseScore(atom.stripPrefix("\"").stripSuffix("\""))
+          .collect { case (d, s) if s > 0 => d }.toSet
+      else oracle.index.getOrElse(atom, Map.empty).keySet
+    def engine(cap: Int) = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap))
+    def want(q: String) = ranked(oracle.search(q, 0.0, 1000), oracleKey)
+    def got(top: Vector[(Long, Double)]) = ranked(top, engineKey)
+    (docsOf _, engine _, want _, got _)
+  }
+
+  test("driver gate at its boundary: max operand live df → driver, one less → dense") {
+    val (docsOf, engine, want, got) = gateFixture()
     // a term, a phrase, and a mixed query whose merges never outgrow its
     // largest operand (the phrase's docs all contain its head stem, blue)
     Seq(Seq("whale"), Seq("\"blue whale\""), Seq("\"blue whale\"", "blue")).foreach { atoms =>
       val q = atoms.mkString(" ")
-      val max = atoms.map(liveDf).max
-      val want = ranked(oracle.search(q, 0.0, 1000), oracleKey)
-      val atGate = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = max))
-      val over = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = max - 1))
-      assert(atGate.topKDriver(q, 0.0, 1000).map(ranked(_, engineKey)).contains(want),
+      val max = atoms.map(docsOf(_).size).max
+      val atGate = engine(max)
+      val over = engine(max - 1)
+      assert(atGate.topKDriver(q, 0.0, 1000).map(got).contains(want(q)),
         s"'$q' at driverAlgebraMaxDocs = $max must route to the driver, == oracle")
       assert(over.topKDriver(q, 0.0, 1000).isEmpty, s"'$q' at ${max - 1} must decline")
-      assert(ranked(over.topKDense(q, 0.0, 1000), engineKey) == want, s"'$q' dense")
-      assert(ranked(over.topKAuto(q, 0.0, 1000), engineKey) == want, s"'$q' auto")
+      assert(got(over.topKDense(q, 0.0, 1000)) == want(q), s"'$q' dense")
+      assert(got(over.topKAuto(q, 0.0, 1000)) == want(q), s"'$q' auto")
+    }
+  }
+
+  test("driver gate on the union: operands that fit, a union that does not → dense") {
+    val (docsOf, engine, want, got) = gateFixture()
+    val (a, b) = ("\"blue whale\"", "\"red fish\"")
+    val q = s"$a OR $b"
+    val max = math.max(docsOf(a).size, docsOf(b).size)
+    val union = (docsOf(a) ++ docsOf(b)).size
+    assert(max < union - 1, s"the two phrases must each add docs: max $max, union $union")
+    assert(engine(union).topKDriver(q, 0.0, 1000).map(got).contains(want(q)),
+      s"'$q' at driverAlgebraMaxDocs = $union (the union) must route to the driver, == oracle")
+    Seq(union - 1, max).foreach { cap =>
+      val over = engine(cap)
+      assert(over.topKDriver(q, 0.0, 1000).isEmpty, s"'$q' at $cap: every operand fits, the union does not")
+      assert(got(over.topKDense(q, 0.0, 1000)) == want(q), s"'$q' at $cap dense")
+      assert(got(over.topKAuto(q, 0.0, 1000)) == want(q), s"'$q' at $cap auto")
     }
   }
 

@@ -177,6 +177,13 @@ class EngineSpec extends AnyFunSuite {
         count(engine.topKDriver("(\"blue whale\" OR \"query engine\") AND \"red fish\"", acc, 10))
       assert(onePhrase._1 == onePhrase._2 && onePhrase._1 <= 3, s"one phrase: $onePhrase")
       assert(threePhrases == onePhrase, "three phrases must share one phrase fold")
+      // the driver route runs its fetch's jobs and nothing else: the
+      // kernel runs in-process (boolean: the fold; mixed: + live df and
+      // one postings scan)
+      val boolean = count(engine.topKDriver("\"blue whale\" AND \"red fish\"", acc, 10))
+      val mixed = count(engine.topKDriver("\"blue whale\" whale engine", acc, 10))
+      assert(boolean == ((2, 2)), s"boolean: $boolean")
+      assert(mixed == ((4, 4)), s"mixed: $mixed")
       Seq("whale", "\"blue whale\" whale engine", "\"blue whale\" AND \"red fish\"").foreach { q =>
         val topK = count(engine.topKAuto(q, 0.0, engine.params.topK))
         val search = count(engine.search(q, turns))

@@ -143,7 +143,7 @@ class OpsSpec extends AnyFunSuite {
     val all = emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
     val q = all.find(_._1 == 0L).get._2
     val want = all.filter(_._1 != 0L)
-      .map { case (id, v) => (id, Similarity.cosine(v, q)) }
+      .map { case (id, v) => (id, Similarity.cosine(v, q.map(_.toDouble).toArray)) }
       .sortBy { case (id, c) => (-c, id) }.take(10)
     assert(got.map(_._1).toSeq == want.map(_._1).toSeq)
     got.zip(want).foreach { case ((_, g), (_, w)) => assert(math.abs(g - w) < 1e-12) }
