@@ -357,7 +357,7 @@ object SparkEntry {
         queryEmbedding(s, dir, 0L), queryId = 0L, k = 20)),
     // bulk ANN: M query vectors share ONE ADC scan of the codes table
     // (per-partition per-query heaps, the WAND-multi shape), then one
-    // broadcast-join exact re-rank for all shortlists
+    // exact re-rank read for all shortlists
     "q35_ann_pq_bulk" -> ((s, dir) =>
       Similarity.pqTopKManyIndexed(s, pqIndex(s, dir), s.read.parquet(t(dir, "embeddings")),
         Seq(0L, 1L).map(id => id -> queryEmbedding(s, dir, id)), k = 20)),

@@ -795,30 +795,10 @@ object Dedup {
     if (union == 0) 1.0 else inter.toDouble / union.toDouble
   }
 
-  /** A vector as the cosine chain reads it: cast to double once, with its
-    * norm (sqrt of the left-folded self dot). */
-  private type Normed = (Array[Double], Double)
-
-  private def dot(a: Array[Double], b: Array[Double]): Double = {
-    var acc = 0.0
-    var i = 0
-    while (i < a.length) { acc = acc + a(i) * b(i); i += 1 }
-    acc
-  }
-
-  private def normed(v: Seq[Float]): Normed = {
-    val d = v.iterator.map(_.toDouble).toArray
-    (d, math.sqrt(dot(d, d)))
-  }
-
-  /** THE cosine of the embedding dedup, on every side of its gates:
-    * dot / (na * nb), norms computed once per vector. */
-  private def cosine(a: Normed, b: Normed): Double = dot(a._1, b._1) / (a._2 * b._2)
-
-  private def normedVectors(embeddings: DataFrame): Dataset[(Long, Normed)] = {
+  private def normedVectors(embeddings: DataFrame): Dataset[(Long, Cosine.Normed)] = {
     import embeddings.sparkSession.implicits._
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, normed(v)) }
+      .map { case (id, v) => (id, Cosine.of(v)) }
   }
 
   /** Every pair a < b of `feats` whose `score` is ≥ `threshold`, as
@@ -905,9 +885,9 @@ object Dedup {
   /** Exact ALL-PAIRS embedding-cosine near-dup — contract/oracle-scale
     * ground truth (O(n²) pairs; bounded inputs only — at corpus scale use
     * embeddingNearDup's hyperplane buckets). Norms once per vector, then
-    * `cosine` per pair on either side of the `bruteRows` gate. */
+    * `Cosine` per pair on either side of the `bruteRows` gate. */
   def embeddingNearDupExact(embeddings: DataFrame, threshold: Double): DataFrame =
-    allPairsAtLeast(normedVectors(embeddings), cosine, threshold,
+    allPairsAtLeast(normedVectors(embeddings), Cosine.apply, threshold,
       Seq("vec_a", "vec_b", "cosine"))
 
   /** Connected components over near-dup pairs — the keeper-selection step
@@ -1164,14 +1144,14 @@ object Dedup {
         Seq("bucket"), everyPair(maxBucket, dedup = false))
       .select($"a".as("vec_a"), $"b".as("vec_b"))
     // one typed pass per side: the vectors are cast and normed once,
-    // then `cosine` per candidate pair
+    // then `Cosine` per candidate pair
     val withNorm = normedVectors(embeddings)
     cands
       .join(withNorm.toDF("vec_a", "nv_a"), Seq("vec_a"))
       .join(withNorm.toDF("vec_b", "nv_b"), Seq("vec_b"))
       .select($"vec_a", $"vec_b", $"nv_a", $"nv_b")
-      .as[(Long, Long, Normed, Normed)]
-      .map { case (a, b, va, vb) => (a, b, cosine(va, vb)) }
+      .as[(Long, Long, Cosine.Normed, Cosine.Normed)]
+      .map { case (a, b, va, vb) => (a, b, Cosine(va, vb)) }
       .toDF("vec_a", "vec_b", "cosine")
       .filter($"cosine" >= threshold)
       .orderBy($"vec_a", $"vec_b")

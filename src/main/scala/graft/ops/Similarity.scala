@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.build.Tables
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Baseline: brute-force cosine top-k as pure Catalyst higher-order
-  * functions (`zip_with` + `aggregate`) — whole-stage-codegen'd, scans the
-  * table once, TakeOrderedAndProject for the top-k (no full sort).
+  * Baseline: brute-force cosine top-k, one scan of the table.
   *
   * Scale path: a PERSISTED index (build once, query many — the shape the
   * reference's own one-time index build + cheap per-query lookups has,
@@ -20,6 +20,13 @@ import graft.build.Tables
   *     touches nProbe cells / hamming-ball buckets, never the corpus.
   * All randomness (hyperplanes, centroid choice) is DetHash-deterministic,
   * so the driver's DuckDB oracle recomputes identical buckets/cells.
+  *
+  * Every probe — brute force, LSH, IVF, PQ, IVF-PQ, single or bulk — is
+  * ONE bounded-heap kernel (`topKPerQuery`) over a batch of M queries, and
+  * every score is `Cosine` (re-ranks) or the one ADC fold (`adc`): a
+  * family supplies only its pruned candidate scan (`Scan`), and a
+  * single-query probe is its bulk probe at M = 1. Results are local
+  * frames, merged on the driver when the call returns.
   */
 object Similarity {
 
@@ -34,12 +41,13 @@ object Similarity {
     * delete rewrites the files holding its ids (no tombstones). */
   val IndexVersion = 4
 
-  /** Sorted (cell, centroid) rows of an IVF-family index — cached until a
-    * commit rewrites them. Stored as floats, held as doubles (exact). */
-  private def readCentroids(spark: SparkSession, idx: IndexStore): Array[(Int, Array[Double])] = {
+  /** Sorted (cell, normed centroid) rows of an IVF-family index — cached
+    * until a commit rewrites them. Stored as floats, held as doubles
+    * (exact). */
+  private def readCentroids(spark: SparkSession, idx: IndexStore): Array[(Int, Cosine.Normed)] = {
     import spark.implicits._
     idx.cached(Tables.Centroids)(_.as[(Int, Seq[Float])].collect().sortBy(_._1)
-      .map { case (cell, c) => (cell, c.map(_.toDouble).toArray) })
+      .map { case (cell, c) => (cell, Cosine.of(c)) })
   }
 
   /** The `n` lowest-vec_id vectors in id order: the deterministic initial
@@ -51,51 +59,132 @@ object Similarity {
   }
 
   /** Index of the max-cosine centroid (ties → lowest cell). */
-  private def nearestCell(v: Seq[Float], cs: Array[Array[Double]]): Int = {
+  private def nearestCell(v: Cosine.Normed, cs: Array[Cosine.Normed]): Int = {
     var best = 0; var bestCos = Double.MinValue; var i = 0
     while (i < cs.length) {
-      val c = cosine(v, cs(i))
+      val c = Cosine(v, cs(i))
       if (c > bestCos) { bestCos = c; best = i } // first wins: lowest cell on ties
       i += 1
     }
     best
   }
 
-  /** Cosine of a float vector against a double one (a float vector
-    * widens exactly, so float pairs score alike through it). */
-  def cosine(a: Seq[Float], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i).toDouble * b(i)
-      na += a(i).toDouble * a(i).toDouble
-      nb += b(i) * b(i)
-      i += 1
+  // -------------------------------------------------------- probe kernel --
+
+  /** A family's candidate scan for a batch of queries: the pruned rows
+    * (vec_id, route key, payload) and, per route key, the indices of the
+    * queries that probe it. */
+  private[ops] final case class Scan[P](rows: Dataset[(Long, Long, P)], route: Long => Array[Int])
+
+  /** (vec_id, `key`, `payload`) rows of `df`, typed for a `Scan`. */
+  private def scanRows[P: TypeTag](df: DataFrame, key: Column, payload: String): Dataset[(Long, Long, P)] = {
+    import df.sparkSession.implicits._
+    df.select(col("vec_id"), key.cast("long"), col(payload)).as[(Long, Long, P)]
+  }
+
+  /** Route of queries that each probe a set of keys (buckets, cells, ids). */
+  private def keyRoute(probes: Seq[Seq[Long]]): Long => Array[Int] = {
+    val byKey = probes.zipWithIndex.flatMap { case (keys, qi) => keys.distinct.map(_ -> qi) }
+      .groupBy(_._1).map { case (key, qs) => key -> qs.map(_._2).toArray }
+    key => byKey.getOrElse(key, Array.emptyIntArray)
+  }
+
+  /** Route of `m` queries that each probe every row. */
+  private def everyRow(m: Int): Long => Array[Int] = {
+    val all = Array.range(0, m)
+    _ => all
+  }
+
+  /** Cosine descending, then vec_id ascending: the top-k order. */
+  private val byCosine = Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
+
+  /** ADC distance ascending, then vec_id ascending: the shortlist order. */
+  private val byAdc = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+
+  /** The probe entry's input check: ≥ 1 query, distinct ids, and every
+    * vector `dims` long (the index's dims: LSH parameters, centroid length
+    * or m·subDim of the codebook). */
+  private def checked(queries: Seq[(Long, Seq[Float])], dims: Int): Unit = {
+    require(queries.nonEmpty, "an ANN probe needs at least one query")
+    require(queries.map(_._1).distinct.size == queries.size, "duplicate query ids in the batch")
+    queries.foreach { case (qid, v) =>
+      require(v.length == dims, s"query $qid dims ${v.length} != index dims $dims")
     }
-    if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** dot(a, b) over array<double> columns, as a codegen'd expression. */
-  def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def cosineCol(a: Column, b: Column): Column = {
-    val ad = transform(a, _.cast("double"))
-    val bd = transform(b, _.cast("double"))
-    dotCol(ad, bd) / (sqrt(dotCol(ad, ad)) * sqrt(dotCol(bd, bd)))
+  /** THE probe kernel: per query, its best `k` rows in `ord` among the
+    * rows `scan` routes to it, its own id excluded. Each partition keeps
+    * one bounded heap per query (the `Wand.topKForPartitionMulti` shape)
+    * and the driver merges the ≤ partitions·k survivors of each query: the
+    * top k of per-partition top ks is the global top k under the total
+    * (score, id) order, so every partitioning returns the same rows. One
+    * Spark job. `score(payload)` prepares a row once, then scores it per
+    * query index.
+    *
+    * @return per query (in `qids` order), its ≤ k (vec_id, score) in `ord` */
+  private def topKPerQuery[P](scan: Scan[P], qids: Array[Long], k: Int,
+      ord: Ordering[(Double, Long)])(score: P => Int => Double): Array[Seq[(Long, Double)]] = {
+    import scan.rows.sparkSession.implicits._
+    val route = scan.route
+    val kept = scan.rows.mapPartitions { it =>
+      // natural max-heaps: the head is the query's worst kept row
+      val heaps = qids.map(_ => mutable.PriorityQueue.empty[(Double, Long)](ord))
+      it.foreach { case (id, key, p) =>
+        val qs = route(key)
+        if (qs.nonEmpty) {
+          val s = score(p)
+          qs.foreach { qi =>
+            if (id != qids(qi)) {
+              val h = heaps(qi)
+              val r = (s(qi), id)
+              if (h.size < k) h.enqueue(r)
+              else if (h.nonEmpty && ord.lt(r, h.head)) { h.dequeue(); h.enqueue(r) }
+            }
+          }
+        }
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (h, qi) => h.iterator.map { case (s, id) => (qi, id, s) } }
+    }.collect().groupBy(_._1)
+    Array.tabulate(qids.length) { qi =>
+      kept.getOrElse(qi, Array.empty).map(r => (r._3, r._2)).sorted(ord).take(k).map(_.swap).toSeq
+    }
   }
 
-  /** Brute-force cosine top-k against the embedding of `queryId`.
-    * The 1-row query side is broadcast; plan = scan + codegen'd cosine +
-    * TakeOrderedAndProject. */
+  /** Each query's exact-cosine top-k among the rows `scan` routes to it. */
+  private def cosineTopK(scan: Scan[Seq[Float]], queries: Seq[(Long, Seq[Float])],
+      k: Int): Array[Seq[(Long, Double)]] = {
+    val qn = queries.map(q => Cosine.of(q._2)).toArray
+    topKPerQuery(scan, queries.map(_._1).toArray, k, byCosine) { v =>
+      val nv = Cosine.of(v)
+      qi => Cosine(nv, qn(qi))
+    }
+  }
+
+  /** A bulk probe's result as a local frame: (query_id, vec_id, cosine),
+    * each query's ≤ k rows in rank order. */
+  private def frame(spark: SparkSession, queries: Seq[(Long, Seq[Float])],
+      top: Array[Seq[(Long, Double)]]): DataFrame = {
+    import spark.implicits._
+    queries.map(_._1).zip(top)
+      .flatMap { case (qid, rs) => rs.map { case (id, c) => (qid, id, c) } }
+      .toDF("query_id", "vec_id", "cosine")
+  }
+
+  /** A single-query probe: its bulk probe at M = 1, as (vec_id, cosine). */
+  private def atOne(queryId: Long, queryVec: Seq[Float])(
+      bulk: Seq[(Long, Seq[Float])] => DataFrame): DataFrame =
+    bulk(Seq(queryId -> queryVec)).drop("query_id")
+
+  /** Brute-force cosine top-k against the embedding of `queryId` (none
+    * when the id is absent): the kernel over every row of the table. */
   def bruteForceTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
-    val q = embeddings.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_embedding"))
-    embeddings.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosineCol(col("embedding"), col("q_embedding")).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val queries = embeddings.filter(col("vec_id") === queryId).select("embedding")
+      .as[Seq[Float]].head(1).toSeq.map(queryId -> _)
+    val top = if (queries.isEmpty) Array.empty[Seq[(Long, Double)]]
+      else cosineTopK(Scan(scanRows[Seq[Float]](embeddings, lit(0L), "embedding"), everyRow(1)), queries, k)
+    frame(spark, queries, top).drop("query_id")
   }
 
   /** planes sized so the expected bucket occupancy stays ~64: more data →
@@ -183,43 +272,38 @@ object Similarity {
       idx.write(lshRows(spark, newEmbeddings, planes, dims, seed), Tables.LshAssignments)))
   }
 
+  /** The LSH candidate scan: per query its hamming-≤probeHamming bucket
+    * ball, ONE `PartitionFilters`-pruned read of the union of the balls'
+    * `part` partitions (and buckets), rows routed by bucket. */
+  private[ops] def lshScan(idx: IndexStore, queries: Seq[(Long, Seq[Float])],
+      probeHamming: Int): Scan[Seq[Float]] = {
+    val (planes, dims, seed) = lshParams(idx)
+    checked(queries, dims)
+    val hyper = DetHash.signPlanes(planes, dims, seed)
+    val probes = queries.map { case (_, v) => probeBuckets(hyperplaneSig(v, hyper), planes, probeHamming) }
+    val buckets = probes.flatten.distinct
+    val shift = partShift(planes)
+    Scan(scanRows[Seq[Float]](idx.read(Tables.LshAssignments)
+        .filter(col("part").isin(buckets.map(_ >>> shift).distinct: _*) && col("bucket").isin(buckets: _*)),
+      col("bucket"), "embedding"), keyRoute(probes))
+  }
+
   /** Top-k over a persisted LSH index: reads ONLY the partitions covering
-    * the query's hamming-≤probeHamming bucket ball (a `PartitionFilters`-
-    * pruned scan), scores with the codegen'd cosine, TakeOrderedAndProject. */
+    * the query's hamming-≤probeHamming bucket ball (`lshScan`). */
   def lshTopKIndexed(
       spark: SparkSession,
       indexPath: String,
       queryVec: Seq[Float],
       queryId: Long,
       k: Int,
-      probeHamming: Int = 1): DataFrame = {
-    val idx = IndexStore.open(spark, indexPath)
-    val (planes, dims, seed) = lshParams(idx)
-    require(queryVec.length == dims, s"query dims ${queryVec.length} != index dims $dims")
-    val hyper = DetHash.signPlanes(planes, dims, seed)
-    val qBucket = hyperplaneSig(queryVec, hyper)
-    val probes = probeBuckets(qBucket, planes, probeHamming)
-    val shift = partShift(planes)
-    val parts = probes.map(_ >>> shift).distinct
-    val qd = typedLit(queryVec.map(_.toDouble))
-    idx.read(Tables.LshAssignments)
-      .filter(col("part").isin(parts: _*) && col("bucket").isin(probes: _*)
-        && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
-  }
+      probeHamming: Int = 1): DataFrame =
+    atOne(queryId, queryVec)(lshTopKManyIndexed(spark, indexPath, _, k, probeHamming))
 
   /** Bulk LSH ANN (round-4 VERDICT item 5): top-k for MANY query vectors
     * in ONE partition-pruned scan of the UNION of their hamming-ball probe
-    * buckets — `lshTopKIndexed` costs one job per query; a batch of M
-    * queries (deduping a day's documents against the corpus) should pay
-    * one scan, like the PQ bulk path (q35) and searchMany. The driver
-    * computes each query's probe set, broadcasts (bucket → query_id)
-    * pairs plus the query vectors, and one window takes each query's
-    * top-k. Per-query results are IDENTICAL to `lshTopKIndexed`: the same
-    * codegen'd `cosineCol` over the same probed rows, the same
-    * (cosine desc, vec_id asc) order.
+    * buckets — a batch of M queries (deduping a day's documents against
+    * the corpus) pays one scan, like the PQ bulk path (q35) and
+    * searchMany. `lshTopKIndexed` is this probe at M = 1.
     *
     * @return (query_id, vec_id, cosine), ≤ k rows per query */
   def lshTopKManyIndexed(
@@ -227,48 +311,9 @@ object Similarity {
       indexPath: String,
       queries: Seq[(Long, Seq[Float])], // (query vec_id — excluded from results, vector)
       k: Int,
-      probeHamming: Int = 1): DataFrame = {
-    import spark.implicits._
-    require(queries.nonEmpty, "lshTopKManyIndexed needs at least one query")
-    require(queries.map(_._1).distinct.size == queries.size,
-      "lshTopKManyIndexed: duplicate query ids in the batch")
-    val idx = IndexStore.open(spark, indexPath)
-    val (planes, dims, seed) = lshParams(idx)
-    val hyper = DetHash.signPlanes(planes, dims, seed)
-    val probePairs = queries.flatMap { case (qid, v) =>
-      require(v.length == dims, s"query $qid dims ${v.length} != index dims $dims")
-      probeBuckets(hyperplaneSig(v, hyper), planes, probeHamming).map(b => (b, qid))
-    }
-    val shift = partShift(planes)
-    val parts = probePairs.map(_._1 >>> shift).distinct
-    val allBuckets = probePairs.map(_._1).distinct
-    val pp = spark.createDataset(probePairs).toDF("bucket", "query_id")
-    bulkRerank(spark, idx.read(Tables.LshAssignments)
-      .filter(col("part").isin(parts: _*) && col("bucket").isin(allBuckets: _*))
-      .join(broadcast(pp), Seq("bucket")), queries, k)
-  }
-
-  /** Each query's exact-cosine top-k (cosine desc, vec_id asc) among its
-    * `candidates` rows (query_id, vec_id, embedding, …), the query's own
-    * vector excluded: the tail of every bulk probe.
-    *
-    * @return (query_id, vec_id, cosine), ≤ k rows per query */
-  private def bulkRerank(spark: SparkSession, candidates: DataFrame,
-      queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
-    import spark.implicits._
-    val qVecs = spark.createDataset(
-        queries.map { case (qid, v) => (qid, v.map(_.toDouble)) })
-      .toDF("query_id", "qvec")
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id").asc)
-    candidates
-      .join(broadcast(qVecs), Seq("query_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosineCol(col("embedding"), col("qvec")).as("cosine"))
-      .withColumn("rn", row_number().over(wK)).filter(col("rn") <= k)
-      .select("query_id", "vec_id", "cosine")
-  }
+      probeHamming: Int = 1): DataFrame =
+    frame(spark, queries,
+      cosineTopK(lshScan(IndexStore.open(spark, indexPath), queries, probeHamming), queries, k))
 
   /** One-shot LSH top-k (no persisted index): the assignment map pass runs
     * inline — use ONLY for ad-hoc queries over transient frames; repeated
@@ -288,18 +333,12 @@ object Similarity {
     val hyper = DetHash.signPlanes(planes, dims, seed)
     val bHyper = spark.sparkContext.broadcast(hyper)
     val withBucket = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, v, hyperplaneSig(v, bHyper.value)) }
-      .toDF("vec_id", "embedding", "bucket")
-    val qVec = embeddings.filter($"vec_id" === queryId)
-      .select("embedding").as[Seq[Float]].head()
-    val qBucket = hyperplaneSig(qVec, hyper)
-    val probes = probeBuckets(qBucket, planes, probeHamming)
-    val qd = typedLit(qVec.map(_.toDouble))
-    withBucket
-      .filter($"vec_id" =!= queryId && $"bucket".isin(probes: _*))
-      .select($"vec_id", cosineCol($"embedding", qd).as("cosine"))
-      .orderBy($"cosine".desc, $"vec_id".asc)
-      .limit(k)
+      .map { case (id, v) => (id, hyperplaneSig(v, bHyper.value), v) }
+    val queries = Seq(queryId -> embeddings.filter($"vec_id" === queryId)
+      .select("embedding").as[Seq[Float]].head())
+    val probes = probeBuckets(hyperplaneSig(queries.head._2, hyper), planes, probeHamming)
+    frame(spark, queries, cosineTopK(Scan(withBucket, keyRoute(Seq(probes))), queries, k))
+      .drop("query_id")
   }
 
   // ---------------------------------------------------------------- IVF --
@@ -326,7 +365,8 @@ object Similarity {
     require(centroids.nonEmpty, "no centroids sampled")
     IndexStore.build(spark, path, "build_ivf") { idx =>
       Map(Tables.Centroids -> idx.write(centroidRows(spark, centroids), Tables.Centroids),
-        Tables.IvfAssignments -> idx.write(ivfRows(spark, embeddings, centroids), Tables.IvfAssignments))
+        Tables.IvfAssignments -> idx.write(ivfRows(spark, embeddings, centroids.map(Cosine.of)),
+          Tables.IvfAssignments))
     }
   }
 
@@ -336,11 +376,11 @@ object Similarity {
       .toDF("cell", "embedding").coalesce(1)
   }
 
-  private def ivfRows(spark: SparkSession, embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
+  private def ivfRows(spark: SparkSession, embeddings: DataFrame, centroids: Array[Cosine.Normed]): DataFrame = {
     import spark.implicits._
     val bC = spark.sparkContext.broadcast(centroids)
     embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, v, nearestCell(v, bC.value)) }
+      .map { case (id, v) => (id, v, nearestCell(Cosine.of(v), bC.value)) }
       .toDF("vec_id", "embedding", "cell")
   }
 
@@ -370,8 +410,8 @@ object Similarity {
     var cs = lowestCentroids(spark, embeddings, nCells)
     val ds = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
     for (_ <- 0 until iters) {
-      val bC = spark.sparkContext.broadcast(cs)
-      val sums = ds.map { case (_, v) => (nearestCell(v, bC.value), v.map(_.toDouble).toArray, 1L) }
+      val bC = spark.sparkContext.broadcast(cs.map(Cosine.of))
+      val sums = ds.map { case (_, v) => val nv = Cosine.of(v); (nearestCell(nv, bC.value), nv._1, 1L) }
         .groupByKey(_._1)
         .mapGroups { (cell, it) =>
           var n = 0L
@@ -394,6 +434,63 @@ object Similarity {
     writeIvfIndex(spark, embeddings, path, cs.map(_.map(_.toFloat.toDouble)))
   }
 
+  /** Per query, the `nProbe` cells whose centroids are nearest it (cosine
+    * desc, then the lower cell), its dims checked against the centroids'. */
+  private def probedCells(spark: SparkSession, idx: IndexStore, queries: Seq[(Long, Seq[Float])],
+      nProbe: Int): Seq[Seq[Long]] = {
+    val centroids = readCentroids(spark, idx)
+    checked(queries, centroids.head._2._1.length)
+    queries.map { case (_, v) =>
+      val nv = Cosine.of(v)
+      centroids.map { case (cell, c) => (cell, Cosine(nv, c)) }
+        .sortBy { case (cell, c) => (-c, cell) }
+        .take(nProbe).map(_._1.toLong).toSeq
+    }
+  }
+
+  /** The candidate scan of a cell-partitioned `table` (IVF assignments,
+    * IVF-PQ codes): ONE `PartitionFilters`-pruned read of the union of the
+    * queries' probed `cell` partitions, rows routed by cell. */
+  private def cellScan[P: TypeTag](spark: SparkSession, idx: IndexStore, table: String, payload: String,
+      queries: Seq[(Long, Seq[Float])], nProbe: Int): Scan[P] = {
+    val cells = probedCells(spark, idx, queries, nProbe)
+    Scan(scanRows[P](idx.read(table).filter(col("cell").isin(cells.flatten.distinct: _*)), col("cell"), payload),
+      keyRoute(cells))
+  }
+
+  /** The IVF candidate scan: the probed cells of the assignment table. */
+  private[ops] def ivfScan(spark: SparkSession, idx: IndexStore, queries: Seq[(Long, Seq[Float])],
+      nProbe: Int): Scan[Seq[Float]] =
+    cellScan[Seq[Float]](spark, idx, Tables.IvfAssignments, "embedding", queries, nProbe)
+
+  /** Bulk IVF ANN: the `lshTopKManyIndexed` shape over cells — every
+    * query ranks the driver-side codebook and the UNION of all probed
+    * cells is read in ONE partition-pruned scan (`ivfScan`).
+    * `ivfTopKIndexed` is this probe at M = 1.
+    *
+    * @return (query_id, vec_id, cosine), ≤ k rows per query */
+  def ivfTopKManyIndexed(
+      spark: SparkSession,
+      indexPath: String,
+      queries: Seq[(Long, Seq[Float])], // (query vec_id — excluded from results, vector)
+      k: Int,
+      nProbe: Int = 4): DataFrame = {
+    val idx = IndexStore.open(spark, indexPath)
+    frame(spark, queries, cosineTopK(ivfScan(spark, idx, queries, nProbe), queries, k))
+  }
+
+  /** Top-k over a persisted IVF index: the query ranks the (tiny, driver-
+    * side) codebook, then reads ONLY its nProbe closest cells — a
+    * partition-pruned scan. */
+  def ivfTopKIndexed(
+      spark: SparkSession,
+      indexPath: String,
+      queryVec: Seq[Float],
+      queryId: Long,
+      k: Int,
+      nProbe: Int = 4): DataFrame =
+    atOne(queryId, queryVec)(ivfTopKManyIndexed(spark, indexPath, _, k, nProbe))
+
   // ------------------------------------------------------------------ PQ --
   //
   // Product quantization (Jégou, Douze & Schmid, "Product Quantization for
@@ -406,9 +503,9 @@ object Similarity {
   // (32× smaller than fp32 at dims=64, m=8). Queries scan ONLY the codes
   // table with ADC (asymmetric distance computation): the query builds an
   // m×nCodes lookup table of partial squared-L2 distances once, a
-  // candidate's approximate distance is m table lookups summed (pure
-  // codegen'd column arithmetic), and only the ADC shortlist is re-ranked
-  // with exact cosine against the raw table (a point-lookup read).
+  // candidate's approximate distance is m table lookups summed (`adc`),
+  // and only the ADC shortlist is re-ranked with exact cosine against the
+  // raw table (a point-lookup read).
   //
   // The codebook is DetHash-free but still deterministic: init = the
   // subvectors of the `nCodes` lowest vec_ids (engine-reproducible, so the
@@ -570,10 +667,55 @@ object Similarity {
     writePqIndex(spark, embeddings, path, book)
   }
 
-  /** Top-k over a persisted PQ index: ADC scan of the codes table (m
-    * element_at lookups into the broadcast-literal LUT, whole-stage
-    * codegen, never touching raw embeddings) → shortlist → exact cosine
-    * re-rank over just those ids against `embeddings`. */
+  /** The query's m×nCodes ADC table of partial squared-L2 distances,
+    * j-major (index j·nCodes + code). */
+  private def adcLut(book: Array[Array[Array[Double]]], qn: Array[Double]): Array[Double] = {
+    val nCodes = book(0).length
+    val subDim = qn.length / book.length
+    Array.tabulate(book.length * nCodes) { i =>
+      val (j, c) = (i / nCodes, i % nCodes)
+      sqDist(qn, j * subDim, book(j)(c))
+    }
+  }
+
+  /** THE ADC distance of a code row: the explicit left fold
+    * 0.0 + lut(code_0) + … + lut(code_{m-1}) — the q32/q33 oracles sum the
+    * same lookups in the same IEEE order. */
+  private def adc(lut: Array[Double], codes: Seq[Int], nCodes: Int): Double = {
+    var s = 0.0; var j = 0
+    while (j < codes.length) { s += lut(j * nCodes + codes(j)); j += 1 }
+    s
+  }
+
+  /** The PQ candidate scan: every code row, to every query. */
+  private[ops] def pqScan(spark: SparkSession, idx: IndexStore,
+      queries: Seq[(Long, Seq[Float])]): Scan[Seq[Int]] = {
+    val book = readPqCodebook(spark, idx)
+    checked(queries, book.length * book(0)(0).length)
+    Scan(scanRows[Seq[Int]](idx.read(Tables.PqCodes), lit(0L), "codes"), everyRow(queries.size))
+  }
+
+  /** The PQ and IVF-PQ probe over a codes scan: the kernel twice — the
+    * `shortlist` rows of least ADC distance per query (codes only, never a
+    * raw vector), then the exact-cosine top-k of each shortlist against
+    * `embeddings` (a read of just the shortlisted ids). */
+  private def pqProbe(spark: SparkSession, idx: IndexStore, codes: Scan[Seq[Int]],
+      embeddings: DataFrame, queries: Seq[(Long, Seq[Float])], k: Int,
+      shortlist: Int): DataFrame = {
+    val book = readPqCodebook(spark, idx)
+    val nCodes = book(0).length
+    val luts = queries.map { case (_, v) => adcLut(book, l2normalize(v)) }.toArray
+    val short = topKPerQuery(codes, queries.map(_._1).toArray, shortlist, byAdc) { cs =>
+      qi => adc(luts(qi), cs, nCodes)
+    }.map(_.map(_._1))
+    val rerank = Scan(scanRows[Seq[Float]](
+      embeddings.filter(col("vec_id").isin(short.flatten.distinct.toIndexedSeq: _*)), col("vec_id"), "embedding"),
+      keyRoute(short.toSeq))
+    frame(spark, queries, cosineTopK(rerank, queries, k))
+  }
+
+  /** Top-k over a persisted PQ index: ADC shortlist over the codes table,
+    * exact-cosine re-rank of the shortlist (`pqProbe`). */
   def pqTopKIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -581,66 +723,16 @@ object Similarity {
       queryVec: Seq[Float],
       queryId: Long,
       k: Int,
-      shortlist: Int = 100): DataFrame = {
-    val idx = IndexStore.open(spark, indexPath)
-    adcTopK(spark, readPqCodebook(spark, idx), idx.read(Tables.PqCodes).filter(col("vec_id") =!= queryId),
-      embeddings, queryVec, k, shortlist)
-  }
-
-  /** ADC scan of `codes` (m element_at lookups into the query's
-    * broadcast-literal LUT, whole-stage codegen) → the `shortlist` ids of
-    * least approximate distance → exact cosine re-rank against
-    * `embeddings`: the tail of the PQ and IVF-PQ probes. */
-  private def adcTopK(
-      spark: SparkSession,
-      book: Array[Array[Array[Double]]],
-      codes: DataFrame,
-      embeddings: DataFrame,
-      queryVec: Seq[Float],
-      k: Int,
-      shortlist: Int): DataFrame = {
-    import spark.implicits._
-    val m = book.length
-    val nCodes = book(0).length
-    val qn = l2normalize(queryVec)
-    val subDim = qn.length / m
-    // m×nCodes ADC table, flattened j-major (index = j*nCodes + code)
-    val lut: Seq[Double] =
-      for (j <- 0 until m; c <- 0 until nCodes) yield sqDist(qn, j * subDim, book(j)(c))
-    val lutCol = typedLit(lut)
-    // explicit left-associated chain 0.0 + x_0 + … + x_{m-1}: the oracle
-    // sums the same lookups in the same IEEE order
-    val approx = (0 until m).foldLeft(lit(0.0): Column) { (acc, j) =>
-      acc + element_at(lutCol, (col("codes").getItem(j) + lit(j * nCodes + 1)).cast("int"))
-    }
-    val ids = codes
-      .select(col("vec_id"), approx.as("adc"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select("vec_id").as[Long].collect()
-    val qd = typedLit(queryVec.map(_.toDouble))
-    embeddings.filter(col("vec_id").isin(ids.toSeq: _*))
-      .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** The `nProbe` cells whose centroids are nearest `v` (cosine desc, then
-    * the lower cell). */
-  private def probeCells(centroids: Array[(Int, Array[Double])], v: Seq[Float], nProbe: Int): Seq[Int] =
-    centroids
-      .map { case (cell, c) => (cell, cosine(v, c)) }
-      .sortBy { case (cell, c) => (-c, cell) }
-      .take(nProbe).map(_._1).toSeq
+      shortlist: Int = 100): DataFrame =
+    atOne(queryId, queryVec)(pqTopKManyIndexed(spark, indexPath, embeddings, _, k, shortlist))
 
   /** Bulk ANN: top-k for MANY query vectors in ONE ADC scan of the codes
     * table (the searchMany story for similarity search — deduping a batch
-    * of new documents against the corpus pays one scan, not M). Each
-    * partition keeps a `shortlist`-heap per query over the same code rows
-    * (the Wand.topKForPartitionMulti shape); the merged per-query
-    * shortlist is exact (top-L of the per-partition top-Ls IS the global
-    * top-L), then one broadcast join re-ranks every shortlist with exact
-    * cosine. Per-query results are identical to `pqTopKIndexed`. */
+    * of new documents against the corpus pays one scan, not M), then one
+    * exact re-rank read for every shortlist. `pqTopKIndexed` is this probe
+    * at M = 1.
+    *
+    * @return (query_id, vec_id, cosine), ≤ k rows per query */
   def pqTopKManyIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -648,57 +740,8 @@ object Similarity {
       queries: Seq[(Long, Seq[Float])], // (query vec_id — excluded from results, vector)
       k: Int,
       shortlist: Int = 100): DataFrame = {
-    import spark.implicits._
-    require(queries.nonEmpty, "pqTopKManyIndexed needs at least one query")
-    // a repeated qid would run two heaps whose duplicate rows crowd the
-    // row_number shortlist — ambiguous input, refuse instead of guessing
-    require(queries.map(_._1).distinct.size == queries.size,
-      "pqTopKManyIndexed: duplicate query ids in the batch")
     val idx = IndexStore.open(spark, indexPath)
-    val book = readPqCodebook(spark, idx)
-    val m = book.length
-    val nCodes = book(0).length
-    val luts: Array[(Long, Array[Double])] = queries.map { case (qid, v) =>
-      val qn = l2normalize(v)
-      val subDim = qn.length / m
-      val lut = new Array[Double](m * nCodes)
-      for (j <- 0 until m; c <- 0 until nCodes) lut(j * nCodes + c) = sqDist(qn, j * subDim, book(j)(c))
-      (qid, lut)
-    }.toArray
-    val bLuts = spark.sparkContext.broadcast(luts)
-    val sl = shortlist
-    val nc = nCodes
-    val cands = idx.read(Tables.PqCodes)
-      .select("vec_id", "codes").as[(Long, Seq[Int])]
-      .mapPartitions { it =>
-        val qs = bLuts.value
-        val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-        // natural max-heap: head = worst candidate (largest adc, then id)
-        val heaps = qs.map(_ => scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        it.foreach { case (vecId, codes) =>
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, lut) = qs(qi)
-            if (vecId != qid) {
-              // 0.0 + x_0 + … left fold — the single-query ADC order
-              var adc = 0.0; var j = 0
-              while (j < codes.length) { adc += lut(j * nc + codes(j)); j += 1 }
-              val h = heaps(qi)
-              if (h.size < sl) h.enqueue((adc, vecId))
-              else if (ord.lt((adc, vecId), h.head)) { h.dequeue(); h.enqueue((adc, vecId)) }
-            }
-            qi += 1
-          }
-        }
-        qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-          heaps(qi).iterator.map { case (adc, id) => (qid, id, adc) }
-        }
-      }.toDF("query_id", "vec_id", "adc")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("adc").asc, col("vec_id").asc)
-    val short = cands.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= sl).select("query_id", "vec_id")
-    bulkRerank(spark, embeddings.join(broadcast(short), Seq("vec_id")), queries, k)
+    pqProbe(spark, idx, pqScan(spark, idx, queries), embeddings, queries, k, shortlist)
   }
 
   // -------------------------------------------------------------- IVF-PQ --
@@ -720,10 +763,12 @@ object Similarity {
     val centroids = lowestCentroids(spark, embeddings, nCells)
     require(centroids.nonEmpty, "no centroids sampled")
     val book = pqInitCodebook(spark, embeddings, m, nCodes)
-    val bC = spark.sparkContext.broadcast(centroids)
+    val bC = spark.sparkContext.broadcast(centroids.map(Cosine.of))
     val bB = spark.sparkContext.broadcast(book)
     val codes = embeddings.select("vec_id", "embedding").as[(Long, Seq[Float])]
-      .map { case (id, v) => (id, pqEncode(l2normalize(v), bB.value).toSeq, nearestCell(v, bC.value)) }
+      .map { case (id, v) =>
+        (id, pqEncode(l2normalize(v), bB.value).toSeq, nearestCell(Cosine.of(v), bC.value))
+      }
       .toDF("vec_id", "codes", "cell")
     IndexStore.build(spark, path, "build_ivfpq") { idx =>
       Map(Tables.Centroids -> idx.write(centroidRows(spark, centroids), Tables.Centroids),
@@ -732,10 +777,15 @@ object Similarity {
     }
   }
 
+  /** The IVF-PQ candidate scan: the probed cells of the codes table. */
+  private[ops] def ivfPqScan(spark: SparkSession, idx: IndexStore, queries: Seq[(Long, Seq[Float])],
+      nProbe: Int): Scan[Seq[Int]] =
+    cellScan[Seq[Int]](spark, idx, Tables.IvfPqCodes, "codes", queries, nProbe)
+
   /** Top-k over a persisted IVF-PQ index: rank the driver-side centroid
     * codebook, ADC-scan ONLY the nProbe probed cell partitions of the
-    * codes table (PartitionFilters-pruned), exact-cosine re-rank the
-    * shortlist against the raw table. */
+    * codes table (`ivfPqScan`), exact-cosine re-rank the shortlist against
+    * the raw table. */
   def ivfPqTopKIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -744,60 +794,9 @@ object Similarity {
       queryId: Long,
       k: Int,
       nProbe: Int = 4,
-      shortlist: Int = 100): DataFrame = {
-    val idx = IndexStore.open(spark, indexPath)
-    val cells = probeCells(readCentroids(spark, idx), queryVec, nProbe)
-    adcTopK(spark, readPqCodebook(spark, idx),
-      idx.read(Tables.IvfPqCodes).filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId),
-      embeddings, queryVec, k, shortlist)
-  }
-
-  /** Bulk IVF ANN: the `lshTopKManyIndexed` shape over cells — every
-    * query ranks the driver-side codebook, the UNION of all probed cells
-    * is read in ONE partition-pruned scan, and a broadcast (cell →
-    * query_id) join + per-query window replaces M separate jobs.
-    * Per-query results are identical to `ivfTopKIndexed`.
-    *
-    * @return (query_id, vec_id, cosine), ≤ k rows per query */
-  def ivfTopKManyIndexed(
-      spark: SparkSession,
-      indexPath: String,
-      queries: Seq[(Long, Seq[Float])], // (query vec_id — excluded from results, vector)
-      k: Int,
-      nProbe: Int = 4): DataFrame = {
-    import spark.implicits._
-    require(queries.nonEmpty, "ivfTopKManyIndexed needs at least one query")
-    require(queries.map(_._1).distinct.size == queries.size,
-      "ivfTopKManyIndexed: duplicate query ids in the batch")
-    val idx = IndexStore.open(spark, indexPath)
-    val centroids = readCentroids(spark, idx)
-    val probePairs = queries.flatMap { case (qid, v) =>
-      probeCells(centroids, v, nProbe).map(cell => (cell, qid))
+      shortlist: Int = 100): DataFrame =
+    atOne(queryId, queryVec) { queries =>
+      val idx = IndexStore.open(spark, indexPath)
+      pqProbe(spark, idx, ivfPqScan(spark, idx, queries, nProbe), embeddings, queries, k, shortlist)
     }
-    val allCells = probePairs.map(_._1).distinct
-    val pp = spark.createDataset(probePairs).toDF("cell", "query_id")
-    bulkRerank(spark, idx.read(Tables.IvfAssignments)
-      .filter(col("cell").isin(allCells: _*))
-      .join(broadcast(pp), Seq("cell")), queries, k)
-  }
-
-  /** Top-k over a persisted IVF index: the query ranks the (tiny, driver-
-    * side) codebook, then reads ONLY its nProbe closest cells — a
-    * partition-pruned scan — and scores them with the codegen'd cosine. */
-  def ivfTopKIndexed(
-      spark: SparkSession,
-      indexPath: String,
-      queryVec: Seq[Float],
-      queryId: Long,
-      k: Int,
-      nProbe: Int = 4): DataFrame = {
-    val idx = IndexStore.open(spark, indexPath)
-    val cells = probeCells(readCentroids(spark, idx), queryVec, nProbe)
-    val qd = typedLit(queryVec.map(_.toDouble))
-    idx.read(Tables.IvfAssignments)
-      .filter(col("cell").isin(cells: _*) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), cosineCol(col("embedding"), qd).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
-  }
 }

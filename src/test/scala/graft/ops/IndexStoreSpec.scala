@@ -149,11 +149,17 @@ class IndexStoreSpec extends AnyFunSuite {
     Similarity.buildIvfPqIndex(spark, emb, ivfPq)
     Dedup.buildMinHashIndex(spark, docs.filter($"doc_id" < 150), mh)
     val batch = docs.filter($"doc_id" >= 150 && $"doc_id" < 200)
+    val qs = Seq(0L, 7L, 123L).map(id => id -> vecs(id.toInt)._2)
     val probes = Seq[(String, () => Any)](
       "lsh" -> (() => Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10).collect()),
       "ivf" -> (() => Similarity.ivfTopKIndexed(spark, ivf, q, 0L, 10).collect()),
       "pq" -> (() => Similarity.pqTopKIndexed(spark, pq, emb, q, 0L, 10).collect()),
       "ivfpq" -> (() => Similarity.ivfPqTopKIndexed(spark, ivfPq, emb, q, 0L, 10).collect()),
+      "lsh bulk" -> (() => Similarity.lshTopKManyIndexed(spark, lsh, qs, 10).collect()),
+      "ivf bulk" -> (() => Similarity.ivfTopKManyIndexed(spark, ivf, qs, 10).collect()),
+      "pq bulk" -> (() => Similarity.pqTopKManyIndexed(spark, pq, emb, qs, 10).collect()),
+      "lsh one-shot" -> (() => Similarity.lshTopK(spark, emb, 0L, 10).collect()),
+      "brute" -> (() => Similarity.bruteForceTopK(emb, 0L, 10).collect()),
       "minhash" -> (() => Dedup.minHashDedupBatch(spark, mh, batch).collect()))
 
     val sc = spark.sparkContext
@@ -178,9 +184,12 @@ class IndexStoreSpec extends AnyFunSuite {
       assert(open.forall(_ == 0), s"opening an index ran jobs: $open")
       val warm = probes.map { case (name, probe) => probe(); name -> count(probe()) }
       info(s"warm probe jobs: ${warm.mkString(", ")}")
-      // one scan per probe (pq/ivfpq: plus the shortlist re-rank)
-      assert(warm.toMap == Map("lsh" -> 1, "ivf" -> 1, "pq" -> 2, "ivfpq" -> 2, "minhash" -> 15),
-        s"warm probe jobs $warm")
+      // one kernel job per probe, single or bulk (pq/ivfpq: plus the
+      // shortlist re-rank); the one-shot LSH also reads the table's dims and
+      // the query vector
+      assert(warm.toMap == Map("lsh" -> 1, "ivf" -> 1, "pq" -> 2, "ivfpq" -> 2,
+        "lsh bulk" -> 1, "ivf bulk" -> 1, "pq bulk" -> 2, "lsh one-shot" -> 3, "brute" -> 1,
+        "minhash" -> 15), s"warm probe jobs $warm")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -143,10 +143,9 @@ class OpsSpec extends AnyFunSuite {
     val all = emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
     val q = all.find(_._1 == 0L).get._2
     val want = all.filter(_._1 != 0L)
-      .map { case (id, v) => (id, Similarity.cosine(v, q.map(_.toDouble).toArray)) }
+      .map { case (id, v) => (id, Cosine(Cosine.of(v), Cosine.of(q))) }
       .sortBy { case (id, c) => (-c, id) }.take(10)
-    assert(got.map(_._1).toSeq == want.map(_._1).toSeq)
-    got.zip(want).foreach { case ((_, g), (_, w)) => assert(math.abs(g - w) < 1e-12) }
+    assert(got.toSeq == want.toSeq)
   }
 
   private def clusteredVecs = {
@@ -174,20 +173,18 @@ class OpsSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("ivf_idx").toString
     Similarity.buildIvfIndex(spark, emb, idx, nCells = 16)
     val q = clusteredVecs.find(_._1 == 0L).get._2
-    val probe = Similarity.ivfTopKIndexed(spark, idx, q, 0L, 10, nProbe = 6)
-    // the probe must be a partition-pruned read of the persisted table —
-    // the index-once/query-many contract (VERDICT r2 item 1)
-    val plan = probe.queryExecution.executedPlan.toString
+    // the probe's own scan must be a partition-pruned read of the
+    // persisted table — the index-once/query-many contract (VERDICT r2 item 1)
+    val plan = Similarity.ivfScan(spark, IndexStore.open(spark, idx), Seq(0L -> q), nProbe = 6)
+      .rows.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
       s"expected partition filters on cell in:\n$plan")
-    val ivf = probe.as[(Long, Double)].collect()
+    val ivf = Similarity.ivfTopKIndexed(spark, idx, q, 0L, 10, nProbe = 6).as[(Long, Double)].collect()
     val brute = Similarity.bruteForceTopK(emb, 0L, 10).as[(Long, Double)].collect()
     val recall = (brute.map(_._1).toSet intersect ivf.map(_._1).toSet).size.toDouble / brute.length
     assert(recall >= 0.7, s"recall $recall")
     val exact = brute.toMap
-    ivf.foreach { case (id, c) =>
-      exact.get(id).foreach(e => assert(math.abs(c - e) < 1e-12))
-    }
+    ivf.foreach { case (id, c) => exact.get(id).foreach(e => assert(c == e)) }
   }
 
   test("IVF ANN: k-means-trained codebook tightens recall at the same nProbe") {
@@ -211,12 +208,13 @@ class OpsSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("lsh_idx").toString
     Similarity.buildLshIndex(spark, emb, idx)
     val q = clusteredVecs.find(_._1 == 0L).get._2
-    val probe = Similarity.lshTopKIndexed(spark, idx, q, 0L, 10, probeHamming = 2)
-    val plan = probe.queryExecution.executedPlan.toString
+    val plan = Similarity.lshScan(IndexStore.open(spark, idx), Seq(0L -> q), probeHamming = 2)
+      .rows.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: ["),
       s"expected partition filters in:\n$plan")
     // indexed path ≡ one-shot path (same planes, same probes, same scores)
-    val indexed = probe.as[(Long, Double)].collect().toSeq
+    val indexed = Similarity.lshTopKIndexed(spark, idx, q, 0L, 10, probeHamming = 2)
+      .as[(Long, Double)].collect().toSeq
     val oneShot = Similarity.lshTopK(spark, emb, 0L, 10, probeHamming = 2)
       .as[(Long, Double)].collect().toSeq
     assert(indexed == oneShot)
@@ -242,9 +240,7 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.7, s"PQ recall $recall")
     // the re-rank is EXACT cosine: any overlap with brute force must agree
     val exact = brute.toMap
-    pq.foreach { case (id, c) =>
-      exact.get(id).foreach(e => assert(math.abs(c - e) < 1e-12))
-    }
+    pq.foreach { case (id, c) => exact.get(id).foreach(e => assert(c == e)) }
   }
 
   test("IVF-PQ ANN: partition-pruned ADC scan, good recall, exact re-rank") {
@@ -260,14 +256,10 @@ class OpsSpec extends AnyFunSuite {
     val recall = (brute.map(_._1).toSet intersect got.map(_._1).toSet).size.toDouble / brute.length
     assert(recall >= 0.7, s"IVF-PQ recall $recall")
     val exact = brute.toMap
-    got.foreach { case (id, c) =>
-      exact.get(id).foreach(e => assert(math.abs(c - e) < 1e-12))
-    }
-    // the ADC scan must be a partition-pruned read of the codes table
-    import org.apache.spark.sql.functions.col
-    val scan = IndexStore.open(spark, idx).read(Tables.IvfPqCodes)
-      .filter(col("cell").isin(0, 1) && col("vec_id") =!= 0L)
-    val plan = scan.queryExecution.executedPlan.toString
+    got.foreach { case (id, c) => exact.get(id).foreach(e => assert(c == e)) }
+    // the probe's ADC scan must be a partition-pruned read of the codes table
+    val plan = Similarity.ivfPqScan(spark, IndexStore.open(spark, idx), Seq(0L -> q), nProbe = 6)
+      .rows.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("cell"),
       s"expected partition filters on cell in:\n$plan")
   }
@@ -315,8 +307,8 @@ class OpsSpec extends AnyFunSuite {
     }
     // one scan: the union of probe buckets reaches the parquet source as
     // partition + data filters (pruned, not a corpus scan)
-    val plan = Similarity.lshTopKManyIndexed(spark, lsh, qs, k = 10)
-      .queryExecution.executedPlan.toString
+    val plan = Similarity.lshScan(IndexStore.open(spark, lsh), qs, probeHamming = 2)
+      .rows.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") && plan.contains("part"),
       s"expected partition filters in:\n$plan")
 
@@ -328,6 +320,82 @@ class OpsSpec extends AnyFunSuite {
       val single = Similarity.ivfTopKIndexed(spark, ivf, v, qid, 10, nProbe = 6)
         .as[(Long, Double)].collect().toVector
       assert(ivfBulk.getOrElse(qid, Vector.empty) == single, s"ivf query $qid")
+    }
+  }
+
+  test("zero-norm vectors score cosine 0.0 on every probe and in the embedding dedup") {
+    import spark.implicits._
+    val zero = Seq.fill(16)(0f)
+    // vec 3 is stored as the zero vector (it is also an IVF centroid and a PQ seed)
+    val vecs = clusteredVecs.map { case (id, v) => (id, if (id == 3L) zero else v) }
+    val emb = spark.createDataset(vecs).toDF("vec_id", "embedding")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (lsh, ivf, pq, ivfPq) = (tmp("lsh_zero"), tmp("ivf_zero"), tmp("pq_zero"), tmp("ivfpq_zero"))
+    Similarity.buildLshIndex(spark, emb, lsh, planesOpt = Some(4))
+    Similarity.buildIvfIndex(spark, emb, ivf, nCells = 16)
+    Similarity.buildPqIndex(spark, emb, pq, m = 8, nCodes = 16)
+    Similarity.buildIvfPqIndex(spark, emb, ivfPq, nCells = 16, m = 8, nCodes = 16)
+    // k, hamming radius, nProbe and shortlist that reach every stored row
+    val n = vecs.size
+    def rows(df: DataFrame) = df.as[(Long, Double)].collect().toSeq
+    def ofQuery(df: DataFrame, qid: Long) = rows(df.filter($"query_id" === qid).drop("query_id"))
+    // the zero query (an id outside the table) and vec 0 in one batch
+    val qs = Seq(-1L -> zero, 0L -> vecs.head._2)
+    val lshBulk = Similarity.lshTopKManyIndexed(spark, lsh, qs, n, probeHamming = 4)
+    val ivfBulk = Similarity.ivfTopKManyIndexed(spark, ivf, qs, n, nProbe = 16)
+    val pqBulk = Similarity.pqTopKManyIndexed(spark, pq, emb, qs, n, shortlist = n)
+    def probes(qid: Long, v: Seq[Float]) = Map(
+      "lsh" -> rows(Similarity.lshTopKIndexed(spark, lsh, v, qid, n, probeHamming = 4)),
+      "ivf" -> rows(Similarity.ivfTopKIndexed(spark, ivf, v, qid, n, nProbe = 16)),
+      "pq" -> rows(Similarity.pqTopKIndexed(spark, pq, emb, v, qid, n, shortlist = n)),
+      "ivfpq" -> rows(Similarity.ivfPqTopKIndexed(spark, ivfPq, emb, v, qid, n,
+        nProbe = 16, shortlist = n)),
+      "lsh bulk" -> ofQuery(lshBulk, qid),
+      "ivf bulk" -> ofQuery(ivfBulk, qid),
+      "pq bulk" -> ofQuery(pqBulk, qid))
+    // a zero query scores every row 0.0, so the top-k is the lowest ids
+    val allZero = (0L until n.toLong).map(_ -> 0.0)
+    probes(-1L, zero).foreach { case (name, got) => assert(got == allZero, s"zero query, $name") }
+    assert(rows(Similarity.bruteForceTopK(emb, 3L, n)) == allZero.filter(_._1 != 3L))
+    assert(rows(Similarity.lshTopK(spark, emb, 3L, n, planesOpt = Some(4), probeHamming = 4)) ==
+      allZero.filter(_._1 != 3L))
+    // the stored zero vector scores 0.0 against vec 0 on every probe
+    val exact = rows(Similarity.bruteForceTopK(emb, 0L, n))
+    assert(exact.contains(3L -> 0.0))
+    assert(rows(Similarity.lshTopK(spark, emb, 0L, n, planesOpt = Some(4), probeHamming = 4)) == exact)
+    probes(0L, vecs.head._2).foreach { case (name, got) => assert(got == exact, s"vec 0, $name") }
+    // the dedup: a pair with the zero vector scores 0.0, kept at a threshold ≤ 0
+    val few = emb.filter($"vec_id" < 40)
+    def withZero(pairs: Seq[(Long, Long, Double)]) = pairs.filter(p => p._1 == 3L || p._2 == 3L)
+    val exactPairs = withZero(both(Dedup.embeddingNearDupExact(few, threshold = 0.0)
+      .as[(Long, Long, Double)].collect().toSeq))
+    assert(exactPairs.map(p => p._1 + p._2 - 3L) == (0L until 40L).filter(_ != 3L))
+    assert(exactPairs.forall(_._3 == 0.0))
+    val bucketPairs = withZero(both(Dedup.embeddingNearDup(spark, few, planesOpt = Some(1), threshold = 0.0)
+      .as[(Long, Long, Double)].collect().toSeq))
+    assert(bucketPairs.nonEmpty && bucketPairs.forall(_._3 == 0.0))
+  }
+
+  test("ANN probes refuse a query of the wrong dims, naming both dims") {
+    import spark.implicits._
+    val emb = spark.createDataset(clusteredVecs).toDF("vec_id", "embedding")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (lsh, ivf, pq, ivfPq) = (tmp("lsh_dims"), tmp("ivf_dims"), tmp("pq_dims"), tmp("ivfpq_dims"))
+    Similarity.buildLshIndex(spark, emb, lsh)
+    Similarity.buildIvfIndex(spark, emb, ivf, nCells = 16)
+    Similarity.buildPqIndex(spark, emb, pq, m = 8, nCodes = 16)
+    Similarity.buildIvfPqIndex(spark, emb, ivfPq, nCells = 16, m = 8, nCodes = 16)
+    val probes = Seq[(String, Seq[Float] => Any)](
+      "lsh" -> (v => Similarity.lshTopKIndexed(spark, lsh, v, -1L, 5)),
+      "lsh bulk" -> (v => Similarity.lshTopKManyIndexed(spark, lsh, Seq(-1L -> v), 5)),
+      "ivf" -> (v => Similarity.ivfTopKIndexed(spark, ivf, v, -1L, 5)),
+      "ivf bulk" -> (v => Similarity.ivfTopKManyIndexed(spark, ivf, Seq(-1L -> v), 5)),
+      "pq" -> (v => Similarity.pqTopKIndexed(spark, pq, emb, v, -1L, 5)),
+      "pq bulk" -> (v => Similarity.pqTopKManyIndexed(spark, pq, emb, Seq(-1L -> v), 5)),
+      "ivfpq" -> (v => Similarity.ivfPqTopKIndexed(spark, ivfPq, emb, v, -1L, 5)))
+    for ((name, probe) <- probes; dims <- Seq(15, 17)) {
+      val e = intercept[IllegalArgumentException](probe(Seq.fill(dims)(1f)))
+      assert(e.getMessage.contains(s"dims $dims != index dims 16"), s"$name: ${e.getMessage}")
     }
   }
 
