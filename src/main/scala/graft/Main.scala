@@ -30,7 +30,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
-      System.err.println("usage: graft.Main <gen|build|ingest|search|searchmany|searchauto|delete|compact|clear> [--flags]")
+      System.err.println("usage: graft.Main <gen|build|ingest|search|searchmany|searchauto|delete|compact|clear> [--flags]\n" +
+        "  searchmany --warehouse W --queries Q1,Q2,...  bare terms or quoted phrases: one WAND scan, one phrase fold")
       sys.exit(2)
     }
     val builder = SparkSession.builder()
@@ -102,13 +103,14 @@ object Main {
         }
 
       case "searchmany" =>
-        // bulk scoring: comma-separated bare terms, ONE distributed plan
+        // bulk scoring: comma-separated single-atom queries (bare terms or
+        // quoted phrases), one WAND scan for the terms, one fold for the phrases
         val qs = arg(args, "queries")
-          .getOrElse(sys.error("--queries required (comma-separated terms)"))
+          .getOrElse(sys.error("--queries required (comma-separated terms or quoted phrases)"))
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         val accuracy = arg(args, "accuracy").map(_.toDouble).getOrElse(0.0)
         val engine = new SparkSearchEngine(spark, io, params)
-        engine.searchManyTerms(qs, params.topK, accuracy)
+        engine.searchMany(qs, params.topK, accuracy)
           .orderBy($"query", $"score".desc, $"docId".asc)
           .collect()
           .foreach(r => println(

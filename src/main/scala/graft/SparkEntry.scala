@@ -427,11 +427,11 @@ object SparkEntry {
       transcriptEngine(s, dir).searchFrame("(\"blue whale\" OR \"query engine\") NOT \"red fish\""))),
     "q22_bm25_mixed" -> ((s, dir) => scoreE9(
       transcriptEngine(s, dir).searchFrame("\"blue whale\" whale engine"))),
-    // bulk multi-query scoring: 4 term queries in ONE distributed plan
-    // (one term-pruned scan + salted two-phase top-k) — the shape a
+    // bulk multi-query scoring: 4 term queries in ONE block-max WAND scan
+    // (per-partition top-k per term, merged on the driver) — the shape a
     // training pipeline re-scoring thousands of filter queries needs
     "q31_bulk_term_search" -> ((s, dir) =>
-      transcriptEngine(s, dir).searchManyTerms(bulkTerms.map(_._1))
+      transcriptEngine(s, dir).searchMany(bulkTerms.map(_._1))
         .select(col("query"), col("docId"), col("conv_id"), col("turn_idx"),
           round(col("score") * 1e9).cast("long").as("score_e9"))),
     // bulk MIXED atoms: bare terms and quoted phrases in the same single

@@ -30,10 +30,12 @@ import graft.text.TextPipeline
   *    kernel per partition (`topKDense`).
   * All three score with `Bm25` in the same IEEE operation order, end in
   * one top-k tail and are bit-identical to `RefOracle` (EngineSpec). The
-  * bulk entry points
-  * (`searchManyTerms`, `searchMany`, `searchManyAuto`) share operand
-  * fetches across a batch. A call that caches a frame unpersists it
-  * before it returns.
+  * bulk entry points run the same code over a batch: `searchMany`'s terms
+  * are the WAND of `termTopKWand` at M keys (`wandTopK`), its phrases one
+  * fold ranked by the per-query heap kernel `TopK.topKPerQuery`, and
+  * `searchManyAuto` runs `topKDriver`'s fetches and kernel over every
+  * query's atoms at once. A call that caches a frame unpersists it before
+  * it returns.
   *
   * An engine is one version of the warehouse's commit log: stats and the
   * tombstone count come from the log, and the never-cached `postings`,
@@ -177,21 +179,26 @@ final class SparkSearchEngine(
     (rows, tooBig)
   }
 
-  /** Rows of every phrase from ONE `phraseFold`; None when a phrase
-    * matches more than `driverAlgebraMaxDocs` docs. The collect stops at
-    * phrases·max + 1 rows: reaching that quota means some phrase is over
-    * (pigeonhole); below it the per-phrase counts decide exactly. */
-  private def fetchPhrases(phrases: Seq[Vector[String]]): Option[Map[Vector[String], Rows]] =
-    if (phrases.isEmpty) Some(Map.empty)
+  /** Rows of every phrase from ONE uncached `phraseFold` collect, in the
+    * shape of `fetchTerms`: phrases matching more than
+    * `driverAlgebraMaxDocs` docs are returned in the set, not fetched. The
+    * collect stops at phrases·max + 1 rows: below that quota the
+    * per-phrase counts are exact; reaching it means some phrase is over
+    * (pigeonhole) without saying which, so every phrase counts as over. */
+  private def fetchPhrases(phrases: Seq[Vector[String]]): (Map[Vector[String], Rows], Set[Vector[String]]) = {
+    val ps = phrases.distinct
+    val max = params.driverAlgebraMaxDocs
+    val quota = math.min(ps.length.toLong * max + 1, Int.MaxValue.toLong).toInt
+    val rows =
+      if (ps.isEmpty) Array.empty[(Int, Long, Int, Int)]
+      else phraseFold(ps).limit(quota).as[(Int, Long, Int, Int)].collect()
+    if (rows.length >= quota) (Map.empty, ps.toSet)
     else {
-      val ps = phrases.distinct
-      val max = params.driverAlgebraMaxDocs
-      val quota = math.min(ps.length.toLong * max + 1, Int.MaxValue.toLong).toInt
-      val rows = phraseFold(ps).limit(quota).as[(Int, Long, Int, Int)].collect()
-      val byPhrase = rows.groupBy(_._1)
-      if (rows.length >= quota || byPhrase.exists(_._2.length > max)) None
-      else Some(byPhrase.map { case (i, rs) => ps(i) -> rs.map(r => (r._2, r._3, r._4)) })
+      val byPhrase = rows.groupBy(_._1).map { case (i, rs) => ps(i) -> rs.map(r => (r._2, r._3, r._4)) }
+      val tooBig = byPhrase.collect { case (p, rs) if rs.length > max => p }.toSet
+      (byPhrase -- tooBig, tooBig)
     }
+  }
 
   /** The phrase positional fold, for many phrases at once: ONE shuffle on
     * docId over `stemPostings(phrases)`,
@@ -246,6 +253,12 @@ final class SparkSearchEngine(
     if (present.size <= 10000) dict.select($"docId").filter(!$"docId".isin(present: _*))
     else dict.select($"docId").join(spark.createDataset(present).toDF("docId"), Seq("docId"), "left_anti")
 
+  /** A query's expression tree and the atoms it indexes. */
+  private def parse(query: String): (DenseEval.QNode, IndexedSeq[DenseEval.Atom]) = {
+    val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
+    (QueryEvaluator.evaluate(query, ast, params), ast.atomList)
+  }
+
   private def kernel(root: DenseEval.QNode, nAtoms: Int): DenseEval.Kernel =
     new DenseEval.Kernel(root, nAtoms, stats.total_docs, params.k1, params.b, stats.avg_doc_len)
 
@@ -284,13 +297,13 @@ final class SparkSearchEngine(
     * on its live df, every phrase atom in one `phraseFold` (one docId
     * shuffle); the kernel then runs in-process. */
   def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] = {
-    val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
-    val root = QueryEvaluator.evaluate(query, ast, params)
-    val atoms = ast.atomList
+    val (root, atoms) = parse(query)
     val (termRows, bigTerms) = fetchTerms(atoms.collect { case Left(t) => t })
     if (bigTerms.nonEmpty) None
-    else fetchPhrases(atoms.collect { case Right(st) => st }).flatMap { phraseRows =>
-      driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k)
+    else {
+      val (phraseRows, bigPhrases) = fetchPhrases(atoms.collect { case Right(st) => st })
+      if (bigPhrases.nonEmpty) None
+      else driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k)
     }
   }
 
@@ -316,9 +329,7 @@ final class SparkSearchEngine(
     * two routes agree bit for bit; both equal WAND and `RefOracle`
     * (EngineSpec). */
   def topKDense(query: String, accuracy: Double, k: Int): Vector[(Long, Double)] = {
-    val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
-    val root = QueryEvaluator.evaluate(query, ast, params)
-    val atoms = ast.atomList
+    val (root, atoms) = parse(query)
     val termAtoms = atoms.zipWithIndex.collect { case (Left(t), i) => (t, i) }
     val phraseAtoms = atoms.zipWithIndex.collect { case (Right(st), i) => (st, i) }
 
@@ -383,35 +394,60 @@ final class SparkSearchEngine(
     } finally { aligned.unpersist(false); () }
   }
 
-  /** Block-max WAND top-k for a single bare term — rank- and
-    * score-identical to the exhaustive path (same IEEE operation order;
-    * the normalization max IS the top-1 score), but reads the compressed
-    * block index and stops decoding once a block's upper bound can no
-    * longer enter the top-k. The 10^12-doc fast path for the most common
-    * query shape. */
-  def termTopKWand(rawTerm: String, accuracy: Double = 0.0, k: Int = params.topK): Vector[(Long, Double)] = {
-    val key = if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
-    val raw: Vector[(Long, Double)] = liveDf(Seq(key)).get(key).filter(_ > 0L) match {
-      case None => Vector.empty
-      case Some(df) =>
-        val idf = Bm25.idf(stats.total_docs.toDouble, df.toDouble)
-        val p = params; val st = stats
-        val delFn = deletedFn
-        val cands = blocks.filter($"term" === key).as[graft.model.IndexBlock]
-          .mapPartitions(it => Wand.topKForPartition(it, idf, k, p, st, delFn))
-          .collect()
-        Wand.mergeTopK(cands.toIndexedSeq, k)
-    }
-    val mx = raw.headOption.map(_._2).getOrElse(0.0)
-    // single-operand stackCombine (ProcessQuery :152-154,183-203): the
-    // final score is TFW·normalize(x) + EMW·x — not an IEEE no-op, so it
-    // must be applied here too for bit-identity with the algebra path;
-    // absent docs hold 0 (the driver tail's dense zero-fill)
+  /** The final score of a doc under a single-atom query, from its raw
+    * BM25 `s` and the atom's max `mx`: the single-operand stackCombine
+    * (ProcessQuery :152-154,183-203), TFW·normalize(x) + EMW·x with x
+    * max-normalized — not an IEEE no-op, so every single-atom path applies
+    * this one scalar; the kernel's NAdd(NNorm(x), x) gives the same bits
+    * (x's max is exactly 1.0). A plain value: closures may capture it. */
+  private val atomScore: (Double, Double) => Double = {
     val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
-    topKTail(raw.iterator.map { case (d, s) =>
-      val n = if (mx > 0) s / mx else s
-      d -> (tfw * n + emw * n)
-    }, 0.0, accuracy, k, absentFrom(raw.map(_._1)))
+    (s, mx) => { val n = if (mx > 0) s / mx else s; tfw * n + emw * n }
+  }
+
+  /** The WAND candidate scan: ONE pruned scan of the compressed BLOCKS
+    * table (never the flat postings) for every key of `idf`, each
+    * partition running the block-max pruned kernel per key and emitting
+    * ≤ k (key, docId, raw BM25) rows per key — ≤ blocks partitions·k rows
+    * per key reach the driver, so no key (a stop word's 10^9 postings
+    * included) concentrates on one task and no shuffle runs. */
+  private[graft] def wandScan(idf: Map[String, Double], k: Int): Dataset[(String, Long, Double)] = {
+    val p = params; val st = stats
+    val delFn = deletedFn
+    blocks.filter($"term".isin(idf.keys.toSeq: _*)).as[graft.model.IndexBlock]
+      .mapPartitions(it => Wand.topKForPartitionMulti(it, idf, k, p, st, delFn))
+  }
+
+  /** Block-max WAND top-k of every bare-term key: one `liveDf` job, then
+    * one `wandScan` over the keys with live docs (no job for none), merged
+    * per key on the driver (`Wand.mergeTopK`) and scored with `atomScore`
+    * — rank- and score-identical to the exhaustive path (same IEEE order;
+    * the normalization max IS the top-1 score). Keys with no live doc are
+    * absent from the map.
+    *
+    * @return per key, its ≤ k (docId, score), in raw-score order */
+  private def wandTopK(keys: Seq[String], k: Int): Map[String, Vector[(Long, Double)]] = {
+    val n = stats.total_docs.toDouble
+    val idf = liveDf(keys).collect { case (t, df) if df > 0 => t -> Bm25.idf(n, df.toDouble) }
+    if (idf.isEmpty) Map.empty
+    else wandScan(idf, k).collect().groupBy(_._1).map { case (t, rs) =>
+      val top = Wand.mergeTopK(rs.toIndexedSeq.map(r => (r._2, r._3)), k)
+      val mx = top.head._2
+      t -> top.map { case (d, s) => d -> atomScore(s, mx) }
+    }
+  }
+
+  /** A bare term's lookup key (the algebra's term atom). */
+  private def termKey(rawTerm: String): String =
+    if (params.stemBareTerms) TextPipeline.term(rawTerm) else rawTerm
+
+  /** Block-max WAND top-k for a single bare term: `wandTopK` at M = 1,
+    * then the shared tail — absent docs hold 0 (the dense zero-fill). The
+    * 10^12-doc fast path for the most common query shape. */
+  def termTopKWand(rawTerm: String, accuracy: Double = 0.0, k: Int = params.topK): Vector[(Long, Double)] = {
+    val key = termKey(rawTerm)
+    val top = wandTopK(Seq(key), k).getOrElse(key, Vector.empty)
+    topKTail(top.iterator, 0.0, accuracy, k, absentFrom(top.map(_._1)))
   }
 
   /** Single bare term (no quotes, no operators) → WAND-routable. */
@@ -461,80 +497,91 @@ final class SparkSearchEngine(
     }
   }
 
-  /** Bulk multi-query scoring: the top-k of MANY bare-term queries in one
-    * distributed plan. The single-query paths cost ≥ one Spark job each —
-    * fine interactively, but a training-data pipeline re-scoring thousands
-    * of filter queries pays that scheduling overhead per query. Every
-    * term runs the block-max WAND kernel inside ONE pruned scan of the
-    * compressed blocks table (termAtomFrame — pruning, not just batching:
-    * full-scoring head terms measured slower than per-query WAND), and
-    * the per-query top-k is a SALTED two-phase window — partial top-k per
-    * (query, salt), then final top-k over ≤ salts·k survivors — so a
-    * stop-word term with 10^9 postings still never concentrates on a
-    * single partition.
-    *
-    * Results are bit-identical to the single-query paths (same WAND
-    * kernel, same IEEE order everywhere after it): asserted against WAND
-    * in EngineSpec. Semantics: per query, the top-k MATCHING docs (score
-    * desc, docId asc) after the accuracy filter. The single-query paths'
-    * dense zero-fill of sub-k result sets (a reference presentation
-    * quirk) is deliberately not replicated — absent docs score 0 and a
-    * bulk filtering pipeline wants matches, not padding; with
-    * accuracy > 0 the single-query paths agree exactly.
+  /** Bulk scoring for single-ATOM queries — a bare term or a quoted
+    * phrase — as the single-query code run over the batch. A single-query
+    * path costs ≥ one Spark job per query; a training-data pipeline
+    * re-scoring thousands of filter queries pays that per query, here per
+    * shape:
+    *   - every term is `wandTopK` over all the batch's keys: one live-df
+    *     job and one pruned block scan (pruning, not just batching:
+    *     full-scoring 64 head terms at 10M docs measured slower than 64
+    *     WAND round-trips);
+    *   - every phrase is one `phraseFold` (one docId shuffle over the union
+    *     of their stems) ranked by `phraseTopK`.
+    * Per-query results are bit-identical to the single-query paths by
+    * construction (the same kernels and `atomScore`; q20's single-phrase
+    * fold has the same combine as a bare term, no PHRASE_BOOST outside
+    * mixed queries); EngineSpec asserts it. Semantics: per query, the
+    * top-k MATCHING docs (score desc, docId asc) after the accuracy
+    * filter. The single-query paths' dense zero-fill of sub-k result sets
+    * (a reference presentation quirk) is deliberately not replicated —
+    * absent docs score 0 and a bulk filtering pipeline wants matches, not
+    * padding; with accuracy > 0 the single-query paths agree exactly.
+    * The scoring runs eagerly; the returned frame only attaches the
+    * dictionary.
     *
     * @return (query, docId, conv_id, turn_idx, score), k rows max per query
     */
-  def searchManyTerms(
-      queries: Seq[String],
-      k: Int = params.topK,
-      accuracy: Double = 0.0): DataFrame = {
-    require(queries.nonEmpty, "searchManyTerms needs at least one query")
-    val keyed = queries.distinct
-      .map(q => (q, if (params.stemBareTerms) TextPipeline.term(q) else q))
-    withDict(bulkTopK(termAtomFrame(keyed, k), k, accuracy))
-  }
-
-  /** Bulk scoring for single-ATOM queries of either shape — a bare term
-    * OR a quoted phrase — through the same bulk tail as `searchManyTerms`.
-    * Terms ride the WAND block scan; all phrases share ONE `phraseFold`
-    * (one docId shuffle over the union of their stems). Per-query results
-    * are bit-identical to the single-query evaluator (q20's single-phrase
-    * fold is tfw·normalize(x) + emw·x with x already max-normalized — the
-    * same combine as a bare term, no PHRASE_BOOST outside mixed queries).
-    * The scoring runs eagerly, so the fold's cache is released before
-    * this returns; the returned frame only attaches the dictionary. */
   def searchMany(
       queries: Seq[String],
       k: Int = params.topK,
       accuracy: Double = 0.0): DataFrame = {
     require(queries.nonEmpty, "searchMany needs at least one query")
-    val atoms = queries.distinct.map { q =>
+    val atoms: Seq[(String, DenseEval.Atom)] = queries.distinct.map { q =>
       QueryLexer.lex(q) match {
         case Vector(QueryLexer.QTerm(t)) =>
-          q -> Left(if (params.stemBareTerms) TextPipeline.term(t) else t)
+          q -> Left(termKey(t))
         case Vector(QueryLexer.QPhrase(p)) =>
           q -> Right(TextPipeline.tokenizeQuery(p))
         case _ => sys.error(
           s"searchMany supports single-atom queries (bare term or quoted phrase); " +
             s"route '$q' through searchFrame/topKAuto")
       }
-    }
-    val termAtoms = atoms.collect { case (q, Left(t)) => (q, t) }
-    val phraseAtoms = atoms.collect { case (q, Right(st)) if st.nonEmpty => (q, st) }
-    require(termAtoms.nonEmpty || phraseAtoms.nonEmpty,
-      "no evaluable atoms (all phrases tokenized to nothing)")
-    val phrases = phraseAtoms.map(_._2).distinct
-    // read by the df aggregate and twice by the bulk tail: fold once
-    val folded = if (phrases.isEmpty) None else Some(phraseFold(phrases).cache())
-    try {
-      val frames =
-        (if (termAtoms.nonEmpty) Seq(termAtomFrame(termAtoms, k)) else Nil) ++
-          folded.map(phraseAtomFrame(_, phrases, phraseAtoms))
-      val top = bulkTopK(frames.reduce(_ union _), k, accuracy)
-        .as[(String, Long, Double)].collect()
-      withDict(spark.createDataset(top.toSeq).toDF("query", "docId", "score"))
-    } finally folded.foreach(_.unpersist(false))
+    }.filter(_._2.fold(_ => true, _.nonEmpty))
+    require(atoms.nonEmpty, "no evaluable atoms (all phrases tokenized to nothing)")
+    val byTerm = wandTopK(atoms.collect { case (_, Left(t)) => t }.distinct, k)
+    val byPhrase = phraseTopK(atoms.collect { case (_, Right(st)) => st }.distinct, k)
+    val rows = for {
+      (q, atom) <- atoms
+      (d, s) <- atom.fold(byTerm.get, byPhrase.get).getOrElse(Seq.empty) if s >= accuracy
+    } yield (q, d, s)
+    withDict(spark.createDataset(rows).toDF("query", "docId", "score"))
   }
+
+  /** The top-k of every phrase (none → no job): ONE cached `phraseFold`,
+    * read by two passes.
+    *   1. the kernel's atom pass (`DenseEval.Kernel.atomConstants`, the
+    *      arithmetic of every boolean route) → per phrase its idf and max;
+    *   2. `TopK.topKPerQuery` with one k-heap per phrase ordered by the
+    *      FINAL score `atomScore(idf·tfPart, max)`, (score desc, docId
+    *      asc), the order the single path ranks by — ≤ shuffle
+    *      partitions·k rows per phrase reach the driver.
+    * No block-max bound exists for phrase tf, so phrases score every
+    * folded doc (as the single-query path does). The fold's cache is
+    * released before this returns.
+    *
+    * @return per phrase with a match, its ≤ k (docId, score) */
+  private def phraseTopK(phrases: Seq[Vector[String]], k: Int): Map[Vector[String], Seq[(Long, Double)]] =
+    if (phrases.isEmpty) Map.empty
+    else {
+      val folded = phraseFold(phrases).as[(Int, Long, Int, Int)].cache()
+      try {
+        val (idf, mx) = kernel(DenseEval.NEmpty, phrases.length).atomConstants(pass =>
+          folded.mapPartitions(it =>
+            Iterator.single(pass(it.map { case (i, d, tf, dl) => (d, Array((i, tf, dl))) })))
+            .collect().toSeq)
+        val k1 = params.k1; val b = params.b; val avgdl = stats.avg_doc_len
+        val score = atomScore
+        val routes = Array.tabulate(phrases.length)(Array(_))
+        val scan = TopK.Scan(folded.map { case (i, d, tf, dl) => (d, i.toLong, (tf, dl)) },
+          i => routes(i.toInt))
+        val top = TopK.topKPerQuery(scan, phrases.length, k, TopK.ScoreDesc) { case (tf, dl) =>
+          val tp = Bm25.tfPart(tf.toDouble, dl.toDouble, k1, b, avgdl)
+          i => score(idf(i) * tp, mx(i))
+        }
+        phrases.zip(top).filter(_._2.nonEmpty).toMap
+      } finally { folded.unpersist(false); () }
+    }
 
   /** Bulk evaluation of ARBITRARY queries — boolean, NOT, brackets and
     * mixed term+phrase shapes included — with the distributed operand
@@ -545,9 +592,11 @@ final class SparkSearchEngine(
     * prefetched rows (`driverTopK`, the `DenseEval` kernel in-process —
     * the same code the single-query driver path runs, so results are
     * bit-identical to `topKAuto` by construction; EngineSpec asserts it).
-    * A query whose operand, or whose operands' union, exceeds
-    * `driverAlgebraMaxDocs` falls back to its own `topKAuto` evaluation —
-    * correct, just unshared.
+    * The fetches and their gates are `topKDriver`'s, `fetchTerms` and
+    * `fetchPhrases`, run once over the whole batch's atoms. A query whose
+    * operand, or whose operands' union, exceeds `driverAlgebraMaxDocs` —
+    * every phrase query when the phrase fetch reached its quota — falls
+    * back to its own `topKAuto` evaluation: correct, just unshared.
     *
     * This is the filtering-pipeline shape: thousands of `"a" AND "b"`
     * style queries pay atom-count scans, not query-count scans.
@@ -559,124 +608,20 @@ final class SparkSearchEngine(
       k: Int = params.topK,
       accuracy: Double = 0.0): DataFrame = {
     require(queries.nonEmpty, "searchManyAuto needs at least one query")
-    val qs = queries.distinct
-    def stemKey(t: String) = if (params.stemBareTerms) TextPipeline.term(t) else t
-    val lexed = qs.map(q => q -> QueryLexer.lex(q))
-    val allTermKeys = lexed.flatMap(_._2.collect {
-      case QueryLexer.QTerm(t) => stemKey(t)
-    }).distinct
-    val allPhrases = lexed.flatMap(_._2.collect {
-      case QueryLexer.QPhrase(p) => TextPipeline.tokenizeQuery(p)
-    }).distinct.filter(_.nonEmpty)
-
-    // ---- shared term fetch: live-df gate, then ONE pruned scan ---------
-    val (termRows, oversizedTerms) = fetchTerms(allTermKeys)
-
-    // ---- shared phrase fetch: one shuffle, per-phrase doc-local fold ---
-    val (phraseRows, oversizedPhrases) =
-      if (allPhrases.isEmpty) (Map.empty[Vector[String], Rows], Set.empty[Vector[String]])
-      else {
-        // read by the size gate and by the row fetch: fold once
-        val folded = phraseFold(allPhrases).cache()
-        try {
-          val big = folded.groupBy($"pidx").count().filter($"count" > params.driverAlgebraMaxDocs)
-            .select($"pidx").as[Int].collect()
-          val rows = folded.filter(!$"pidx".isin(big.toSeq: _*)).as[(Int, Long, Int, Int)].collect()
-          (rows.groupBy(_._1).map { case (i, rs) => allPhrases(i) -> rs.map(r => (r._2, r._3, r._4)) },
-            big.map(allPhrases).toSet)
-        } finally folded.unpersist(false)
-      }
-
+    val evaluated = queries.distinct.map { q => val (root, atoms) = parse(q); (q, root, atoms) }
+    // ---- shared fetches, gated as topKDriver's: live df, then ONE
+    // pruned term scan; ONE quota-bounded phrase fold collect
+    val allAtoms = evaluated.flatMap(_._3).distinct
+    val (termRows, oversizedTerms) = fetchTerms(allAtoms.collect { case Left(t) => t })
+    val (phraseRows, oversizedPhrases) = fetchPhrases(allAtoms.collect { case Right(st) => st })
     // ---- per query: the driver route over the prefetched atoms ---------
-    val perQuery = qs.map { q =>
-      val ast = new DenseEval.AstAlgebra(params.stemBareTerms)
-      val root = QueryEvaluator.evaluate(q, ast, params)
-      val atoms = ast.atomList
+    val rows = evaluated.flatMap { case (q, root, atoms) =>
       val fits = atoms.forall(_.fold(t => !oversizedTerms(t), st => !oversizedPhrases(st)))
-      q -> (if (fits) driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k) else None)
+      (if (fits) driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k) else None)
         .getOrElse(topKAuto(q, accuracy, k))
-    }
-    val rows = perQuery.flatMap { case (q, top) =>
-      top.map { case (d, s) => (q, d, s) }
+        .map { case (d, s) => (q, d, s) }
     }
     withDict(spark.createDataset(rows).toDF("query", "docId", "score"))
-  }
-
-  /** (query, docId, s = raw BM25) candidates for bare-term atoms — the
-    * WAND kernel fanned over every term in ONE job: a pruned scan of the
-    * compressed BLOCKS table (never the flat postings), per-partition
-    * block-max pruned top-k per term, ≤ partitions·k candidate rows out.
-    * At head terms this skips exactly the block decodes the single-query
-    * WAND path skips (full-scoring 64 head terms at 10M docs measured
-    * SLOWER than 64 WAND round-trips — pruning, not just batching, is
-    * what scales). Per-term df comes from one `liveDf` job for all
-    * terms, as termTopKWand's does for its one. */
-  private def termAtomFrame(keyed: Seq[(String, String)], k: Int): DataFrame = {
-    val keys = keyed.map(_._2).distinct
-    val n = stats.total_docs.toDouble
-    val idfByTerm = liveDf(keys).map { case (t, df) => t -> Bm25.idf(n, df.toDouble) }
-    val p = params; val st = stats
-    val bIdf = spark.sparkContext.broadcast(idfByTerm)
-    val delFn = deletedFn
-    val qdf = spark.createDataset(keyed).toDF("query", "term")
-    blocks.filter($"term".isin(keys: _*)).as[graft.model.IndexBlock]
-      .mapPartitions(it =>
-        Wand.topKForPartitionMulti(it, bIdf.value, k, p, st, delFn))
-      .toDF("term", "docId", "s")
-      .join(broadcast(qdf), Seq("term"))
-      .select($"query", $"docId", $"s")
-  }
-
-  /** (query, docId, s = raw BM25) for phrase atoms over `folded`, the
-    * caller-cached `phraseFold(phrases)`: per-phrase df is one small
-    * aggregate collected to the driver, and each folded row is scored with
-    * the scalar `Bm25` of the single-query paths, once per query that
-    * lexes to its phrase. No block-max bound exists for phrase tf, so
-    * phrases score exhaustively (as the single-query path does). */
-  private def phraseAtomFrame(
-      folded: DataFrame,
-      phrases: Seq[Vector[String]],
-      phraseAtoms: Seq[(String, Vector[String])]): DataFrame = {
-    val n = stats.total_docs.toDouble
-    val idf = folded.groupBy($"pidx").agg(count(lit(1)))
-      .as[(Int, Long)].collect()
-      .map { case (i, df) => i -> Bm25.idf(n, df.toDouble) }.toMap
-    val pidx = phrases.zipWithIndex.toMap
-    val queriesOf = phraseAtoms.groupBy(a => pidx(a._2))
-      .map { case (i, qs) => i -> qs.map(_._1) }
-    val k1 = params.k1; val b = params.b; val avgdl = stats.avg_doc_len
-    folded.as[(Int, Long, Int, Int)]
-      .flatMap { case (i, docId, tf, dl) =>
-        val s = idf(i) * Bm25.tfPart(tf.toDouble, dl.toDouble, k1, b, avgdl)
-        queriesOf(i).iterator.map(q => (q, docId, s))
-      }
-      .toDF("query", "docId", "s")
-  }
-
-  /** Shared bulk tail over raw (query, docId, s): per-query max in one
-    * map-side-combined agg (for term atoms the true max is always among
-    * the WAND candidates — it IS the top-1 score), max-normalize,
-    * single-operand stack combine, SALTED two-phase per-query top-k.
-    * @return (query, docId, score) */
-  private def bulkTopK(atomF: DataFrame, k: Int, accuracy: Double): DataFrame = {
-    val perQuery = atomF.groupBy($"query").agg(max($"s").as("mx"))
-    val tfw = params.termFrequencyWeight; val emw = params.exactMatchWeight
-    val scored = atomF.join(broadcast(perQuery), Seq("query"))
-      .select($"query", $"docId",
-        when($"mx" > 0, $"s" / $"mx").otherwise($"s").as("norm"))
-      .select($"query", $"docId",
-        (lit(tfw) * $"norm" + lit(emw) * $"norm").as("score"))
-      .filter($"score" >= accuracy)
-    val salts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query", $"salt").orderBy($"score".desc, $"docId".asc)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy($"query").orderBy($"score".desc, $"docId".asc)
-    scored
-      .withColumn("salt", pmod(hash($"docId"), lit(salts)))
-      .withColumn("rn", row_number().over(w1)).filter($"rn" <= k)
-      .withColumn("rn2", row_number().over(w2)).filter($"rn2" <= k)
-      .select($"query", $"docId", $"score")
   }
 
   /** (query, docId, score) → (query, docId, conv_id, turn_idx, score).
@@ -688,10 +633,11 @@ final class SparkSearchEngine(
       .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
 
   /** Bulk search with snippets over the source turns table: the bulk
-    * top-k joined to turns, each query's snippet keys/weights broadcast,
-    * and the snippet computed ON THE EXECUTORS per hit (the single-query
-    * `search` snippets its few hits on the driver; N·k bulk hits stay
-    * distributed). */
+    * top-k left-joined to turns, each query's snippet keys/weights
+    * broadcast, and the snippet computed ON THE EXECUTORS per hit (the
+    * single-query `search` snippets its few hits on the driver; N·k bulk
+    * hits stay distributed). As in `search`, a hit whose turn `turns`
+    * lacks keeps its place with an empty text and snippet. */
   def searchManyWithSnippets(
       queries: Seq[String],
       turns: DataFrame,
@@ -703,12 +649,13 @@ final class SparkSearchEngine(
     }.toMap
     val bMeta = spark.sparkContext.broadcast(meta)
     searchMany(queries, k, accuracy)
-      .join(turns.select($"conv_id", $"turn_idx", $"text"), Seq("conv_id", "turn_idx"))
+      .join(turns.select($"conv_id", $"turn_idx", $"text"), Seq("conv_id", "turn_idx"), "left")
       .select($"query", $"docId", $"conv_id", $"turn_idx", $"score", $"text")
       .as[(String, Long, String, Int, Double, String)]
       .map { case (q, d, c, t, s, text) =>
         val (keys, weights) = bMeta.value(q)
-        (q, d, c, t, s, text, Snippeter.snippet(text, keys, weights))
+        val found = Option(text)
+        (q, d, c, t, s, found.getOrElse(""), found.fold("")(Snippeter.snippet(_, keys, weights)))
       }
       .toDF("query", "docId", "conv_id", "turn_idx", "score", "text", "snippet")
   }

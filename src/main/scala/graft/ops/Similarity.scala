@@ -1,10 +1,10 @@
 package graft.ops
 
-import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.build.Tables
+import graft.query.TopK.{Scan, ScoreDesc, topKPerQuery}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -22,7 +22,8 @@ import graft.build.Tables
   * so the driver's DuckDB oracle recomputes identical buckets/cells.
   *
   * Every probe — brute force, LSH, IVF, PQ, IVF-PQ, single or bulk — is
-  * ONE bounded-heap kernel (`topKPerQuery`) over a batch of M queries, and
+  * ONE bounded-heap kernel (`graft.query.TopK.topKPerQuery`, which the
+  * search engine's bulk phrase path also runs) over a batch of M queries, and
   * every score is `Cosine` (re-ranks) or the one ADC fold (`adc`): a
   * family supplies only its pruned candidate scan (`Scan`), and a
   * single-query probe is its bulk probe at M = 1. Results are local
@@ -71,11 +72,6 @@ object Similarity {
 
   // -------------------------------------------------------- probe kernel --
 
-  /** A family's candidate scan for a batch of queries: the pruned rows
-    * (vec_id, route key, payload) and, per route key, the indices of the
-    * queries that probe it. */
-  private[ops] final case class Scan[P](rows: Dataset[(Long, Long, P)], route: Long => Array[Int])
-
   /** (vec_id, `key`, `payload`) rows of `df`, typed for a `Scan`. */
   private def scanRows[P: TypeTag](df: DataFrame, key: Column, payload: String): Dataset[(Long, Long, P)] = {
     import df.sparkSession.implicits._
@@ -95,9 +91,6 @@ object Similarity {
     _ => all
   }
 
-  /** Cosine descending, then vec_id ascending: the top-k order. */
-  private val byCosine = Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
-
   /** ADC distance ascending, then vec_id ascending: the shortlist order. */
   private val byAdc = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
@@ -113,48 +106,22 @@ object Similarity {
   }
 
   /** THE probe kernel: per query, its best `k` rows in `ord` among the
-    * rows `scan` routes to it, its own id excluded. Each partition keeps
-    * one bounded heap per query (the `Wand.topKForPartitionMulti` shape)
-    * and the driver merges the ≤ partitions·k survivors of each query: the
-    * top k of per-partition top ks is the global top k under the total
-    * (score, id) order, so every partitioning returns the same rows. One
-    * Spark job. `score(payload)` prepares a row once, then scores it per
-    * query index.
+    * rows `scan` routes to it, its own id excluded — `topKPerQuery` at
+    * k + 1, the query's id dropped, cut to k (the top k + 1 holds the top
+    * k of every other id). The driver merges ≤ partitions·(k + 1) rows per
+    * query.
     *
-    * @return per query (in `qids` order), its ≤ k (vec_id, score) in `ord` */
-  private def topKPerQuery[P](scan: Scan[P], qids: Array[Long], k: Int,
-      ord: Ordering[(Double, Long)])(score: P => Int => Double): Array[Seq[(Long, Double)]] = {
-    import scan.rows.sparkSession.implicits._
-    val route = scan.route
-    val kept = scan.rows.mapPartitions { it =>
-      // natural max-heaps: the head is the query's worst kept row
-      val heaps = qids.map(_ => mutable.PriorityQueue.empty[(Double, Long)](ord))
-      it.foreach { case (id, key, p) =>
-        val qs = route(key)
-        if (qs.nonEmpty) {
-          val s = score(p)
-          qs.foreach { qi =>
-            if (id != qids(qi)) {
-              val h = heaps(qi)
-              val r = (s(qi), id)
-              if (h.size < k) h.enqueue(r)
-              else if (h.nonEmpty && ord.lt(r, h.head)) { h.dequeue(); h.enqueue(r) }
-            }
-          }
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) => h.iterator.map { case (s, id) => (qi, id, s) } }
-    }.collect().groupBy(_._1)
-    Array.tabulate(qids.length) { qi =>
-      kept.getOrElse(qi, Array.empty).map(r => (r._3, r._2)).sorted(ord).take(k).map(_.swap).toSeq
-    }
-  }
+    * @return per query (in `queries` order), its ≤ k (vec_id, score) in `ord` */
+  private def probeTopK[P](scan: Scan[P], queries: Seq[(Long, Seq[Float])], k: Int,
+      ord: Ordering[(Double, Long)])(score: P => Int => Double): Array[Seq[(Long, Double)]] =
+    topKPerQuery(scan, queries.size, k + 1, ord)(score).zip(queries)
+      .map { case (rs, (qid, _)) => rs.filter(_._1 != qid).take(k) }
 
   /** Each query's exact-cosine top-k among the rows `scan` routes to it. */
   private def cosineTopK(scan: Scan[Seq[Float]], queries: Seq[(Long, Seq[Float])],
       k: Int): Array[Seq[(Long, Double)]] = {
     val qn = queries.map(q => Cosine.of(q._2)).toArray
-    topKPerQuery(scan, queries.map(_._1).toArray, k, byCosine) { v =>
+    probeTopK(scan, queries, k, ScoreDesc) { v =>
       val nv = Cosine.of(v)
       qi => Cosine(nv, qn(qi))
     }
@@ -705,7 +672,7 @@ object Similarity {
     val book = readPqCodebook(spark, idx)
     val nCodes = book(0).length
     val luts = queries.map { case (_, v) => adcLut(book, l2normalize(v)) }.toArray
-    val short = topKPerQuery(codes, queries.map(_._1).toArray, shortlist, byAdc) { cs =>
+    val short = probeTopK(codes, queries, shortlist, byAdc) { cs =>
       qi => adc(luts(qi), cs, nCodes)
     }.map(_.map(_._1))
     val rerank = Scan(scanRows[Seq[Float]](

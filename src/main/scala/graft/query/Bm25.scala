@@ -3,8 +3,8 @@ package graft.query
 /** The engine's one BM25 formula (BM25Ranker.cpp:431-437), split into
   * the df-only factor and the per-posting factor so callers can hoist idf
   * out of their loops. Every scalar scoring site — the boolean kernel
-  * (`DenseEval.Kernel`, both routes), WAND kernels, bulk atom frames —
-  * calls these, so they share one IEEE operation order and score
+  * (`DenseEval.Kernel`, both routes), the WAND kernels, the bulk phrase
+  * ranker — calls these, so they share one IEEE operation order and score
   * bit-identically. `RefOracle` keeps its own transcription on purpose:
   * it is the independent reference.
   */

@@ -186,10 +186,10 @@ object DenseEval {
       (cnt, mx)
     }
 
-    /** Resolves every constant of the query: `run` applies a pass to
-      * every aligned doc and returns its partials (one per partition, or
-      * one for a local iterator). */
-    def resolve(run: (Iterator[Doc] => Partial) => Seq[Partial]): Resolved = {
+    /** Per atom, its idf and its max score from the atom pass: `run`
+      * applies a pass to every aligned doc and returns its partials (one
+      * per partition, or one for a local iterator). */
+    def atomConstants(run: (Iterator[Doc] => Partial) => Seq[Partial]): (Array[Double], Array[Double]) = {
       val (df, mxTf) = merge(run(atomPass), nAtoms)
       val idf = Array.tabulate(nAtoms)(i => Bm25.idf(nDocs.toDouble, df(i).toDouble))
       // an atom's max score is idf · maxTfPart — bitwise the max of its
@@ -200,6 +200,12 @@ object DenseEval {
         val mxS = if (df(i) == 0) 0.0 else idf(i) * mxTf(i)
         if (df(i) >= nDocs) mxS else math.max(mxS, 0.0)
       }
+      (idf, atomMax)
+    }
+
+    /** Resolves every constant of the query, `run` as in `atomConstants`. */
+    def resolve(run: (Iterator[Doc] => Partial) => Seq[Partial]): Resolved = {
+      val (idf, atomMax) = atomConstants(run)
       val norms = normNodes(root)
       val normMax = new Array[Double](norms.length)
       norms.foreach { nn => // bottom-up: ids < nn.id are final

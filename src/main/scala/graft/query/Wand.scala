@@ -76,7 +76,8 @@ object Wand {
   def mergeTopK(candidates: Seq[(Long, Double)], k: Int): Vector[(Long, Double)] =
     candidates.sortBy { case (d, s) => (-s, d) }.take(k).toVector
 
-  /** Multi-term variant for the bulk path: one partition may hold blocks
+  /** Multi-term variant, the partition kernel of every WAND scan (one
+    * term or a bulk batch): one partition may hold blocks
     * of MANY queried terms — run the same pruned kernel per term and tag
     * candidates with it. Per-term results are identical to running
     * topKForPartition on that term's blocks alone. */

@@ -190,6 +190,23 @@ class EngineSpec extends AnyFunSuite {
         assert(topK._1 == topK._2 && search._1 == search._2, s"'$q' repeat: $topK $search")
         assert(search._1 - topK._1 <= 2, s"'$q': search $search vs top-k $topK")
       }
+      // the bulk entries, their frames collected (the dictionary join
+      // included): terms are one live-df job + one WAND block scan;
+      // phrases the fold's atom pass + the heap kernel's pass
+      val bulkTerms = Seq("whale", "blue", "the")
+      val bulkPhrases = Seq("\"blue whale\"", "\"red fish\"")
+      val bulk = Seq(
+        "searchMany terms" -> count(engine.searchMany(bulkTerms).collect()),
+        "searchMany phrases" -> count(engine.searchMany(bulkPhrases).collect()),
+        "searchMany mixed" -> count(engine.searchMany(bulkTerms ++ bulkPhrases).collect()),
+        "searchManyAuto" -> count(engine.searchManyAuto(bulkPhrases ++
+          Seq("\"blue whale\" AND \"red fish\"", "\"blue whale\" whale engine")).collect()))
+      info(s"bulk warm jobs (first, repeat): ${bulk.mkString(" ")}")
+      assert(bulk == Seq(
+        "searchMany terms" -> ((4, 4)),
+        "searchMany phrases" -> ((6, 6)),
+        "searchMany mixed" -> ((8, 8)),
+        "searchManyAuto" -> ((6, 6))), "bulk job pins")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -258,7 +275,7 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     val engine = new SparkSearchEngine(spark, io)
     val terms = Seq("whale", "blue", "the", "run", "engin", "a", "zzzunknown")
-    val bulk = engine.searchManyTerms(terms, k = 50)
+    val bulk = engine.searchMany(terms, k = 50)
       .select("query", "docId", "score")
       .as[(String, Long, Double)].collect()
       .groupBy(_._1)
@@ -273,14 +290,19 @@ class EngineSpec extends AnyFunSuite {
     }
     // a missing term yields no rows, not an error
     assert(!bulk.contains("zzzunknown"))
-    // the scan prunes to the queried terms (pushed-down In filter) and
-    // reads the compressed BLOCKS table (WAND kernel), not flat postings
-    val plan = engine.searchManyTerms(Seq("whale", "blue"), k = 5)
+    // the WAND candidate scan (bulk and single) prunes to the queried
+    // terms (pushed-down In filter) and reads the compressed BLOCKS table
+    // (WAND kernel), not flat postings
+    val plan = engine.wandScan(Map("whale" -> 1.0, "blue" -> 1.0), k = 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term, [blue,whale])"),
       s"term In-filter must reach the parquet scan:\n$plan")
     assert(plan.contains("index_blocks") && !plan.contains("/postings]"),
       s"bulk term scoring must read the block index, not flat postings:\n$plan")
+    // at one key (termTopKWand) the In becomes the equality filter
+    val one = engine.wandScan(Map("whale" -> 1.0), k = 5).queryExecution.executedPlan.toString
+    assert(one.contains("PushedFilters: [IsNotNull(term), EqualTo(term,whale)]"),
+      s"a single-key scan must push EqualTo down:\n$one")
   }
 
   test("bulk mixed search (terms + phrases) is bit-identical to the single-query paths") {
@@ -363,6 +385,36 @@ class EngineSpec extends AnyFunSuite {
     qs.foreach { q =>
       assert(bulkTiny.getOrElse(q, Vector.empty) == engine.topKAuto(q, 0.0, 50),
         s"fallback query '$q'")
+    }
+  }
+
+  test("searchManyAuto phrase gate: an exact split below the fetch quota, all phrases over at it") {
+    val (io, _) = built
+    import spark.implicits._
+    val engine = new SparkSearchEngine(spark, io)
+    // the batch's only phrases: `big` matches ≥ 2 more docs than `small`
+    val byDf = Seq("\"blue whale\"", "\"red fish\"", "\"query engine\"")
+      .map(p => p -> engine.topKDriver(p, Double.MinPositiveValue, Int.MaxValue).get.size)
+      .sortBy(_._2)
+    val ((small, dfSmall), (big, dfBig)) = (byDf.head, byDf.last)
+    assert(dfSmall >= 1 && dfBig >= dfSmall + 2, s"fixture phrase dfs: $byDf")
+    val qs = Seq(big, small, s"$small AND $big", s"NOT $small", s"$small whale")
+    // cap = dfBig - 1: big over, small under, and the dfBig + dfSmall rows
+    // stay below the 2·cap + 1 quota — the split is exact.
+    // cap = dfSmall: the rows reach the quota, so both phrases count as
+    // over and every query falls back to its own topKAuto
+    for (cap <- Seq(dfBig - 1, dfSmall)) {
+      val e = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = cap))
+      assert((dfBig + dfSmall < 2 * cap + 1) == (cap == dfBig - 1), s"cap $cap: quota side")
+      for (acc <- Seq(0.0, Double.MinPositiveValue, 0.4)) {
+        val bulk = e.searchManyAuto(qs, k = 50, accuracy = acc)
+          .select("query", "docId", "score").as[(String, Long, Double)].collect()
+          .groupBy(_._1)
+          .map { case (q, rs) => q -> rs.map(r => (r._2, r._3)).sortBy { case (d, s) => (-s, d) }.toVector }
+        qs.foreach { q =>
+          assert(bulk.getOrElse(q, Vector.empty) == e.topKAuto(q, acc, 50), s"cap $cap '$q' at accuracy $acc")
+        }
+      }
     }
   }
 
@@ -511,18 +563,23 @@ class EngineSpec extends AnyFunSuite {
       .filter(_.contains("EqualTo(term,whale)"))
     assert(!lookup.exists(_.contains("positions_vb")),
       "term scoring must not read the positions column")
+    // BM25 itself is scalar code on every path; the Catalyst work left in
+    // scoring is the pruned term scan feeding it, and that stays in
+    // whole-stage codegen
+    assert(lookup.exists(
+      """\*\(\d+\) Filter \(isnotnull\(term#\d+\) AND \(term#\d+ = whale\)\)""".r.findFirstIn(_).isDefined),
+      s"the scored term lookup must stay in whole-stage codegen:\n${lookup.mkString("\n\n")}")
     assertPlans(engine.topKDense("\"blue whale\" whale", 0.0, 10),
       "top-k must not global-sort")(_.exists(_.contains("TakeOrderedAndProject")))
-    // BM25 itself is scalar code on every path; the Catalyst score
-    // arithmetic left is the bulk tail's normalize + stack combine
-    val bulk = engine.searchManyTerms(Seq("whale", "blue"), k = 5)
-    bulk.collect() // finalize the adaptive plan so codegen ids are visible
-    val plan = bulk.queryExecution.executedPlan.toString
-    Seq("""\*\(\d+\) Project \[.*\(s#\d+ / mx#\d+\).* AS norm""",
-      """\*\(\d+\) Project \[.*norm#\d+\).* AS score""").foreach { codegend =>
-      assert(codegend.r.findFirstIn(plan).isDefined,
-        s"bulk score arithmetic must stay in whole-stage codegen:\n$plan")
-    }
+    // every bulk top-k is a per-partition heap merged on the driver: no
+    // bulk plan ranks in a Window
+    val bulkPlans = assertPlans({
+      engine.searchMany(Seq("whale", "blue", "\"blue whale\"", "\"red fish\""), k = 5).collect()
+      engine.searchManyAuto(Seq("\"blue whale\" AND \"red fish\"", "\"blue whale\" whale engine"), k = 5)
+        .collect()
+      org.apache.spark.TestBus.drain(spark.sparkContext) // every plan delivered
+    }, "the bulk calls' plans")(_.exists(_.contains("index_blocks")))
+    assert(!bulkPlans.exists(_.contains("Window")), s"a bulk plan ranks in a Window:\n${bulkPlans.mkString("\n\n")}")
   }
 
   test("search returns snippets over top-k") {

@@ -371,6 +371,12 @@ class ServerSpec extends AnyFunSuite {
         val got = replyHits(r.body())
         assert(got.toSet == want.toSet && got.map(_._2) == want.map(_._2), q)
         assert(r.body().contains("\"content\":\"\""), "an absent turn has empty content")
+        // the bulk route keeps the same hits (accuracy > 0: no zero-fill)
+        val m = get(s"/searchMany?queries=$q&accuracy=$acc", p)
+        assert(m.statusCode() == 200, m.body())
+        val bulk = replyHits(m.body())
+        assert(bulk.toSet == want.toSet && bulk.map(_._2) == want.map(_._2), s"/searchMany $q")
+        assert(m.body().contains("\"content\":\"\""), "/searchMany: an absent turn has empty content")
       }
     } finally s.stop()
   }
