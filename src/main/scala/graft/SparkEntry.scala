@@ -19,6 +19,11 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
+  /** `df`'s rows collected into a local frame, which outlives any cache
+    * `df` was computed from. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   // ---- transcript index, built once per (JVM, sfDir) --------------------
   private val engines = scala.collection.mutable.Map.empty[String, SparkSearchEngine]
   private def sfOf(dir: String): Double =
@@ -278,17 +283,18 @@ object SparkEntry {
     // (index cached in /tmp like the ANN families); the probe signs only
     // the new batch and Bloom-prefilters the corpus banding rows map-side —
     // the daily dedup-new-crawl-vs-corpus operator
+    // (both run managed: the per-batch caches are released once the
+    // result is collected into a local frame)
     "q38_minhash_index_dedup" -> ((s, dir) =>
-      Dedup.minHashDedupBatch(s, minhashIndex(s, dir),
-        s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit))),
+      Dedup.minHashDedupBatchManaged(s, minhashIndex(s, dir),
+        s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit))(local)),
     // the streaming dedup gate's batch step: survivors of the new batch
     // after dedup against the indexed corpus and itself (keep-lowest-id);
     // reruns hit the replay path — same survivors, no re-append
     "q41_stream_dedup_gate" -> ((s, dir) =>
-      graft.streaming.StreamingDedup.dedupBatch(s, minhashGateIndex(s, dir),
+      graft.streaming.StreamingDedup.dedupBatchManaged(s, minhashGateIndex(s, dir),
           s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit),
-          batchId = 0L)
-        .select(col("doc_id")).orderBy(col("doc_id"))),
+          batchId = 0L)(survivors => local(survivors.select(col("doc_id")).orderBy(col("doc_id"))))),
 
     // ---- text analysis ------------------------------------------------
     "q11_token_counts" -> ((s, dir) => TextOps.tokenCounts(s.read.parquet(t(dir, "documents")))),

@@ -41,9 +41,12 @@ import graft.text.TextPipeline
   * tombstone count come from the log, and the never-cached `postings`,
   * `dict`, `blocks` and `deleted_term_df` handles are read from that
   * version's file list with declared schemas, so neither opening nor a
-  * first query runs a metadata job. Re-open after any write to see it;
-  * the HTTP server does, and resolves its `--input` turns frame with each
-  * re-open.
+  * first query runs a metadata job. Below `driverAlgebraMaxDocs` live
+  * docs the engine also holds that version's doc directory (`directory`,
+  * loaded by the first query that needs it), so hits, dense fills and
+  * result frames resolve on the driver. Re-open after any write to see
+  * it; the HTTP server does, and resolves its `--input` turns frame with
+  * each re-open.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -78,6 +81,18 @@ final class SparkSearchEngine(
     * WAND skip set all exclude tombstones), with no anti-join job. */
   private lazy val rawDict = io.read(Tables.DocDict, snapshot)
   private lazy val dict = minusDeleted(rawDict)
+
+  /** This snapshot's live docs on the driver — resolves hits, dense fills
+    * and result frames with no Spark job — when they fit the driver
+    * (`stats.total_docs <= params.driverAlgebraMaxDocs`, so it holds at
+    * most that many entries); None above it, where those lookups stay
+    * Spark jobs over `dict`. Read from `dict` in one job on first use: it
+    * excludes tombstones exactly as the Spark fill does, and it is never
+    * stale, since an engine serves one log version. A lazy val: concurrent
+    * first uses wait on one load, and a failed load is retried on the next
+    * use. */
+  private lazy val directory: Option[DocDirectory] =
+    if (stats.total_docs <= params.driverAlgebraMaxDocs) Some(DocDirectory.load(dict)) else None
   private lazy val blocks = io.read(Tables.Blocks, snapshot)
   private lazy val deletedTermDf: Option[DataFrame] =
     if (deletes.isDefined && snapshot.has(Tables.DeletedTermDf))
@@ -229,29 +244,39 @@ final class SparkSearchEngine(
   /** The top-k tail of every route: the accuracy filter, (score desc,
     * docId asc), then the dense fill — when `default`, the score of every
     * doc outside the scored support, can still qualify, the k lowest of
-    * those docIds (`absent`) join at `default`. `scored` may already be
-    * cut to its top k in that order: the filter keeps a prefix of it. */
+    * those docIds (`absent(k)`, ascending) join at `default`. `scored` may
+    * already be cut to its top k in that order: the filter keeps a prefix
+    * of it. */
   private def topKTail(
       scored: Iterator[(Long, Double)],
       default: Double,
       accuracy: Double,
       k: Int,
-      absent: => DataFrame): Vector[(Long, Double)] = {
+      absent: Int => Seq[Long]): Vector[(Long, Double)] = {
     val top = scored.filter(_._2 >= accuracy).toVector
       .sortBy { case (d, s) => (-s, d) }.take(k)
     val needFill = default >= accuracy && (top.length < k || top.last._2 <= default)
     if (!needFill) top
     else {
-      val fill = absent.orderBy($"docId".asc).limit(k)
-        .as[Long].collect().toVector.map(d => (d, default))
+      val fill = absent(k).map(d => (d, default))
       (top ++ fill).sortBy { case (d, sc) => (-sc, d) }.take(k)
     }
   }
 
-  /** Live docIds outside a driver-held `present` set. */
-  private def absentFrom(present: Seq[Long]): DataFrame =
-    if (present.size <= 10000) dict.select($"docId").filter(!$"docId".isin(present: _*))
-    else dict.select($"docId").join(spark.createDataset(present).toDF("docId"), Seq("docId"), "left_anti")
+  /** The k lowest docIds of a frame of live docIds: one Spark job (the
+    * frame is built only when the fill runs). */
+  private def lowest(absent: => DataFrame)(k: Int): Seq[Long] =
+    absent.orderBy($"docId".asc).limit(k).as[Long].collect().toSeq
+
+  /** The k lowest live docIds outside a driver-held `present` set: a walk
+    * of the directory when the engine holds it, else one job over `dict`. */
+  private def absentFrom(present: Seq[Long])(k: Int): Seq[Long] = directory match {
+    case Some(dir) => dir.lowestAbsent(present, k)
+    case None =>
+      val live = dict.select($"docId")
+      lowest(if (present.size <= 10000) live.filter(!$"docId".isin(present: _*))
+        else live.join(spark.createDataset(present).toDF("docId"), Seq("docId"), "left_anti"))(k)
+  }
 
   /** A query's expression tree and the atoms it indexes. */
   private def parse(query: String): (DenseEval.QNode, IndexedSeq[DenseEval.Atom]) = {
@@ -388,9 +413,8 @@ final class SparkSearchEngine(
         .toDF("docId", "score")
         .orderBy($"score".desc, $"docId".asc).limit(k)
         .as[(Long, Double)].collect()
-      topKTail(top.iterator, resolved.default, accuracy, k,
-        dict.select($"docId")
-          .join(aligned.toDF("docId", "entries").select($"docId"), Seq("docId"), "left_anti"))
+      topKTail(top.iterator, resolved.default, accuracy, k, lowest(dict.select($"docId")
+        .join(aligned.toDF("docId", "entries").select($"docId"), Seq("docId"), "left_anti")))
     } finally { aligned.unpersist(false); () }
   }
 
@@ -477,12 +501,16 @@ final class SparkSearchEngine(
     if (top.isEmpty) return Vector.empty
     val keys = Snippeter.queryKeys(query, params.stemBareTerms)
     val weights = QueryEvaluator.wordsAndPhrasesWeights(query)
-    // ≤ k dict rows to the driver, then ONE filtered scan of turns for
-    // exactly their keys (conv_id pushed down to the scan): no join, so no
-    // broadcast job and no shuffle of turns
-    val refs = rawDict.filter($"docId".isin(top.map(_._1): _*))
-      .select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
-      .map { case (d, c, t) => d -> ((c, t)) }.toMap
+    // the hits' keys from the directory (else ≤ k dict rows to the
+    // driver), then ONE filtered scan of turns for exactly those keys
+    // (conv_id pushed down to the scan): no join, so no broadcast job and
+    // no shuffle of turns
+    val refs = directory match {
+      case Some(dir) => top.map { case (d, _) => d -> dir.ref(d) }.toMap
+      case None => rawDict.filter($"docId".isin(top.map(_._1): _*))
+        .select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
+        .map { case (d, c, t) => d -> ((c, t)) }.toMap
+    }
     val wanted = refs.values.toSeq.distinct
     val texts = turns
       .filter($"conv_id".isin(wanted.map(_._1).distinct: _*) && struct($"conv_id", $"turn_idx").isin(
@@ -545,7 +573,7 @@ final class SparkSearchEngine(
       (q, atom) <- atoms
       (d, s) <- atom.fold(byTerm.get, byPhrase.get).getOrElse(Seq.empty) if s >= accuracy
     } yield (q, d, s)
-    withDict(spark.createDataset(rows).toDF("query", "docId", "score"))
+    withDict(rows)
   }
 
   /** The top-k of every phrase (none → no job): ONE cached `phraseFold`,
@@ -621,16 +649,22 @@ final class SparkSearchEngine(
         .getOrElse(topKAuto(q, accuracy, k))
         .map { case (d, s) => (q, d, s) }
     }
-    withDict(spark.createDataset(rows).toDF("query", "docId", "score"))
+    withDict(rows)
   }
 
-  /** (query, docId, score) → (query, docId, conv_id, turn_idx, score).
-    * Inner join: the dict is complete by the row-level build invariant,
-    * and inner lets Spark broadcast the (N·k-row) result side instead of
-    * shuffling the corpus-sized dictionary. */
-  private def withDict(top: DataFrame): DataFrame =
-    top.join(rawDict, Seq("docId"))
-      .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
+  /** (query, docId, score) → (query, docId, conv_id, turn_idx, score): a
+    * local frame from the directory when the engine holds it; else an
+    * inner join with the dictionary (complete by the row-level build
+    * invariant; inner lets Spark broadcast the N·k-row result side instead
+    * of shuffling the corpus-sized dictionary). */
+  private def withDict(top: Seq[(String, Long, Double)]): DataFrame = directory match {
+    case Some(dir) =>
+      spark.createDataset(top.map { case (q, d, s) => val (c, t) = dir.ref(d); (q, d, c, t, s) })
+        .toDF("query", "docId", "conv_id", "turn_idx", "score")
+    case None =>
+      spark.createDataset(top).toDF("query", "docId", "score").join(rawDict, Seq("docId"))
+        .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
+  }
 
   /** Bulk search with snippets over the source turns table: the bulk
     * top-k left-joined to turns, each query's snippet keys/weights
@@ -660,13 +694,62 @@ final class SparkSearchEngine(
       .toDF("query", "docId", "conv_id", "turn_idx", "score", "text", "snippet")
   }
 
-  /** DataFrame variant for the driver harness (SparkEntry). */
+  /** DataFrame variant for the driver harness (SparkEntry): the top-k as
+    * (docId, conv_id, turn_idx, score), (score desc, docId asc) — a local
+    * frame from the directory when the engine holds it. */
   def searchFrame(query: String, accuracy: Double = 0.0, k: Int = 100): DataFrame = {
     val top = topKAuto(query, accuracy, k)
-    spark.createDataset(top).toDF("docId", "score")
-      .join(rawDict, Seq("docId"), "left")
-      .select($"docId", $"conv_id", $"turn_idx", $"score")
-      .orderBy($"score".desc, $"docId".asc)
+    directory match {
+      case Some(dir) =>
+        spark.createDataset(top.map { case (d, s) => val (c, t) = dir.ref(d); (d, c, t, s) })
+          .toDF("docId", "conv_id", "turn_idx", "score")
+      case None =>
+        spark.createDataset(top).toDF("docId", "score")
+          .join(rawDict, Seq("docId"), "left")
+          .select($"docId", $"conv_id", $"turn_idx", $"score")
+          .orderBy($"score".desc, $"docId".asc)
+    }
+  }
+}
+
+/** The live docs of one snapshot, held on the driver: docIds ascending,
+  * with their `conv_id` and `turn_idx` as parallel arrays. Consecutive
+  * docs of one conversation share one `conv_id` String (docIds are ranked
+  * by (conv_id, turn_idx), so a conversation's docs are adjacent). */
+private[api] final class DocDirectory private (ids: Array[Long], convIds: Array[String], turnIdx: Array[Int]) {
+
+  /** (conv_id, turn_idx) of a live docId, by binary search. */
+  def ref(docId: Long): (String, Int) = {
+    val i = java.util.Arrays.binarySearch(ids, docId)
+    if (i < 0) throw new NoSuchElementException(s"docId $docId is not a live doc")
+    (convIds(i), turnIdx(i))
+  }
+
+  /** The k lowest live docIds outside `present`, ascending: one merge walk
+    * of the directory against the sorted `present`. */
+  def lowestAbsent(present: Seq[Long], k: Int): Seq[Long] = {
+    val skip = present.toArray
+    java.util.Arrays.sort(skip)
+    val out = Vector.newBuilder[Long]
+    var i = 0; var j = 0; var n = 0
+    while (n < k && i < ids.length) {
+      while (j < skip.length && skip(j) < ids(i)) j += 1
+      if (j == skip.length || skip(j) != ids(i)) { out += ids(i); n += 1 }
+      i += 1
+    }
+    out.result()
+  }
+}
+
+private[api] object DocDirectory {
+  /** One Spark job: collect (docId, conv_id, turn_idx) of `dict`. */
+  def load(dict: DataFrame): DocDirectory = {
+    val rows = dict.select("docId", "conv_id", "turn_idx")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1)
+    val convIds = new Array[String](rows.length)
+    for (i <- rows.indices)
+      convIds(i) = if (i > 0 && rows(i)._2 == convIds(i - 1)) convIds(i - 1) else rows(i)._2
+    new DocDirectory(rows.map(_._1), convIds, rows.map(_._3))
   }
 }
 

@@ -146,6 +146,37 @@ class DeleteSpec extends AnyFunSuite {
     }
   }
 
+  test("doc directory on tombstones: both sides of its gate ==, sub-k fills skip the lowest ids") {
+    import spark.implicits._
+    val io = freshWh()
+    val b = new IndexBuilder(spark, io, blockSize = 8)
+    b.build(spark.createDataset(allTurns))
+    val ids = io.read(Tables.DocDict).select(col("docId")).as[Long].collect().sorted.toSeq
+    val deleted = Seq(ids(0), ids(1), ids(3)) // the lowest live docIds a fill would take
+    b.deleteDocs(deleted, batchId = 0L)
+    val live = ids.filterNot(deleted.contains)
+    val turns = spark.createDataset(allTurns).toDF()
+    val shapes = Seq("\"zzz nothing\"", "zzzunknown", "whale", "NOT \"blue whale\"", "\"blue whale\" whale engine")
+    def compare(label: String): Unit = for (k <- Seq(100, 3)) {
+      val held = new SparkSearchEngine(spark, io, GraftParams(topK = k))
+      val n = held.stats.total_docs
+      assert(n == live.size, s"$label: live docs")
+      val over = new SparkSearchEngine(spark, io, GraftParams(topK = k, driverAlgebraMaxDocs = (n - 1).toInt))
+      for (q <- shapes; acc <- Seq(0.0, Double.MinPositiveValue, 0.4)) {
+        assert(held.topKAuto(q, acc, k) == over.topKAuto(q, acc, k), s"$label '$q' acc=$acc k=$k topKAuto")
+        assert(held.search(q, turns, acc) == over.search(q, turns, acc), s"$label '$q' acc=$acc k=$k search")
+      }
+      // a query matching nothing is all fill: the k lowest LIVE docIds
+      Seq("\"zzz nothing\"", "zzzunknown").foreach { q =>
+        assert(held.topKAuto(q, 0.0, k) == live.take(k).map(_ -> 0.0), s"$label '$q' k=$k fill")
+      }
+    }
+    compare("tombstoned")
+    b.compact()
+    assert(!io.exists(Tables.Deletes))
+    compare("compacted")
+  }
+
   test("deleteDocs is batch-idempotent; unknown/already-deleted ids are ignored") {
     import spark.implicits._
     val (io, b, survivors, delIds) = tombstoned()

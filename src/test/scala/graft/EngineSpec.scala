@@ -163,13 +163,26 @@ class EngineSpec extends AnyFunSuite {
       }
       (once(), once())
     }
+    // one doc over the directory's ceiling: the same routes, no directory
+    val over = new SparkSearchEngine(spark, io,
+      GraftParams(driverAlgebraMaxDocs = (engine.stats.total_docs - 1).toInt))
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job count")
     try {
-      engine.search("\"blue whale\" whale", turns) // warm: resolves every handle
+      // a fresh engine's first query loads the directory: one job, once
+      val fresh = count(engine.search("\"blue whale\" whale", turns))
+      val freshOver = count(over.search("\"blue whale\" whale", turns))
+      info(s"first and repeat search jobs on a fresh engine: directory held $fresh, over the ceiling $freshOver")
+      assert(fresh._1 == fresh._2 + 1 && freshOver._1 == freshOver._2, s"directory load: $fresh $freshOver")
       // ≥ k matches: one live-df job + one WAND job, no zero-fill
       val wand = count(engine.termTopKWand("the", 0.0, 10))
       assert(wand == ((2, 2)), "termTopKWand")
+      // < k matches at accuracy 0.0: the zero-fill walks the directory
+      // (no job); over the ceiling it is one more job
+      val subK = engine.topKDriver("whale", Double.MinPositiveValue, Int.MaxValue).get.size + 1
+      assert(engine.termTopKWand("whale", 0.0, subK).last._2 == 0.0, "whale: one filled doc")
+      assert(count(engine.termTopKWand("whale", 0.0, subK)) == ((2, 2)), "termTopKWand fill, directory held")
+      assert(count(over.termTopKWand("whale", 0.0, subK)) == ((3, 3)), "termTopKWand fill, over the ceiling")
       // accuracy > 0 keeps the zero-fill out: the jobs are the fold alone
       val acc = Double.MinPositiveValue
       val onePhrase = count(engine.topKDriver("\"blue whale\"", acc, 10))
@@ -184,15 +197,24 @@ class EngineSpec extends AnyFunSuite {
       val mixed = count(engine.topKDriver("\"blue whale\" whale engine", acc, 10))
       assert(boolean == ((2, 2)), s"boolean: $boolean")
       assert(mixed == ((4, 4)), s"mixed: $mixed")
-      Seq("whale", "\"blue whale\" whale engine", "\"blue whale\" AND \"red fish\"").foreach { q =>
-        val topK = count(engine.topKAuto(q, 0.0, engine.params.topK))
-        val search = count(engine.search(q, turns))
-        assert(topK._1 == topK._2 && search._1 == search._2, s"'$q' repeat: $topK $search")
-        assert(search._1 - topK._1 <= 2, s"'$q': search $search vs top-k $topK")
+      // search = topKAuto + the text fetch with the directory held; over
+      // the ceiling + the dictionary lookup too
+      val perQuery = for {
+        q <- Seq("whale", "\"blue whale\" whale engine", "\"blue whale\" AND \"red fish\"")
+        (e, side, extra) <- Seq((engine, "held", 1), (over, "over", 2))
+      } yield {
+        val topK = count(e.topKAuto(q, 0.0, e.params.topK))
+        val search = count(e.search(q, turns))
+        assert(topK._1 == topK._2 && search._1 == search._2, s"'$q' $side repeat: $topK $search")
+        assert(search._1 - topK._1 == extra, s"'$q' $side: search $search vs top-k $topK")
+        s"'$q' $side: topKAuto ${topK._1} search ${search._1}"
       }
-      // the bulk entries, their frames collected (the dictionary join
-      // included): terms are one live-df job + one WAND block scan;
-      // phrases the fold's atom pass + the heap kernel's pass
+      info(s"warm jobs per query: ${perQuery.mkString("; ")}")
+      // the bulk entries, their frames collected (local frames: the
+      // directory attaches conv_id and turn_idx, so neither the
+      // dictionary join's broadcast nor its collect runs a job): terms
+      // are one live-df job + one WAND block scan; phrases the fold's
+      // atom pass + the heap kernel's pass
       val bulkTerms = Seq("whale", "blue", "the")
       val bulkPhrases = Seq("\"blue whale\"", "\"red fish\"")
       val bulk = Seq(
@@ -203,13 +225,38 @@ class EngineSpec extends AnyFunSuite {
           Seq("\"blue whale\" AND \"red fish\"", "\"blue whale\" whale engine")).collect()))
       info(s"bulk warm jobs (first, repeat): ${bulk.mkString(" ")}")
       assert(bulk == Seq(
-        "searchMany terms" -> ((4, 4)),
-        "searchMany phrases" -> ((6, 6)),
-        "searchMany mixed" -> ((8, 8)),
-        "searchManyAuto" -> ((6, 6))), "bulk job pins")
+        "searchMany terms" -> ((2, 2)),
+        "searchMany phrases" -> ((4, 4)),
+        "searchMany mixed" -> ((6, 6)),
+        "searchManyAuto" -> ((4, 4))), "bulk job pins")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("doc directory: both sides of its gate answer ==") {
+    val (io, _) = built
+    import spark.implicits._
+    val turns = TranscriptGen.generate(spark, Convs).toDF()
+    val n = new SparkSearchEngine(spark, io).stats.total_docs
+    val shapes = extraShapes ++ Seq("whale", "zzzunknown")
+    for (k <- Seq(100, 3)) {
+      val held = new SparkSearchEngine(spark, io, GraftParams(topK = k))
+      // one doc over the ceiling: no directory, the same WAND and driver routes
+      val over = new SparkSearchEngine(spark, io, GraftParams(topK = k, driverAlgebraMaxDocs = (n - 1).toInt))
+      for (q <- shapes; acc <- Seq(0.0, Double.MinPositiveValue, 0.4)) {
+        if (q.contains(" ")) assert(over.topKDriver(q, acc, k).isDefined, s"'$q' over the ceiling: driver route")
+        assert(held.topKAuto(q, acc, k) == over.topKAuto(q, acc, k), s"'$q' acc=$acc k=$k topKAuto")
+        assert(held.search(q, turns, acc) == over.search(q, turns, acc), s"'$q' acc=$acc k=$k search")
+        assert(held.searchFrame(q, acc, k).collect().toSeq == over.searchFrame(q, acc, k).collect().toSeq,
+          s"'$q' acc=$acc k=$k searchFrame")
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(String, Long, String, Int, Double)].collect().sortBy(r => (r._1, -r._5, r._2)).toSeq
+      val atoms = Seq("whale", "zzzunknown", "\"blue whale\"", "\"zzz nothing\"")
+      assert(rows(held.searchMany(atoms, k)) == rows(over.searchMany(atoms, k)), s"k=$k searchMany")
+      assert(rows(held.searchManyAuto(shapes, k)) == rows(over.searchManyAuto(shapes, k)), s"k=$k searchManyAuto")
     }
   }
 

@@ -112,6 +112,37 @@ class ServerSpec extends AnyFunSuite {
     } finally { pool.shutdown(); () }
   }
 
+  test("concurrent first /search on a re-opened engine: every reply is byte-equal to its serial reply") {
+    post("/indexDocuments", """{"clear": 1}""")
+    // re-open the engine at the current values: its first requests race
+    // for the lazily loaded doc directory
+    assert(put("/setRankerParameters",
+      """{"BM25_K1": 1.5, "BM25_B": 0.75, "PHRASE_BOOST": 1.35, "EXACT_MATCH_WEIGHT": 0.6}""").statusCode() == 200)
+    val queries = Seq("whale", "zzzunknown", "%22blue%20whale%22", "%22zzz%20nothing%22",
+      "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22",
+      "%22blue%20whale%22%20whale%20engine")
+    val clients = Runtime.getRuntime.availableProcessors
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
+    val replies = try {
+      val calls = (0 until clients).map { c =>
+        val q = queries(c % queries.size)
+        val call: java.util.concurrent.Callable[(String, HttpResponse[String])] = () => {
+          start.await(); q -> get(s"/search?query=$q&accuracy=0.0")
+        }
+        pool.submit(call)
+      }
+      start.countDown()
+      calls.map(_.get())
+    } finally { pool.shutdown(); () }
+    val serial = queries.map(q => q -> get(s"/search?query=$q&accuracy=0.0")).toMap
+    serial.foreach { case (q, r) => assert(r.statusCode() == 200, s"$q: ${r.body()}") }
+    replies.foreach { case (q, r) =>
+      assert(r.statusCode() == 200 && r.body() == serial(q).body(),
+        s"$q on the first requests: ${r.statusCode()} ${r.body().take(200)}")
+    }
+  }
+
   test("setRankerParameters swaps the ranker; bad body rejected") {
     val ok = put("/setRankerParameters",
       """{"BM25_K1": 1.2, "BM25_B": 0.8, "PHRASE_BOOST": 1.5, "EXACT_MATCH_WEIGHT": 0.5}""")
