@@ -41,12 +41,12 @@ import graft.text.TextPipeline
   * tombstone count come from the log, and the never-cached `postings`,
   * `dict`, `blocks` and `deleted_term_df` handles are read from that
   * version's file list with declared schemas, so neither opening nor a
-  * first query runs a metadata job. Below `driverAlgebraMaxDocs` live
-  * docs the engine also holds that version's doc directory (`directory`,
-  * loaded by the first query that needs it), so hits, dense fills and
-  * result frames resolve on the driver. Re-open after any write to see
-  * it; the HTTP server does, and resolves its `--input` turns frame with
-  * each re-open.
+  * first query runs a metadata job. Up to `DocDirectory.MaxDocs` live
+  * docs (and `driverAlgebraMaxDocs`) the engine also holds that version's
+  * doc directory (`directory`, loaded by the first query that needs it),
+  * so hits, dense fills and result frames resolve on the driver. Re-open
+  * after any write to see it; the HTTP server does, and resolves its
+  * `--input` turns frame with each re-open.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -83,16 +83,18 @@ final class SparkSearchEngine(
   private lazy val dict = minusDeleted(rawDict)
 
   /** This snapshot's live docs on the driver — resolves hits, dense fills
-    * and result frames with no Spark job — when they fit the driver
-    * (`stats.total_docs <= params.driverAlgebraMaxDocs`, so it holds at
-    * most that many entries); None above it, where those lookups stay
+    * and result frames with no Spark job — when `stats.total_docs` is at
+    * most `params.driverAlgebraMaxDocs` and `DocDirectory.MaxDocs`, so it
+    * holds at most that many entries; None above, where those lookups stay
     * Spark jobs over `dict`. Read from `dict` in one job on first use: it
     * excludes tombstones exactly as the Spark fill does, and it is never
     * stale, since an engine serves one log version. A lazy val: concurrent
     * first uses wait on one load, and a failed load is retried on the next
     * use. */
   private lazy val directory: Option[DocDirectory] =
-    if (stats.total_docs <= params.driverAlgebraMaxDocs) Some(DocDirectory.load(dict)) else None
+    if (stats.total_docs <= math.min(params.driverAlgebraMaxDocs, DocDirectory.MaxDocs))
+      Some(DocDirectory.load(dict))
+    else None
   private lazy val blocks = io.read(Tables.Blocks, snapshot)
   private lazy val deletedTermDf: Option[DataFrame] =
     if (deletes.isDefined && snapshot.has(Tables.DeletedTermDf))
@@ -261,6 +263,20 @@ final class SparkSearchEngine(
       val fill = absent(k).map(d => (d, default))
       (top ++ fill).sortBy { case (d, sc) => (-sc, d) }.take(k)
     }
+  }
+
+  /** (conv_id, turn_idx) of result docIds (live by construction): from
+    * the directory when the engine holds it, else one Spark job over the
+    * dictionary — an `isin` filter for up to 10,000 ids, a join above. */
+  private def refs(ids: Seq[Long]): Map[Long, (String, Int)] = directory match {
+    case Some(dir) => ids.iterator.map(d => d -> dir.ref(d)).toMap
+    case None if ids.isEmpty => Map.empty
+    case None =>
+      val distinct = ids.distinct
+      val hits = if (distinct.size <= 10000) rawDict.filter($"docId".isin(distinct: _*))
+        else rawDict.join(spark.createDataset(distinct).toDF("docId"), Seq("docId"))
+      hits.select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
+        .map { case (d, c, t) => d -> ((c, t)) }.toMap
   }
 
   /** The k lowest docIds of a frame of live docIds: one Spark job (the
@@ -501,24 +517,18 @@ final class SparkSearchEngine(
     if (top.isEmpty) return Vector.empty
     val keys = Snippeter.queryKeys(query, params.stemBareTerms)
     val weights = QueryEvaluator.wordsAndPhrasesWeights(query)
-    // the hits' keys from the directory (else ≤ k dict rows to the
-    // driver), then ONE filtered scan of turns for exactly those keys
-    // (conv_id pushed down to the scan): no join, so no broadcast job and
-    // no shuffle of turns
-    val refs = directory match {
-      case Some(dir) => top.map { case (d, _) => d -> dir.ref(d) }.toMap
-      case None => rawDict.filter($"docId".isin(top.map(_._1): _*))
-        .select($"docId", $"conv_id", $"turn_idx").as[(Long, String, Int)].collect()
-        .map { case (d, c, t) => d -> ((c, t)) }.toMap
-    }
-    val wanted = refs.values.toSeq.distinct
+    // the hits' keys, then ONE filtered scan of turns for exactly those
+    // keys (conv_id pushed down to the scan): no join, so no broadcast job
+    // and no shuffle of turns
+    val ref = refs(top.map(_._1))
+    val wanted = ref.values.toSeq.distinct
     val texts = turns
       .filter($"conv_id".isin(wanted.map(_._1).distinct: _*) && struct($"conv_id", $"turn_idx").isin(
         wanted.map { case (c, t) => struct(lit(c).as("conv_id"), lit(t).as("turn_idx")) }: _*))
       .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)].collect()
       .map { case (c, t, text) => (c, t) -> text }.toMap
     top.map { case (docId, score) =>
-      val (convId, turnIdx) = refs(docId)
+      val (convId, turnIdx) = ref(docId)
       val text = texts.get((convId, turnIdx))
       SearchHit(docId, convId, turnIdx, score, text.getOrElse(""),
         text.fold("")(Snippeter.snippet(_, keys, weights)))
@@ -652,18 +662,12 @@ final class SparkSearchEngine(
     withDict(rows)
   }
 
-  /** (query, docId, score) → (query, docId, conv_id, turn_idx, score): a
-    * local frame from the directory when the engine holds it; else an
-    * inner join with the dictionary (complete by the row-level build
-    * invariant; inner lets Spark broadcast the N·k-row result side instead
-    * of shuffling the corpus-sized dictionary). */
-  private def withDict(top: Seq[(String, Long, Double)]): DataFrame = directory match {
-    case Some(dir) =>
-      spark.createDataset(top.map { case (q, d, s) => val (c, t) = dir.ref(d); (q, d, c, t, s) })
-        .toDF("query", "docId", "conv_id", "turn_idx", "score")
-    case None =>
-      spark.createDataset(top).toDF("query", "docId", "score").join(rawDict, Seq("docId"))
-        .select($"query", $"docId", $"conv_id", $"turn_idx", $"score")
+  /** (query, docId, score) → a local frame of (query, docId, conv_id,
+    * turn_idx, score) in the same order. */
+  private def withDict(top: Seq[(String, Long, Double)]): DataFrame = {
+    val ref = refs(top.map(_._2))
+    spark.createDataset(top.map { case (q, d, s) => val (c, t) = ref(d); (q, d, c, t, s) })
+      .toDF("query", "docId", "conv_id", "turn_idx", "score")
   }
 
   /** Bulk search with snippets over the source turns table: the bulk
@@ -695,20 +699,13 @@ final class SparkSearchEngine(
   }
 
   /** DataFrame variant for the driver harness (SparkEntry): the top-k as
-    * (docId, conv_id, turn_idx, score), (score desc, docId asc) — a local
-    * frame from the directory when the engine holds it. */
+    * a local frame of (docId, conv_id, turn_idx, score), (score desc,
+    * docId asc). */
   def searchFrame(query: String, accuracy: Double = 0.0, k: Int = 100): DataFrame = {
     val top = topKAuto(query, accuracy, k)
-    directory match {
-      case Some(dir) =>
-        spark.createDataset(top.map { case (d, s) => val (c, t) = dir.ref(d); (d, c, t, s) })
-          .toDF("docId", "conv_id", "turn_idx", "score")
-      case None =>
-        spark.createDataset(top).toDF("docId", "score")
-          .join(rawDict, Seq("docId"), "left")
-          .select($"docId", $"conv_id", $"turn_idx", $"score")
-          .orderBy($"score".desc, $"docId".asc)
-    }
+    val ref = refs(top.map(_._1))
+    spark.createDataset(top.map { case (d, s) => val (c, t) = ref(d); (d, c, t, s) })
+      .toDF("docId", "conv_id", "turn_idx", "score")
   }
 }
 
@@ -742,14 +739,38 @@ private[api] final class DocDirectory private (ids: Array[Long], convIds: Array[
 }
 
 private[api] object DocDirectory {
-  /** One Spark job: collect (docId, conv_id, turn_idx) of `dict`. */
+  /** The most live docs an engine loads a directory for. Every write
+    * re-opens the engine, so the next request pays the load, and each
+    * later one saves ~0.1 s. Measured with `graft.tools.Drive directory`
+    * (4 cpus, BASELINE.md), the load adds at most 0.4 s to that request
+    * up to 250k docs, 0.6–1.1 s at 1M and 1.3–1.9 s at 2M, where it also
+    * allocates ~0.6 GB of short-lived driver heap. Held, it costs ~28
+    * bytes per doc. */
+  val MaxDocs = 250000
+
+  /** One Spark job: a typed collect of `dict`'s (docId, conv_id,
+    * turn_idx), sorted in place by docId only when the files arrive out of
+    * order (each file is sorted, so TimSort merges a few runs), then moved
+    * into the primitive arrays, each row released as it is read. */
   def load(dict: DataFrame): DocDirectory = {
-    val rows = dict.select("docId", "conv_id", "turn_idx")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1)
-    val convIds = new Array[String](rows.length)
-    for (i <- rows.indices)
-      convIds(i) = if (i > 0 && rows(i)._2 == convIds(i - 1)) convIds(i - 1) else rows(i)._2
-    new DocDirectory(rows.map(_._1), convIds, rows.map(_._3))
+    import dict.sparkSession.implicits._
+    val rows = dict.select("docId", "conv_id", "turn_idx").as[(Long, String, Int)].collect()
+    val n = rows.length
+    if ((1 until n).exists(i => rows(i - 1)._1 > rows(i)._1))
+      java.util.Arrays.sort(rows, java.util.Comparator.comparingLong[(Long, String, Int)](_._1))
+    val ids = new Array[Long](n)
+    val convIds = new Array[String](n)
+    val turnIdx = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val (d, c, t) = rows(i)
+      rows(i) = null
+      ids(i) = d
+      convIds(i) = if (i > 0 && c == convIds(i - 1)) convIds(i - 1) else c
+      turnIdx(i) = t
+      i += 1
+    }
+    new DocDirectory(ids, convIds, turnIdx)
   }
 }
 

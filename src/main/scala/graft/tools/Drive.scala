@@ -35,7 +35,7 @@ import graft.streaming.StreamingDedup
   * and the MinHash index path adds `Similarity.IndexVersion`, so a resume
   * never mixes layouts or corpora. Each artifact is built on first use and
   * reused by every later scenario; the scenarios that write (`gate`,
-  * `delete`) work on a fresh copy.
+  * `delete`, `directory`) work on a fresh copy.
   */
 object Drive {
   private val DefaultConvs = 2250000L
@@ -167,6 +167,7 @@ object Drive {
     Scenario("dense", "[convs]  dense one-shuffle evaluator vs the driver algebra", dense),
     Scenario("gate", "[convs]  streaming gate: 50 micro-batches, compaction after batch 24", gate),
     Scenario("delete", "[convs]  delete 1% of docs, query through tombstones, compact", delete),
+    Scenario("directory", "[convs]  doc directory load: first vs warm search, both gate sides, after a write", directory),
     Scenario("textops", "[convs]  repetition, langId, contamination, substringDup", textops),
     Scenario("hygiene", "[convs]  the full hygiene pipeline in one plan", hygiene),
     Scenario("queries", "[reps] [queryPrefix ...]  min-of-reps SparkEntry query times", queries),
@@ -358,6 +359,51 @@ object Drive {
     val topC = timeQueries("compacted")
     queries.foreach(q => require(topC(q) == topDel(q), s"purge changed $q"))
     println("POST-COMPACT top-k identical to tombstoned top-k: OK")
+  }
+
+  /** The doc directory's cost, on a copy of the warehouse: per round, a
+    * fresh engine at the default ceiling (it holds the directory up to
+    * `DocDirectory.MaxDocs` live docs) and a fresh one just over its gate
+    * time their first `search` (the held side's includes the
+    * one-job load) and their best of 5 warm ones; the driver thread's
+    * allocation during the first search and the heap still live after it
+    * (engine held, after a GC) size the load. Two rounds (the second with
+    * the load's code warm, as in a long-running server), then the same
+    * after deleting 1 doc in 1,000 — the first request after a write.
+    * Both sides must return the same hits. */
+  private def directory(c: Ctx): Unit = {
+    import c.spark.implicits._
+    val io = new ParquetTableIO(c.spark, c.copy(c.warehouse, s"${c.base}/wh_directory"))
+    val turns = c.turns.toDF()
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def liveMb(): Long = {
+      System.gc()
+      val rt = Runtime.getRuntime
+      (rt.totalMemory - rt.freeMemory) >> 20
+    }
+    def sides(label: String): Unit = for (round <- 1 to 2) {
+      val n = new SparkSearchEngine(c.spark, io).stats.total_docs
+      val gate = Seq("held" -> GraftParams(), "over" -> GraftParams(driverAlgebraMaxDocs = (n - 1).toInt))
+      val bySide = for ((side, p) <- gate) yield {
+        val e = new SparkSearchEngine(c.spark, io, p)
+        val live0 = liveMb()
+        val alloc0 = threads.getCurrentThreadAllocatedBytes
+        val (first, hits) = clock(e.search(Term, turns))
+        val allocMb = (threads.getCurrentThreadAllocatedBytes - alloc0) >> 20
+        val retainedMb = liveMb() - live0
+        val warm = (1 to 5).map(_ => clock(e.search(Term, turns))._1).min
+        println(f"DIRECTORY[$label] round $round $side docs=$n first=${first * 1000}%.0f ms " +
+          f"warm=${warm * 1000}%.0f ms alloc=$allocMb MB retained=$retainedMb MB hits=${hits.size}")
+        hits
+      }
+      require(bySide.distinct.size == 1, s"$label: the two sides of the directory gate answered differently")
+    }
+    new SparkSearchEngine(c.spark, io, GraftParams(driverAlgebraMaxDocs = 0)).search(Term, turns) // JVM warm-up
+    sides("built")
+    val ids = io.read(Tables.DocDict).select($"docId").filter($"docId" % 1000 === 7).as[Long]
+    timed("delete 1 in 1,000 docs")(new IndexBuilder(c.spark, io, rawShards = 4).deleteDocs(ids, batchId = 501L))
+    sides("after delete")
   }
 
   private def textops(c: Ctx): Unit = {

@@ -18,7 +18,7 @@ class DriveSpec extends AnyFunSuite {
 
   // `delete` and `probe` come before the scenarios that would warm their
   // caches, so each shared artifact is also built on first use by one of them
-  for (s <- Seq("delete", "build", "bulk", "prefilter", "dense", "probe", "dedup", "textops", "hygiene"))
+  for (s <- Seq("delete", "build", "bulk", "prefilter", "dense", "probe", "dedup", "textops", "hygiene", "directory"))
     test(s"scenario $s runs its checks at 200 conversations") {
       run(s, "200")
     }
