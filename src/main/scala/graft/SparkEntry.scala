@@ -19,11 +19,6 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** `df`'s rows collected into a local frame, which outlives any cache
-    * `df` was computed from. */
-  private def local(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   // ---- transcript index, built once per (JVM, sfDir) --------------------
   private val engines = scala.collection.mutable.Map.empty[String, SparkSearchEngine]
   private def sfOf(dir: String): Double =
@@ -287,14 +282,14 @@ object SparkEntry {
     // result is collected into a local frame)
     "q38_minhash_index_dedup" -> ((s, dir) =>
       Dedup.minHashDedupBatchManaged(s, minhashIndex(s, dir),
-        s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit))(local)),
+        s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit))(Dedup.local)),
     // the streaming dedup gate's batch step: survivors of the new batch
     // after dedup against the indexed corpus and itself (keep-lowest-id);
     // reruns hit the replay path — same survivors, no re-append
     "q41_stream_dedup_gate" -> ((s, dir) =>
       graft.streaming.StreamingDedup.dedupBatchManaged(s, minhashGateIndex(s, dir),
           s.read.parquet(t(dir, "documents")).filter(col("doc_id") >= MinHashSplit),
-          batchId = 0L)(survivors => local(survivors.select(col("doc_id")).orderBy(col("doc_id"))))),
+          batchId = 0L)(survivors => Dedup.local(survivors.select(col("doc_id")).orderBy(col("doc_id"))))),
 
     // ---- text analysis ------------------------------------------------
     "q11_token_counts" -> ((s, dir) => TextOps.tokenCounts(s.read.parquet(t(dir, "documents")))),

@@ -23,9 +23,10 @@ import graft.text.TextPipeline
   * `topKAuto` routes each query along one of three exact paths:
   *  - a single bare term → block-max WAND over the compressed block index
   *    (`termTopKWand`);
-  *  - driver-sized operands → one pruned postings scan for the bare-term
-  *    atoms and one phrase fold for the phrase atoms, then the kernel
-  *    in-process on the driver (`topKDriver`);
+  *  - driver-sized operands → their rows fetched together (`fetch`: one
+  *    postings scan and a driver-side phrase fold when the lexicon bounds
+  *    them, else a pruned term scan and one Spark phrase fold), then the
+  *    kernel in-process on the driver (`topKDriver`);
   *  - anything bigger → one docId shuffle aligns every atom, then the same
   *    kernel per partition (`topKDense`).
   * All three score with `Bm25` in the same IEEE operation order, end in
@@ -33,7 +34,7 @@ import graft.text.TextPipeline
   * bulk entry points run the same code over a batch: `searchMany`'s terms
   * are the WAND of `termTopKWand` at M keys (`wandTopK`), its phrases one
   * fold ranked by the per-query heap kernel `TopK.topKPerQuery`, and
-  * `searchManyAuto` runs `topKDriver`'s fetches and kernel over every
+  * `searchManyAuto` runs `topKDriver`'s fetch and kernel over every
   * query's atoms at once. A call that caches a frame unpersists it before
   * it returns.
   *
@@ -42,11 +43,12 @@ import graft.text.TextPipeline
   * `dict`, `blocks` and `deleted_term_df` handles are read from that
   * version's file list with declared schemas, so neither opening nor a
   * first query runs a metadata job. Up to `DocDirectory.MaxDocs` live
-  * docs (and `driverAlgebraMaxDocs`) the engine also holds that version's
-  * doc directory (`directory`, loaded by the first query that needs it),
-  * so hits, dense fills and result frames resolve on the driver. Re-open
-  * after any write to see it; the HTTP server does, and resolves its
-  * `--input` turns frame with each re-open.
+  * docs (and `driverAlgebraMaxDocs`; `held`) the engine also holds that
+  * version's doc directory and term lexicon (`directory`, `lexicon`, each
+  * loaded in one job by the first query that needs it), so hits, dense
+  * fills, result frames and live df resolve on the driver. Re-open after
+  * any write to see it; the HTTP server does, and resolves its `--input`
+  * turns frame with each re-open.
   */
 final class SparkSearchEngine(
     spark: SparkSession,
@@ -82,24 +84,34 @@ final class SparkSearchEngine(
   private lazy val rawDict = io.read(Tables.DocDict, snapshot)
   private lazy val dict = minusDeleted(rawDict)
 
+  /** Whether the engine holds this snapshot's doc directory and lexicon
+    * on the driver: at most `params.driverAlgebraMaxDocs` and
+    * `DocDirectory.MaxDocs` live docs. */
+  private lazy val held: Boolean =
+    stats.total_docs <= math.min(params.driverAlgebraMaxDocs, DocDirectory.MaxDocs)
+
   /** This snapshot's live docs on the driver — resolves hits, dense fills
-    * and result frames with no Spark job — when `stats.total_docs` is at
-    * most `params.driverAlgebraMaxDocs` and `DocDirectory.MaxDocs`, so it
-    * holds at most that many entries; None above, where those lookups stay
-    * Spark jobs over `dict`. Read from `dict` in one job on first use: it
-    * excludes tombstones exactly as the Spark fill does, and it is never
-    * stale, since an engine serves one log version. A lazy val: concurrent
-    * first uses wait on one load, and a failed load is retried on the next
-    * use. */
+    * and result frames with no Spark job — when `held`; None above, where
+    * those lookups stay Spark jobs over `dict`. Read from `dict` in one job
+    * on first use: it excludes tombstones exactly as the Spark fill does,
+    * and it is never stale, since an engine serves one log version. A lazy
+    * val: concurrent first uses wait on one load, and a failed load is
+    * retried on the next use. */
   private lazy val directory: Option[DocDirectory] =
-    if (stats.total_docs <= math.min(params.driverAlgebraMaxDocs, DocDirectory.MaxDocs))
-      Some(DocDirectory.load(dict))
-    else None
+    if (held) Some(DocDirectory.load(dict)) else None
   private lazy val blocks = io.read(Tables.Blocks, snapshot)
   private lazy val deletedTermDf: Option[DataFrame] =
     if (deletes.isDefined && snapshot.has(Tables.DeletedTermDf))
       Some(io.read(Tables.DeletedTermDf, snapshot))
     else None
+
+  /** This snapshot's live df of every term on the driver when `held`, so
+    * `liveDf` is a lookup; None above. Loaded in one job from the rows the
+    * Spark `liveDf` sums (`dfRows` of every term), so the two agree
+    * exactly; per snapshot and a lazy val, like `directory`, and loaded
+    * by the first query that needs a df, independently of the directory. */
+  private lazy val lexicon: Option[Lexicon] =
+    if (held) Some(Lexicon.load(dfRows(None))) else None
 
   /** Exact deleted-id test for the WAND kernels (a Bloom filter's false
     * positive would drop a LIVE doc — unacceptable, unlike the phrase
@@ -122,19 +134,27 @@ final class SparkSearchEngine(
       id => java.util.Arrays.binarySearch(bc.value, id) >= 0
   }
 
-  /** Live df of every key that has blocks: block `n_docs` minus the
-    * tombstone deltas — the exact row count of the key's filtered
-    * postings, and correct across incrementally appended segments (unlike
-    * the batch-only term_stats table). One shuffle-free job (a row per
-    * block and per delta, summed on the driver); none for no keys. */
-  private def liveDf(keys: Seq[String]): Map[String, Long] =
-    if (keys.isEmpty) Map.empty
-    else {
-      val counts = blocks.filter($"term".isin(keys: _*)).select($"term", $"n_docs".cast("long"))
-      deletedTermDf.fold(counts)(d =>
-        counts.union(d.filter($"term".isin(keys: _*)).select($"term", -$"delta")))
-        .as[(String, Long)].collect().groupMapReduce(_._1)(_._2)(_ + _)
-    }
+  /** (term, df contribution) rows of `keys`, of every term for None: a
+    * block's `n_docs`, a tombstone delta's −`delta`. A term's sum is its
+    * live df — the exact row count of its filtered postings, and correct
+    * across incrementally appended segments (unlike the batch-only
+    * term_stats table). */
+  private def dfRows(keys: Option[Seq[String]]): Dataset[(String, Long)] = {
+    def of(df: DataFrame) = keys.fold(df)(ks => df.filter($"term".isin(ks: _*)))
+    val counts = of(blocks).select($"term", $"n_docs".cast("long"))
+    deletedTermDf.fold(counts)(d => counts.union(of(d).select($"term", -$"delta")))
+      .as[(String, Long)]
+  }
+
+  /** Live df of every key that has blocks: a `lexicon` lookup when the
+    * engine holds it (no job), else `dfRows` summed on the driver — one
+    * shuffle-free job (a row per block and per delta); none for no keys.
+    * The one method that branches on the lexicon. */
+  private[graft] def liveDf(keys: Seq[String]): Map[String, Long] = lexicon match {
+    case Some(lex) => keys.iterator.flatMap(t => lex.df(t).map(t -> _)).toMap
+    case None if keys.isEmpty => Map.empty
+    case None => dfRows(Some(keys)).collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
 
   /** A phrase fold's input — (docId, doc_len, term, positions_vb) of every
     * stem of `phrases` — with a map-side candidate prefilter. Phrase tf
@@ -218,29 +238,80 @@ final class SparkSearchEngine(
   }
 
   /** The phrase positional fold, for many phrases at once: ONE shuffle on
-    * docId over `stemPostings(phrases)`,
-    * then every phrase's fold (stale-postings quirk included) runs
-    * doc-locally in one pass. Returns the UNCACHED frame
-    * (pidx, docId, tf, doc_len) of every doc with tf > 0, `pidx` indexing
-    * `phrases`; a caller that reads it twice caches it and unpersists it
-    * before returning. Phrases must be non-empty. */
+    * docId over `stemPostings(phrases)`, then every phrase's fold runs
+    * doc-locally in one pass (`PhraseMatch.foldDoc`). Returns the UNCACHED
+    * frame (pidx, docId, tf, doc_len) of every doc with tf > 0, `pidx`
+    * indexing `phrases`; a caller that reads it twice caches it and
+    * unpersists it before returning. Phrases must be non-empty. */
   private def phraseFold(phrases: Seq[Vector[String]]): DataFrame = {
-    val indexed = phrases.zipWithIndex.toArray
+    val ps = phrases.toArray
     stemPostings(phrases)
       .groupBy($"docId")
       .agg(first($"doc_len").as("doc_len"), // constant per doc
         collect_list(struct($"term", $"positions_vb")).as("tp"))
       .as[(Long, Int, Seq[(String, Array[Byte])])]
       .flatMap { case (docId, dl, tp) =>
-        val termPos = tp.iterator.map { case (t, vb) =>
-          t -> graft.codec.VarByte.decodePositions(vb).toSeq
-        }.toMap
-        indexed.iterator.flatMap { case (stems, i) =>
-          val tf = PhraseMatch.phraseTf(stems, termPos)
-          if (tf > 0) Iterator.single((i, docId, tf, dl)) else Iterator.empty
-        }
+        PhraseMatch.foldDoc(ps, tp).map { case (i, tf) => (i, docId, tf, dl) }
       }
       .toDF("pidx", "docId", "tf", "doc_len")
+  }
+
+  /** Every term key's and every phrase's rows from ONE postings scan,
+    * `term isin (terms ∪ stems)`, with `positions_vb` read on stem rows
+    * only and no shuffle; the phrase fold then runs per doc on the driver
+    * (`PhraseMatch.foldDoc`, the body `phraseFold` runs per partition).
+    * The caller bounds the scan's rows (Σ live df of the keys). */
+  private def scanAndFold(
+      terms: Seq[String],
+      phrases: Seq[Vector[String]]): (Map[String, Rows], Map[Vector[String], Rows]) = {
+    val stems = phrases.flatten.distinct
+    val keys = (terms ++ stems).distinct
+    if (keys.isEmpty) return (Map.empty, Map.empty)
+    // no stems: a null literal, so the scan prunes the positions column
+    val vb = if (stems.isEmpty) lit(null).cast("binary") else when($"term".isin(stems: _*), $"positions_vb")
+    val rows = postings.filter($"term".isin(keys: _*))
+      .select($"term", $"docId", $"tf", $"doc_len", vb.as("vb"))
+      .as[(String, Long, Int, Int, Array[Byte])].collect()
+    val isTerm = terms.toSet
+    val termRows = rows.filter(r => isTerm(r._1)).groupBy(_._1)
+      .map { case (t, rs) => t -> rs.map(r => (r._2, r._3, r._4)) }
+    val ps = phrases.toArray
+    val folded = rows.filter(_._5 != null).groupBy(_._2).iterator.flatMap { case (docId, rs) =>
+      PhraseMatch.foldDoc(ps, rs.map(r => (r._1, r._5))).map { case (i, tf) => (i, (docId, tf, rs.head._4)) }
+    }.toArray
+    (termRows, folded.groupBy(_._1).map { case (i, rs) => ps(i) -> rs.map(_._2) })
+  }
+
+  /** A batch's operands for the driver route, and the atoms over
+    * `driverAlgebraMaxDocs` (not fetched). When the engine holds the
+    * lexicon and the term keys' and phrase stems' live df sum to at most
+    * `driverAlgebraMaxDocs`, no atom can be over and `scanAndFold` fetches
+    * them all in one job. Otherwise `fetchTerms`, then `fetchPhrases` —
+    * skipped for `oneQuery` once a term is over, since that query leaves
+    * the driver route anyway. */
+  private def fetch(atoms: Seq[DenseEval.Atom], oneQuery: Boolean): Fetched = {
+    val terms = atoms.collect { case Left(t) => t }.distinct
+    val phrases = atoms.collect { case Right(st) => st }.distinct
+    if (held && liveDf((terms ++ phrases.flatten).distinct).valuesIterator.sum <= params.driverAlgebraMaxDocs) {
+      val (termRows, phraseRows) = scanAndFold(terms, phrases)
+      new Fetched(termRows, phraseRows, Set.empty)
+    } else {
+      val (termRows, bigTerms) = fetchTerms(terms)
+      val (phraseRows, bigPhrases) =
+        if (oneQuery && bigTerms.nonEmpty) (Map.empty[Vector[String], Rows], Set.empty[Vector[String]])
+        else fetchPhrases(phrases)
+      new Fetched(termRows, phraseRows,
+        bigTerms.map(t => Left(t): DenseEval.Atom) ++ bigPhrases.map(st => Right(st): DenseEval.Atom))
+    }
+  }
+
+  /** Fetched operand rows; an atom absent from its map matched no doc. */
+  private final class Fetched(
+      terms: Map[String, Rows],
+      phrases: Map[Vector[String], Rows],
+      over: Set[DenseEval.Atom]) {
+    def rowsOf(atom: DenseEval.Atom): Rows = atom.fold(terms.get, phrases.get).getOrElse(Array.empty)
+    def fits(atoms: Seq[DenseEval.Atom]): Boolean = !atoms.exists(over)
   }
 
   /** The top-k tail of every route: the accuracy filter, (score desc,
@@ -327,25 +398,14 @@ final class SparkSearchEngine(
     }
   }
 
-  /** An atom's prefetched rows; an atom absent from its map matched no doc. */
-  private def rowsOf(terms: Map[String, Rows], phrases: Map[Vector[String], Rows])(
-      atom: DenseEval.Atom): Rows =
-    atom.fold(terms.get, phrases.get).getOrElse(Array.empty)
-
   /** Driver-route top-k; None when an operand, or the docs the operands
     * match together, exceed `driverAlgebraMaxDocs`. The query's operands
-    * are fetched together: every bare-term atom in one postings scan gated
-    * on its live df, every phrase atom in one `phraseFold` (one docId
-    * shuffle); the kernel then runs in-process. */
+    * are fetched together (`fetch`); the kernel then runs in-process. */
   def topKDriver(query: String, accuracy: Double, k: Int): Option[Vector[(Long, Double)]] = {
     val (root, atoms) = parse(query)
-    val (termRows, bigTerms) = fetchTerms(atoms.collect { case Left(t) => t })
-    if (bigTerms.nonEmpty) None
-    else {
-      val (phraseRows, bigPhrases) = fetchPhrases(atoms.collect { case Right(st) => st })
-      if (bigPhrases.nonEmpty) None
-      else driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k)
-    }
+    val fetched = fetch(atoms, oneQuery = true)
+    if (!fetched.fits(atoms)) None
+    else driverTopK(root, atoms, fetched.rowsOf, accuracy, k)
   }
 
   /** Dense ONE-SHUFFLE evaluator for arbitrary boolean/mixed queries — the
@@ -394,27 +454,20 @@ final class SparkSearchEngine(
     val rows: Dataset[Row] = (termRows.toSeq ++ stemRows.toSeq)
       .reduceOption(_ union _)
       .getOrElse(spark.emptyDataset[(Long, Int, Boolean, Int, Int, String, Array[Byte])])
-    val bPhrases = spark.sparkContext.broadcast(phraseAtoms.toArray)
+    val bPhrases = spark.sparkContext.broadcast((phraseAtoms.map(_._1).toArray, phraseAtoms.map(_._2).toArray))
     val aligned = rows
       .groupByKey(_._1)
       .flatMapGroups { (docId: Long, it: Iterator[Row]) =>
         val entries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-        var termPos: scala.collection.mutable.HashMap[String, Seq[Int]] = null
+        val stemRows = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
         var dl = 0
         it.foreach { case (_, dlr, isStem, aIdx, tf, term, vb) =>
           dl = dlr
-          if (!isStem) entries += ((aIdx, tf, dlr))
-          else {
-            if (termPos == null) termPos = scala.collection.mutable.HashMap.empty
-            termPos(term) = graft.codec.VarByte.decodePositions(vb).toSeq
-          }
+          if (!isStem) entries += ((aIdx, tf, dlr)) else stemRows += ((term, vb))
         }
-        if (termPos != null) {
-          val tp = termPos.toMap
-          bPhrases.value.foreach { case (stems, aIdx) =>
-            val tf = PhraseMatch.phraseTf(stems, tp)
-            if (tf > 0) entries += ((aIdx, tf, dl))
-          }
+        if (stemRows.nonEmpty) {
+          val (stems, aIdx) = bPhrases.value
+          PhraseMatch.foldDoc(stems, stemRows).foreach { case (i, tf) => entries += ((aIdx(i), tf, dl)) }
         }
         if (entries.nonEmpty) Iterator.single((docId, entries.toArray))
         else Iterator.empty
@@ -458,10 +511,11 @@ final class SparkSearchEngine(
       .mapPartitions(it => Wand.topKForPartitionMulti(it, idf, k, p, st, delFn))
   }
 
-  /** Block-max WAND top-k of every bare-term key: one `liveDf` job, then
-    * one `wandScan` over the keys with live docs (no job for none), merged
-    * per key on the driver (`Wand.mergeTopK`) and scored with `atomScore`
-    * — rank- and score-identical to the exhaustive path (same IEEE order;
+  /** Block-max WAND top-k of every bare-term key: `liveDf` (a lookup when
+    * `held`, else one job), then one `wandScan` over the keys with live
+    * docs (no job for none), merged per key on the driver
+    * (`Wand.mergeTopK`) and scored with `atomScore` — rank- and
+    * score-identical to the exhaustive path (same IEEE order;
     * the normalization max IS the top-1 score). Keys with no live doc are
     * absent from the map.
     *
@@ -541,9 +595,9 @@ final class SparkSearchEngine(
     * re-scoring thousands of filter queries pays that per query, here per
     * shape:
     *   - every term is `wandTopK` over all the batch's keys: one live-df
-    *     job and one pruned block scan (pruning, not just batching:
-    *     full-scoring 64 head terms at 10M docs measured slower than 64
-    *     WAND round-trips);
+    *     lookup (a job when not `held`) and one pruned block scan
+    *     (pruning, not just batching: full-scoring 64 head terms at 10M
+    *     docs measured slower than 64 WAND round-trips);
     *   - every phrase is one `phraseFold` (one docId shuffle over the union
     *     of their stems) ranked by `phraseTopK`.
     * Per-query results are bit-identical to the single-query paths by
@@ -623,15 +677,15 @@ final class SparkSearchEngine(
 
   /** Bulk evaluation of ARBITRARY queries — boolean, NOT, brackets and
     * mixed term+phrase shapes included — with the distributed operand
-    * FETCH shared across the whole batch: ONE pruned postings scan for
-    * every bare-term atom of every query, and ONE docId shuffle (head-
-    * stem Bloom-prefiltered) folding every phrase atom of every query
-    * doc-locally. Each query then takes the driver route over the
-    * prefetched rows (`driverTopK`, the `DenseEval` kernel in-process —
-    * the same code the single-query driver path runs, so results are
-    * bit-identical to `topKAuto` by construction; EngineSpec asserts it).
-    * The fetches and their gates are `topKDriver`'s, `fetchTerms` and
-    * `fetchPhrases`, run once over the whole batch's atoms. A query whose
+    * FETCH shared across the whole batch: `topKDriver`'s `fetch`, run once
+    * over every query's atoms (ONE postings scan and a driver-side phrase
+    * fold when the lexicon bounds them; else ONE pruned postings scan for
+    * the bare-term atoms and ONE docId shuffle, head-stem
+    * Bloom-prefiltered, folding every phrase atom doc-locally). Each query
+    * then takes the driver route over the prefetched rows (`driverTopK`,
+    * the `DenseEval` kernel in-process — the same code the single-query
+    * driver path runs, so results are bit-identical to `topKAuto` by
+    * construction; EngineSpec asserts it). A query whose
     * operand, or whose operands' union, exceeds `driverAlgebraMaxDocs` —
     * every phrase query when the phrase fetch reached its quota — falls
     * back to its own `topKAuto` evaluation: correct, just unshared.
@@ -647,15 +701,11 @@ final class SparkSearchEngine(
       accuracy: Double = 0.0): DataFrame = {
     require(queries.nonEmpty, "searchManyAuto needs at least one query")
     val evaluated = queries.distinct.map { q => val (root, atoms) = parse(q); (q, root, atoms) }
-    // ---- shared fetches, gated as topKDriver's: live df, then ONE
-    // pruned term scan; ONE quota-bounded phrase fold collect
-    val allAtoms = evaluated.flatMap(_._3).distinct
-    val (termRows, oversizedTerms) = fetchTerms(allAtoms.collect { case Left(t) => t })
-    val (phraseRows, oversizedPhrases) = fetchPhrases(allAtoms.collect { case Right(st) => st })
+    // ---- one shared fetch, topKDriver's, over every query's atoms
+    val fetched = fetch(evaluated.flatMap(_._3).distinct, oneQuery = false)
     // ---- per query: the driver route over the prefetched atoms ---------
     val rows = evaluated.flatMap { case (q, root, atoms) =>
-      val fits = atoms.forall(_.fold(t => !oversizedTerms(t), st => !oversizedPhrases(st)))
-      (if (fits) driverTopK(root, atoms, rowsOf(termRows, phraseRows), accuracy, k) else None)
+      (if (fetched.fits(atoms)) driverTopK(root, atoms, fetched.rowsOf, accuracy, k) else None)
         .getOrElse(topKAuto(q, accuracy, k))
         .map { case (d, s) => (q, d, s) }
     }
@@ -745,7 +795,8 @@ private[api] object DocDirectory {
     * (4 cpus, BASELINE.md), the load adds at most 0.4 s to that request
     * up to 250k docs, 0.6–1.1 s at 1M and 1.3–1.9 s at 2M, where it also
     * allocates ~0.6 GB of short-lived driver heap. Held, it costs ~28
-    * bytes per doc. */
+    * bytes per doc. The lexicon shares this ceiling: at 250k docs its load
+    * adds 28–196 ms more, and the two together stayed within 0.4 s. */
   val MaxDocs = 250000
 
   /** One Spark job: a typed collect of `dict`'s (docId, conv_id,
@@ -774,11 +825,61 @@ private[api] object DocDirectory {
   }
 }
 
+/** The live df of every term of one snapshot, held on the driver: the
+  * terms ascending (String order) beside their df, looked up by binary
+  * search. */
+private[api] final class Lexicon private (terms: Array[String], dfs: Array[Long]) {
+
+  /** A term's live df; None for a term with no block in the snapshot. */
+  def df(term: String): Option[Long] = {
+    val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+    if (i >= 0) Some(dfs(i)) else None
+  }
+}
+
+private[api] object Lexicon {
+  /** One Spark job: the (term, df contribution) rows summed per partition
+    * on the executors (no shuffle), then collected, sorted by term and
+    * summed across partitions into the two arrays. */
+  def load(rows: Dataset[(String, Long)]): Lexicon = {
+    import rows.sparkSession.implicits._
+    val partial = rows.mapPartitions { it =>
+      val sums = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach { case (t, n) => sums(t) = sums.getOrElse(t, 0L) + n }
+      sums.iterator
+    }.collect()
+    java.util.Arrays.sort(partial, Ordering.by[(String, Long), String](_._1))
+    val terms = Array.newBuilder[String]
+    val dfs = Array.newBuilder[Long]
+    var i = 0
+    while (i < partial.length) {
+      val t = partial(i)._1
+      var df = 0L
+      while (i < partial.length && partial(i)._1 == t) { df += partial(i)._2; i += 1 }
+      terms += t; dfs += df
+    }
+    new Lexicon(terms.result(), dfs.result())
+  }
+}
+
 /** The phrase positional fold, doc-local form — equivalent to the
   * reference's global iteration (BM25Ranker.cpp:439-491), including the
   * stale-postings quirk; unit-tested against the oracle's independent
   * global-fold transcription. */
 object PhraseMatch {
+  /** Every phrase's tf in one doc, from the doc's (stem, positions_vb)
+    * rows: each stem's positions decoded once, then `phraseTf` per phrase.
+    * Yields (index into `phrases`, tf) for tf > 0, in phrase order. */
+  def foldDoc(phrases: Array[Vector[String]], stemRows: Iterable[(String, Array[Byte])]): Iterator[(Int, Int)] = {
+    val termPos = stemRows.iterator.map { case (t, vb) =>
+      t -> graft.codec.VarByte.decodePositions(vb).toSeq
+    }.toMap
+    phrases.iterator.zipWithIndex.flatMap { case (stems, i) =>
+      val tf = phraseTf(stems, termPos)
+      if (tf > 0) Iterator.single((i, tf)) else Iterator.empty
+    }
+  }
+
   def phraseTf(stems: Seq[String], termPos: Map[String, Seq[Int]]): Int = {
     if (stems.isEmpty || !termPos.contains(stems.head)) return 0
     var meta: Seq[Int] = termPos(stems.head)

@@ -588,16 +588,23 @@ object Dedup {
     * Output = the pairs `minHashLsh` over the union corpus would report
     * that touch ≥ 1 new doc (same banding, same cap semantics, same
     * estimates). New doc_ids must be disjoint from the corpus (as with
-    * the ANN appends). */
+    * the ANN appends). Runs at the call and returns a local frame (the
+    * per-batch caches are released before it returns); a caller that
+    * streams a large result consumes it inside `minHashDedupBatchManaged`. */
   def minHashDedupBatch(
       spark: SparkSession,
       indexPath: String,
       newDocs: DataFrame,
       threshold: Double = 0.5,
       maxBucket: Int = 100000): DataFrame =
-    minHashDedupBatchImpl(spark, IndexStore.open(spark, indexPath), newDocs, threshold, maxBucket)._1
+    minHashDedupBatchManaged(spark, indexPath, newDocs, threshold, maxBucket)(local)
 
-  /** minHashDedupBatch with deterministic cleanup: the per-batch caches
+  /** `df`'s rows collected into a local frame, which outlives any cache
+    * `df` was computed from. */
+  private[graft] def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** The batch probe with deterministic cleanup: the per-batch caches
     * (batch signatures, banding rows, candidate pairs) are unpersisted after
     * `use` returns — the contract a continuous ingest (the streaming gate)
     * needs, where one evictable-but-live cache entry per micro-batch would

@@ -47,8 +47,8 @@ object StreamingDedup {
   /** Dedup ONE batch against the index (and itself) and grow the index
     * with the survivors' signatures; idempotent per (runId, batchId).
     * Exposed so tests (and batch pipelines) can drive it without a
-    * streaming query. NOTE: per-call caches stay live (evictable) on this
-    * path — continuous callers must use `dedupBatchManaged`.
+    * streaming query: `dedupBatchManaged` collecting the survivors into a
+    * local frame, so no per-batch cache outlives the call.
     *
     * @return the surviving documents of `batch` (same schema)
     */
@@ -59,15 +59,10 @@ object StreamingDedup {
       batchId: Long,
       threshold: Double = 0.5,
       maxBucket: Int = 100000,
-      runId: String = ""): DataFrame = {
-    val idx = IndexStore.open(spark, indexPath)
-    val (pairs, _) = Dedup.minHashDedupBatchImpl(spark, idx, batch, threshold, maxBucket)
-    val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti")
-    commit(idx, survivors, runId, batchId)
-    survivors
-  }
+      runId: String = ""): DataFrame =
+    dedupBatchManaged(spark, indexPath, batch, batchId, threshold, maxBucket, runId)(Dedup.local)
 
-  /** dedupBatch with deterministic cleanup: the batch's dedup caches (and
+  /** The batch step with deterministic cleanup: the batch's dedup caches (and
     * the survivor cache the append + sink share) are unpersisted after
     * `use` returns — the per-micro-batch contract of a continuous ingest.
     * `use` must fully consume the survivors. */

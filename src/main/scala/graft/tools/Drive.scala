@@ -167,7 +167,7 @@ object Drive {
     Scenario("dense", "[convs]  dense one-shuffle evaluator vs the driver algebra", dense),
     Scenario("gate", "[convs]  streaming gate: 50 micro-batches, compaction after batch 24", gate),
     Scenario("delete", "[convs]  delete 1% of docs, query through tombstones, compact", delete),
-    Scenario("directory", "[convs]  doc directory load: first vs warm search, both gate sides, after a write", directory),
+    Scenario("directory", "[convs]  doc directory and lexicon loads: first vs warm search, both gate sides, after a write", directory),
     Scenario("textops", "[convs]  repetition, langId, contamination, substringDup", textops),
     Scenario("hygiene", "[convs]  the full hygiene pipeline in one plan", hygiene),
     Scenario("queries", "[reps] [queryPrefix ...]  min-of-reps SparkEntry query times", queries),
@@ -361,16 +361,20 @@ object Drive {
     println("POST-COMPACT top-k identical to tombstoned top-k: OK")
   }
 
-  /** The doc directory's cost, on a copy of the warehouse: per round, a
-    * fresh engine at the default ceiling (it holds the directory up to
-    * `DocDirectory.MaxDocs` live docs) and a fresh one just over its gate
-    * time their first `search` (the held side's includes the
-    * one-job load) and their best of 5 warm ones; the driver thread's
-    * allocation during the first search and the heap still live after it
-    * (engine held, after a GC) size the load. Two rounds (the second with
-    * the load's code warm, as in a long-running server), then the same
-    * after deleting 1 doc in 1,000 — the first request after a write.
-    * Both sides must return the same hits. */
+  /** The doc directory's and the lexicon's cost, on a copy of the
+    * warehouse: per round, a fresh engine at the default ceiling (it holds
+    * both up to `DocDirectory.MaxDocs` live docs) and a fresh one just over
+    * its gate each time one live-df lookup (the held side's loads the
+    * lexicon in one job, the other side's is one job), then their first
+    * `search` (the held side's loads the directory) and their best of 5
+    * warm ones; the driver thread's allocation during each first call and
+    * the heap still live after it (engine held, after a GC) size each
+    * load. Two rounds (the second with the loads' code warm, as in a
+    * long-running server), then the same after deleting 1 doc in 1,000 —
+    * the first request after a write. Last, the driver allocation of a
+    * warm mixed query whose phrase leads with the highest-df stem (the
+    * one-scan fetch's largest shape). Both sides must return the same
+    * hits. */
   private def directory(c: Ctx): Unit = {
     import c.spark.implicits._
     val io = new ParquetTableIO(c.spark, c.copy(c.warehouse, s"${c.base}/wh_directory"))
@@ -382,19 +386,24 @@ object Drive {
       val rt = Runtime.getRuntime
       (rt.totalMemory - rt.freeMemory) >> 20
     }
+    /** `body`'s wall ms, driver-thread allocation and retained heap (MB). */
+    def measured[T](body: => T): (String, T) = {
+      val live0 = liveMb()
+      val alloc0 = threads.getCurrentThreadAllocatedBytes
+      val (sec, r) = clock(body)
+      val allocMb = (threads.getCurrentThreadAllocatedBytes - alloc0) >> 20
+      (f"${sec * 1000}%.0f ms alloc=$allocMb MB retained=${liveMb() - live0} MB", r)
+    }
+    def gate(n: Long) = Seq("held" -> GraftParams(), "over" -> GraftParams(driverAlgebraMaxDocs = (n - 1).toInt))
     def sides(label: String): Unit = for (round <- 1 to 2) {
       val n = new SparkSearchEngine(c.spark, io).stats.total_docs
-      val gate = Seq("held" -> GraftParams(), "over" -> GraftParams(driverAlgebraMaxDocs = (n - 1).toInt))
-      val bySide = for ((side, p) <- gate) yield {
+      val bySide = for ((side, p) <- gate(n)) yield {
         val e = new SparkSearchEngine(c.spark, io, p)
-        val live0 = liveMb()
-        val alloc0 = threads.getCurrentThreadAllocatedBytes
-        val (first, hits) = clock(e.search(Term, turns))
-        val allocMb = (threads.getCurrentThreadAllocatedBytes - alloc0) >> 20
-        val retainedMb = liveMb() - live0
+        val (lexicon, _) = measured(e.liveDf(Seq(Term)))
+        val (first, hits) = measured(e.search(Term, turns))
         val warm = (1 to 5).map(_ => clock(e.search(Term, turns))._1).min
-        println(f"DIRECTORY[$label] round $round $side docs=$n first=${first * 1000}%.0f ms " +
-          f"warm=${warm * 1000}%.0f ms alloc=$allocMb MB retained=$retainedMb MB hits=${hits.size}")
+        println(f"DIRECTORY[$label] round $round $side docs=$n lexicon: $lexicon; first search: $first; " +
+          f"warm=${warm * 1000}%.0f ms hits=${hits.size}")
         hits
       }
       require(bySide.distinct.size == 1, s"$label: the two sides of the directory gate answered differently")
@@ -404,6 +413,18 @@ object Drive {
     val ids = io.read(Tables.DocDict).select($"docId").filter($"docId" % 1000 === 7).as[Long]
     timed("delete 1 in 1,000 docs")(new IndexBuilder(c.spark, io, rawShards = 4).deleteDocs(ids, batchId = 501L))
     sides("after delete")
+    val head = io.read(Tables.Blocks).groupBy($"term").agg(sum($"n_docs").as("df"))
+      .orderBy($"df".desc, $"term").select($"term").as[String].head()
+    val query = s"\"$head $Term\" $Term engine"
+    val n = new SparkSearchEngine(c.spark, io).stats.total_docs
+    val bySide = for ((side, p) <- gate(n)) yield {
+      val e = new SparkSearchEngine(c.spark, io, p)
+      e.topKDriver(query, 0.0, 10) // loads
+      val (warm, top) = measured(e.topKDriver(query, 0.0, 10))
+      println(s"DIRECTORY head-stem mixed '$query' $side docs=$n warm topKDriver: $warm")
+      top
+    }
+    require(bySide.distinct.size == 1, "head-stem mixed: the two sides of the gate answered differently")
   }
 
   private def textops(c: Ctx): Unit = {

@@ -177,6 +177,34 @@ class DeleteSpec extends AnyFunSuite {
     compare("compacted")
   }
 
+  test("lexicon on an appended, tombstoned warehouse: every term's df == the Spark liveDf sum") {
+    import spark.implicits._
+    val io = freshWh()
+    val b = new IndexBuilder(spark, io, blockSize = 8)
+    val convs = allTurns.map(_.conv_id).distinct.sorted
+    val (base, appended) = allTurns.partition(t => convs.indexOf(t.conv_id) < convs.size / 2)
+    b.build(spark.createDataset(base))
+    b.buildIncremental(spark.createDataset(appended), batchId = 1L)
+    val ids = io.read(Tables.DocDict).select(col("docId")).as[Long].collect().sorted
+    // tombstones in both segments, left un-compacted
+    b.deleteDocs(ids.filter(_ % 5 == 2).toSeq, batchId = 2L)
+    assert(io.exists(Tables.Deletes) && io.exists(Tables.DeletedTermDf))
+    val held = new SparkSearchEngine(spark, io)
+    val n = held.stats.total_docs
+    val over = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = (n - 1).toInt))
+    val blocks = io.read(Tables.Blocks).select($"term", $"n_docs".cast("long")).as[(String, Long)].collect()
+    val vocab = blocks.map(_._1).distinct.toSeq
+    val lexicon = held.liveDf(vocab)
+    assert(lexicon.keySet == vocab.toSet)
+    assert(lexicon == over.liveDf(vocab), "the lexicon's df must equal the Spark liveDf sum")
+    // the deltas matter: some term's live df is below its blocks' n_docs sum
+    val blockDf = blocks.groupMapReduce(_._1)(_._2)(_ + _)
+    assert(vocab.exists(t => lexicon(t) < blockDf(t)))
+    // and both sides of the gate answer the phrase shapes alike
+    for (q <- queries ++ Seq("\"blue zzzmissing whale\"", "\"zzzmissing blue whale\" whale", "\"blue blue whale\""))
+      assert(held.topKAuto(q, 0.0, 100) == over.topKAuto(q, 0.0, 100), s"'$q'")
+  }
+
   test("deleteDocs is batch-idempotent; unknown/already-deleted ids are ignored") {
     import spark.implicits._
     val (io, b, survivors, delIds) = tombstoned()

@@ -70,7 +70,7 @@ class GateSpec extends AnyFunSuite {
     val bloom: Side = _.expressions.exists(_.find(_.isInstanceOf[XxHash64]).isDefined)
     // the pair chain on its executor side keeps the prefilter in the plan
     boundary(n, g => Gates(driverBandRows = 0, exactPrefilterKeys = g))(
-      sideAndRows(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5), bloom))
+      Dedup.minHashDedupBatchManaged(spark, idx, batch, threshold = 0.5)(sideAndRows(_, bloom)))
   }
 
   test("brute-force gate: all-pairs jaccard and cosine at n and n - 1 rows") {

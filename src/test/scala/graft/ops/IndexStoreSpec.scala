@@ -186,10 +186,11 @@ class IndexStoreSpec extends AnyFunSuite {
       info(s"warm probe jobs: ${warm.mkString(", ")}")
       // one kernel job per probe, single or bulk (pq/ivfpq: plus the
       // shortlist re-rank); the one-shot LSH also reads the table's dims and
-      // the query vector
+      // the query vector; the minhash batch probe releases its per-batch
+      // caches, so a repeat recomputes them (the managed variant's count)
       assert(warm.toMap == Map("lsh" -> 1, "ivf" -> 1, "pq" -> 2, "ivfpq" -> 2,
         "lsh bulk" -> 1, "ivf bulk" -> 1, "pq bulk" -> 2, "lsh one-shot" -> 3, "brute" -> 1,
-        "minhash" -> 15), s"warm probe jobs $warm")
+        "minhash" -> 17), s"warm probe jobs $warm")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -115,13 +115,14 @@ class ServerSpec extends AnyFunSuite {
   test("concurrent first /search on a re-opened engine: every reply is byte-equal to its serial reply") {
     post("/indexDocuments", """{"clear": 1}""")
     // re-open the engine at the current values: its first requests race
-    // for the lazily loaded doc directory
+    // for the lazily loaded doc directory and lexicon, and run the driver
+    // phrase fold side by side — a mixed query and a phrase lead, so any
+    // two or more clients include both
     assert(put("/setRankerParameters",
       """{"BM25_K1": 1.5, "BM25_B": 0.75, "PHRASE_BOOST": 1.35, "EXACT_MATCH_WEIGHT": 0.6}""").statusCode() == 200)
-    val queries = Seq("whale", "zzzunknown", "%22blue%20whale%22", "%22zzz%20nothing%22",
-      "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22",
-      "%22blue%20whale%22%20whale%20engine")
-    val clients = Runtime.getRuntime.availableProcessors
+    val queries = Seq("%22blue%20whale%22%20whale%20engine", "%22blue%20whale%22", "whale", "zzzunknown",
+      "%22zzz%20nothing%22", "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22")
+    val clients = math.max(2, Runtime.getRuntime.availableProcessors)
     val start = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
     val replies = try {
