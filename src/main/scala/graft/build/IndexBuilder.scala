@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.model._
-import graft.store.{Commit, Snapshot, State, TableIO, Written}
+import graft.store.{Change, Snapshot, State, TableIO, Written}
 import graft.text.TextPipeline
 import graft.codec.VarByte
 
@@ -50,6 +50,8 @@ object Tables {
   val DeleteLedgerStage = "delete_batch"
   /** Lineage stage of committed incremental batches. */
   val IngestLedgerStage = "incremental_batch"
+  /** Lineage stage of an ops index's committed append batches. */
+  val AppendLedgerStage = "append_batch"
 
   // The tables of the ops indexes (`graft.ops.IndexStore`): each index
   // directory holds one family's tables under its own commit log.
@@ -182,16 +184,14 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
 
   private def millisSince(t0: Long): Long = (System.nanoTime() - t0) / 1000000L
 
-  /** Commit `add` (and the removal of every current file of `replaced`)
-    * on `base`, then vacuum: the one step that makes a write visible. */
-  private def commit(base: Snapshot, action: String, add: Map[String, Written], state: State,
-      lineage: Seq[LineageRow], batchId: Long = -1L, replaced: Seq[String] = Nil,
-      reset: Boolean = false): Snapshot = {
-    val remove = replaced.flatMap(t => base.files.get(t).map(fs => t -> fs.map(_.path))).toMap
-    val snap = io.commit(base, Commit(-1L, action, batchId, reset,
-      add.map { case (t, w) => t -> w.files }, remove, state, lineage, 0L))
-    io.vacuum(snap)
-    snap
+  /** The removal of every current file of `tables` at `base`. */
+  private def replaced(base: Snapshot, tables: Seq[String]): Map[String, Seq[String]] =
+    tables.flatMap(t => base.files.get(t).map(fs => t -> fs.map(_.path))).toMap
+
+  /** A ledgered write's metric: its ledger row, the last of its commit. */
+  private def ledgerMetric(snap: Snapshot): StageMetric = {
+    val r = snap.lineage.last
+    StageMetric(s"${r.stage}:${r.partition_id}", r.rows, r.wall_ms, skipped = false)
   }
 
   /** Dense docId = global rank under (conv_id, turn_idx) ordering.
@@ -219,7 +219,8 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     * (`resume = false`) resets the warehouse: a new corpus life restarts
     * docIds at 0, so stale tombstones, watermark and ledger go with it.
     * `ingestBatch` is the incremental batch a bootstrap build indexes: its
-    * ledger row rides on the last commit. */
+    * ledger row rides on the last commit (a warehouse without blocks holds
+    * no ingest ledger row, so nothing before that commit can be a replay). */
   private def buildStages(turns: Dataset[Turn], resume: Boolean, assumeSorted: Boolean,
       ingestBatch: Option[Long]): Seq[StageMetric] = {
     val latest = io.snapshot()
@@ -231,11 +232,13 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     var reset = !resume
     def done(stage: String) = resume && snap.lineage.exists(_.stage == stage)
     def commitStage(stage: String, table: String, w: Written, t0: Long, state: State = snap.state,
-        extra: Long => Seq[LineageRow] = _ => Nil, replace: Boolean = true): Unit = {
+        extra: Seq[LineageRow] = Nil, replace: Boolean = true,
+        key: Option[(String, Long)] = None): Unit = {
       val wallMs = millisSince(t0)
-      snap = commit(snap, "build", Map(table -> w), state,
-        LineageRow(stage, -1, "done", w.rows, wallMs) +: extra(wallMs), ingestBatch.getOrElse(-1L),
-        replaced = if (replace) Seq(table) else Nil, reset = reset)
+      io.commitWrite(snap, key)(Change("build", state, Map(table -> w),
+        replaced(snap, if (replace) Seq(table) else Nil), LineageRow(stage, -1, "done", w.rows, wallMs) +: extra,
+        reset, // a bootstrap's ledger row records the whole build
+        rows = metrics.map(_.rows).sum + w.rows, wallMs = metrics.map(_.wallMs).sum + wallMs)).foreach(snap = _)
       reset = false
       if (stage == table) metrics += StageMetric(stage, w.rows, wallMs, skipped = false)
     }
@@ -266,8 +269,8 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
         // the stage's own row, over every shard's rows
         val rows = snap.lineage.filter(r => shardStages.contains(r.stage)).map(_.rows).sum
         val wallMs = millisSince(t0)
-        snap = commit(snap, "build", Map.empty, snap.state,
-          Seq(LineageRow(Tables.PostingsRaw, -1, "done", rows, wallMs)), ingestBatch.getOrElse(-1L))
+        io.commitWrite(snap)(Change("build", snap.state,
+          lineage = Seq(LineageRow(Tables.PostingsRaw, -1, "done", rows, wallMs)))).foreach(snap = _)
         metrics += StageMetric(Tables.PostingsRaw, rows, wallMs, skipped = false)
       }
     }
@@ -285,7 +288,7 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
       val state = snap.state.copy(docs = n, docLenSum = dlSum,
         avgDocLen = if (n == 0) 0.0 else dlSum.toDouble / n, nextDocId = maxId + 1L, tombstones = 0L)
       commitStage(Tables.DocDict, Tables.DocDict, w, t0, state,
-        extra = _ => Seq(LineageRow(Tables.Stats, -1, "done", 1L, 0L)))
+        extra = Seq(LineageRow(Tables.Stats, -1, "done", 1L, 0L)))
       metrics += StageMetric(Tables.Stats, 1L, 0L, skipped = false)
     }
     if (done(Tables.DocDict)) metrics += StageMetric(Tables.Stats, -1L, 0L, skipped = true)
@@ -317,9 +320,7 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
         .select("term", "docId", "tf", "doc_len")
         .as[(String, Long, Int, Int)])
       val w = io.write(blocks.toDF(), Tables.Blocks, sortCols = Seq("term", "min_doc"))
-      commitStage(Tables.Blocks, Tables.Blocks, w, t0, extra = wallMs => ingestBatch.toSeq.map(b =>
-        LineageRow(Tables.IngestLedgerStage, b.toInt, "done",
-          metrics.map(_.rows).sum + w.rows, metrics.map(_.wallMs).sum + wallMs)))
+      commitStage(Tables.Blocks, Tables.Blocks, w, t0, key = ingestBatch.map(Tables.IngestLedgerStage -> _))
     }
 
     metrics.toSeq
@@ -410,9 +411,9 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     }
     // stats were made exact at delete time — nothing to recompute; the
     // tombstones are fully folded in, so retire them
-    commit(snap, "compact", written.toMap, snap.state.copy(tombstones = 0L),
-      metrics.map(m => LineageRow(m.stage, -1, "done", m.rows, m.wallMs)).toSeq,
-      replaced = written.keys.toSeq ++ Seq(Tables.Deletes, Tables.DeletedTermDf))
+    io.commitWrite(snap)(Change("compact", snap.state.copy(tombstones = 0L), written.toMap,
+      replaced(snap, written.keys.toSeq ++ Seq(Tables.Deletes, Tables.DeletedTermDf)),
+      metrics.map(m => LineageRow(m.stage, -1, "done", m.rows, m.wallMs)).toSeq))
     metrics.toSeq
   }
 
@@ -443,58 +444,55 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
     * holds every tombstone (`GraftParams.maxDeletedIdsInMemory`).
     * Idempotent per `batchId` through the log's ledger: the tables, stats
     * and ledger row land in one commit, so a crashed batch left nothing
-    * visible and its replay simply redoes it. Ids not in the index (or
+    * visible and its replay simply redoes it, and a committed batch's
+    * replay does nothing (`ids` is not even evaluated). Ids not in the index (or
     * already tombstoned) are ignored, so retrying with a superset id list
     * is safe.
     */
-  def deleteDocs(ids: Seq[Long], batchId: Long): Seq[StageMetric] = {
+  def deleteDocs(ids: => Seq[Long], batchId: Long): Seq[StageMetric] = {
     val snap = io.snapshot()
     FormatGuard.check(snap, "IndexBuilder.deleteDocs")
     require(snap.has(Tables.DocDict), "deleteDocs: warehouse has no index")
-    if (snap.committed(Tables.DeleteLedgerStage, batchId)) return Seq.empty // batch already committed
-
-    val t0 = System.nanoTime()
-    val wanted = ids.distinct
-    val inDict = io.read(Tables.DocDict, snap).filter(col("docId").isin(wanted: _*))
-      .select(col("docId"), col("doc_len"), lit(false).as("tombstoned"))
-    val found = (if (!snap.has(Tables.Deletes)) inDict
-      else inDict.union(io.read(Tables.Deletes, snap).filter(col("docId").isin(wanted: _*))
-        .select(col("docId"), lit(0).as("doc_len"), lit(true).as("tombstoned"))))
-      .as[(Long, Int, Boolean)].collect()
-    val already = found.collect { case (d, _, true) => d }.toSet
-    val fresh = found.filter { case (d, _, t) => !t && !already(d) }.sortBy(_._1)
-    val nNew = fresh.length.toLong
-    val written =
-      if (nNew == 0) Map.empty[String, Written]
-      else {
-        val newIds = fresh.map(_._1).toSeq
-        val delta = io.read(Tables.Postings, snap).select(col("term"), col("docId"))
-          .filter(col("docId").isin(newIds: _*))
-          .groupBy(col("term")).agg(count(lit(1)).as("delta"))
-          .repartitionByRange(1, col("term"))
-        Map(
-          Tables.DeletedTermDf -> io.write(delta, Tables.DeletedTermDf, sortCols = Seq("term")),
-          Tables.Deletes -> io.write(newIds.toDF("docId").coalesce(1), Tables.Deletes,
-            sortCols = Seq("docId")))
-      }
-    val st = snap.state
-    val docs = st.docs - nNew
-    val docLenSum = st.docLenSum - fresh.map(_._2.toLong).sum
-    val state =
-      if (nNew == 0) st
-      else st.copy(docs = docs, docLenSum = docLenSum,
-        avgDocLen = if (docs == 0) 0.0 else docLenSum.toDouble / docs,
-        tombstones = st.tombstones + nNew)
-    val wallMs = millisSince(t0)
-    commit(snap, "delete", written, state,
-      Seq(LineageRow(Tables.DeleteLedgerStage, batchId.toInt, "done", nNew, wallMs)), batchId)
-    Seq(StageMetric(s"${Tables.DeleteLedgerStage}:$batchId", nNew, wallMs, skipped = false))
+    io.commitWrite(snap, Some(Tables.DeleteLedgerStage -> batchId)) {
+      val wanted = ids.distinct
+      val inDict = io.read(Tables.DocDict, snap).filter(col("docId").isin(wanted: _*))
+        .select(col("docId"), col("doc_len"), lit(false).as("tombstoned"))
+      val found = (if (!snap.has(Tables.Deletes)) inDict
+        else inDict.union(io.read(Tables.Deletes, snap).filter(col("docId").isin(wanted: _*))
+          .select(col("docId"), lit(0).as("doc_len"), lit(true).as("tombstoned"))))
+        .as[(Long, Int, Boolean)].collect()
+      val already = found.collect { case (d, _, true) => d }.toSet
+      val fresh = found.filter { case (d, _, t) => !t && !already(d) }.sortBy(_._1)
+      val nNew = fresh.length.toLong
+      val written =
+        if (nNew == 0) Map.empty[String, Written]
+        else {
+          val newIds = fresh.map(_._1).toSeq
+          val delta = io.read(Tables.Postings, snap).select(col("term"), col("docId"))
+            .filter(col("docId").isin(newIds: _*))
+            .groupBy(col("term")).agg(count(lit(1)).as("delta"))
+            .repartitionByRange(1, col("term"))
+          Map(
+            Tables.DeletedTermDf -> io.write(delta, Tables.DeletedTermDf, sortCols = Seq("term")),
+            Tables.Deletes -> io.write(newIds.toDF("docId").coalesce(1), Tables.Deletes,
+              sortCols = Seq("docId")))
+        }
+      val st = snap.state
+      val docs = st.docs - nNew
+      val docLenSum = st.docLenSum - fresh.map(_._2.toLong).sum
+      val state =
+        if (nNew == 0) st
+        else st.copy(docs = docs, docLenSum = docLenSum,
+          avgDocLen = if (docs == 0) 0.0 else docLenSum.toDouble / docs,
+          tombstones = st.tombstones + nNew)
+      Change("delete", state, written, rows = nNew)
+    }.map(ledgerMetric).toSeq
   }
 
-  /** Distributed id lists: collected (distinct) to the driver first. */
+  /** Distributed id lists: collected (distinct) to the driver first, and
+    * only when the batch is not yet committed. */
   def deleteDocs(ids: Dataset[Long], batchId: Long): Seq[StageMetric] =
-    if (io.snapshot().committed(Tables.DeleteLedgerStage, batchId)) Seq.empty
-    else deleteDocs(ids.distinct().collect().toSeq, batchId)
+    deleteDocs(ids.distinct().collect().toSeq, batchId)
 
   /** One past the last committed delete batch (0 on a never-deleted
     * warehouse) — the default idempotency key for callers that don't
@@ -508,11 +506,8 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
   /** Empty the warehouse: one reset commit with no tables. Every table,
     * tombstone, the docId watermark and the ledger go together, so the
     * next build starts a new corpus life at docId 0. */
-  def clear(): Unit = {
-    val snap = io.snapshot()
-    commit(snap, "clear", Map.empty, Snapshot.empty(Tables.FormatVersion).state, Nil, reset = true)
-    ()
-  }
+  def clear(): Unit =
+    io.commitWrite(io.snapshot())(Change("clear", Snapshot.empty(Tables.FormatVersion).state, reset = true))
 
   /** Incremental indexing — the scalable re-expression of the reference's
     * `processed`-flag batches (/root/reference/source/InvertedIndex.cpp:29-51):
@@ -537,46 +532,44 @@ final class IndexBuilder(spark: SparkSession, io: TableIO, blockSize: Int = 4096
   def buildIncremental(newTurns: Dataset[Turn], batchId: Long): Seq[StageMetric] = {
     val snap = io.snapshot()
     FormatGuard.check(snap, "IndexBuilder.buildIncremental")
-    if (snap.committed(Tables.IngestLedgerStage, batchId)) return Seq.empty // batch already committed
     if (!snap.has(Tables.Blocks))
       return buildStages(newTurns, resume = false, assumeSorted = false, ingestBatch = Some(batchId))
 
-    val t0 = System.nanoTime()
-    val nextId = snap.state.nextDocId
-    val raw = withDocIds(newTurns, assumeSorted = false)
-      .mapPartitions(_.flatMap { case (rank, turn) => rawRows(nextId + rank, turn) })
-      .toDF().cache()
-    val sortedDelta = raw.filter(col("term") =!= "")
-      .select("term", "docId", "tf", "doc_len", "positions_vb")
-      .repartitionByRange(nShuffle, col("term"), col("docId"))
-      .sortWithinPartitions("term", "docId")
-      .cache()
-    try {
-      val dict = io.write(raw.filter(col("term") === "")
-        .select(col("docId"), col("conv_id"), col("turn_idx"), col("doc_len")),
-        Tables.DocDict, observe = Seq(sum(col("doc_len")).as("doc_len_sum")))
-      val postings = io.write(sortedDelta, Tables.Postings)
-      val blocks = io.write(blockify(sortedDelta
-        .select("term", "docId", "tf", "doc_len")
-        .as[(String, Long, Int, Int)]).toDF(), Tables.Blocks)
+    io.commitWrite(snap, Some(Tables.IngestLedgerStage -> batchId)) {
+      val nextId = snap.state.nextDocId
+      val raw = withDocIds(newTurns, assumeSorted = false)
+        .mapPartitions(_.flatMap { case (rank, turn) => rawRows(nextId + rank, turn) })
+        .toDF().cache()
+      val sortedDelta = raw.filter(col("term") =!= "")
+        .select("term", "docId", "tf", "doc_len", "positions_vb")
+        .repartitionByRange(nShuffle, col("term"), col("docId"))
+        .sortWithinPartitions("term", "docId")
+        .cache()
+      try {
+        val dict = io.write(raw.filter(col("term") === "")
+          .select(col("docId"), col("conv_id"), col("turn_idx"), col("doc_len")),
+          Tables.DocDict, observe = Seq(sum(col("doc_len")).as("doc_len_sum")))
+        val postings = io.write(sortedDelta, Tables.Postings)
+        val blocks = io.write(blockify(sortedDelta
+          .select("term", "docId", "tf", "doc_len")
+          .as[(String, Long, Int, Int)]).toDF(), Tables.Blocks)
 
-      // weighted incremental mean — the reference's updateMetadataDocument
-      val (n1, m1) = (snap.state.docs, snap.state.avgDocLen)
-      val n2 = dict.rows
-      val sum2 = Option(dict.observed("doc_len_sum")).fold(0L)(_.asInstanceOf[Long])
-      val m2 = if (n2 == 0) 0.0 else sum2.toDouble / n2
-      val (n, m) =
-        if (n1 + n2 == 0) (0L, 0.0)
-        else (n1 + n2, (n1 * m1 + n2 * m2) / (n1 + n2))
-      val rows = dict.rows + postings.rows // the tokenizer's rows: sentinels + postings
-      val wallMs = millisSince(t0)
-      commit(snap, "ingest",
-        Map(Tables.DocDict -> dict, Tables.Postings -> postings, Tables.Blocks -> blocks),
-        snap.state.copy(docs = n, docLenSum = snap.state.docLenSum + sum2, avgDocLen = m,
-          nextDocId = nextId + n2),
-        Seq(LineageRow(Tables.IngestLedgerStage, batchId.toInt, "done", rows, wallMs)), batchId)
-      Seq(StageMetric(s"${Tables.IngestLedgerStage}:$batchId", rows, wallMs, skipped = false))
-    } finally { raw.unpersist(); sortedDelta.unpersist(); () }
+        // weighted incremental mean — the reference's updateMetadataDocument
+        val (n1, m1) = (snap.state.docs, snap.state.avgDocLen)
+        val n2 = dict.rows
+        val sum2 = Option(dict.observed("doc_len_sum")).fold(0L)(_.asInstanceOf[Long])
+        val m2 = if (n2 == 0) 0.0 else sum2.toDouble / n2
+        val (n, m) =
+          if (n1 + n2 == 0) (0L, 0.0)
+          else (n1 + n2, (n1 * m1 + n2 * m2) / (n1 + n2))
+        Change("ingest",
+          snap.state.copy(docs = n, docLenSum = snap.state.docLenSum + sum2, avgDocLen = m,
+            nextDocId = nextId + n2),
+          Map(Tables.DocDict -> dict, Tables.Postings -> postings, Tables.Blocks -> blocks),
+          // the tokenizer's rows: sentinels + postings
+          rows = dict.rows + postings.rows)
+      } finally { raw.unpersist(); sortedDelta.unpersist(); () }
+    }.map(ledgerMetric).toSeq
   }
 }
 

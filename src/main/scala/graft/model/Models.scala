@@ -63,10 +63,12 @@ final case class IndexBlock(
     block: Array[Byte])
 
 /** Per-partition build lineage row (the scalable analogue of the
-  * reference's per-document `processed` flag, InvertedIndex.cpp:29-46). */
+  * reference's per-document `processed` flag, InvertedIndex.cpp:29-46).
+  * A ledgered write's row holds its batch id, the full `Long`, in
+  * `partition_id`; build stages hold -1. */
 final case class LineageRow(
     stage: String,
-    partition_id: Int,
+    partition_id: Long,
     status: String,
     rows: Long,
     wall_ms: Long)

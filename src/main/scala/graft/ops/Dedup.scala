@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.build.Tables
-import graft.model.LineageRow
 
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.runtime.universe.TypeTag
@@ -439,47 +438,42 @@ object Dedup {
     * they are broadcast). Results are identical either way — non-candidate
     * signatures never joined anyway.
     *
-    * Returns the estimate frame plus the candidate cache backing it (the
-    * candidate plan is consumed twice: id prune + join); managed callers
-    * unpersist it after consuming, one-shot callers leave it evictable. */
-  private def estimatePairsImpl(
+    * The candidate plan is consumed twice (id prune + join), so it is
+    * cached for the estimate's life: `use` consumes the estimate, then
+    * the cache is released. */
+  private[ops] def estimatePairs[T](
       spark: SparkSession,
       cands: DataFrame,
       sigs: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
+      threshold: Double)(use: DataFrame => T): T = {
     import spark.implicits._
     val c = cands.cache()
-    val ids = c.select($"doc_a".as("doc_id"))
-      .union(c.select($"doc_b".as("doc_id"))).distinct()
-    val pruned = probe(ids.as[Long], gates.value.isinIds) match {
-      case Some(idArr) if idArr.isEmpty => sigs.filter(lit(false))
-      case Some(idArr) => sigs.filter(col("doc_id").isin(idArr.toIndexedSeq: _*))
-      // explicit broadcast: a size-estimated sort-merge semi-join would
-      // SHUFFLE the corpus-sized sigs table, which is worse than the scan
-      // it replaces; the id set is candidate-sized by construction
-      case None => sigs.join(broadcast(ids), Seq("doc_id"), "left_semi")
-    }
-    val est = c
-      .join(pruned.toDF("doc_a", "sig_a"), Seq("doc_a"))
-      .join(pruned.toDF("doc_b", "sig_b"), Seq("doc_b"))
-      .select($"doc_a", $"doc_b", $"sig_a", $"sig_b")
-      .as[(Long, Long, Seq[Long], Seq[Long])]
-      .map { case (a, b, sa, sb) =>
-        val est = sa.zip(sb).count { case (x, y) => x == y }.toDouble / sa.length
-        (a, b, est)
+    try {
+      val ids = c.select($"doc_a".as("doc_id"))
+        .union(c.select($"doc_b".as("doc_id"))).distinct()
+      val pruned = probe(ids.as[Long], gates.value.isinIds) match {
+        case Some(idArr) if idArr.isEmpty => sigs.filter(lit(false))
+        case Some(idArr) => sigs.filter(col("doc_id").isin(idArr.toIndexedSeq: _*))
+        // explicit broadcast: a size-estimated sort-merge semi-join would
+        // SHUFFLE the corpus-sized sigs table, which is worse than the scan
+        // it replaces; the id set is candidate-sized by construction
+        case None => sigs.join(broadcast(ids), Seq("doc_id"), "left_semi")
       }
-      .toDF("doc_a", "doc_b", "est_jaccard")
-      .filter($"est_jaccard" >= threshold)
-      .orderBy($"doc_a", $"doc_b")
-    (est, Seq(c))
+      val est = c
+        .join(pruned.toDF("doc_a", "sig_a"), Seq("doc_a"))
+        .join(pruned.toDF("doc_b", "sig_b"), Seq("doc_b"))
+        .select($"doc_a", $"doc_b", $"sig_a", $"sig_b")
+        .as[(Long, Long, Seq[Long], Seq[Long])]
+        .map { case (a, b, sa, sb) =>
+          val est = sa.zip(sb).count { case (x, y) => x == y }.toDouble / sa.length
+          (a, b, est)
+        }
+        .toDF("doc_a", "doc_b", "est_jaccard")
+        .filter($"est_jaccard" >= threshold)
+        .orderBy($"doc_a", $"doc_b")
+      use(est)
+    } finally { c.unpersist(); () }
   }
-
-  private def estimatePairs(
-      spark: SparkSession,
-      cands: DataFrame,
-      sigs: DataFrame,
-      threshold: Double): DataFrame =
-    estimatePairsImpl(spark, cands, sigs, threshold)._1
 
   /** MinHash + LSH banding: docs sharing any band bucket are candidate
     * pairs; reported candidates = estimated Jaccard ≥ threshold.
@@ -489,7 +483,9 @@ object Dedup {
     * for the estimate join); candidate generation is one groupBy on
     * (band, bucket) with 24-byte rows; signatures join back once per side
     * for the estimate (pairs ≪ docs, so AQE broadcasts the pair side). At
-    * warehouse scale persist `minHashSigs` as a table instead. */
+    * warehouse scale persist `minHashSigs` as a table instead. Runs at the
+    * call and returns a local frame: its caches are released before it
+    * returns. */
   def minHashLsh(
       spark: SparkSession,
       docs: DataFrame,
@@ -498,11 +494,9 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.5,
       maxBucket: Int = 100000): DataFrame = {
-    // plain cache (recomputable lineage, evictable, caller-unpersistable) —
-    // NOT a localCheckpoint, so there is no leak-on-return hazard here
     val sigs = minHashSigs(spark, docs, shingleN, k).cache()
-    val cands = candidatesFromSigs(spark, sigs, k, bands, maxBucket)
-    estimatePairs(spark, cands, sigs, threshold)
+    try estimatePairs(spark, candidatesFromSigs(spark, sigs, k, bands, maxBucket), sigs, threshold)(local)
+    finally { sigs.unpersist(); () }
   }
 
   // ------------------------------------------- persisted MinHash index --
@@ -544,30 +538,23 @@ object Dedup {
   /** Incremental growth: sign a NEW disjoint batch with the index's own
     * parameters and commit its signatures + banding rows — the next open
     * sees the union (same contract as appendLshAssignments /
-    * appendIvfAssignments). */
-  def appendMinHashSigs(spark: SparkSession, newDocs: DataFrame, path: String): Unit =
-    appendMinHash(IndexStore.open(spark, path), newDocs, ledger = None)
+    * appendIvfAssignments, idempotent per `batchId`). */
+  def appendMinHashSigs(spark: SparkSession, newDocs: DataFrame, path: String, batchId: Long): Unit =
+    appendMinHash(IndexStore.open(spark, path), newDocs, batchId, Tables.AppendLedgerStage)
 
-  /** The append commit; `ledger` = (stage, batchId) adds the batch's
-    * lineage row to the same commit (the streaming gate's exactly-once
-    * ledger). */
-  private[graft] def appendMinHash(idx: IndexStore, docs: DataFrame, ledger: Option[(String, Long)]): Unit = {
-    val t0 = System.nanoTime()
-    val (shingleN, k, bands) = minHashParams(idx)
-    val sigs = minHashSigs(docs.sparkSession, docs, shingleN, k).cache()
-    try {
-      val written = idx.write(sigs, Tables.MinHashSigs)
-      val banded = idx.write(bandRows(docs.sparkSession, sigs, k, bands), Tables.MinHashBuckets)
-      idx.commit("append", Map(Tables.MinHashSigs -> written, Tables.MinHashBuckets -> banded),
-        lineage = ledger.toSeq.map { case (stage, batchId) =>
-          LineageRow(stage, batchId.toInt, "done", written.rows, (System.nanoTime() - t0) / 1000000L)
-        })
-    } finally { sigs.unpersist(); () }
-  }
+  /** The append of batch `batchId` of ledger `stage` on `idx`. */
+  private[graft] def appendMinHash(idx: IndexStore, docs: DataFrame, batchId: Long, stage: String): Unit =
+    idx.append(batchId, stage) {
+      val (shingleN, k, bands) = minHashParams(idx)
+      val sigs = minHashSigs(docs.sparkSession, docs, shingleN, k).cache()
+      try Map(Tables.MinHashSigs -> idx.write(sigs, Tables.MinHashSigs),
+        Tables.MinHashBuckets -> idx.write(bandRows(docs.sparkSession, sigs, k, bands), Tables.MinHashBuckets))
+      finally { sigs.unpersist(); () }
+    }
 
   /** Full-corpus near-dup pairs off the persisted index — identical output
     * to `minHashLsh` over the same corpus/parameters, but the signature
-    * pass is a parquet read, not a recompute. */
+    * pass is a parquet read, not a recompute. A local frame, as there. */
   def minHashLshIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -575,7 +562,7 @@ object Dedup {
       maxBucket: Int = 100000): DataFrame = {
     val idx = IndexStore.open(spark, indexPath)
     val cands = pairsFromBandRows(spark, idx.read(Tables.MinHashBuckets), maxBucket)
-    estimatePairs(spark, cands, idx.read(Tables.MinHashSigs), threshold)
+    estimatePairs(spark, cands, idx.read(Tables.MinHashSigs), threshold)(local)
   }
 
   /** Dedup a NEW batch against the indexed corpus (and within itself) —
@@ -615,71 +602,70 @@ object Dedup {
       indexPath: String,
       newDocs: DataFrame,
       threshold: Double = 0.5,
-      maxBucket: Int = 100000)(use: DataFrame => T): T = {
-    val (out, caches) =
-      minHashDedupBatchImpl(spark, IndexStore.open(spark, indexPath), newDocs, threshold, maxBucket)
-    try use(out) finally caches.foreach(_.unpersist(false))
-  }
+      maxBucket: Int = 100000)(use: DataFrame => T): T =
+    minHashDedupBatchImpl(spark, IndexStore.open(spark, indexPath), newDocs, threshold, maxBucket)(use)
 
-  /** The batch probe against one index version, and the caches it holds. */
-  private[graft] def minHashDedupBatchImpl(
+  /** The batch probe against one index version; its caches are released
+    * once `use` returns. */
+  private[graft] def minHashDedupBatchImpl[T](
       spark: SparkSession,
       idx: IndexStore,
       newDocs: DataFrame,
       threshold: Double,
-      maxBucket: Int): (DataFrame, Seq[DataFrame]) = {
+      maxBucket: Int)(use: DataFrame => T): T = {
     import spark.implicits._
     val (shingleN, k, bands) = minHashParams(idx)
     val newSigs = minHashSigs(spark, newDocs, shingleN, k).cache()
     val newBands = bandRows(spark, newSigs, k, bands).cache()
-    // Corpus-side prefilter on the batch's (band, bucket) keys, the
-    // `exactPrefilterKeys` gate: at or below it (the daily-batch common
-    // case) the DISTINCT key set is collected exactly and probed as a
-    // broadcast hash set — ONE job (which also populates both caches) and
-    // zero false positives. Above it the Bloom filter remains (a 10M-doc
-    // batch must not collect 40M keys). Results are identical either way:
-    // neither filter has false negatives, and false positives only admit
-    // corpus rows whose buckets the `newTouchingPairs` member prune drops.
-    val mightContainKey: org.apache.spark.sql.Column =
-      probe(newBands.select($"band", $"bucket").distinct().as[(Int, Long)],
-          gates.value.exactPrefilterKeys) match {
-        case Some(keyArr) =>
-          val bSet = spark.sparkContext.broadcast(keyArr.toSet)
-          val f = udf((b: Int, h: Long) => bSet.value.contains((b, h)))
-          f(col("band"), col("bucket"))
-        case None =>
-          val keyCol = xxhash64(col("band"), col("bucket"))
-          val nKeys = newBands.count()
-          val bf = newBands.select(keyCol.as("bk"))
-            .stat.bloomFilter("bk", math.max(nKeys, 1L), 0.01)
-          val bBf = spark.sparkContext.broadcast(bf)
-          val mightContain = udf((x: Long) => bBf.value.mightContain(x))
-          mightContain(keyCol)
-      }
-    // Replay robustness (round-4 ADVICE): corpus rows whose doc_id is in
-    // the batch are the batch's OWN previously-appended copies (an
-    // at-least-once replay after the append committed). Excluding them
-    // keeps every doc single-counted — without this a bucket one duplicate
-    // short of maxBucket could cross the cap on replay and silently drop,
-    // yielding different survivors than the original run. On a first run
-    // (disjoint ids, the documented contract) the anti-join removes
-    // nothing, so results are bit-identical.
-    val newIds = newSigs.select($"doc_id")
-    val corpusBands = idx.read(Tables.MinHashBuckets)
-      .filter(mightContainKey)
-      .join(newIds, Seq("doc_id"), "left_anti")
-    val members = newBands
-      .select($"band", $"bucket", $"doc_id", lit(true).as("is_new"))
-      .union(corpusBands.select($"band", $"bucket", $"doc_id", lit(false).as("is_new")))
-    val cands = keyedPairs(spark, members, Seq("band", "bucket"), newTouchingPairs(maxBucket))
-      .select($"a".as("doc_a"), $"b".as("doc_b"))
-    // same replay rule for the estimate: the index copy of a replayed
-    // batch doc would duplicate its signature row and multiply pair rows
-    val allSigs = idx.read(Tables.MinHashSigs)
-      .join(newIds, Seq("doc_id"), "left_anti")
-      .union(newSigs.toDF("doc_id", "sig"))
-    val (est, estCaches) = estimatePairsImpl(spark, cands, allSigs, threshold)
-    (est, Seq(newSigs, newBands) ++ estCaches)
+    try {
+      // Corpus-side prefilter on the batch's (band, bucket) keys, the
+      // `exactPrefilterKeys` gate: at or below it (the daily-batch common
+      // case) the DISTINCT key set is collected exactly and probed as a
+      // broadcast hash set — ONE job (which also populates both caches) and
+      // zero false positives. Above it the Bloom filter remains (a 10M-doc
+      // batch must not collect 40M keys). Results are identical either way:
+      // neither filter has false negatives, and false positives only admit
+      // corpus rows whose buckets the `newTouchingPairs` member prune drops.
+      val mightContainKey: org.apache.spark.sql.Column =
+        probe(newBands.select($"band", $"bucket").distinct().as[(Int, Long)],
+            gates.value.exactPrefilterKeys) match {
+          case Some(keyArr) =>
+            val bSet = spark.sparkContext.broadcast(keyArr.toSet)
+            val f = udf((b: Int, h: Long) => bSet.value.contains((b, h)))
+            f(col("band"), col("bucket"))
+          case None =>
+            val keyCol = xxhash64(col("band"), col("bucket"))
+            val nKeys = newBands.count()
+            val bf = newBands.select(keyCol.as("bk"))
+              .stat.bloomFilter("bk", math.max(nKeys, 1L), 0.01)
+            val bBf = spark.sparkContext.broadcast(bf)
+            val mightContain = udf((x: Long) => bBf.value.mightContain(x))
+            mightContain(keyCol)
+        }
+      // Replay robustness (round-4 ADVICE): corpus rows whose doc_id is in
+      // the batch are the batch's OWN previously-appended copies (an
+      // at-least-once replay after the append committed). Excluding them
+      // keeps every doc single-counted — without this a bucket one duplicate
+      // short of maxBucket could cross the cap on replay and silently drop,
+      // yielding different survivors than the original run. On a first run
+      // (disjoint ids, the documented contract) the anti-join removes
+      // nothing, so results are bit-identical.
+      val newIds = newSigs.select($"doc_id")
+      val corpusBands = idx.read(Tables.MinHashBuckets)
+        .filter(mightContainKey)
+        .join(newIds, Seq("doc_id"), "left_anti")
+      val members = newBands
+        .select($"band", $"bucket", $"doc_id", lit(true).as("is_new"))
+        .union(corpusBands.select($"band", $"bucket", $"doc_id", lit(false).as("is_new")))
+      val cands = keyedPairs(spark, members, Seq("band", "bucket"), newTouchingPairs(maxBucket))
+        .select($"a".as("doc_a"), $"b".as("doc_b"))
+      // same replay rule for the estimate: the index copy of a replayed
+      // batch doc would duplicate its signature row and multiply pair rows
+      val allSigs = idx.read(Tables.MinHashSigs)
+        .join(newIds, Seq("doc_id"), "left_anti")
+        .union(newSigs.toDF("doc_id", "sig"))
+      estimatePairs(spark, cands, allSigs, threshold)(use)
+    } finally { newSigs.unpersist(); newBands.unpersist(); () }
   }
 
   /** SimHash: 64-bit weighted-bit fingerprint; near-dups differ in few

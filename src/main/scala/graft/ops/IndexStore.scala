@@ -4,8 +4,7 @@ import scala.util.DynamicVariable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
 import graft.build.Tables
-import graft.model.LineageRow
-import graft.store.{Commit, FileEntry, ParquetTableIO, Snapshot, State, TableIO, Written}
+import graft.store.{Change, FileEntry, ParquetTableIO, Snapshot, State, TableIO, Written}
 
 /** One persisted ops index — LSH, IVF, PQ or IVF-PQ (`Similarity`), or
   * MinHash (`Dedup`) — at one version of its commit log.
@@ -38,12 +37,22 @@ final class IndexStore private (val path: String, io: TableIO, val snap: Snapsho
     io.write(df.repartitionByRange(IndexStore.shuffleN(df.sparkSession), keys.map(col): _*), table, keys)
   }
 
-  /** One commit on top of this version, then the vacuum; fails if another
-    * commit landed since this version was opened. */
+  /** One commit on top of this version (`TableIO.commitWrite`); fails if
+    * another commit landed since this version was opened. */
   private[ops] def commit(action: String, add: Map[String, Written],
-      remove: Map[String, Seq[String]] = Map.empty, lineage: Seq[LineageRow] = Nil): Unit =
-    io.vacuum(io.commit(snap, Commit(-1L, action, -1L, reset = false,
-      add.map { case (t, w) => t -> w.files }, remove, snap.state, lineage, 0L)))
+      remove: Map[String, Seq[String]] = Map.empty): Unit =
+    io.commitWrite(snap)(Change(action, snap.state, add, remove))
+
+  /** Append batch `batchId` of `stage`: `write`'s files in one commit with
+    * the batch's ledger row, unless this version already holds it — then
+    * `write` does not run. A retried append is thus a no-op, whether its
+    * first run crashed before or after the commit. */
+  private[graft] def append(batchId: Long, stage: String = Tables.AppendLedgerStage)(
+      write: => Map[String, Written]): Unit =
+    io.commitWrite(snap, Some(stage -> batchId)) {
+      val add = write
+      Change("append", snap.state, add, rows = add.values.map(_.rows).sum)
+    }
 
   /** `table` loaded on the driver, cached per index directory until a
     * commit changes the table's files (their names are unique per write). */
@@ -87,10 +96,8 @@ object IndexStore {
       write: IndexStore => Map[String, Written]): Unit = {
     val store = io(spark, path)
     val base = store.snapshot()
-    val tables = write(new IndexStore(path, store, base))
-    store.vacuum(store.commit(base, Commit(-1L, action, -1L, reset = true,
-      tables.map { case (t, w) => t -> w.files }, Map.empty,
-      State(Similarity.IndexVersion, 0L, 0L, 0.0, 0L, 0L, params), Nil, 0L)))
+    store.commitWrite(base)(Change(action, State(Similarity.IndexVersion, 0L, 0L, 0.0, 0L, 0L, params),
+      write(new IndexStore(path, store, base)), reset = true))
   }
 
   /** The data tables of the ops indexes: the id column a delete matches,

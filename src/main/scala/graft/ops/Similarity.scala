@@ -231,12 +231,15 @@ object Similarity {
 
   /** Incremental LSH growth: bucket a NEW disjoint batch with the
     * EXISTING hyperplanes (the committed parameters), one commit adding
-    * its files to the same part partitions. */
-  def appendLshAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
+    * its files to the same part partitions. Idempotent per `batchId`: a
+    * replayed batch appends nothing. */
+  def appendLshAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String, batchId: Long): Unit = {
     val idx = IndexStore.open(spark, path)
-    val (planes, dims, seed) = lshParams(idx)
-    idx.commit("append", Map(Tables.LshAssignments ->
-      idx.write(lshRows(spark, newEmbeddings, planes, dims, seed), Tables.LshAssignments)))
+    idx.append(batchId) {
+      val (planes, dims, seed) = lshParams(idx)
+      Map(Tables.LshAssignments ->
+        idx.write(lshRows(spark, newEmbeddings, planes, dims, seed), Tables.LshAssignments))
+    }
   }
 
   /** The LSH candidate scan: per query its hamming-≤probeHamming bucket
@@ -352,10 +355,11 @@ object Similarity {
   }
 
   /** Incremental IVF growth: assign a NEW disjoint batch with the
-    * EXISTING codebook, one commit adding its files to the same cells. */
-  def appendIvfAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
+    * EXISTING codebook, one commit adding its files to the same cells.
+    * Idempotent per `batchId`. */
+  def appendIvfAssignments(spark: SparkSession, newEmbeddings: DataFrame, path: String, batchId: Long): Unit = {
     val idx = IndexStore.open(spark, path)
-    idx.commit("append", Map(Tables.IvfAssignments -> idx.write(
+    idx.append(batchId)(Map(Tables.IvfAssignments -> idx.write(
       ivfRows(spark, newEmbeddings, readCentroids(spark, idx).map(_._2)), Tables.IvfAssignments)))
   }
 
@@ -566,10 +570,10 @@ object Similarity {
     * EXISTING codebook and commit its codes — queries see the union on
     * their next open, codebook/LUTs unchanged. Batches must carry fresh
     * vec_ids (the same disjoint-segment contract as the text index's
-    * incremental appends). */
-  def appendPqCodes(spark: SparkSession, newEmbeddings: DataFrame, path: String): Unit = {
+    * incremental appends); idempotent per `batchId`, as those are. */
+  def appendPqCodes(spark: SparkSession, newEmbeddings: DataFrame, path: String, batchId: Long): Unit = {
     val idx = IndexStore.open(spark, path)
-    idx.commit("append", Map(Tables.PqCodes ->
+    idx.append(batchId)(Map(Tables.PqCodes ->
       idx.write(pqRows(spark, newEmbeddings, readPqCodebook(spark, idx)), Tables.PqCodes)))
   }
 

@@ -39,15 +39,15 @@ final case class State(
     // the element type, which erasure hides from the JSON reader
     @JsonDeserialize(contentAs = classOf[java.lang.Long]) params: Map[String, Long] = Map.empty)
 
-/** One numbered entry of the log: what a write did (`action`, `batchId`,
-  * -1 when the write has none), the files it added and removed per
-  * table, the resulting `state`, and its lineage rows. A `reset` commit
-  * first removes every file and every lineage row before it (a fresh
-  * build, a clear, a migration). */
+/** One numbered entry of the log: what a write did (`action`), the files
+  * it added and removed per table, the resulting `state`, and its lineage
+  * rows — among them a ledgered write's key (`TableIO.commitWrite`). A
+  * `reset` commit first removes every file and every lineage row before it
+  * (a fresh build, a clear, a migration). Logs written before the key was
+  * a `Long` also carry a `batchId` field, which is ignored. */
 final case class Commit(
     version: Long,
     action: String,
-    batchId: Long,
     reset: Boolean,
     add: Map[String, Seq[FileEntry]],
     remove: Map[String, Seq[String]],
@@ -72,13 +72,14 @@ final case class Snapshot(
 
   def has(table: String): Boolean = files.contains(table)
 
-  /** Whether `stage` committed batch `batchId` (the idempotency ledger). */
+  /** Whether `stage` committed batch `batchId` (the idempotency ledger;
+    * asked only by `TableIO.commitWrite`). */
   def committed(stage: String, batchId: Long): Boolean =
     lineage.exists(r => r.stage == stage && r.partition_id == batchId)
 
   /** One past the highest batch `stage` committed; 0 before the first. */
   def nextBatchId(stage: String): Long =
-    lineage.filter(_.stage == stage).map(_.partition_id.toLong + 1L).maxOption.getOrElse(0L)
+    lineage.filter(_.stage == stage).map(_.partition_id + 1L).maxOption.getOrElse(0L)
 
   /** `c` applied on top of this snapshot. */
   def next(c: Commit): Snapshot = {

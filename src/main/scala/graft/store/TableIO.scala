@@ -19,6 +19,15 @@ import graft.model.LineageRow
   * by alias. */
 final case class Written(files: Seq[FileEntry], rows: Long, observed: Map[String, Any])
 
+/** One write before the log numbers it: the files it adds and removes per
+  * table, the resulting state and its lineage rows (`reset`: first remove
+  * every file and lineage row before it, as a fresh build or a clear
+  * does). A ledger row records `rows`, and the write body's wall time
+  * plus `wallMs`, the time the write spent before its body. */
+final case class Change(action: String, state: State, add: Map[String, Written] = Map.empty,
+    remove: Map[String, Seq[String]] = Map.empty, lineage: Seq[LineageRow] = Nil,
+    reset: Boolean = false, rows: Long = 0L, wallMs: Long = 0L)
+
 /** Table persistence over a commit log.
   *
   * The north rule targets Iceberg tables; the build ships no Iceberg or
@@ -57,6 +66,27 @@ trait TableIO {
     * they belong to a write that started after it (a writer whose base
     * is older fails at its own commit instead). */
   def vacuum(snap: Snapshot): Unit
+
+  /** The one step that makes a write visible: `write`'s change committed
+    * on `base`, then the vacuum. With a ledger `key` (stage, batchId) the
+    * write is idempotent, after Delta Lake's `txn` action (VLDB 2020): when
+    * `base` already holds the key, `write` does not run and the result is
+    * None; otherwise the key's lineage row (the change's `rows`, the
+    * write's wall time) rides in that same commit, so a crash leaves both
+    * or neither and a replay of a committed key does nothing. */
+  final def commitWrite(base: Snapshot, key: Option[(String, Long)] = None)(
+      write: => Change): Option[Snapshot] =
+    if (key.exists { case (stage, batchId) => base.committed(stage, batchId) }) None
+    else {
+      val t0 = System.nanoTime()
+      val c = write
+      val wallMs = c.wallMs + (System.nanoTime() - t0) / 1000000L
+      val ledger = key.map { case (stage, batchId) => LineageRow(stage, batchId, "done", c.rows, wallMs) }
+      val snap = commit(base, Commit(-1L, c.action, c.reset, c.add.map { case (t, w) => t -> w.files },
+        c.remove, c.state, c.lineage ++ ledger, 0L))
+      vacuum(snap)
+      Some(snap)
+    }
 }
 
 final class ParquetTableIO(spark: SparkSession, warehouse: String) extends TableIO {
@@ -261,9 +291,7 @@ private object LegacyWarehouse {
       if (committed(root, Tables.Lineage))
         spark.read.parquet(root.resolve(Tables.Lineage).toString).as[LineageRow].collect().toSeq
       else Nil
-    val snap = io.commit(Snapshot.empty(Tables.FormatVersion), Commit(0L, "migrate", -1L, reset = true,
-      files, Map.empty, state, lineage, 0L))
-    io.vacuum(snap)
-    snap
+    io.commitWrite(base)(Change("migrate", state,
+      files.map { case (t, fs) => t -> Written(fs, 0L, Map.empty) }, lineage = lineage, reset = true)).get
   }
 }

@@ -75,13 +75,16 @@ object StreamingDedup {
       maxBucket: Int = 100000,
       runId: String = "")(use: DataFrame => T): T = {
     val idx = IndexStore.open(spark, indexPath)
-    val (pairs, caches) = Dedup.minHashDedupBatchImpl(spark, idx, batch, threshold, maxBucket)
-    // cached: the append pass materializes it, the sink re-reads it
-    val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti").cache()
-    try {
-      commit(idx, survivors, runId, batchId)
-      use(survivors)
-    } finally { (survivors +: caches).foreach(_.unpersist(false)) }
+    Dedup.minHashDedupBatchImpl(spark, idx, batch, threshold, maxBucket) { pairs =>
+      // cached: the append pass materializes it, the sink re-reads it
+      val survivors = batch.join(losersOf(pairs), Seq("doc_id"), "left_anti").cache()
+      try {
+        // the survivors' append and the batch's ledger row: one ledgered
+        // commit, skipped when the version deduplicated against holds it
+        Dedup.appendMinHash(idx, survivors, batchId, ledgerStage(runId))
+        use(survivors)
+      } finally { survivors.unpersist(); () }
+    }
   }
 
   /** Keep the lower id of every near-dup pair: the LARGER ids lose. The
@@ -95,12 +98,6 @@ object StreamingDedup {
       .select(greatest($"doc_a", $"doc_b").as("doc_id"))
       .distinct()
   }
-
-  /** Append the survivors with the batch's ledger row, unless the index
-    * version the batch was deduplicated against already holds that row. */
-  private def commit(idx: IndexStore, survivors: DataFrame, runId: String, batchId: Long): Unit =
-    if (!idx.snap.committed(ledgerStage(runId), batchId))
-      Dedup.appendMinHash(idx, survivors, Some(ledgerStage(runId) -> batchId))
 
   /** Streaming entry point: `docsStream` rows are (doc_id, text, ...);
     * `sink(survivors, batchId)` receives each batch's deduplicated

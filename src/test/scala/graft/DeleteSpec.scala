@@ -218,6 +218,18 @@ class DeleteSpec extends AnyFunSuite {
     assert(io.read(Tables.Deletes).count() == delIds.size)
   }
 
+  test("a delete batch id of 2^31 replays as a no-op and the next batch id follows it") {
+    import spark.implicits._
+    val (io, b, _, _) = tombstoned()
+    val more = io.read(Tables.DocDict).select(col("docId")).as[Long].collect().filter(_ % 7 == 4).toSeq
+    val big = 1L << 31
+    assert(b.deleteDocs(more, big).map(_.rows) == Seq(more.size.toLong))
+    val version = io.snapshot().version
+    assert(b.deleteDocs(more, big) == Seq.empty)
+    assert(io.snapshot().version == version)
+    assert(b.nextDeleteBatchId() == big + 1)
+  }
+
   test("compact purges tombstones physically without changing any result") {
     import spark.implicits._
     val (io, b, survivors, delIds) = tombstoned()

@@ -139,6 +139,8 @@ class EngineSpec extends AnyFunSuite {
       "topKAuto (dense)" -> (() => boolean.map(tiny.topKAuto(_, 0.0, 10))),
       "topKDense" -> (() => engine.topKDense(boolean(1), 0.0, 10)),
       // the unmanaged dedup variants return local frames
+      "Dedup.minHashLsh" -> (() => Dedup.minHashLsh(spark, docs).collect()),
+      "Dedup.minHashLshIndexed" -> (() => Dedup.minHashLshIndexed(spark, minhash).collect()),
       "Dedup.minHashDedupBatch" -> (() => Dedup.minHashDedupBatch(spark, minhash, batch).collect()),
       "StreamingDedup.dedupBatch" -> (() => StreamingDedup.dedupBatch(spark, minhash, batch, 0L).collect()))
     def persisted = spark.sparkContext.getPersistentRDDs.size
@@ -275,6 +277,50 @@ class EngineSpec extends AnyFunSuite {
       val atoms = Seq("whale", "zzzunknown", "\"blue whale\"", "\"zzz nothing\"") ++ phraseShapes.take(3)
       assert(rows(held.searchMany(atoms, k)) == rows(over.searchMany(atoms, k)), s"k=$k searchMany")
       assert(rows(held.searchManyAuto(shapes, k)) == rows(over.searchManyAuto(shapes, k)), s"k=$k searchManyAuto")
+    }
+    // held at a cap of exactly total_docs, with atoms that overlap: each
+    // atom's live df is within the cap, their sum is not, so `fetch` takes
+    // the Spark fetches instead of the one postings scan — same answers
+    val held = new SparkSearchEngine(spark, io)
+    val atCap = new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = n.toInt))
+    val overlap = "\"blue whale\" the a an of to"
+    val df = atCap.liveDf(Seq("blue", "whale", "the", "a", "an", "of", "to"))
+    assert(df.size == 7 && df.values.sum > n && df.values.forall(_ <= n), s"live df $df over $n docs")
+    for (acc <- Seq(0.0, Double.MinPositiveValue, 0.4); k <- Seq(100, 3)) {
+      assert(atCap.topKAuto(overlap, acc, k) == held.topKAuto(overlap, acc, k), s"acc=$acc k=$k topKAuto")
+      assert(atCap.search(overlap, turns, acc) == held.search(overlap, turns, acc), s"acc=$acc search")
+    }
+    assert(atCap.searchManyAuto(Seq(overlap, "whale")).collect().toSeq ==
+      held.searchManyAuto(Seq(overlap, "whale")).collect().toSeq, "searchManyAuto")
+    // the one scan at the default cap; the term fetch and the phrase
+    // fetch's jobs at total_docs
+    val jobs = (warmJobs(held.topKDriver(overlap, 0.4, 10)), warmJobs(atCap.topKDriver(overlap, 0.4, 10)))
+    info(s"warm topKDriver jobs: one scan ${jobs._1}, Spark fetches ${jobs._2}")
+    assert(jobs == ((1, 3)), s"warm topKDriver jobs (one scan, Spark fetches) $jobs")
+  }
+
+  /** Spark jobs a warm `call` (the second of two) runs on this thread. */
+  private def warmJobs(call: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = "engine-spec-warm-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    call
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "warm jobs")
+    try {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      call
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
     }
   }
 

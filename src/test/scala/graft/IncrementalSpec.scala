@@ -60,6 +60,23 @@ class IncrementalSpec extends AnyFunSuite {
     assert(eInc.termTopKWand("whale", 0.0, 50) == eInc.topKDriver("whale", 0.0, 50).get)
   }
 
+  test("ingest batch ids from 2^31 replay as no-ops and the next batch id follows them") {
+    import spark.implicits._
+    val io = new ParquetTableIO(spark, java.nio.file.Files.createTempDirectory("inc_big_").toString)
+    val b = new IndexBuilder(spark, io, blockSize = 8)
+    val parts = allTurns.grouped((allTurns.size + 1) / 2).toSeq
+    val big = 1L << 31
+    // the bootstrap build's ledger row, then an append's
+    Seq(big -> parts(0), (big + 1) -> parts(1)).foreach { case (batchId, part) =>
+      assert(b.buildIncremental(spark.createDataset(part), batchId).nonEmpty)
+      val version = io.snapshot().version
+      assert(b.buildIncremental(spark.createDataset(part), batchId) == Seq.empty, s"replay of $batchId")
+      assert(io.snapshot().version == version)
+    }
+    assert(b.nextIngestBatchId() == big + 2)
+    assert(io.snapshot().state.docs == allTurns.size)
+  }
+
   test("crash repair: partial un-ledgered batch is cleaned and replayed exactly") {
     import spark.implicits._
     val io = new ParquetTableIO(spark,
@@ -131,7 +148,7 @@ class IncrementalSpec extends AnyFunSuite {
 
     // tamper: a commit claiming the warehouse was built at layout v3
     val s0 = io.snapshot()
-    io.commit(s0, Commit(-1L, "tamper", -1L, reset = false, Map.empty, Map.empty,
+    io.commit(s0, Commit(-1L, "tamper", reset = false, Map.empty, Map.empty,
       s0.state.copy(format = 3), Nil, 0L))
     intercept[IllegalStateException] { new SparkSearchEngine(spark, io).stats }
     intercept[IllegalStateException] {

@@ -27,7 +27,7 @@ class CompactionSpec extends AnyFunSuite {
     // several small appended segments — the streaming-gate shape
     (0 until 4).foreach { i =>
       Dedup.appendMinHashSigs(spark,
-        docs.filter($"doc_id" >= 100 + i * 50 && $"doc_id" < 150 + i * 50), idx)
+        docs.filter($"doc_id" >= 100 + i * 50 && $"doc_id" < 150 + i * 50), idx, i.toLong)
     }
     val batch = docs.filter($"doc_id" >= 300 && $"doc_id" < 330)
     val pairsBefore = Dedup.minHashLshIndexed(spark, idx, threshold = 0.2)
@@ -61,7 +61,7 @@ class CompactionSpec extends AnyFunSuite {
 
     // the index keeps growing after compaction, and probes stay exact
     Dedup.appendMinHashSigs(spark,
-      docs.filter($"doc_id" >= 330 && $"doc_id" < 360), idx)
+      docs.filter($"doc_id" >= 330 && $"doc_id" < 360), idx, 4L)
     val expect = Dedup.minHashLsh(spark, docs.filter($"doc_id" < 360)
         .filter($"doc_id" < 300 || $"doc_id" >= 330), threshold = 0.2)
       .as[(Long, Long, Double)].collect().toSeq
@@ -84,7 +84,7 @@ class CompactionSpec extends AnyFunSuite {
     Similarity.buildLshIndex(spark, emb.filter($"vec_id" < 150), lsh, planesOpt = Some(3))
     (0 until 3).foreach { i =>
       Similarity.appendLshAssignments(spark,
-        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), lsh)
+        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), lsh, i.toLong)
     }
     val before = Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10, probeHamming = 2)
       .as[(Long, Double)].collect().toSeq
@@ -96,7 +96,7 @@ class CompactionSpec extends AnyFunSuite {
     // appends still work on the compacted index
     Similarity.appendLshAssignments(spark, spark.createDataset(
         (300L until 320L).map(i => (i, vecs((i % 300).toInt)._2))).toDF("vec_id", "embedding"),
-      lsh)
+      lsh, 3L)
     assert(Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10, probeHamming = 2)
       .count() == 10)
 
@@ -104,7 +104,7 @@ class CompactionSpec extends AnyFunSuite {
     Similarity.buildPqIndex(spark, emb.filter($"vec_id" < 150), pq)
     (0 until 3).foreach { i =>
       Similarity.appendPqCodes(spark,
-        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), pq)
+        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), pq, i.toLong)
     }
     val pqBefore = Similarity.pqTopKIndexed(spark, pq, emb, q, 0L, 10)
       .as[(Long, Double)].collect().toSeq

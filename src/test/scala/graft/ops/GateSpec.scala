@@ -55,8 +55,14 @@ class GateSpec extends AnyFunSuite {
       case j: Join => j.joinType == LeftSemi
       case _ => false
     }
-    boundary(n, g => Gates(isinIds = g))(
-      sideAndRows(Dedup.minHashLsh(spark, docs, threshold = 0.5), semiJoined))
+    // the side is read inside the estimate's cache scope (minHashLsh
+    // returns a local frame); minHashLsh runs the same prune, same rows
+    boundary(n, g => Gates(isinIds = g)) {
+      val (side, rows) = Dedup.estimatePairs(spark, cands, Dedup.minHashSigs(spark, docs, 3, 64), 0.5)(
+        sideAndRows(_, semiJoined))
+      assert(Dedup.minHashLsh(spark, docs, threshold = 0.5).collect().toSeq == rows)
+      (side, rows)
+    }
   }
 
   test("prefilter gate: the exact key set at n batch keys, the Bloom filter at n - 1") {

@@ -45,16 +45,21 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"unreferenced files: $stray")
   }
 
-  private def version(path: String) = new ParquetTableIO(spark, path).snapshot().version
+  /** The `id` column of `table`, sorted; asserts each id is held once. */
+  private def once(path: String, table: String, id: String): Seq[Long] = {
+    val ids = rows(path, table).select(id).as[Long].collect().toSeq.sorted
+    assert(ids.distinct.size == ids.size, s"duplicated $id rows in $table")
+    ids
+  }
 
   /** Kill `op` before each of its file operations in turn, on a fresh copy
-    * of the index at `src`, then recover: rerun `op` (every `op` here but
-    * an append is idempotent), or for an append, rerun it only when its
-    * commit did not land. The recovered index must `observe` exactly like
-    * the uninterrupted run's, with no orphan file. Returns the number of
-    * file operations. */
-  private def crashEverywhere[T](src: Path, idempotent: Boolean = true)(op: String => Any)(
-      observe: String => T): Int = {
+    * of the index at `src`, then recover by rerunning `op`: every write is
+    * idempotent (an append whose commit landed finds its ledger row and
+    * does nothing). The recovered index must `observe` exactly like the
+    * uninterrupted run's, with no orphan file, and so must the
+    * uninterrupted run's after a retry. Returns the number of file
+    * operations. */
+  private def crashEverywhere[T](src: Path)(op: String => Any)(observe: String => T): Int = {
     def copy() = { val d = tmp("idx_crash_").resolve("idx"); TestWarehouses.copyTree(src, d); d }
     val ref = copy().toString
     var counting: CrashingIO = null
@@ -62,12 +67,13 @@ class IndexStoreSpec extends AnyFunSuite {
       op(ref)
     }
     val want = observe(ref)
+    op(ref)
+    assert(observe(ref) == want, "a retry after the uninterrupted run")
     (0 until counting.ops).foreach { k =>
       val idx = copy()
-      val before = version(idx.toString)
       intercept[CrashingIO.Crash](
         IndexStore.wrapIO.withValue(io => new CrashingIO(io, k))(op(idx.toString)))
-      if (idempotent || version(idx.toString) == before) op(idx.toString)
+      op(idx.toString)
       assert(observe(idx.toString) == want, s"recovery after a crash before file operation $k")
       noOrphans(idx)
     }
@@ -80,9 +86,9 @@ class IndexStoreSpec extends AnyFunSuite {
   test("crash injection: LSH append, ANN delete, MinHash compaction and a dedup-gate batch recover exactly") {
     val lsh = tmp("lsh_src_")
     Similarity.buildLshIndex(spark, emb.filter($"vec_id" < 200), lsh.toString, planesOpt = Some(3))
-    val appendOps = crashEverywhere(lsh, idempotent = false)(
-      Similarity.appendLshAssignments(spark, emb.filter($"vec_id" >= 200), _))(p =>
-      (lshTop(p), rows(p, Tables.LshAssignments).count()))
+    val appendOps = crashEverywhere(lsh)(
+      Similarity.appendLshAssignments(spark, emb.filter($"vec_id" >= 200), _, 1L))(p =>
+      (lshTop(p), once(p, Tables.LshAssignments, "vec_id")))
 
     val ivfPq = tmp("ivfpq_src_")
     Similarity.buildIvfPqIndex(spark, emb, ivfPq.toString)
@@ -95,7 +101,7 @@ class IndexStoreSpec extends AnyFunSuite {
     Dedup.buildMinHashIndex(spark, docs.filter($"doc_id" < 100), mh.toString)
     (0 until 3).foreach { i =>
       Dedup.appendMinHashSigs(spark, docs.filter($"doc_id" >= 100 + i * 50 && $"doc_id" < 150 + i * 50),
-        mh.toString)
+        mh.toString, i.toLong)
     }
     val batch = docs.filter($"doc_id" >= 250 && $"doc_id" < 300)
     val compactOps = crashEverywhere(mh)(IndexStore.compact(spark, _)) { p =>
@@ -120,12 +126,37 @@ class IndexStoreSpec extends AnyFunSuite {
     assert((appendOps, deleteOps, compactOps, gateOps) == ((3, 3, 4, 4)))
   }
 
+  test("crash injection: the IVF, PQ and MinHash appends recover by a plain rerun, no row twice") {
+    val newVecs = emb.filter($"vec_id" >= 200)
+    val ivf = tmp("ivf_src_")
+    Similarity.buildIvfIndex(spark, emb.filter($"vec_id" < 200), ivf.toString)
+    val ivfOps = crashEverywhere(ivf)(Similarity.appendIvfAssignments(spark, newVecs, _, 1L)) { p =>
+      (Similarity.ivfTopKIndexed(spark, p, q, 0L, 10).as[(Long, Double)].collect().toSeq,
+        once(p, Tables.IvfAssignments, "vec_id"))
+    }
+    val pq = tmp("pq_src_")
+    Similarity.buildPqIndex(spark, emb.filter($"vec_id" < 200), pq.toString)
+    val pqOps = crashEverywhere(pq)(Similarity.appendPqCodes(spark, newVecs, _, 1L)) { p =>
+      (Similarity.pqTopKIndexed(spark, p, emb, q, 0L, 10).as[(Long, Double)].collect().toSeq,
+        once(p, Tables.PqCodes, "vec_id"))
+    }
+    val mh = tmp("mh_append_src_")
+    Dedup.buildMinHashIndex(spark, docs.filter($"doc_id" < 200), mh.toString)
+    val mhOps = crashEverywhere(mh)(
+      Dedup.appendMinHashSigs(spark, docs.filter($"doc_id" >= 200 && $"doc_id" < 260), _, 1L)) { p =>
+      (Dedup.minHashLshIndexed(spark, p, threshold = 0.2).as[(Long, Long, Double)].collect().toSeq,
+        once(p, Tables.MinHashSigs, "doc_id"), rows(p, Tables.MinHashBuckets).count())
+    }
+    // one write per table, the commit and the vacuum
+    assert((ivfOps, pqOps, mhOps) == ((3, 3, 4)))
+  }
+
   test("a probe frame built before a compaction or a delete still evaluates") {
     val lsh = tmp("lsh_frame_").toString
     Similarity.buildLshIndex(spark, emb.filter($"vec_id" < 150), lsh, planesOpt = Some(3))
     (0 until 3).foreach { i =>
       Similarity.appendLshAssignments(spark,
-        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), lsh)
+        emb.filter($"vec_id" >= 150 + i * 50 && $"vec_id" < 200 + i * 50), lsh, i.toLong)
     }
     val frame = Similarity.lshTopKIndexed(spark, lsh, q, 0L, 10, probeHamming = 2)
     val want = lshTop(lsh)

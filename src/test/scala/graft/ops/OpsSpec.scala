@@ -30,7 +30,7 @@ object OpsSpec {
   def commitVersion(spark: SparkSession, path: String, version: Int): Unit = {
     val io = new ParquetTableIO(spark, path)
     val s0 = io.snapshot()
-    io.commit(s0, Commit(-1L, "tamper", -1L, reset = false, Map.empty, Map.empty,
+    io.commit(s0, Commit(-1L, "tamper", reset = false, Map.empty, Map.empty,
       s0.state.copy(format = version), Nil, 0L))
     ()
   }
@@ -411,7 +411,7 @@ class OpsSpec extends AnyFunSuite {
     OpsSpec.commitVersion(spark, idx, 1)
     intercept[IllegalStateException](
       Similarity.pqTopKIndexed(spark, idx, emb, q, 0L, 5))
-    intercept[IllegalStateException](Similarity.appendPqCodes(spark, emb, idx))
+    intercept[IllegalStateException](Similarity.appendPqCodes(spark, emb, idx, 0L))
     // unversioned (pre-log) index: also refused
     val idx2 = java.nio.file.Files.createTempDirectory("pq_nover").toString
     Similarity.buildPqIndex(spark, emb, idx2)
@@ -440,7 +440,7 @@ class OpsSpec extends AnyFunSuite {
     val pqInc = java.nio.file.Files.createTempDirectory("pq_inc").toString
     val pqAll = java.nio.file.Files.createTempDirectory("pq_all").toString
     Similarity.buildPqIndex(spark, first, pqInc) // codebook = 16 lowest (in first half)
-    Similarity.appendPqCodes(spark, second, pqInc)
+    Similarity.appendPqCodes(spark, second, pqInc, 0L)
     Similarity.buildPqIndex(spark, emb, pqAll)
     assert(
       Similarity.pqTopKIndexed(spark, pqInc, emb, q, 0L, 10).as[(Long, Double)].collect().toSeq ==
@@ -449,7 +449,7 @@ class OpsSpec extends AnyFunSuite {
     val ivfInc = java.nio.file.Files.createTempDirectory("ivf_inc").toString
     val ivfAll = java.nio.file.Files.createTempDirectory("ivf_all").toString
     Similarity.buildIvfIndex(spark, first, ivfInc)
-    Similarity.appendIvfAssignments(spark, second, ivfInc)
+    Similarity.appendIvfAssignments(spark, second, ivfInc, 0L)
     Similarity.buildIvfIndex(spark, emb, ivfAll)
     assert(
       Similarity.ivfTopKIndexed(spark, ivfInc, q, 0L, 10).as[(Long, Double)].collect().toSeq ==
@@ -459,7 +459,7 @@ class OpsSpec extends AnyFunSuite {
     val lshInc = java.nio.file.Files.createTempDirectory("lsh_inc").toString
     val lshAll = java.nio.file.Files.createTempDirectory("lsh_all").toString
     Similarity.buildLshIndex(spark, first, lshInc, planesOpt = Some(3))
-    Similarity.appendLshAssignments(spark, second, lshInc)
+    Similarity.appendLshAssignments(spark, second, lshInc, 0L)
     Similarity.buildLshIndex(spark, emb, lshAll, planesOpt = Some(3))
     assert(
       Similarity.lshTopKIndexed(spark, lshInc, q, 0L, 10).as[(Long, Double)].collect().toSeq ==
@@ -572,13 +572,13 @@ class OpsSpec extends AnyFunSuite {
 
     val idxInc = java.nio.file.Files.createTempDirectory("mh_inc").toString
     Dedup.buildMinHashIndex(spark, docs.filter($"doc_id" < 25), idxInc)
-    Dedup.appendMinHashSigs(spark, docs.filter($"doc_id" >= 25), idxInc)
+    Dedup.appendMinHashSigs(spark, docs.filter($"doc_id" >= 25), idxInc, 0L)
     assert(indexed(idxInc) == oneShot)
 
     // stale/unversioned index refused like the ANN families
     OpsSpec.commitVersion(spark, idxAll, 1)
     intercept[IllegalStateException](Dedup.minHashLshIndexed(spark, idxAll))
-    intercept[IllegalStateException](Dedup.appendMinHashSigs(spark, docs, idxAll))
+    intercept[IllegalStateException](Dedup.appendMinHashSigs(spark, docs, idxAll, 0L))
     intercept[IllegalStateException](Dedup.minHashDedupBatch(spark, idxAll, docs))
   }
 
@@ -705,7 +705,7 @@ class OpsSpec extends AnyFunSuite {
     Dedup.buildMinHashIndex(spark, corpus, idx)
     val first = both(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSeq)
-    Dedup.appendMinHashSigs(spark, batch, idx) // the committed append
+    Dedup.appendMinHashSigs(spark, batch, idx, 0L) // the committed append
     val replay = both(Dedup.minHashDedupBatch(spark, idx, batch, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSeq)
     assert(replay == first)

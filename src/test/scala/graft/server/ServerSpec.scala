@@ -256,7 +256,7 @@ class ServerSpec extends AnyFunSuite {
       } finally { pool.shutdown(); () }
       replies.foreach(r => assert(r.statusCode() == 200, r.body()))
       val batches = io.read(Tables.Lineage).filter($"stage" === Tables.DeleteLedgerStage)
-        .select($"partition_id").as[Int].collect().toSeq
+        .select($"partition_id").as[Long].collect().toSeq
       assert(batches.distinct.size == 2, s"delete ledger batches: $batches")
       val after = get(query, p)
       assert(after.statusCode() == 200, after.body())

@@ -96,7 +96,7 @@ class CommitLogSpec extends AnyFunSuite {
     val wh = base(_ => ())
     val io = new ParquetTableIO(spark, wh.toString)
     val s0 = io.snapshot()
-    val c = Commit(-1L, "noop", -1L, reset = false, Map.empty, Map.empty, s0.state, Nil, 0L)
+    val c = Commit(-1L, "noop", reset = false, Map.empty, Map.empty, s0.state, Nil, 0L)
     io.commit(s0, c.copy(action = "first"))
     intercept[java.util.ConcurrentModificationException](io.commit(s0, c.copy(action = "second")))
     assert(io.snapshot().version == s0.version + 1)
@@ -180,27 +180,51 @@ class CommitLogSpec extends AnyFunSuite {
   test("log compatibility: a commit written before State.params existed opens to the same snapshot") {
     val wh = tmp("log_compat_")
     val dir = Files.createDirectories(wh.resolve(CommitLog.DirName))
-    // exactly the fields FormatVersion 7 wrote before `State.params` existed
+    // exactly the fields FormatVersion 7 wrote before `State.params`
+    // existed, and before the ledger key was a Long: a `batchId` field and
+    // a ledger row whose `partition_id` was an Int
     Files.writeString(dir.resolve(CommitLog.fileName(0L)),
-      "{\"version\":0,\"action\":\"build\",\"batchId\":-1,\"reset\":true," +
+      "{\"version\":0,\"action\":\"build\",\"batchId\":3,\"reset\":true," +
         "\"add\":{\"doc_dict\":[{\"path\":\"doc_dict/w-1/part-0.parquet\",\"bytes\":3488}]}," +
         "\"remove\":{},\"state\":{\"format\":7,\"docs\":898,\"docLenSum\":70234," +
         "\"avgDocLen\":78.21158129175947,\"nextDocId\":898,\"tombstones\":0}," +
         "\"lineage\":[{\"stage\":\"doc_dict\",\"partition_id\":-1,\"status\":\"done\"," +
-        "\"rows\":898,\"wall_ms\":423}],\"timestampMs\":1792384546852}")
+        "\"rows\":898,\"wall_ms\":423},{\"stage\":\"delete_batch\",\"partition_id\":3," +
+        "\"status\":\"done\",\"rows\":2,\"wall_ms\":9}],\"timestampMs\":1792384546852}")
     val state = State(7, 898L, 70234L, 78.21158129175947, 898L, 0L)
-    val want = Snapshot.empty(7).next(Commit(0L, "build", -1L, reset = true,
+    val want = Snapshot.empty(7).next(Commit(0L, "build", reset = true,
       Map("doc_dict" -> Seq(FileEntry("doc_dict/w-1/part-0.parquet", 3488L))), Map.empty, state,
-      Seq(graft.model.LineageRow("doc_dict", -1, "done", 898L, 423L)), 1792384546852L))
+      Seq(graft.model.LineageRow("doc_dict", -1, "done", 898L, 423L),
+        graft.model.LineageRow(Tables.DeleteLedgerStage, 3L, "done", 2L, 9L)), 1792384546852L))
     val got = new CommitLog(wh).latest()
     assert(got.contains(want))
     assert(got.get.state.params == Map.empty[String, Long])
+    // the ledger answers its key: a replay of delete batch 3 commits nothing
+    assert(got.get.committed(Tables.DeleteLedgerStage, 3L))
+    assert(builder(new ParquetTableIO(spark, wh.toString)).deleteDocs(Seq(1L), 3L) == Seq.empty)
+    assert(builder(new ParquetTableIO(spark, wh.toString)).nextDeleteBatchId() == 4L)
+    assert(new CommitLog(wh).latest() == got)
     // and a commit that carries parameters reads them back as Longs
     val io = new ParquetTableIO(spark, wh.toString)
-    val s1 = io.commit(got.get, Commit(-1L, "params", -1L, reset = false, Map.empty, Map.empty,
+    val s1 = io.commit(got.get, Commit(-1L, "params", reset = false, Map.empty, Map.empty,
       state.copy(params = Map("planes" -> 3L, "seed" -> (1L << 40))), Nil, 0L))
     assert(new CommitLog(wh).latest().map(_.state) == Some(s1.state))
     assert(new CommitLog(wh).latest().get.state.params("seed") == (1L << 40))
+
+    // an index log as the streaming gate wrote it: its batch's ledger row
+    // (an Int `partition_id`) in the append's commit, `batchId` -1
+    val idx = tmp("log_compat_idx_")
+    Files.writeString(Files.createDirectories(idx.resolve(CommitLog.DirName)).resolve(CommitLog.fileName(0L)),
+      "{\"version\":0,\"action\":\"append\",\"batchId\":-1,\"reset\":true," +
+        "\"add\":{\"minhash_sigs\":[{\"path\":\"minhash_sigs/w-1/part-0.parquet\",\"bytes\":900}]}," +
+        "\"remove\":{},\"state\":{\"format\":4,\"docs\":0,\"docLenSum\":0,\"avgDocLen\":0.0," +
+        "\"nextDocId\":0,\"tombstones\":0,\"params\":{\"shingle_n\":3,\"k\":64,\"bands\":16}}," +
+        "\"lineage\":[{\"stage\":\"stream_batch/1a2b3c4d\",\"partition_id\":7,\"status\":\"done\"," +
+        "\"rows\":50,\"wall_ms\":31}],\"timestampMs\":1792384546852}")
+    val index = graft.ops.IndexStore.open(spark, idx.toString)
+    assert(index.snap.committed("stream_batch/1a2b3c4d", 7L))
+    index.append(7L, "stream_batch/1a2b3c4d")(fail("a replayed append ran its write"))
+    assert(new CommitLog(idx).latest().map(_.version) == Some(0L))
   }
 
   test("reads race a compaction: an engine opened before it keeps its whole snapshot") {
