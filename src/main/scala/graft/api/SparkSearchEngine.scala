@@ -565,22 +565,24 @@ final class SparkSearchEngine(
   /** Full search with snippets over the source turns table: every top-k
     * hit in rank order. A hit whose turn `turns` lacks (a crawled source
     * not delivered to the input) keeps its place with an empty text and
-    * snippet. */
+    * snippet. The hits' texts are read on the driver from the parquet
+    * files behind a bare parquet scan `turns` (`TurnTexts.read`, no Spark
+    * job), else — any other frame, or covering row groups over
+    * `TurnTexts.MaxRows` — by ONE filtered Spark scan of `turns` for
+    * exactly those keys (conv_id pushed down to the scan; no join, so no
+    * broadcast job and no shuffle of turns). */
   def search(query: String, turns: DataFrame, accuracy: Double = 0.0): Vector[SearchHit] = {
     val top = topKAuto(query, accuracy, params.topK)
     if (top.isEmpty) return Vector.empty
     val keys = Snippeter.queryKeys(query, params.stemBareTerms)
     val weights = QueryEvaluator.wordsAndPhrasesWeights(query)
-    // the hits' keys, then ONE filtered scan of turns for exactly those
-    // keys (conv_id pushed down to the scan): no join, so no broadcast job
-    // and no shuffle of turns
     val ref = refs(top.map(_._1))
     val wanted = ref.values.toSeq.distinct
-    val texts = turns
+    val texts = TurnTexts.read(turns, wanted).getOrElse(turns
       .filter($"conv_id".isin(wanted.map(_._1).distinct: _*) && struct($"conv_id", $"turn_idx").isin(
         wanted.map { case (c, t) => struct(lit(c).as("conv_id"), lit(t).as("turn_idx")) }: _*))
       .select($"conv_id", $"turn_idx", $"text").as[(String, Int, String)].collect()
-      .map { case (c, t, text) => (c, t) -> text }.toMap
+      .map { case (c, t, text) => (c, t) -> text }.toMap)
     top.map { case (docId, score) =>
       val (convId, turnIdx) = ref(docId)
       val text = texts.get((convId, turnIdx))

@@ -20,7 +20,9 @@ object Pipeline {
   /** quality filter → language filter → simhash near-dup dedup (keepers
     * only) → deterministic split/shard. Thresholds are corpus-dependent
     * knobs; the arithmetic of every stage is bit-identical to its
-    * standalone operator (same Catalyst expressions).
+    * standalone operator (same Catalyst expressions). The returned frame
+    * is materialized (`materialized`): every cache the call registered is
+    * released before it returns.
     *
     * @return (doc_id, n_words, stopword_ratio, cluster_id, n_members,
     *         bucket, split, shard) — one row per surviving keeper.
@@ -32,7 +34,7 @@ object Pipeline {
       langThreshold: Double = 0.02,
       maxBits: Int = 3,
       blocks: Int = 4): DataFrame =
-    trainingCorpusImpl(spark, docs, minWords, langThreshold, maxBits, blocks)._1
+    materialized(trainingCorpusImpl(spark, docs, minWords, langThreshold, maxBits, blocks))
 
   /** trainingCorpus with deterministic cleanup (round-4 VERDICT item 3):
     * the survivor cache and the connected-components checkpoint are
@@ -63,9 +65,8 @@ object Pipeline {
     * corpus, so only survivors pay the gram explode. The arithmetic of
     * every stage is bit-identical to its standalone operator.
     *
-    * NOTE: the unmanaged frame is backed by the survivor cache and the
-    * final CC checkpoint (same hazard as trainingCorpus) — long-lived
-    * sessions should consume via hygieneCorpusManaged.
+    * The returned frame is materialized (a local checkpoint) and the
+    * call's caches are released before it returns, as in trainingCorpus.
     *
     * @return (doc_id, n_words, stopword_ratio, distinct_ratio,
     *         top_bigram_frac, cluster_id, n_members, bucket, split, shard)
@@ -82,8 +83,17 @@ object Pipeline {
       ngramN: Int = 4,
       maxBits: Int = 3,
       blocks: Int = 4): DataFrame =
-    hygieneCorpusImpl(spark, docs, benchmark, minWords, langThreshold,
-      maxTopBigramFrac, minDistinctRatio, ngramN, maxBits, blocks)._1
+    materialized(hygieneCorpusImpl(spark, docs, benchmark, minWords, langThreshold,
+      maxTopBigramFrac, minDistinctRatio, ngramN, maxBits, blocks))
+
+  /** An unmanaged call's result: the frame materialized by an eager local
+    * checkpoint (its blocks are freed by the ContextCleaner with the
+    * frame), then every cache and checkpoint the call registered released,
+    * so none outlives the call. */
+  private def materialized(run: (DataFrame, () => Unit)): DataFrame = {
+    val (out, release) = run
+    try out.localCheckpoint(eager = true) finally release()
+  }
 
   /** hygieneCorpus with deterministic cleanup (same contract as
     * trainingCorpusManaged: consume the frame fully inside `use`). */
@@ -160,9 +170,6 @@ object Pipeline {
     (out, () => { surv.unpersist(false); releaseClusters() })
   }
 
-  /** NOTE: the unmanaged frame is backed by the survivor cache and the
-    * final CC localCheckpoint — same hazard note as Dedup.dedupClusters;
-    * long-lived sessions should consume via trainingCorpusManaged. */
   private def trainingCorpusImpl(
       spark: SparkSession,
       docs: DataFrame,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import graft.{GraftParams, SparkEntry}
-import graft.api.SparkSearchEngine
+import graft.api.{SparkSearchEngine, TurnTexts}
 import graft.build.{IndexBuilder, Tables}
 import graft.corpus.TranscriptGen
 import graft.model.Turn
@@ -167,7 +167,7 @@ object Drive {
     Scenario("dense", "[convs]  dense one-shuffle evaluator vs the driver algebra", dense),
     Scenario("gate", "[convs]  streaming gate: 50 micro-batches, compaction after batch 24", gate),
     Scenario("delete", "[convs]  delete 1% of docs, query through tombstones, compact", delete),
-    Scenario("directory", "[convs]  doc directory and lexicon loads: first vs warm search, both gate sides, after a write", directory),
+    Scenario("directory", "[convs]  doc directory and lexicon loads: first vs warm search, both gate sides, after a write; the text fetch on both sides of its gate", directory),
     Scenario("textops", "[convs]  repetition, langId, contamination, substringDup", textops),
     Scenario("hygiene", "[convs]  the full hygiene pipeline in one plan", hygiene),
     Scenario("queries", "[reps] [queryPrefix ...]  min-of-reps SparkEntry query times", queries),
@@ -361,6 +361,10 @@ object Drive {
     println("POST-COMPACT top-k identical to tombstoned top-k: OK")
   }
 
+  /** The driver thread's allocation counter (`directory`, `textFetch`). */
+  private lazy val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    .asInstanceOf[com.sun.management.ThreadMXBean]
+
   /** The doc directory's and the lexicon's cost, on a copy of the
     * warehouse: per round, a fresh engine at the default ceiling (it holds
     * both up to `DocDirectory.MaxDocs` live docs) and a fresh one just over
@@ -374,13 +378,12 @@ object Drive {
     * the first request after a write. Last, the driver allocation of a
     * warm mixed query whose phrase leads with the highest-df stem (the
     * one-scan fetch's largest shape). Both sides must return the same
-    * hits. */
+    * hits. After the first two rounds, `textFetch` splits out `search`'s
+    * text fetch on both sides of its gate. */
   private def directory(c: Ctx): Unit = {
     import c.spark.implicits._
     val io = new ParquetTableIO(c.spark, c.copy(c.warehouse, s"${c.base}/wh_directory"))
     val turns = c.turns.toDF()
-    val threads = java.lang.management.ManagementFactory.getThreadMXBean
-      .asInstanceOf[com.sun.management.ThreadMXBean]
     def liveMb(): Long = {
       System.gc()
       val rt = Runtime.getRuntime
@@ -410,6 +413,7 @@ object Drive {
     }
     new SparkSearchEngine(c.spark, io, GraftParams(driverAlgebraMaxDocs = 0)).search(Term, turns) // JVM warm-up
     sides("built")
+    textFetch(c, io, turns)
     val ids = io.read(Tables.DocDict).select($"docId").filter($"docId" % 1000 === 7).as[Long]
     timed("delete 1 in 1,000 docs")(new IndexBuilder(c.spark, io, rawShards = 4).deleteDocs(ids, batchId = 501L))
     sides("after delete")
@@ -425,6 +429,38 @@ object Drive {
       top
     }
     require(bySide.distinct.size == 1, "head-stem mixed: the two sides of the gate answered differently")
+  }
+
+  /** `search`'s text fetch (`search` − `topKAuto`: best-of-5 wall ms and
+    * the driver thread's allocation) on both sides of its gate: the input
+    * as a bare parquet scan (read on the driver when the hits' covering
+    * row groups hold at most `TurnTexts.MaxRows` rows, else the Spark
+    * filter) and the same scan behind a no-op filter (always the Spark
+    * filter). Prints the row groups and rows the hits cover; both sides
+    * must return the same hits. */
+  private def textFetch(c: Ctx, io: ParquetTableIO, turns: DataFrame): Unit = {
+    /** Best-of-5 wall ms and the driver thread's allocation (MB) of that run. */
+    def best(body: => Any): (Double, Double) = (1 to 5).map { _ =>
+      val alloc0 = threads.getCurrentThreadAllocatedBytes
+      val (sec, _) = clock(body)
+      (sec * 1000, (threads.getCurrentThreadAllocatedBytes - alloc0) / 1e6)
+    }.minBy(_._1)
+    val e = new SparkSearchEngine(c.spark, io)
+    val hits = e.search(Term, turns)
+    val (groups, rows) = TurnTexts.coverage(turns, hits.map(_.conv_id).toSet).getOrElse((-1, -1L))
+    val side = if (rows >= 0 && rows <= TurnTexts.MaxRows) "driver read" else "Spark filter"
+    println(s"TEXTFETCH docs=${e.stats.total_docs} hits=${hits.size} cover $groups row groups, $rows rows " +
+      s"(budget ${TurnTexts.MaxRows}) of ${turns.inputFiles.length} files")
+    val bySide = for ((label, frame) <- Seq(s"bare parquet scan ($side)" -> turns,
+        "no-op filter (Spark filter)" -> turns.where(lit(true)))) yield {
+      val got = e.search(Term, frame)
+      val (topMs, topMb) = best(e.topKAuto(Term, 0.0, e.params.topK))
+      val (searchMs, searchMb) = best(e.search(Term, frame))
+      println(f"TEXTFETCH $label: search - topKAuto = ${searchMs - topMs}%.0f ms, " +
+        f"driver alloc ${searchMb - topMb}%.1f MB (search $searchMs%.0f ms, topKAuto $topMs%.0f ms)")
+      got
+    }
+    require(bySide.distinct.size == 1, "text fetch: the two sides of its gate answered differently")
   }
 
   private def textops(c: Ctx): Unit = {

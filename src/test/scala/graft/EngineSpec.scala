@@ -45,6 +45,34 @@ object EngineSpecFixture {
 
   val queries: Seq[(String, (String, Double))] = EngineQueries.all
 
+  /** The fixture turns written to parquet once, as generated (each file a
+    * contiguous conv_id range) and with a small `parquet.block.size`, so
+    * each file holds several row groups. */
+  lazy val turnsParquet: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_turns_").toString + "/turns"
+    TranscriptGen.generate(spark, Convs).write
+      .option("parquet.block.size", 4096)
+      .option("parquet.page.size.row.check.min", 2)
+      .option("parquet.page.size.row.check.max", 8)
+      .parquet(p)
+    p
+  }
+
+  /** An input not clustered by conv_id: the fixture turns among
+    * `TurnTexts.MaxRows` filler turns, shuffled before the write, so every
+    * row group's conv_id range spans the fixture's conversations and the
+    * hits' covering row groups hold more rows than the budget. */
+  lazy val unclusteredParquet: String = {
+    import org.apache.spark.sql.functions._
+    val p = java.nio.file.Files.createTempDirectory("graft_unclustered_").toString + "/turns"
+    val turns = TranscriptGen.generate(spark, Convs).toDF()
+    val filler = spark.range(graft.api.TurnTexts.MaxRows)
+      .select(format_string("filler-%08d", col("id")).as("conv_id"), lit(0).as("turn_idx"),
+        lit("user").as("role"), lit("filler").as("text"), lit("").as("tool"), lit(null).cast("timestamp").as("ts"))
+    turns.union(filler).orderBy(rand(7)).write.parquet(p)
+    p
+  }
+
   /** Bare terms for the WAND path: every q term plus edge cases (a stop
     * word, an unknown term, an apostrophe form). */
   val terms: Seq[String] = Seq("whale", "blue", "the", "run", "engin", "a", "zzzunknown", "dont")
@@ -224,6 +252,23 @@ class EngineSpec extends AnyFunSuite {
         s"'$q' $side: topKAuto ${topK._1} search ${search._1}"
       }
       info(s"warm jobs per query: ${perQuery.mkString("; ")}")
+      // over a parquet input: the text is read on the driver under the row
+      // budget (no job), by the Spark filter over it (one job); over the
+      // ceiling the dictionary lookup remains
+      val parquet = spark.read.parquet(turnsParquet)
+      val unclustered = spark.read.parquet(unclusteredParquet)
+      val perQueryParquet = for {
+        q <- Seq("whale", "\"blue whale\" whale engine", "\"blue whale\" AND \"red fish\"")
+        (e, side, frame, extra) <- Seq((engine, "held", parquet, 0), (engine, "held, over the row budget", unclustered, 1),
+          (over, "over", parquet, 1))
+      } yield {
+        val topK = count(e.topKAuto(q, 0.0, e.params.topK))
+        val search = count(e.search(q, frame))
+        assert(topK._1 == topK._2 && search._1 == search._2, s"'$q' $side parquet repeat: $topK $search")
+        assert(search._1 - topK._1 == extra, s"'$q' $side parquet: search $search vs top-k $topK")
+        s"'$q' $side: topKAuto ${topK._1} search ${search._1}"
+      }
+      info(s"warm jobs per query over a parquet input: ${perQueryParquet.mkString("; ")}")
       // the bulk entries, their frames collected (local frames: the
       // directory attaches conv_id and turn_idx, so neither the
       // dictionary join's broadcast nor its collect runs a job): terms
@@ -297,6 +342,59 @@ class EngineSpec extends AnyFunSuite {
     val jobs = (warmJobs(held.topKDriver(overlap, 0.4, 10)), warmJobs(atCap.topKDriver(overlap, 0.4, 10)))
     info(s"warm topKDriver jobs: one scan ${jobs._1}, Spark fetches ${jobs._2}")
     assert(jobs == ((1, 3)), s"warm topKDriver jobs (one scan, Spark fetches) $jobs")
+  }
+
+  test("text fetch: a parquet input read on the driver == the Spark filter, on both sides of each gate") {
+    val (io, _) = built
+    import spark.implicits._
+    val parquet = spark.read.parquet(turnsParquet)
+    val generated = TranscriptGen.generate(spark, Convs).toDF()
+    val convIds = generated.select($"conv_id").as[String].collect().toSet
+    val (groups, rows) = graft.api.TurnTexts.coverage(parquet, convIds).get
+    assert(groups > parquet.inputFiles.length && rows == generated.count(),
+      s"several row groups per file: $groups groups, $rows rows in ${parquet.inputFiles.length} files")
+    val n = new SparkSearchEngine(spark, io).stats.total_docs
+    val engines = Seq("held" -> new SparkSearchEngine(spark, io),
+      "over the ceiling" -> new SparkSearchEngine(spark, io, GraftParams(driverAlgebraMaxDocs = (n - 1).toInt)))
+    val shapes = (queries.map(_._2._1) ++ terms ++ extraShapes).distinct
+    def keys(hits: Vector[graft.model.SearchHit]) = hits.map(h => (h.conv_id, h.turn_idx)).distinct
+    for ((side, e) <- engines; q <- shapes; acc <- Seq(0.0, Double.MinPositiveValue)) {
+      val hits = e.search(q, parquet, acc)
+      assert(hits.isEmpty || graft.api.TurnTexts.read(parquet, keys(hits)).isDefined, s"'$q' $side: the driver read")
+      assert(hits == e.search(q, generated, acc), s"'$q' $side acc=$acc")
+      assert(hits.forall(_.text.nonEmpty), s"'$q' $side acc=$acc: every turn is in the input")
+    }
+    // an input not clustered by conv_id: its covering row groups hold more
+    // rows than the budget, so the Spark filter runs
+    val unclustered = spark.read.parquet(unclusteredParquet)
+    assert(graft.api.TurnTexts.coverage(unclustered, convIds).exists(_._2 > graft.api.TurnTexts.MaxRows))
+    for ((side, e) <- engines; q <- Seq("whale", "\"blue whale\" whale engine", "NOT \"blue whale\"");
+         acc <- Seq(0.0, Double.MinPositiveValue)) {
+      val hits = e.search(q, unclustered, acc)
+      assert(graft.api.TurnTexts.read(unclustered, keys(hits)).isEmpty, s"'$q' $side: over the row budget")
+      assert(hits == e.search(q, generated, acc) && hits == e.search(q, parquet, acc), s"'$q' $side acc=$acc unclustered")
+    }
+  }
+
+  test("text fetch: a hit whose turn the input lacks keeps an empty text and snippet on both sides") {
+    val (io, _) = built
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_partial_").toString
+    // the conversations whose id ends in 0, 3, 6 or 9 never delivered to the input
+    val kept = TranscriptGen.generate(spark, Convs).toDF()
+      .filter(!col("conv_id").substr(-1, 1).isin("0", "3", "6", "9"))
+    kept.write.parquet(s"$dir/turns")
+    val parquet = spark.read.parquet(s"$dir/turns")
+    val engine = new SparkSearchEngine(spark, io)
+    for (q <- Seq("whale", "\"blue whale\" whale engine"); acc <- Seq(0.0, Double.MinPositiveValue)) {
+      val hits = engine.search(q, parquet, acc)
+      val keys = hits.map(h => (h.conv_id, h.turn_idx)).distinct
+      assert(graft.api.TurnTexts.read(parquet, keys).isDefined, s"'$q': the driver read")
+      assert(hits == engine.search(q, kept, acc), s"'$q' acc=$acc")
+      val absent = hits.filter(h => "0369".contains(h.conv_id.last))
+      assert(absent.nonEmpty && absent.forall(h => h.text.isEmpty && h.snippet.isEmpty), s"'$q': absent turns")
+      assert(hits.filterNot(absent.contains).forall(_.text.nonEmpty), s"'$q': delivered turns")
+    }
   }
 
   /** Spark jobs a warm `call` (the second of two) runs on this thread. */

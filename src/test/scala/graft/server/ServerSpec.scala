@@ -376,6 +376,60 @@ class ServerSpec extends AnyFunSuite {
     "\"title\":\"([^\"]*)\".*?\"score\":([-0-9.eE]+)".r.findAllMatchIn(body)
       .map(m => (m.group(1), m.group(2).toDouble)).toSeq
 
+  test("a fresh parquet --input: concurrent first /search, then a hard-linked batch served after the crawl") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("srv_link_").toString
+    val input = s"$dir/turns"
+    val batch = s"$dir/batch"
+    val base = graft.corpus.TranscriptGen.generateLocal(12)
+    val fresh = graft.corpus.TranscriptGen.generateLocal(20).filterNot(t => base.exists(_.conv_id == t.conv_id))
+    spark.createDataset(base).write.parquet(input)
+    val s = new SearchEngineServer(spark, s"$dir/wh", Some(input), port = 0)
+    val p = s.start()
+    try {
+      assert(post("/indexDocuments", """{"clear": 1}""", p).statusCode() == 200)
+      // the first requests on a never-read input race for its footers
+      val queries = Seq("whale", "%22blue%20whale%22%20whale%20engine", "%22red%20fish%22",
+        "(%22blue%20whale%22%20OR%20%22query%20engine%22)%20NOT%20%22red%20fish%22")
+      val clients = math.max(2, Runtime.getRuntime.availableProcessors)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(clients)
+      val replies = try {
+        val calls = (0 until clients).map { c =>
+          val q = queries(c % queries.size)
+          val call: java.util.concurrent.Callable[(String, HttpResponse[String])] = () => {
+            start.await(); q -> get(s"/search?query=$q&accuracy=0.0", p)
+          }
+          pool.submit(call)
+        }
+        start.countDown()
+        calls.map(_.get())
+      } finally { pool.shutdown(); () }
+      val serial = queries.map(q => q -> get(s"/search?query=$q&accuracy=0.0", p)).toMap
+      serial.foreach { case (q, r) =>
+        assert(r.statusCode() == 200 && !r.body().contains("\"content\":\"\""), s"$q: ${r.body().take(300)}")
+      }
+      replies.foreach { case (q, r) =>
+        assert(r.statusCode() == 200 && r.body() == serial(q).body(),
+          s"$q on the first requests: ${r.statusCode()} ${r.body().take(200)}")
+      }
+      // the crawler hard-links the batch's files into the served input (a
+      // new path, the source's length and mtime), then asks for the crawl
+      spark.createDataset(fresh).write.parquet(batch)
+      new java.io.File(batch).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(input, s"b0-${f.getName}"), f.toPath)
+      }
+      assert(post("/crawl", s"""{"seedUrls": ["$batch"], "numberOfPages": ${fresh.size}}""", p).statusCode() == 200)
+      val acc = Double.MinPositiveValue
+      val r = get(s"/search?query=whale&accuracy=$acc", p)
+      val want = oracleHits(base ++ fresh, "whale", acc).map(_._1)
+      val freshKeys = fresh.map(t => s"${t.conv_id}#${t.turn_idx}").toSet
+      assert(want.exists(freshKeys), "the linked batch must rank")
+      assert(r.statusCode() == 200 && replyHits(r.body()).map(_._1).toSet == want.toSet, r.body().take(300))
+      assert(!r.body().contains("\"content\":\"\""), s"every linked turn has content: ${r.body().take(300)}")
+    } finally s.stop()
+  }
+
   test("a crawled turn missing from --input still answers /search, in rank order with empty content") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("srv_absent_").toString
